@@ -6,8 +6,10 @@ DataFrames + Arrow per SURVEY.md §3.2-3.3:
   1. **Map-side partition combine** (``mapInArrow``): every input
      partition folds its Arrow batches into one sketch state per group
      key — the analog of Spark's partial HashAggregate, which Catalyst
-     cannot do for Python UDAFs. Only ``(key, state)`` rows ever cross
-     a shuffle boundary; raw rows never do.
+     cannot do for Python UDAFs. Only ``(key, state)`` rows cross the
+     merge shuffle. The one exception: an input with fewer partitions
+     than ``min_partitions`` (default: cluster parallelism) is first
+     repartitioned, which shuffles its raw rows.
   2. **Tree merge**: per-key states merge via ``groupBy(keys)``; when
      the number of partition states is large, an intermediate salted
      round (``fanout`` buckets) keeps any single reducer's fan-in
@@ -38,8 +40,8 @@ from .sketches import Sketch, from_bytes
 STATE_COL = "sketch_state"
 COUNT_COL = "n_values"
 
-# Global (ungrouped) builds coalesce incoming Arrow batches to this
-# many elements per update_batch call — small maxRecordsPerBatch
+# The combine coalesces each group's values across Arrow batches to
+# this many elements per update_batch call — small maxRecordsPerBatch
 # settings otherwise turn a billion-row scan into ~500k fixed-cost
 # kernel invocations. 64K keeps each call's working set cache-sized
 # (the same chunk the kernels use internally).
@@ -156,155 +158,161 @@ def _state_batch(cols: list[list], out_schema: StructType) -> pa.RecordBatch:
         arrays, names=[f.name for f in out_schema.fields])
 
 
-# ---------------------------------------------------------------------------
-# stage 1: per-partition combine
-# ---------------------------------------------------------------------------
-
-def sketch_partitions(df: DataFrame, value_col: str, factory: SketchFactory,
-                      keys: Sequence[str] = (),
-                      min_partitions: int | None = None) -> DataFrame:
-    """One sketch state per (input partition x group key).
-
-    Output schema: ``keys..., sketch_state binary, n_values long``.
-    The per-element group assignment is fully vectorized:
-    ``np.repeat(key_codes, row_lengths)`` + one stable argsort per batch.
-
-    ``min_partitions`` (default: cluster parallelism) guards against
-    under-split inputs — a small parquet table may arrive as 1-3
-    partitions, which would serialize the combine. The repartition is a
-    no-op branch on real at-scale inputs (thousands of partitions).
-    """
-    keys = list(keys)
-    if min_partitions is None:
-        min_partitions = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < min_partitions:
-        df = df.repartition(min_partitions)
-    key_fields = [df.schema[k] for k in keys]
-    out_schema = StructType(key_fields + [
+def _state_schema(df: DataFrame, keys: Sequence[str],
+                  *extra: StructField) -> StructType:
+    """``keys..., extra..., sketch_state binary, n_values long``."""
+    return StructType([df.schema[k] for k in keys] + list(extra) + [
         StructField(STATE_COL, BinaryType(), False),
         StructField(COUNT_COL, LongType(), False),
     ])
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+
+def _emit(keys: Sequence[str], acc: dict,
+          out_schema: StructType) -> pa.RecordBatch:
+    """One state row per ``key -> (sketch, n_values)`` entry."""
+    cols: list[list] = [[] for _ in keys] + [[], []]
+    for key, (sk, n) in acc.items():
+        for i, kv in enumerate(key):
+            cols[i].append(_py_key(kv))
+        cols[-2].append(sk.to_bytes())
+        cols[-1].append(n)
+    return _state_batch(cols, out_schema)
+
+
+def _fold(blobs, counts, acc: Sketch | None = None,
+          n: int = 0) -> tuple[Sketch | None, int]:
+    """The one state fold: merge serialized states, in order, into
+    ``acc`` (the first blob seeds it when None) and add their value
+    counts to ``n``. The keyed merge, premerge_local and sketch_global's
+    driver tail all fold through here."""
+    for blob in blobs:
+        sk = from_bytes(bytes(blob))
+        if acc is None:
+            acc = sk
+        else:
+            acc.merge_in_place(sk)
+    return acc, n + sum(counts)
+
+
+# ---------------------------------------------------------------------------
+# stage 1: per-partition combine
+# ---------------------------------------------------------------------------
+
+def _combine(df: DataFrame, keys: Sequence[str], value_cols: Sequence[str],
+             factory: SketchFactory,
+             min_partitions: int | None) -> DataFrame:
+    """The map-side combine behind every build: one sketch state per
+    (input partition x group key), schema ``keys..., sketch_state,
+    n_values``.
+
+    One value column goes through ``_flatten_values`` (scalar or
+    array, nulls dropped); several must be aligned scalar columns and
+    reach ``update_batch(col0, col1, ...)`` by position. Each batch is
+    factorized and gathered once by a stable argsort of its group codes
+    (``np.repeat`` over array lengths), then sliced per group; zero keys
+    make the whole batch one group with no factorize or sort.
+
+    Spark hands mapInArrow ~maxRecordsPerBatch-row batches, so a
+    G-group partition would otherwise call ``update_batch`` with
+    ~rows/G elements, and the kernels' fixed per-call cost (hash setup,
+    compaction, per-chunk sorts) would dominate. Slices of at least
+    ``_COALESCE_ELEMS`` update directly; smaller ones buffer per key
+    and flush at ``_COALESCE_ELEMS``, with a global cap bounding worker
+    memory at any key cardinality. Chunk-size invariance of every
+    sketch is law-tested, so coalescing is observationally neutral. A
+    group whose rows hold no values (all-empty arrays) still emits its
+    ``n_values=0`` state.
+
+    ``min_partitions`` (default: cluster parallelism) guards against
+    under-split inputs — a small parquet table may arrive as 1-3
+    partitions, which would serialize the combine — by repartitioning
+    the raw rows, the one place they shuffle. The branch is a no-op on
+    real at-scale inputs (thousands of partitions)."""
+    keys, value_cols = list(keys), list(value_cols)
+    if min_partitions is None:
+        min_partitions = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < min_partitions:
+        df = df.repartition(min_partitions)
+    out_schema = _state_schema(df, keys)
+    cap = 8 * _COALESCE_ELEMS
+
+    def columns(batch: pa.RecordBatch):
+        """Per-element value arrays + per-row lengths (None: 1 per row)."""
+        if len(value_cols) == 1:
+            values, lengths = _flatten_values(batch.column(value_cols[0]))
+            return [values], lengths
+        return [batch.column(c).to_numpy(zero_copy_only=False)
+                for c in value_cols], None
+
+    def groups(batch: pa.RecordBatch, cols: list, lengths):
+        """(key tuple, aligned value slices) per group in the batch."""
         if not keys:
-            # Global build: coalesce incoming Arrow batches to
-            # ~_COALESCE_ELEMS elements per update_batch call. Spark
-            # hands mapInArrow maxRecordsPerBatch-sized batches (2048
-            # in the bench config) — at 1.2e9 scalar rows that is
-            # ~600k update_batch calls whose fixed per-call cost
-            # (prepare/hash setup, per-chunk sorts) dominates the
-            # kernels. Chunk-size invariance of every sketch is
-            # law-tested, so coalescing is observationally neutral.
-            sk0: Sketch | None = None
-            n0 = 0
-            buf: list[np.ndarray] = []
-            buf_n = 0
+            return [((), cols)]
+        codes, uniques = _factorize_rows(_key_frame(batch, keys), keys)
+        if lengths is not None:
+            codes = np.repeat(codes, lengths)
+        order = np.argsort(codes, kind="stable")
+        cols = [c[order] for c in cols]
+        bounds = np.searchsorted(codes[order], np.arange(len(uniques) + 1))
+        return [(uniques[g], [c[bounds[g]:bounds[g + 1]] for c in cols])
+                for g in range(len(uniques))]
 
-            def flush():
-                nonlocal n0, buf, buf_n
-                v = buf[0] if len(buf) == 1 else np.concatenate(buf)
-                sk0.update_batch(v)
-                n0 += len(v)
-                buf, buf_n = [], 0
-
-            for batch in batches:
-                col = batch.column(batch.schema.get_field_index(value_col))
-                values, lengths = _flatten_values(col)
-                if len(values) == 0 and (lengths is None
-                                         or batch.num_rows == 0):
-                    continue
-                if sk0 is None:
-                    # rows seen (possibly all-empty arrays): a state
-                    # row must exist, as before coalescing
-                    sk0 = factory()
-                if len(values) == 0:
-                    continue
-                buf.append(values)
-                buf_n += len(values)
-                if buf_n >= _COALESCE_ELEMS:
-                    flush()
-            if sk0 is None:
-                return
-            if buf:
-                flush()
-            yield _state_batch([[sk0.to_bytes()], [n0]], out_schema)
-            return
-
-        # Keyed build with cross-batch coalescing (same rationale as
-        # the global path above): Spark hands ~maxRecordsPerBatch-row
-        # Arrow batches, so a G-group partition would otherwise call
-        # update_batch with ~rows/G elements — at 10k-row batches and
-        # a handful of groups that is ~1k-element calls whose fixed
-        # cost (compaction, hash setup, per-chunk sorts) dominates the
-        # kernels. Values buffer per key and flush at _COALESCE_ELEMS;
-        # a global cap bounds worker memory at any key cardinality.
-        # Chunk-size invariance of every sketch is law-tested, so
-        # coalescing is observationally neutral.
-        sketches: dict[tuple, Sketch] = {}
-        counts: dict[tuple, int] = {}
-        pend: dict[tuple, list[np.ndarray]] = {}
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        acc: dict[tuple, list] = {}   # key -> [sketch, n_values]
+        pend: dict[tuple, list[list[np.ndarray]]] = {}
         pend_n: dict[tuple, int] = {}
         total_pend = 0
-        _GLOBAL_CAP = 8 * _COALESCE_ELEMS
+
+        def update(key: tuple, args: list[np.ndarray]) -> None:
+            entry = acc[key]
+            entry[0].update_batch(*args)
+            entry[1] += len(args[0])
 
         def flush(key: tuple) -> None:
             nonlocal total_pend
-            bufs = pend.pop(key, None)
-            if not bufs:
-                return
-            v = bufs[0] if len(bufs) == 1 else np.concatenate(bufs)
-            sketches[key].update_batch(v)
-            counts[key] += len(v)
+            update(key, [p[0] if len(p) == 1 else np.concatenate(p)
+                         for p in zip(*pend.pop(key))])
             total_pend -= pend_n.pop(key)
 
         for batch in batches:
-            col = batch.column(batch.schema.get_field_index(value_col))
-            values, lengths = _flatten_values(col)
-            if len(values) == 0 and (lengths is None or batch.num_rows == 0):
+            cols, lengths = columns(batch)
+            if len(cols[0]) == 0 and (lengths is None or batch.num_rows == 0):
                 continue
-            kf = _key_frame(batch, keys)
-            codes, uni_tuples = _factorize_rows(kf, keys)
-            elem_codes = codes if lengths is None else np.repeat(codes, lengths)
-            order = np.argsort(elem_codes, kind="stable")
-            sorted_vals = values[order]
-            sorted_codes = elem_codes[order]
-            bounds = np.searchsorted(sorted_codes, np.arange(len(uni_tuples) + 1))
-            groups = [(uni_tuples[c], sorted_vals[bounds[c]:bounds[c + 1]])
-                      for c in range(len(uni_tuples))]
-            for key, vals in groups:
-                if key not in sketches:
-                    sketches[key] = factory()
-                    counts[key] = 0
-                if len(vals):
-                    if (len(vals) >= _COALESCE_ELEMS
-                            and key not in pend):
-                        # already kernel-sized: update zero-copy
-                        sketches[key].update_batch(vals)
-                        counts[key] += len(vals)
-                        continue
-                    # .copy(): a slice view would pin the whole
-                    # batch array until flush
-                    pend.setdefault(key, []).append(vals.copy())
-                    pend_n[key] = pend_n.get(key, 0) + len(vals)
-                    total_pend += len(vals)
-                    if pend_n[key] >= _COALESCE_ELEMS:
-                        flush(key)
-            if total_pend >= _GLOBAL_CAP:
+            for key, args in groups(batch, cols, lengths):
+                if key not in acc:
+                    acc[key] = [factory(), 0]
+                n = len(args[0])
+                if n == 0:
+                    continue
+                if n >= _COALESCE_ELEMS and key not in pend:
+                    update(key, args)  # already kernel-sized
+                    continue
+                # .copy(): a keyed slice is a view that would pin the
+                # whole gathered batch until flush
+                pend.setdefault(key, []).append(
+                    [a.copy() for a in args] if keys else args)
+                pend_n[key] = pend_n.get(key, 0) + n
+                total_pend += n
+                if pend_n[key] >= _COALESCE_ELEMS:
+                    flush(key)
+            if total_pend >= cap:
                 for key in list(pend):
                     flush(key)
         for key in list(pend):
             flush(key)
-        if not sketches:
-            return
-        cols: list[list] = [[] for _ in keys] + [[], []]
-        for key, sk in sketches.items():
-            for i, kv in enumerate(key):
-                cols[i].append(_py_key(kv))
-            cols[len(keys)].append(sk.to_bytes())
-            cols[len(keys) + 1].append(counts[key])
-        yield _state_batch(cols, out_schema)
+        if acc:
+            yield _emit(keys, acc, out_schema)
 
-    return df.select(*(keys + [value_col])).mapInArrow(run, out_schema)
+    return df.select(*(keys + value_cols)).mapInArrow(run, out_schema)
+
+
+def sketch_partitions(df: DataFrame, value_col: str, factory: SketchFactory,
+                      keys: Sequence[str] = (),
+                      min_partitions: int | None = None) -> DataFrame:
+    """One sketch state per (input partition x group key) over one
+    scalar or array column; output schema ``keys..., sketch_state
+    binary, n_values long`` (see ``_combine``)."""
+    return _combine(df, keys, [value_col], factory, min_partitions)
 
 
 # ---------------------------------------------------------------------------
@@ -313,13 +321,10 @@ def sketch_partitions(df: DataFrame, value_col: str, factory: SketchFactory,
 
 def _merge_fn(keys: Sequence[str]):
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        states = pdf[STATE_COL].tolist()
-        acc = from_bytes(bytes(states[0]))
-        for s in states[1:]:
-            acc.merge_in_place(from_bytes(bytes(s)))
+        sk, n = _fold(pdf[STATE_COL], pdf[COUNT_COL])
         row = {k: pdf[k].iloc[0] for k in keys}
-        row[STATE_COL] = acc.to_bytes()
-        row[COUNT_COL] = int(pdf[COUNT_COL].sum())
+        row[STATE_COL] = sk.to_bytes()
+        row[COUNT_COL] = n
         return pd.DataFrame([row])
     return merge
 
@@ -349,40 +354,34 @@ def premerge_local(states_df: DataFrame, keys: Sequence[str] = (),
     if states_df.rdd.getNumPartitions() <= target_partitions:
         return states_df
     keys = list(keys)
-    coalesced = states_df.coalesce(target_partitions)
-    out_schema = StructType([states_df.schema[k] for k in keys] + [
-        StructField(STATE_COL, BinaryType(), False),
-        StructField(COUNT_COL, LongType(), False),
-    ])
+    out_schema = _state_schema(states_df, keys)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        acc: dict[tuple, Sketch] = {}
-        counts: dict[tuple, int] = {}
+        acc: dict[tuple, tuple] = {}
         for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            key_cols = [tbl.column(k).to_pylist() for k in keys]
-            states = tbl.column(STATE_COL).to_pylist()
-            ns = tbl.column(COUNT_COL).to_pylist()
+            key_cols = [batch.column(k).to_pylist() for k in keys]
+            states = batch.column(STATE_COL).to_pylist()
+            ns = batch.column(COUNT_COL).to_pylist()
             for i, (blob, n) in enumerate(zip(states, ns)):
                 key = tuple(col[i] for col in key_cols)
-                sk = from_bytes(bytes(blob))
-                if key in acc:
-                    acc[key].merge_in_place(sk)
-                    counts[key] += n
-                else:
-                    acc[key] = sk
-                    counts[key] = n
-        if not acc:
-            return
-        cols: list[list] = [[] for _ in keys] + [[], []]
-        for key, sk in acc.items():
-            for i, kv in enumerate(key):
-                cols[i].append(_py_key(kv))
-            cols[len(keys)].append(sk.to_bytes())
-            cols[len(keys) + 1].append(counts[key])
-        yield _state_batch(cols, out_schema)
+                acc[key] = _fold([blob], [n], *acc.get(key, (None, 0)))
+        if acc:
+            yield _emit(keys, acc, out_schema)
 
-    return coalesced.mapInArrow(run, out_schema)
+    return states_df.coalesce(target_partitions).mapInArrow(run, out_schema)
+
+
+def _fanout_merge(states_df: DataFrame, keys: list[str],
+                  fanout: int) -> DataFrame:
+    """Salted intermediate round: states merge within ``fanout``
+    buckets per key (by input partition), bounding any one reducer's
+    fan-in — the treeAggregate level."""
+    salted = states_df.withColumn(
+        "__bucket", F.pmod(F.spark_partition_id(), F.lit(fanout)))
+    bucket = StructField("__bucket", salted.schema["__bucket"].dataType, False)
+    partial = salted.groupBy(*keys, "__bucket").applyInPandas(
+        _merge_fn(keys + ["__bucket"]), _state_schema(states_df, keys, bucket))
+    return partial.select(*keys, STATE_COL, COUNT_COL)
 
 
 def merge_sketches(states_df: DataFrame, keys: Sequence[str] = (),
@@ -399,30 +398,17 @@ def merge_sketches(states_df: DataFrame, keys: Sequence[str] = (),
     if premerge is not None:
         states_df = premerge_local(states_df, keys, premerge)
     keys = list(keys)
-    schema = StructType([states_df.schema[k] for k in keys] + [
-        StructField(STATE_COL, BinaryType(), False),
-        StructField(COUNT_COL, LongType(), False),
-    ])
     if fanout:
-        salted = states_df.withColumn(
-            "__bucket", F.pmod(F.spark_partition_id(), F.lit(fanout)))
-        inter_schema = StructType(
-            [states_df.schema[k] for k in keys]
-            + [StructField("__bucket", salted.schema["__bucket"].dataType, False),
-               StructField(STATE_COL, BinaryType(), False),
-               StructField(COUNT_COL, LongType(), False)])
-        partial = salted.groupBy(*(keys + ["__bucket"])).applyInPandas(
-            _merge_fn(keys + ["__bucket"]), inter_schema)
-        states_df = partial.select(*(keys + [STATE_COL, COUNT_COL]))
+        states_df = _fanout_merge(states_df, keys, fanout)
     if keys:
-        return states_df.groupBy(*keys).applyInPandas(_merge_fn(keys), schema)
+        return states_df.groupBy(*keys).applyInPandas(
+            _merge_fn(keys), _state_schema(states_df, keys))
     # keyless: materialize the grouping column so applyInPandas sees it
+    g = StructField("__g", LongType(), False)
     return (states_df.withColumn("__g", F.lit(1))
             .groupBy("__g")
-            .applyInPandas(
-                _merge_fn(["__g"]),
-                StructType([StructField("__g", LongType(), False)]
-                           + schema.fields))
+            .applyInPandas(_merge_fn(["__g"]),
+                           _state_schema(states_df, [], g))
             .drop("__g"))
 
 
@@ -455,121 +441,7 @@ def sketch_by_key_multi(df: DataFrame, keys: Sequence[str],
     ScopedTopN(items, scopes). All ``value_cols`` must be scalar columns;
     each batch calls ``update_batch(col0, col1, ...)`` positionally.
     """
-    keys = list(keys)
-    value_cols = list(value_cols)
-    if min_partitions is None:
-        min_partitions = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < min_partitions:
-        df = df.repartition(min_partitions)
-    key_fields = [df.schema[k] for k in keys]
-    out_schema = StructType(key_fields + [
-        StructField(STATE_COL, BinaryType(), False),
-        StructField(COUNT_COL, LongType(), False),
-    ])
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        if not keys:
-            # Global build: coalesce to ~_COALESCE_ELEMS rows per
-            # update_batch call (see sketch_by_key — same rationale;
-            # aligned companion arrays are concatenated column-wise).
-            sk0: Sketch | None = None
-            n0 = 0
-            bufs: list[list[np.ndarray]] = [[] for _ in value_cols]
-            buf_n = 0
-
-            def flush():
-                nonlocal n0, bufs, buf_n
-                args = [b[0] if len(b) == 1 else np.concatenate(b)
-                        for b in bufs]
-                sk0.update_batch(*args)
-                n0 += len(args[0])
-                bufs, buf_n = [[] for _ in value_cols], 0
-
-            for batch in batches:
-                if batch.num_rows == 0:
-                    continue
-                if sk0 is None:
-                    sk0 = factory()
-                for i, c in enumerate(value_cols):
-                    bufs[i].append(
-                        batch.column(batch.schema.get_field_index(c))
-                        .to_numpy(zero_copy_only=False))
-                buf_n += batch.num_rows
-                if buf_n >= _COALESCE_ELEMS:
-                    flush()
-            if sk0 is None:
-                return
-            if buf_n:
-                flush()
-            yield _state_batch([[sk0.to_bytes()], [n0]], out_schema)
-            return
-
-        # keyed build with the same cross-batch coalescing as
-        # sketch_by_key: buffer each key's aligned column slices and
-        # flush at _COALESCE_ELEMS rows (fancy-indexed slices are
-        # already copies, so no .copy() needed here)
-        sketches: dict[tuple, Sketch] = {}
-        counts: dict[tuple, int] = {}
-        pend: dict[tuple, list[tuple]] = {}
-        pend_n: dict[tuple, int] = {}
-        total_pend = 0
-        _GLOBAL_CAP = 8 * _COALESCE_ELEMS
-
-        def flush_key(key: tuple) -> None:
-            nonlocal total_pend
-            slices = pend.pop(key, None)
-            if not slices:
-                return
-            args = [slices[0][i] if len(slices) == 1
-                    else np.concatenate([s[i] for s in slices])
-                    for i in range(len(value_cols))]
-            sketches[key].update_batch(*args)
-            counts[key] += len(args[0])
-            total_pend -= pend_n.pop(key)
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            cols = [batch.column(batch.schema.get_field_index(c))
-                    .to_numpy(zero_copy_only=False) for c in value_cols]
-            kf = _key_frame(batch, keys)
-            codes, uni = _factorize_rows(kf, keys)
-            order = np.argsort(codes, kind="stable")
-            bounds = np.searchsorted(codes[order], np.arange(len(uni) + 1))
-            groups = [(uni[c], order[bounds[c]:bounds[c + 1]])
-                      for c in range(len(uni))]
-            for key, idx in groups:
-                if key not in sketches:
-                    sketches[key] = factory()
-                    counts[key] = 0
-                if not len(idx):
-                    continue
-                if len(idx) >= _COALESCE_ELEMS and key not in pend:
-                    sketches[key].update_batch(*(c[idx] for c in cols))
-                    counts[key] += len(idx)
-                    continue
-                pend.setdefault(key, []).append(
-                    tuple(c[idx] for c in cols))
-                pend_n[key] = pend_n.get(key, 0) + len(idx)
-                total_pend += len(idx)
-                if pend_n[key] >= _COALESCE_ELEMS:
-                    flush_key(key)
-            if total_pend >= _GLOBAL_CAP:
-                for key in list(pend):
-                    flush_key(key)
-        for key in list(pend):
-            flush_key(key)
-        if not sketches:
-            return
-        out_cols: list[list] = [[] for _ in keys] + [[], []]
-        for key, sk in sketches.items():
-            for i, kv in enumerate(key):
-                out_cols[i].append(_py_key(kv))
-            out_cols[len(keys)].append(sk.to_bytes())
-            out_cols[len(keys) + 1].append(counts[key])
-        yield _state_batch(out_cols, out_schema)
-
-    states = df.select(*(keys + value_cols)).mapInArrow(run, out_schema)
+    states = _combine(df, keys, value_cols, factory, min_partitions)
     return merge_sketches(states, keys, fanout=fanout, premerge=premerge)
 
 
@@ -580,34 +452,23 @@ def sketch_global(df: DataFrame, value_col: str, factory: SketchFactory,
     Partition states partial-merge into ``fanout`` buckets in parallel;
     the driver folds only the <= fanout survivors (treeAggregate tail).
     """
-    states = sketch_partitions(df, value_col, factory)
-    bucketed = states.withColumn(
-        "__bucket", F.pmod(F.spark_partition_id(), F.lit(fanout)))
-    inter_schema = StructType([
-        StructField("__bucket", bucketed.schema["__bucket"].dataType, False),
-        StructField(STATE_COL, BinaryType(), False),
-        StructField(COUNT_COL, LongType(), False)])
-    partial = bucketed.groupBy("__bucket").applyInPandas(
-        _merge_fn(["__bucket"]), inter_schema)
+    partial = _fanout_merge(sketch_partitions(df, value_col, factory),
+                            [], fanout)
     rows = partial.select(STATE_COL).collect()
     if not rows:
         return factory()  # monoid zero on empty input
-    acc = from_bytes(bytes(rows[0][0]))
-    for r in rows[1:]:
-        acc.merge_in_place(from_bytes(bytes(r[0])))
-    return acc
+    return _fold([r[0] for r in rows], ())[0]
 
 
 def sketch_rollup(df: DataFrame, keys: Sequence[str], value_col: str,
                   factory: SketchFactory, grouping: str = "rollup",
                   fanout: int = 0, premerge: int | None = None,
-                  cache: bool = True,
                   sets: Sequence[Sequence[str]] | None = None) -> DataFrame:
     """Every ROLLUP / CUBE grouping level from ONE scan of the input:
-    build sketch states at the finest key grain (``sketch_by_key``),
-    then derive each coarser level by MERGING the finest states —
-    the associativity the reference's Monoid laws guarantee
-    (algebird-core .../Monoid.scala:41-76; the rollup/cube macros in
+    build sketch states at the finest key grain, then derive each
+    coarser level by MERGING those states — the associativity the
+    reference's Monoid laws guarantee (algebird-core
+    .../Monoid.scala:41-76; the rollup/cube macros in
     MapAlgebra.scala:274-318 recompute each level from rows — states
     make the levels free). At warehouse scale this is the difference
     between one pass over the corpus and ``levels`` passes: the coarse
@@ -623,17 +484,8 @@ def sketch_rollup(df: DataFrame, keys: Sequence[str], value_col: str,
     levels; ``'cube'`` all ``2^d`` subsets; ``sets=[...]`` names
     explicit GROUPING SETS (each a subset of ``keys``; SQL semantics —
     order preserved, duplicate sets emit duplicate level rows) and
-    overrides ``grouping``.
-
-    Plan shape (round 7): the finest states EXPLODE into one
-    (grouping_id, masked-keys) row per level and all levels merge in a
-    single keyed shuffle + single applyInPandas stage — stage count
-    independent of the level count, no intermediate persist. Explicit
-    duplicate GROUPING SETS (SQL emits duplicate level rows; a keyed
-    merge would fold them) fall back to a per-level merge loop, where
-    the finest state table persists under the operator-scoped cache
-    (``cache=False`` opts out — the plan then rescans the input once
-    per level)."""
+    overrides ``grouping``. Every level merges in one keyed shuffle
+    (see ``rollup_levels``)."""
     keys = list(keys)
     if not keys:
         raise ValueError("sketch_rollup needs at least one key; use "
@@ -650,42 +502,46 @@ def sketch_rollup(df: DataFrame, keys: Sequence[str], value_col: str,
     # the same partition states, just in one round. At warehouse
     # scale (many scan partitions) the explode would multiply the
     # state shuffle by the level count, so the two-stage plan stays
-    # the default there; explicit duplicate GROUPING SETS also keep
-    # it (rollup_levels' keyed merge would fold them).
+    # the default there.
     if sets is not None:
-        n_levels = len(list(sets))
-        dup_sets = len({frozenset(s) for s in sets}) != n_levels
+        sets = [list(s) for s in sets]
+        n_levels = len(sets)
     else:
         n_levels = (len(keys) + 1 if grouping == "rollup"
                     else 2 ** len(keys))
-        dup_sets = False
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     n_parts = max(df.rdd.getNumPartitions(), parallelism)
-    if not dup_sets and n_parts * n_levels <= 16_384:
+    if n_parts * n_levels <= 16_384:
         states = sketch_partitions(df, value_col, factory, keys)
-        return rollup_levels(states, keys, factory, grouping=grouping,
-                             sets=sets, cache=cache)
-    fine = sketch_by_key(df, keys, value_col, factory,
-                         fanout=fanout, premerge=premerge)
-    return rollup_levels(fine, keys, factory, grouping=grouping,
-                         sets=sets, cache=cache)
+    else:
+        states = sketch_by_key(df, keys, value_col, factory,
+                               fanout=fanout, premerge=premerge)
+    return rollup_levels(states, keys, factory, grouping=grouping, sets=sets)
 
 
 def rollup_levels(fine: DataFrame, keys: Sequence[str],
                   factory: SketchFactory, grouping: str = "rollup",
-                  sets: Sequence[Sequence[str]] | None = None,
-                  cache: bool = True) -> DataFrame:
+                  sets: Sequence[Sequence[str]] | None = None) -> DataFrame:
     """Derive every grouping level from an EXISTING finest-grain state
     table ``(keys..., sketch_state, n_values)`` — the second half of
     ``sketch_rollup``, split out so persisted/checkpointed states can
     feed it directly (``sources.checkpoint.rollup_or_resume``): at
     warehouse scale the cube refreshes by re-deriving levels from the
     maintained state table, never rescanning the corpus. Semantics and
-    output schema exactly as ``sketch_rollup``."""
+    output schema exactly as ``sketch_rollup``.
+
+    Plan: each state row EXPLODES into one (set index, grouping_id,
+    masked keys) row per grouping set, and every level merges in ONE
+    keyed shuffle + ONE applyInPandas stage — stage count independent
+    of the level count, no intermediate persist. The set index keeps
+    duplicate GROUPING SETS (SQL emits one row per occurrence) apart in
+    that merge instead of folding them into one doubly-merged group."""
     keys = list(keys)
     if grouping not in ("rollup", "cube"):
         raise ValueError("grouping must be 'rollup' or 'cube'")
-    if sets is not None and len(list(sets)) == 0:
+    if sets is not None:
+        sets = [list(s) for s in sets]
+    if sets == []:
         raise ValueError("sets must name at least one grouping set "
                          "(use [[]] for just the grand total)")
     d = len(keys)
@@ -705,72 +561,30 @@ def rollup_levels(fine: DataFrame, keys: Sequence[str],
                    for m in range(2 ** d)]
     key_types = {k: fine.schema[k].dataType for k in keys}
 
-    if len(set(subsets)) == len(subsets):
-        # Single-pass plan (round 7): explode each finest-grain state
-        # row into one (grouping_id, masked keys) struct PER LEVEL,
-        # then merge every level in ONE keyed shuffle + ONE
-        # applyInPandas stage. The per-level loop below runs a
-        # separate merge job per level (a d-key CUBE = 2^d Exchanges
-        # and 2^d Python stages) and must persist the fine table to
-        # avoid rescanning the corpus per level; the explode ships the
-        # same total state volume through a single Exchange, needs no
-        # cache, and its stage count is independent of the level
-        # count. Only explicit duplicate GROUPING SETS (which SQL says
-        # emit duplicate rows — a keyed merge would fold them into
-        # one doubly-merged row) take the legacy loop.
-        structs = []
-        for sub in subsets:
-            gid = sum(1 << (d - 1 - i) for i in range(d) if i not in sub)
-            fields = [(F.col(k) if i in sub
-                       else F.lit(None).cast(key_types[k])).alias(k)
-                      for i, k in enumerate(keys)]
-            structs.append(F.struct(
-                F.lit(gid).cast("long").alias("grouping_id"), *fields))
-        flat = (fine.select(F.explode(F.array(*structs)).alias("__lvl"),
-                            STATE_COL, COUNT_COL)
-                .select("__lvl.*", STATE_COL, COUNT_COL))
-        if frozenset() in subsets:
-            # SQL parity: the () grouping set emits its row even on
-            # empty input; folding one monoid-zero state into the
-            # grand-total group is free on non-empty input (identity
-            # law) and supplies that row on empty.
-            zero = fine.sparkSession.createDataFrame(
-                [((2 ** d) - 1,) + (None,) * d
-                 + (bytearray(factory().to_bytes()), 0)], flat.schema)
-            flat = flat.unionByName(zero)
-        merged = merge_sketches(flat, ["grouping_id"] + keys)
-        return merged.select(*keys, "grouping_id", STATE_COL, COUNT_COL)
-
-    if cache:
-        from .operators.dedup import _cache_scoped, _new_generation
-        fine = _cache_scoped("sketch_rollup_fine", fine,
-                             gen=_new_generation())
-    out = None
-    for sub in subsets:
-        kept = [keys[i] for i in range(d) if i in sub]
+    structs = []
+    for s, sub in enumerate(subsets):
         gid = sum(1 << (d - 1 - i) for i in range(d) if i not in sub)
-        if len(kept) == d:
-            lvl = fine
-        elif kept:
-            lvl = merge_sketches(fine, kept)
-        else:
-            # SQL parity: the () grouping set emits its row even on
-            # empty input (like SELECT agg FROM empty). Folding in one
-            # monoid-zero state costs nothing on non-empty input
-            # (identity law) and supplies that row on empty.
-            zero = fine.sparkSession.createDataFrame(
-                [(bytearray(factory().to_bytes()), 0)],
-                StructType([StructField(STATE_COL, BinaryType(), False),
-                            StructField(COUNT_COL, LongType(), False)]))
-            lvl = merge_sketches(
-                fine.select(STATE_COL, COUNT_COL).unionByName(zero), [])
-        sel = [(F.col(k) if i in sub
-                else F.lit(None).cast(key_types[k])).alias(k)
-               for i, k in enumerate(keys)]
-        lvl = lvl.select(*sel, F.lit(gid).cast("long").alias("grouping_id"),
-                         STATE_COL, COUNT_COL)
-        out = lvl if out is None else out.unionByName(lvl)
-    return out
+        fields = [(F.col(k) if i in sub
+                   else F.lit(None).cast(key_types[k])).alias(k)
+                  for i, k in enumerate(keys)]
+        structs.append(F.struct(
+            F.lit(s).alias("__set"),
+            F.lit(gid).cast("long").alias("grouping_id"), *fields))
+    flat = (fine.select(F.explode(F.array(*structs)).alias("__lvl"),
+                        STATE_COL, COUNT_COL)
+            .select("__lvl.*", STATE_COL, COUNT_COL))
+    totals = [s for s, sub in enumerate(subsets) if not sub]
+    if totals:
+        # SQL parity: the () grouping set emits its row even on empty
+        # input; folding one monoid-zero state into each grand-total
+        # group is free on non-empty input (identity law) and supplies
+        # that row on empty.
+        zero = bytearray(factory().to_bytes())
+        flat = flat.unionByName(fine.sparkSession.createDataFrame(
+            [(s, (2 ** d) - 1) + (None,) * d + (zero, 0) for s in totals],
+            flat.schema))
+    merged = merge_sketches(flat, ["__set", "grouping_id"] + keys)
+    return merged.select(*keys, "grouping_id", STATE_COL, COUNT_COL)
 
 
 # ---------------------------------------------------------------------------

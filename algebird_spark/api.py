@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame
 
 from .agg import (present_explode, sketch_by_key, sketch_global,
                   sketch_rollup, with_presented)
-from .sketches import (CMS, HLL, KLL, BloomFilter, MinHash, TDigest,
+from .sketches import (CMS, HLL, KLL, BloomFilter, TDigest,
                        bits_for_error)
 
 
@@ -168,13 +168,6 @@ def estimate_join_size(left: DataFrame, left_key: str,
     return skl.inner_product(skr)
 
 
-def frequency_sketch(df: DataFrame, col: str, eps: float = 0.001,
-                     delta: float = 1e-6) -> CMS:
-    """Global CMS for ad-hoc point/inner-product queries. Any key dtype:
-    strings/bytes go through the canonical prepare_keys hash."""
-    return sketch_global(df, col, lambda: CMS(eps=eps, delta=delta))
-
-
 def top_k(df: DataFrame, col: str, k: int = 10, by: Sequence[str] = (),
           capacity: int | None = None, fanout: int = 0):
     """Top-k items with SpaceSaver per-item error bounds; string columns
@@ -250,12 +243,6 @@ def membership_filter(df: DataFrame, col: str, expected_items: int,
     return sketch_global(
         df, col, lambda: BloomFilter(num_entries=expected_items,
                                      fp_prob=fp_prob))
-
-
-def jaccard_similarity(df: DataFrame, col: str, by: Sequence[str],
-                       num_lanes: int = 256) -> DataFrame:
-    """MinHash signature per key — feed pairs to ``MinHash.similarity``."""
-    return sketch_by_key(df, by, col, lambda: MinHash(num_lanes=num_lanes))
 
 
 def dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -405,22 +392,6 @@ def distinct_count_per_key(df: DataFrame, key_col: str, value_col: str,
     return from_bytes(bytes(rows[0]["sketch_state"]))
 
 
-def cumulative_distinct(df: DataFrame, col: str, by: Sequence[str],
-                        step_col: str, bits: int = 12) -> DataFrame:
-    """Cumulative distinct count per key over an ordered step column —
-    the "HLL scan" (reference ``Scan.fromMonoidAggregator``): one row
-    per (keys, step) estimating distinct ``col`` values seen through
-    that step. Build cost = one keyed sketch build + a state-sized
-    cumulative fold; never an expanding exact window."""
-    from .agg import sketch_by_key
-    from .operators.scan import sketch_scan
-    from .sketches import HLL
-
-    states = sketch_by_key(df, list(by) + [step_col], col,
-                           lambda: HLL(p=bits))
-    return sketch_scan(states, list(by), step_col)
-
-
 def scan_fold(df: DataFrame, keys: Sequence[str], order, step, init,
               output_col: str = "scan_out",
               output_type: str = "double") -> DataFrame:
@@ -456,50 +427,6 @@ def sessionize(df: DataFrame, user_col: str, ts_col: str,
         output_col, "bigint")
 
 
-def semi_join_prune(big: DataFrame, keys: DataFrame, big_key: str,
-                    keys_key: str | None = None,
-                    fp_prob: float = 0.01) -> DataFrame:
-    """Bloom-prune ``big`` to rows whose key may appear in ``keys``:
-    a no-false-negative superset filter evaluated in the scan stage
-    (see operators/joins.py — follow with a real join to drop the
-    bounded false-positive residue)."""
-    from .operators.joins import bloom_prune
-    return bloom_prune(big, keys, big_key, keys_key or big_key,
-                       fp_prob=fp_prob)
-
-
-def join_pruned(big: DataFrame, small: DataFrame, big_key: str,
-                small_key: str | None = None, how: str = "inner",
-                fp_prob: float = 0.01) -> DataFrame:
-    """Exact inner/semi join with the big side Bloom-pruned before the
-    shuffle (operators/joins.py:bloom_join)."""
-    from .operators.joins import bloom_join
-    return bloom_join(big, small, big_key, small_key, how=how,
-                      fp_prob=fp_prob)
-
-
-def join_skewed(big: DataFrame, small: DataFrame, big_key: str,
-                small_key: str | None = None, how: str = "inner",
-                min_share: float = 0.005) -> DataFrame:
-    """Exact join with SpaceSaver-detected hot keys routed through a
-    broadcast path so they never shuffle (operators/joins.py:skew_join)."""
-    from .operators.joins import skew_join
-    return skew_join(big, small, big_key, small_key, how=how,
-                     min_share=min_share)
-
-
-def join_asof(left: DataFrame, right: DataFrame, key: str,
-              left_ts: str = "ts", right_ts: str = "ts",
-              **kw) -> DataFrame:
-    """Backward as-of join: each left row gets the right row with the
-    greatest right_ts <= left_ts per key (operators/joins.py:asof_join
-    — union + one window carry-forward, one shuffle, no range
-    blow-up)."""
-    from .operators.joins import asof_join
-    return asof_join(left, right, key, left_ts=left_ts,
-                     right_ts=right_ts, **kw)
-
-
 def build_dedup_index(docs: DataFrame, path: str, **kw) -> dict:
     """Persist a MinHash-LSH near-dup index (band buckets + stored
     shingles + config manifest) for incremental corpus dedup
@@ -524,48 +451,3 @@ def dedup_incremental(new_docs: DataFrame, index_path: str,
                                     id_col=id_col, **kw)
     dup_ids = pairs.select(F.col("new_id").alias(id_col)).distinct()
     return new_docs.join(dup_ids, id_col, "left_anti")
-
-
-def top_k_exact_pruned(df: DataFrame, keys: Sequence[str], order_col: str,
-                       k: int, **kw) -> DataFrame:
-    """Exact per-group top-k with the ranking window pruned to
-    ~k + O(eps*n) scan-stage survivors by a KLL cutoff; verified and
-    fallback-exact (operators/topk.py:top_k_pruned)."""
-    from .operators.topk import top_k_pruned
-    return top_k_pruned(df, keys, order_col, k, **kw)
-
-
-def sample_weighted(df: DataFrame, k: int, weight_col: str,
-                    by: Sequence[str] = (), id_col: str = "doc_id",
-                    **kw) -> DataFrame:
-    """Deterministic weighted sample without replacement (A-ES on an
-    md5-derived uniform — reproducible across engines and reruns;
-    operators/topk.py:weighted_sample)."""
-    from .operators.topk import weighted_sample
-    return weighted_sample(df, k, weight_col, by=by, id_col=id_col, **kw)
-
-
-def mix_by_budget(docs: DataFrame, total_budget: float | None = None,
-                  budget: dict | None = None, mix=None,
-                  by: str = "source", id_col: str = "doc_id",
-                  text_col: str = "text",
-                  token_col: str | None = None) -> DataFrame:
-    """Deterministic token-budget data mixing: downsample each group so
-    its expected token mass meets its budget; identical keep-set on any
-    engine and any rerun (operators/exact.py:token_budget_sample)."""
-    from .operators.exact import token_budget_sample
-    return token_budget_sample(docs, by=by, id_col=id_col,
-                               text_col=text_col, token_col=token_col,
-                               budget=budget, total_budget=total_budget,
-                               mix=mix)
-
-
-def train_val_test(df: DataFrame, fractions: dict | None = None,
-                   id_col: str = "doc_id", salt: str = "split") -> DataFrame:
-    """Deterministic, engine-portable split assignment (adds
-    ``__split``); stable under corpus growth
-    (operators/exact.py:assign_splits)."""
-    from .operators.exact import assign_splits
-    return assign_splits(df, fractions or {"train": 0.9, "val": 0.05,
-                                           "test": 0.05},
-                         id_col=id_col, salt=salt)

@@ -208,44 +208,94 @@ def test_premerge_local_shuffle_free_and_equivalent(spark, tokens):
     assert c == a
 
 
-def test_keyed_coalescing_invariant_under_tiny_arrow_batches(spark):
-    """Round-6 regression pin for the keyed cross-batch buffering in
-    sketch_partitions / sketch_by_key_multi: with Arrow batches forced
-    down to 64 rows the kernels see hundreds of per-(batch, group)
-    slices, exercising the per-key buffers, the direct zero-copy path,
-    the global cap flush, and the end-of-stream flush — all of which
-    must be observationally invisible. HLL is byte-canonical so states
-    must be BYTE-equal; SpaceSaver (order-sensitive eviction) must see
-    the identical per-key element sequence, so its exact-mode counts
-    must match too."""
-    from algebird_spark.operators.exact import top_k_per_group  # noqa: F401
+def test_all_empty_arrays_emit_zero_count_states(spark):
+    """Rows whose arrays are all empty still emit states: one
+    ``n_values=0`` state per (partition, key) when keyed and one per
+    non-empty partition when global; merged, every key comes back with
+    ``n_values=0`` and the global sketch estimates 0."""
+    from algebird_spark.agg import sketch_partitions
+    df = spark.createDataFrame([("a", []), ("a", []), ("b", [])],
+                               "k string, v array<int>")
+    parts = df.rdd.getNumPartitions()
+    nonempty = df.rdd.mapPartitions(lambda it: [sum(1 for _ in it)]) \
+                 .filter(lambda n: n > 0).count()
+    per_part_keys = df.rdd.mapPartitions(
+        lambda it: [len({r["k"] for r in it})]).sum()
+
+    keyed = sketch_partitions(df, "v", lambda: HLL(p=10), ["k"],
+                              min_partitions=parts).collect()
+    assert len(keyed) == per_part_keys
+    assert {r["k"] for r in keyed} == {"a", "b"}
+    assert all(r["n_values"] == 0 for r in keyed)
+
+    glob = sketch_partitions(df, "v", lambda: HLL(p=10),
+                             min_partitions=parts).collect()
+    assert len(glob) == nonempty
+    assert all(r["n_values"] == 0 for r in glob)
+
+    merged = {r["k"]: (r["n_values"],
+                       from_bytes(bytes(r[STATE_COL])).estimate())
+              for r in sketch_by_key(df, ["k"], "v",
+                                     lambda: HLL(p=10)).collect()}
+    assert merged == {"a": (0, 0.0), "b": (0, 0.0)}
+    assert sketch_global(df, "v", lambda: HLL(p=10)).estimate() == 0.0
+
+
+@pytest.mark.parametrize("case", ["keyed", "global", "multi"])
+def test_keyed_coalescing_invariant_under_tiny_arrow_batches(spark, case):
+    """Regression pin for the cross-batch buffering in the one combine
+    kernel behind sketch_partitions and sketch_by_key_multi (keyed
+    single-column, global, and multi-column keyed): with Arrow batches
+    forced down to 64 rows the kernel sees hundreds of per-(batch,
+    group) slices, exercising the per-key buffers, the direct
+    zero-copy path, the global cap flush, and the end-of-stream flush
+    — all of which must be observationally invisible. HLL and
+    HLLSeries are byte-canonical, so states must be BYTE-equal;
+    SpaceSaver (order-sensitive eviction) must see the identical
+    per-key element sequence, so its exact-mode counts must match
+    too."""
+    from algebird_spark.agg import sketch_by_key_multi
     from algebird_spark.sketches import HLL, SpaceSaver
+    from algebird_spark.sketches.timeseries import HLLSeries
 
     df = (spark.range(30_000)
           .select((F.col("id") % 5).cast("string").alias("g"),
-                  (F.col("id") * 2654435761 % 997).alias("v"))
+                  (F.col("id") * 2654435761 % 997).alias("v"),
+                  (F.col("id") % 113).cast("double").alias("t"))
           .repartition(4, "g"))
+    keys = [] if case == "global" else ["g"]
+    if case == "multi":
+        factories = {"canonical": lambda: HLLSeries(p=12)}
+
+        def build(factory):
+            return sketch_by_key_multi(df, keys, ["v", "t"], factory)
+    else:
+        factories = {"canonical": lambda: HLL(p=12),
+                     "spacesaver": lambda: SpaceSaver(capacity=64)}
+
+        def build(factory):
+            return sketch_by_key(df, keys, "v", factory)
+
+    def states():
+        out = {}
+        for name, factory in factories.items():
+            for r in build(factory).collect():
+                b = bytes(r[STATE_COL])
+                out[(name, r["g"] if keys else None)] = (
+                    b if name == "canonical" else from_bytes(b).counters)
+        return out
+
     prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     try:
-        def states(factory):
-            out = {}
-            for r in sketch_by_key(df, ["g"], "v", factory).collect():
-                out[r["g"]] = bytes(r[STATE_COL])
-            return out
-
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
-        tiny_hll = states(lambda: HLL(p=12))
-        tiny_ss = {g: from_bytes(b).counters
-                   for g, b in states(lambda: SpaceSaver(capacity=64)).items()}
+        tiny = states()
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
                        "100000")
-        big_hll = states(lambda: HLL(p=12))
-        big_ss = {g: from_bytes(b).counters
-                  for g, b in states(lambda: SpaceSaver(capacity=64)).items()}
+        big = states()
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
-    assert tiny_hll == big_hll
-    assert tiny_ss == big_ss
+    assert len(tiny) == len(factories) * (1 if case == "global" else 5)
+    assert tiny == big
 
 
 # ---------------------------------------------------------------------------
@@ -372,14 +422,26 @@ def test_grouping_sets_levels_equal_direct_builds(spark, tokens):
 
 def test_duplicate_grouping_sets_emit_duplicate_rows(spark, tokens):
     """SQL semantics: duplicate GROUPING SETS emit duplicate level
-    rows with IDENTICAL (not doubly-merged) states — this exercises
-    the per-level fallback path, since the single-pass explode plan
-    would fold the duplicates into one group."""
+    rows with IDENTICAL (not doubly-merged) states — the single-pass
+    explode carries each set's index, so the keyed merge keeps the
+    duplicates apart instead of folding them into one group. They take
+    the same plan as distinct sets: as many Exchanges as the
+    non-duplicate call, and nothing left persisted after collect()."""
     from algebird_spark.agg import sketch_rollup
-    dup = sketch_rollup(tokens, ["source"], "tokens", lambda: HLL(p=12),
-                        sets=[["source"], ["source"]]).collect()
-    single = sketch_rollup(tokens, ["source"], "tokens", lambda: HLL(p=12),
-                           sets=[["source"]]).collect()
+
+    def exchanges(df):
+        return df._jdf.queryExecution().executedPlan().toString() \
+                 .count("Exchange")
+
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    dup_df = sketch_rollup(tokens, ["source"], "tokens", lambda: HLL(p=12),
+                           sets=[["source"], ["source"]])
+    single_df = sketch_rollup(tokens, ["source"], "tokens",
+                              lambda: HLL(p=12), sets=[["source"]])
+    assert exchanges(dup_df) == exchanges(single_df) > 0
+    dup, single = dup_df.collect(), single_df.collect()
+    after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    assert after == before, "duplicate grouping sets left a persisted RDD"
     assert len(dup) == 2 * len(single)
     ests = {}
     for r in dup:
@@ -411,3 +473,4 @@ def test_rollup_generic_over_cms(spark, tokens):
     for s, n in exact.items():
         assert got[(s, 0)] == n
     assert got[(None, 1)] == sum(exact.values())
+
