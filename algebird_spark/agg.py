@@ -10,12 +10,15 @@ DataFrames + Arrow per SURVEY.md §3.2-3.3:
      merge shuffle. The one exception: an input with fewer partitions
      than ``min_partitions`` (default: cluster parallelism) is first
      repartitioned, which shuffles its raw rows.
-  2. **Tree merge**: per-key states merge via ``groupBy(keys)``; when
-     the number of partition states is large, an intermediate salted
-     round (``fanout`` buckets) keeps any single reducer's fan-in
-     bounded — treeAggregate-style two-level merge, never
-     ``repartition(1)`` on a big fan-in (the anti-pattern called out in
-     AlgebirdRDD.scala:28).
+  2. **Tree merge**: one hash Exchange on the keys co-locates each
+     key's states, a per-partition sort makes them adjacent, and one
+     ``mapInArrow`` fold streams the sorted batches, merging each run
+     of equal keys — one open state per worker, no per-group Python
+     call. When the number of partition states is large, an
+     intermediate salted round (``fanout`` buckets) keeps any single
+     reducer's fan-in bounded — treeAggregate-style two-level merge,
+     never ``repartition(1)`` on a big fan-in (the anti-pattern called
+     out in AlgebirdRDD.scala:28).
   3. **present()**: decode the (few, one-per-group) final states into
      estimate columns.
 
@@ -26,6 +29,7 @@ Requires a commutative merge, exactly like the reference
 
 from __future__ import annotations
 
+import math
 from typing import Callable, Iterator, Sequence
 
 import numpy as np
@@ -89,102 +93,79 @@ def _flatten_values(col: pa.Array) -> tuple[np.ndarray, np.ndarray | None]:
     return col.to_numpy(zero_copy_only=False), None
 
 
-def _key_frame(batch: pa.RecordBatch, keys: Sequence[str]) -> pd.DataFrame:
-    return pa.Table.from_batches([batch]).select(list(keys)).to_pandas()
+# Stands in for NaN inside a group-key tuple: NaN != NaN would split
+# its group, while Spark groups every NaN together (apart from NULL).
+_NAN = object()
 
 
-def _factorize_rows(kf: pd.DataFrame, keys: Sequence[str]):
-    """Per-row group codes + unique key tuples. Null keys form their own
-    group, matching SQL GROUP BY (factorize's default -1 sentinel would
-    silently drop those rows from the sketch)."""
+def _group_key(values) -> tuple:
+    """A key tuple with Spark's grouping equality: NULL (None) equals
+    NULL, NaN equals NaN (as ``_NAN``) and -0.0 is 0.0."""
+    return tuple(_NAN if v != v else v + 0.0 if isinstance(v, float) else v
+                 for v in values)
+
+
+def _factorize_rows(batch: pa.RecordBatch, keys: Sequence[str]):
+    """Per-row group codes + unique ``_group_key`` tuples. Each key
+    column is dictionary-encoded in Arrow, so NULL forms its own group
+    and NaN another, matching SQL GROUP BY (a pandas round trip would
+    turn a NULL float into NaN and merge the two)."""
+    per = []
+    for k in keys:
+        enc = batch.column(k).dictionary_encode(null_encoding="encode")
+        per.append((enc.indices.to_numpy(zero_copy_only=False),
+                    enc.dictionary.to_pylist()))
     if len(keys) == 1:
-        codes, uniques = pd.factorize(kf[keys[0]], use_na_sentinel=False)
-        return codes, [(u,) for u in uniques]
-    per = [pd.factorize(kf[k], use_na_sentinel=False) for k in keys]
-    # Guard the mixed-radix code space: with many high-cardinality key
+        codes, uniques = per[0]
+        return codes, [_group_key((u,)) for u in uniques]
+    # Mixed-radix combine of the per-column codes, then one factorize
+    # over the combined int codes. With many high-cardinality key
     # columns the product of per-batch unique counts can exceed 2^63
-    # and wrap, aliasing distinct key tuples into one group. Python-int
-    # arithmetic detects it exactly; fall back to a MultiIndex
-    # factorize over the per-column codes (no combined code at all).
-    radix = 1
-    for _, uniques in per:
-        radix *= max(len(uniques), 1)
-    if radix >= 2 ** 62:
-        mi = pd.MultiIndex.from_arrays([codes for codes, _ in per])
-        row_codes, mi_uniques = mi.factorize()
-        out = [tuple(per[i][1][code_tup[i]] for i in range(len(per)))
-               for code_tup in mi_uniques]
-        return row_codes, out
-    # mixed-radix combine of per-column codes, then one factorize over
-    # the combined int codes (null-free by construction)
-    combined = np.zeros(len(kf), dtype=np.int64)
-    for codes, uniques in per:
-        combined *= max(len(uniques), 1)
-        combined += codes
-    row_codes, row_uniques = pd.factorize(combined)
-    out = []
-    for cc in row_uniques.tolist():
-        vals = []
-        for codes, uniques in reversed(per):
-            m = max(len(uniques), 1)
-            vals.append(uniques[cc % m])
-            cc //= m
-        out.append(tuple(reversed(vals)))
-    return row_codes, out
+    # and wrap, aliasing distinct key tuples into one group; Python-int
+    # arithmetic detects it exactly, and a MultiIndex factorize over the
+    # per-column codes (no combined code at all) takes over.
+    if math.prod(max(len(u), 1) for _, u in per) >= 2 ** 62:
+        row_codes = pd.MultiIndex.from_arrays(
+            [c for c, _ in per]).factorize()[0]
+    else:
+        combined = np.zeros(batch.num_rows, dtype=np.int64)
+        for codes, uniques in per:
+            combined *= max(len(uniques), 1)
+            combined += codes
+        row_codes = pd.factorize(combined)[0]
+    # each group's key tuple, read off its first row
+    first = np.unique(row_codes, return_index=True)[1]
+    return row_codes, [_group_key(u[c[r]] for c, u in per)
+                       for r in first.tolist()]
 
 
-def _py_key(v):
-    """Arrow-safe scalar for a group-key value (NaN/NaT/NA -> None)."""
-    try:
-        if pd.isna(v):
-            return None
-    except (TypeError, ValueError):
-        pass
-    return v.item() if isinstance(v, np.generic) else v
-
-
-def _state_batch(cols: list[list], out_schema: StructType) -> pa.RecordBatch:
-    """Build the (keys..., state, count) output batch. Key columns go
-    through a safe cast: an int64 key column that contained nulls
-    arrives from pandas as float64, and its non-null uniques must land
-    back in the declared integer type."""
+def _state_batch(rows: list[tuple], out_schema: StructType) -> pa.RecordBatch:
+    """The ``(keys..., state, count)`` output batch from ``(key tuple,
+    state bytes, n_values)`` rows, each column built in its declared
+    Arrow type; ``_NAN`` turns back into NaN."""
     from pyspark.sql.pandas.types import to_arrow_type
-    arrays = []
-    for i, f in enumerate(out_schema.fields):
-        typ = to_arrow_type(f.dataType)
-        arr = pa.array(cols[i])
-        arrays.append(arr if arr.type == typ else arr.cast(typ))
+    cols = zip(*([float("nan") if v is _NAN else v for v in key] + [blob, n]
+                 for key, blob, n in rows))
     return pa.RecordBatch.from_arrays(
-        arrays, names=[f.name for f in out_schema.fields])
+        [pa.array(list(col), type=to_arrow_type(f.dataType))
+         for f, col in zip(out_schema.fields, cols)],
+        names=[f.name for f in out_schema.fields])
 
 
-def _state_schema(df: DataFrame, keys: Sequence[str],
-                  *extra: StructField) -> StructType:
-    """``keys..., extra..., sketch_state binary, n_values long``."""
-    return StructType([df.schema[k] for k in keys] + list(extra) + [
+def _state_schema(df: DataFrame, keys: Sequence[str]) -> StructType:
+    """``keys..., sketch_state binary, n_values long``."""
+    return StructType([df.schema[k] for k in keys] + [
         StructField(STATE_COL, BinaryType(), False),
         StructField(COUNT_COL, LongType(), False),
     ])
-
-
-def _emit(keys: Sequence[str], acc: dict,
-          out_schema: StructType) -> pa.RecordBatch:
-    """One state row per ``key -> (sketch, n_values)`` entry."""
-    cols: list[list] = [[] for _ in keys] + [[], []]
-    for key, (sk, n) in acc.items():
-        for i, kv in enumerate(key):
-            cols[i].append(_py_key(kv))
-        cols[-2].append(sk.to_bytes())
-        cols[-1].append(n)
-    return _state_batch(cols, out_schema)
 
 
 def _fold(blobs, counts, acc: Sketch | None = None,
           n: int = 0) -> tuple[Sketch | None, int]:
     """The one state fold: merge serialized states, in order, into
     ``acc`` (the first blob seeds it when None) and add their value
-    counts to ``n``. The keyed merge, premerge_local and sketch_global's
-    driver tail all fold through here."""
+    counts to ``n``. Every merge (``_fold_sorted``) and sketch_global's
+    driver tail fold through here."""
     for blob in blobs:
         sk = from_bytes(bytes(blob))
         if acc is None:
@@ -248,7 +229,7 @@ def _combine(df: DataFrame, keys: Sequence[str], value_cols: Sequence[str],
         """(key tuple, aligned value slices) per group in the batch."""
         if not keys:
             return [((), cols)]
-        codes, uniques = _factorize_rows(_key_frame(batch, keys), keys)
+        codes, uniques = _factorize_rows(batch, keys)
         if lengths is not None:
             codes = np.repeat(codes, lengths)
         order = np.argsort(codes, kind="stable")
@@ -301,7 +282,8 @@ def _combine(df: DataFrame, keys: Sequence[str], value_cols: Sequence[str],
         for key in list(pend):
             flush(key)
         if acc:
-            yield _emit(keys, acc, out_schema)
+            yield _state_batch([(k, sk.to_bytes(), n)
+                                for k, (sk, n) in acc.items()], out_schema)
 
     return df.select(*(keys + value_cols)).mapInArrow(run, out_schema)
 
@@ -319,14 +301,49 @@ def sketch_partitions(df: DataFrame, value_col: str, factory: SketchFactory,
 # stage 2: (optionally layered) merge of states by key
 # ---------------------------------------------------------------------------
 
-def _merge_fn(keys: Sequence[str]):
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk, n = _fold(pdf[STATE_COL], pdf[COUNT_COL])
-        row = {k: pdf[k].iloc[0] for k in keys}
-        row[STATE_COL] = sk.to_bytes()
-        row[COUNT_COL] = n
-        return pd.DataFrame([row])
-    return merge
+# A merge task yields its finished states once they reach this many
+# bytes, so it holds one open state plus one bounded output batch.
+_EMIT_BYTES = 8 << 20
+
+
+def _fold_sorted(placed: DataFrame, keys: list[str]) -> DataFrame:
+    """The one merge: sort ``placed``, which already holds each key's
+    states in one partition, by ``keys`` within partitions and stream
+    the sorted Arrow batches through one ``mapInArrow`` fold. Each run
+    of equal keys (``_group_key`` equality) folds through ``_fold``; on
+    a key change the finished state goes into the output batch, which
+    is yielded every ``_EMIT_BYTES``. Per group this costs a key
+    comparison, not a Python call and an Arrow round trip."""
+    out_schema = _state_schema(placed, keys)
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        done: list[tuple] = []
+        size = 0
+        key, acc, n = None, None, 0
+        for batch in batches:
+            ks = ([_group_key(r) for r in
+                   zip(*(batch.column(k).to_pylist() for k in keys))]
+                  if keys else [()] * batch.num_rows)
+            blobs = batch.column(STATE_COL).to_pylist()
+            counts = batch.column(COUNT_COL).to_pylist()
+            for k, blob, c in zip(ks, blobs, counts):
+                if acc is not None and k != key:
+                    done.append((key, acc.to_bytes(), n))
+                    size += len(done[-1][1])
+                    acc, n = None, 0
+                    if size >= _EMIT_BYTES:
+                        yield _state_batch(done, out_schema)
+                        done, size = [], 0
+                key = k
+                acc, n = _fold([blob], [c], acc, n)
+        if acc is not None:
+            done.append((key, acc.to_bytes(), n))
+        if done:
+            yield _state_batch(done, out_schema)
+
+    if keys:
+        placed = placed.sortWithinPartitions(*keys)
+    return placed.mapInArrow(run, out_schema)
 
 
 def premerge_local(states_df: DataFrame, keys: Sequence[str] = (),
@@ -334,13 +351,13 @@ def premerge_local(states_df: DataFrame, keys: Sequence[str] = (),
     """Shuffle-free pre-merge of partition states.
 
     ``coalesce`` (no Exchange) packs many map partitions into
-    ``target_partitions`` tasks, and a mapInArrow pass merges states
-    per key WITHIN each coalesced partition. At warehouse scale the
-    input stage can emit hundreds of thousands of (partition x key)
-    state rows; this reduces what the keyed merge shuffle carries from
-    P x K rows to target x K without moving a byte across the network.
-    Use before merge_sketches when P >> cores (e.g. 800k-partition
-    scans); a no-op branch when already at or below the target."""
+    ``target_partitions`` tasks, and the sorted fold merges states per
+    key WITHIN each coalesced partition. At warehouse scale the input
+    stage can emit hundreds of thousands of (partition x key) state
+    rows; this reduces what the keyed merge shuffle carries from P x K
+    rows to target x K without moving a byte across the network. Use
+    before merge_sketches when P >> cores (e.g. 800k-partition scans);
+    a no-op branch when already at or below the target."""
     parallelism = states_df.sparkSession.sparkContext.defaultParallelism
     if target_partitions is None:
         target_partitions = parallelism
@@ -353,22 +370,7 @@ def premerge_local(states_df: DataFrame, keys: Sequence[str] = (),
     target_partitions = max(target_partitions, parallelism)
     if states_df.rdd.getNumPartitions() <= target_partitions:
         return states_df
-    keys = list(keys)
-    out_schema = _state_schema(states_df, keys)
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        acc: dict[tuple, tuple] = {}
-        for batch in batches:
-            key_cols = [batch.column(k).to_pylist() for k in keys]
-            states = batch.column(STATE_COL).to_pylist()
-            ns = batch.column(COUNT_COL).to_pylist()
-            for i, (blob, n) in enumerate(zip(states, ns)):
-                key = tuple(col[i] for col in key_cols)
-                acc[key] = _fold([blob], [n], *acc.get(key, (None, 0)))
-        if acc:
-            yield _emit(keys, acc, out_schema)
-
-    return states_df.coalesce(target_partitions).mapInArrow(run, out_schema)
+    return _fold_sorted(states_df.coalesce(target_partitions), list(keys))
 
 
 def _fanout_merge(states_df: DataFrame, keys: list[str],
@@ -376,18 +378,20 @@ def _fanout_merge(states_df: DataFrame, keys: list[str],
     """Salted intermediate round: states merge within ``fanout``
     buckets per key (by input partition), bounding any one reducer's
     fan-in — the treeAggregate level."""
+    by = keys + ["__bucket"]
     salted = states_df.withColumn(
         "__bucket", F.pmod(F.spark_partition_id(), F.lit(fanout)))
-    bucket = StructField("__bucket", salted.schema["__bucket"].dataType, False)
-    partial = salted.groupBy(*keys, "__bucket").applyInPandas(
-        _merge_fn(keys + ["__bucket"]), _state_schema(states_df, keys, bucket))
-    return partial.select(*keys, STATE_COL, COUNT_COL)
+    return _fold_sorted(salted.repartition(*by), by).drop("__bucket")
 
 
 def merge_sketches(states_df: DataFrame, keys: Sequence[str] = (),
                    fanout: int = 0,
                    premerge: int | None = None) -> DataFrame:
     """Merge per-partition states down to one state per key.
+
+    One hash Exchange on ``keys`` (keyless: onto one partition), then
+    the sorted streaming fold: a worker holds one open state plus one
+    bounded output batch, at any key count.
 
     ``fanout > 0`` inserts an intermediate salted round: states first
     merge within ``fanout`` buckets per key, bounding any single
@@ -400,16 +404,8 @@ def merge_sketches(states_df: DataFrame, keys: Sequence[str] = (),
     keys = list(keys)
     if fanout:
         states_df = _fanout_merge(states_df, keys, fanout)
-    if keys:
-        return states_df.groupBy(*keys).applyInPandas(
-            _merge_fn(keys), _state_schema(states_df, keys))
-    # keyless: materialize the grouping column so applyInPandas sees it
-    g = StructField("__g", LongType(), False)
-    return (states_df.withColumn("__g", F.lit(1))
-            .groupBy("__g")
-            .applyInPandas(_merge_fn(["__g"]),
-                           _state_schema(states_df, [], g))
-            .drop("__g"))
+    placed = states_df.repartition(*keys) if keys else states_df.repartition(1)
+    return _fold_sorted(placed, keys)
 
 
 # ---------------------------------------------------------------------------
@@ -496,7 +492,7 @@ def sketch_rollup(df: DataFrame, keys: Sequence[str], value_col: str,
     # (keys, state, count) table, so when the (partition-state rows x
     # levels) explode stays small, feed it the PARTITION states
     # directly — every level then merges in the one keyed shuffle +
-    # one applyInPandas stage and the intermediate finest-grain merge
+    # one sorted fold and the intermediate finest-grain merge
     # stage disappears (measured: hll_rollup_sketch 2.4 -> 1.9 s at
     # sf1.0). Monoid associativity makes the result the same merge of
     # the same partition states, just in one round. At warehouse
@@ -532,10 +528,11 @@ def rollup_levels(fine: DataFrame, keys: Sequence[str],
 
     Plan: each state row EXPLODES into one (set index, grouping_id,
     masked keys) row per grouping set, and every level merges in ONE
-    keyed shuffle + ONE applyInPandas stage — stage count independent
-    of the level count, no intermediate persist. The set index keeps
-    duplicate GROUPING SETS (SQL emits one row per occurrence) apart in
-    that merge instead of folding them into one doubly-merged group."""
+    keyed shuffle + ONE sorted fold (``merge_sketches``) — stage count
+    independent of the level count, no intermediate persist. The set
+    index keeps duplicate GROUPING SETS (SQL emits one row per
+    occurrence) apart in that merge instead of folding them into one
+    doubly-merged group."""
     keys = list(keys)
     if grouping not in ("rollup", "cube"):
         raise ValueError("grouping must be 'rollup' or 'cube'")

@@ -181,7 +181,7 @@ def build_or_resume(spark: SparkSession, df: DataFrame, keys: Sequence[str],
         "lineage": {
             "engine": "algebird_spark",
             "topology": "mapInArrow partition-combine -> parquet checkpoint"
-                        " -> groupBy merge" + (f" (fanout={fanout})" if fanout else ""),
+                        " -> sorted merge" + (f" (fanout={fanout})" if fanout else ""),
         },
     }
     # Atomic commit: the manifest is the only pointer readers follow, so

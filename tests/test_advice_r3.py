@@ -22,6 +22,7 @@ import shutil
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import Row
 
@@ -219,7 +220,7 @@ def test_factorize_rows_high_cardinality_no_aliasing():
     kf = pd.DataFrame({
         f"k{i}": rng.permutation(n) for i in range(6)})
     keys = [f"k{i}" for i in range(6)]
-    codes, uniques = _factorize_rows(kf, keys)
+    codes, uniques = _factorize_rows(pa.RecordBatch.from_pandas(kf), keys)
     # every row is a distinct tuple (permutation columns) -> n groups
     assert len(uniques) == n
     assert len(np.unique(codes)) == n
@@ -230,7 +231,8 @@ def test_factorize_rows_high_cardinality_no_aliasing():
 
 def test_factorize_rows_small_path_unchanged():
     kf = pd.DataFrame({"a": [1, 1, 2, None], "b": ["x", "x", "y", "z"]})
-    codes, uniques = _factorize_rows(kf, ["a", "b"])
+    codes, uniques = _factorize_rows(pa.RecordBatch.from_pandas(kf),
+                                     ["a", "b"])
     assert len(uniques) == 3
     assert codes[0] == codes[1] != codes[2]
 

@@ -141,6 +141,27 @@ def test_null_handling_matches_sql_semantics(spark):
     assert got == {"a": 2, "b": 2}
 
 
+def test_nan_and_null_keys_group_like_spark(spark):
+    """A NaN group key is its own group, apart from NULL, and -0.0
+    groups with 0.0 — the groups and counts of Spark's ``groupBy``.
+    The states of one key arrive from several partitions, so the
+    combine and the merge must both keep the groups apart."""
+    nan = float("nan")
+    rows = ([(nan, list(range(i % 3 + 1))) for i in range(6)]
+            + [(0.0, [1, 2])] * 3 + [(-0.0, [5])] * 3 + [(None, [7])] * 6)
+    df = spark.createDataFrame(rows, "k double, v array<int>").repartition(5)
+
+    def norm(k):  # NaN != NaN: one comparable stand-in per NaN key
+        return "NaN" if k is not None and k != k else k
+
+    got = [(norm(r["k"]), r["n_values"]) for r in
+           sketch_by_key(df, ["k"], "v", lambda: HLL(p=10)).collect()]
+    exact = [(norm(r[0]), r[1]) for r in
+             df.groupBy("k").agg(F.sum(F.size("v"))).collect()]
+    assert len(got) == len(exact) == 3
+    assert dict(got) == dict(exact) == {"NaN": 12, 0.0: 9, None: 6}
+
+
 def test_multi_column_harness_sketchmap_and_hllseries(spark):
     from algebird_spark.agg import sketch_by_key_multi
     from algebird_spark.sketches import SketchMap
@@ -295,6 +316,57 @@ def test_keyed_coalescing_invariant_under_tiny_arrow_batches(spark, case):
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
     assert len(tiny) == len(factories) * (1 if case == "global" else 5)
+    assert tiny == big
+
+
+def test_merge_folds_states_split_across_arrow_batches(spark, tokens):
+    """At two rows per Arrow batch one key's state rows span several
+    batches into the sorted merge fold, which must carry the open state
+    across batch boundaries: keyed, keyless, fanout, premerge and a
+    2-key cube give the same HLL state bytes and n_values as at the
+    default batch size, with one row per key (per grouping_id in the
+    cube, where rolled-up keys are NULL)."""
+    from algebird_spark.agg import sketch_rollup
+
+    df = tokens.repartition(16).withColumn("par", F.col("n_tok") % 2)
+
+    def factory():
+        return HLL(p=12)
+
+    builds = {
+        "keyed": lambda: sketch_by_key(df, ["source"], "tokens", factory),
+        "keyless": lambda: sketch_by_key(df, [], "tokens", factory),
+        "fanout": lambda: sketch_by_key(df, ["source"], "tokens", factory,
+                                        fanout=3),
+        "premerge": lambda: sketch_by_key(df, ["source"], "tokens", factory,
+                                          premerge=4),
+        "cube": lambda: sketch_rollup(df, ["source", "par"], "tokens",
+                                      factory, grouping="cube"),
+    }
+
+    def states():
+        out = {}
+        for name, build in builds.items():
+            rows = build().collect()
+            got = {tuple(r[c] for c in r.__fields__
+                         if c not in (STATE_COL, "n_values")):
+                   (bytes(r[STATE_COL]), r["n_values"]) for r in rows}
+            assert len(got) == len(rows), name
+            out[name] = got
+        return out
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "2")
+        tiny = states()
+    finally:
+        spark.conf.set(conf, prev)
+    big = states()
+    n_src, n_par, n_fine = (df.select(*c).distinct().count() for c in
+                            (["source"], ["par"], ["source", "par"]))
+    assert len(big["keyed"]) == n_src and len(big["keyless"]) == 1
+    assert len(big["cube"]) == n_fine + n_src + n_par + 1
     assert tiny == big
 
 

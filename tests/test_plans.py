@@ -45,11 +45,15 @@ def test_partition_combine_before_shuffle(spark):
         if cut in tree:
             tree = tree[: tree.index(cut)]
             break
-    map_pos = tree.index("MapInArrow")
+    # the combine is the MapInArrow nearest the scan (the merge's own
+    # MapInArrow sits above the Exchange)
+    map_pos = tree.rindex("MapInArrow")
     exch_pos = tree.index("Exchange")
     assert exch_pos < map_pos, "raw rows would shuffle before the combine"
     # and no second Exchange between the combine and the scan
     assert "Exchange" not in tree[map_pos:]
+    # the merge is the sorted mapInArrow fold, not a per-group Python call
+    assert "FlatMapGroupsInPandas" not in plan
 
 
 def test_scan_pushdown_and_pruning(spark):
