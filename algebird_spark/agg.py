@@ -356,8 +356,11 @@ def premerge_local(states_df: DataFrame, keys: Sequence[str] = (),
     stage can emit hundreds of thousands of (partition x key) state
     rows; this reduces what the keyed merge shuffle carries from P x K
     rows to target x K without moving a byte across the network. Use
-    before merge_sketches when P >> cores (e.g. 800k-partition scans);
-    a no-op branch when already at or below the target."""
+    before merge_sketches when P >> cores (e.g. 800k-partition scans).
+    At P <= target ``coalesce`` keeps the P partitions and the fold
+    only passes each state through; the partition count is never
+    probed, because under AQE that probe runs the upstream shuffle
+    map stage while the plan is still being built."""
     parallelism = states_df.sparkSession.sparkContext.defaultParallelism
     if target_partitions is None:
         target_partitions = parallelism
@@ -368,8 +371,6 @@ def premerge_local(states_df: DataFrame, keys: Sequence[str] = (),
     # 159.9 s vs 59.5 s at target 32 — the 4x shuffle-row saving can
     # never repay a 4x-serialized scan.
     target_partitions = max(target_partitions, parallelism)
-    if states_df.rdd.getNumPartitions() <= target_partitions:
-        return states_df
     return _fold_sorted(states_df.coalesce(target_partitions), list(keys))
 
 

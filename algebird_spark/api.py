@@ -14,6 +14,7 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame
 
+from . import cache
 from .agg import (present_explode, sketch_by_key, sketch_global,
                   sketch_rollup, with_presented)
 from .sketches import (CMS, HLL, KLL, BloomFilter, TDigest,
@@ -358,17 +359,9 @@ def covariance_sketch(df: DataFrame, col: str = "embedding",
     return sketch_global(nn, col, lambda: FrequentDirections(d, ell))
 
 
-def release_dedup_caches(op: str | None = None) -> None:
-    """Unpersist the near-dup operators' internal caches (signature
-    and candidate tables). Each operator releases its previous
-    invocation's blocks automatically on the next call; batch jobs
-    that finish with a dedup stage call this for deterministic
-    cleanup. ``op``: one of 'minhash', 'minhash_cands',
-    'jaccard_verify_shingles', 'simhash', 'weighted_minhash', or None
-    for all; near_dup_pairs_* results also carry a per-invocation
-    ``_algebird_cache`` handle."""
-    from .operators.dedup import release_caches
-    release_caches(op)
+# unpersist operator intermediates: every live cache Scope, or every
+# live Scope of one operator name (see cache.py)
+release_dedup_caches = cache.release
 
 
 def distinct_count_per_key(df: DataFrame, key_col: str, value_col: str,

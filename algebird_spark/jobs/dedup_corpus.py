@@ -78,8 +78,10 @@ def main(argv=None, spark=None):
                             approx_rows=n_input)
     survivors = stages["survivors"]
     clusters = stages["clusters"]
+    # the pipeline's Scope: this job's persists join it, so one
+    # release drops every cached stage
+    scope = survivors._algebird_cache
     n_decontaminated = 0
-    pre_decon = None
     try:
         if args.benchmark:
             from pyspark.sql import functions as F
@@ -88,7 +90,7 @@ def main(argv=None, spark=None):
             bench = spark.read.parquet(args.benchmark)
             # one materialization serves both the pre-decontamination
             # count and the decontaminate pass
-            pre_decon = survivors = survivors.persist()
+            survivors = scope.persist(survivors)
             n_before = survivors.count()
             survivors = decontaminate(
                 survivors, bench, id_col=args.id_col,
@@ -103,7 +105,7 @@ def main(argv=None, spark=None):
                                     F.col("keep")
                                     & F.coalesce("__clean", F.lit(False)))
                         .drop("__clean"))
-        survivors = survivors.persist()
+        survivors = scope.persist(survivors)
         n_gated = stages["gated"].count()
         n_exact = stages["exact_kept"].count()
         n_survivors = survivors.count()
@@ -115,11 +117,7 @@ def main(argv=None, spark=None):
             clusters.write.mode("overwrite") \
                 .parquet(args.output + "/clusters")
     finally:
-        stages["gated"].unpersist()
-        stages["exact_kept"].unpersist()
-        if pre_decon is not None:
-            pre_decon.unpersist()
-        survivors.unpersist()
+        scope.release()
 
     metrics = {"n_input": n_input, "n_after_quality": n_gated,
                "n_after_exact_dedup": n_exact, "n_survivors": n_survivors,

@@ -21,6 +21,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..cache import Scope
+
 # reference default: HashingTrickMonoid(bits, seed = 123456)
 DEFAULT_SEED = 123456
 
@@ -196,18 +198,15 @@ def cdf_normalize(df: DataFrame, col: str, by=(), k: int = 200,
     round-trip at any cardinality."""
     from ..agg import STATE_COL, sketch_by_key, sketch_global
     from ..sketches import TDigest
-    from .dedup import _cache_scoped, _new_generation
 
     by = list(by)
     if not by:
         states = {(): sketch_global(df, col, lambda: TDigest(k)).to_bytes()}
         return _rank_broadcast(df, col, by, states, out_col)
-    states_df = _cache_scoped(
-        "cdf_normalize_states",
-        sketch_by_key(df, by, col, lambda: TDigest(k)),
-        gen=_new_generation())
+    scope = Scope("cdf_normalize_states")
+    states_df = scope.persist(sketch_by_key(df, by, col, lambda: TDigest(k)))
     if states_df.count() <= max_broadcast_groups:
         states = {tuple(r[c] for c in by): bytes(r[STATE_COL])
                   for r in states_df.collect()}
-        return _rank_broadcast(df, col, by, states, out_col)
-    return _rank_cogroup(df, col, by, states_df, out_col)
+        return scope.attach(_rank_broadcast(df, col, by, states, out_col))
+    return scope.attach(_rank_cogroup(df, col, by, states_df, out_col))

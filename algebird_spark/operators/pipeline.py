@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..cache import Scope
 from . import dedup as _d
 from . import text as _t
 from .graph import dedup_clusters
@@ -41,15 +42,17 @@ def dedup_pipeline(df: DataFrame, text_col: str = "text",
     near-dup mode, clustering is inherently iterative and executes at
     call time; pass ``persist=True`` (the batch-job mode) to cache
     ``gated``/``exact_kept`` across the signature, verification and
-    clustering passes — the caller owns the unpersist.
+    clustering passes. ``survivors`` carries the invocation's Scope
+    as ``_algebird_cache``: release it once the stages are consumed.
     """
+    scope = Scope("dedup_pipeline")
     gated = df
     if min_chars:
         gated = gated.filter(F.length(text_col) >= min_chars)
     if min_tokens:
         gated = gated.filter(_t.token_count(F.col(text_col)) >= min_tokens)
     if persist:
-        gated = gated.persist()
+        gated = scope.persist(gated)
 
     # exact losers -> keeper edges, linear in group size (no cliques):
     # every doc links to its fingerprint group's min id. NULL texts
@@ -68,7 +71,7 @@ def dedup_pipeline(df: DataFrame, text_col: str = "text",
                      .select(id_col)
     exact_kept = gated.join(keep_ids, id_col, "left_semi")
     if persist:
-        exact_kept = exact_kept.persist()
+        exact_kept = scope.persist(exact_kept)
 
     if near is None:
         # components ARE the fingerprint groups — stay lazy, no CC
@@ -77,7 +80,7 @@ def dedup_pipeline(df: DataFrame, text_col: str = "text",
             F.col("__keep").alias("component"),
             (F.col(id_col) == F.col("__keep")).alias("keep"))
         return {"gated": gated, "exact_kept": exact_kept,
-                "clusters": clusters, "survivors": exact_kept}
+                "clusters": clusters, "survivors": scope.attach(exact_kept)}
 
     if near == "minhash":
         pairs = _d.near_dup_pairs_minhash(exact_kept, id_col, text_col,
@@ -97,7 +100,10 @@ def dedup_pipeline(df: DataFrame, text_col: str = "text",
 
     edges = exact_edges.unionByName(pairs.select("id_a", "id_b"))
     clusters = dedup_clusters(gated, edges, id_col)
+    # clustering ran eagerly into local checkpoints, so nothing reads
+    # the near-dup operator's caches any more
+    pairs._algebird_cache.release()
     survivors = gated.join(clusters.filter("keep").select(id_col),
                            id_col, "left_semi")
     return {"gated": gated, "exact_kept": exact_kept,
-            "clusters": clusters, "survivors": survivors}
+            "clusters": clusters, "survivors": scope.attach(survivors)}

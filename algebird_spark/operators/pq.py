@@ -37,6 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import Scope
+
 
 def _check_codebook(codebook: np.ndarray) -> tuple[int, int, int]:
     cb = np.asarray(codebook, dtype=np.float64)
@@ -88,9 +90,9 @@ def train_pq_codebook(vectors: DataFrame, m: int, k_sub: int = 256,
         raise ValueError(f"m={m} and k_sub={k_sub} must be >= 1")
     if k_sub > 256:
         raise ValueError(f"k_sub={k_sub} > 256 does not fit uint8 codes")
-    train = (vectors.select(id_col, vec_col)
-             .filter(F.col(vec_col).isNotNull()).persist())
-    try:
+    with Scope("pq_train") as scope:
+        train = scope.persist(vectors.select(id_col, vec_col)
+                              .filter(F.col(vec_col).isNotNull()))
         init = (train.orderBy(id_col).limit(k_sub)
                 .select(vec_col).collect())
         if not init:
@@ -147,8 +149,6 @@ def train_pq_codebook(vectors: DataFrame, m: int, k_sub: int = 256,
                           sums / np.maximum(counts[:, :, None], 1),
                           cb)  # empty words keep their previous centroid
         return cb
-    finally:
-        train.unpersist()
 
 
 def encode_pq(vectors: DataFrame, codebook: np.ndarray,

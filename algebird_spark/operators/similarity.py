@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..cache import Scope
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -429,8 +431,8 @@ def train_ivf_centroids(vectors: DataFrame, n_lists: int, n_iter: int = 5,
     # training makes n_iter + 1 passes; persist so a sampled/derived
     # input computes once instead of re-scanning (and re-sampling)
     # per Lloyd round
-    train = vectors.select(id_col, vec_col).persist()
-    try:
+    with Scope("ivf_train") as scope:
+        train = scope.persist(vectors.select(id_col, vec_col))
         init = (train.orderBy(id_col).limit(n_lists)
                 .select(vec_col).collect())
         if not init:
@@ -454,8 +456,6 @@ def train_ivf_centroids(vectors: DataFrame, n_lists: int, n_iter: int = 5,
             norms = np.linalg.norm(nxt, axis=1, keepdims=True)
             c = nxt / np.where(norms == 0, 1.0, norms)
         return c
-    finally:
-        train.unpersist()
 
 
 def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int,

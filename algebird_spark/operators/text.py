@@ -14,6 +14,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import Scope
+
 # tiny stopword lists for the n-gram/stopword language heuristic
 _STOPWORDS = {
     "en": ["the", "and", "of", "to", "in", "is", "that", "it", "was", "for"],
@@ -429,8 +431,6 @@ def pack_sequences(df: DataFrame, seq_len: int, by: str = "source",
     offset."""
     from pyspark.sql.window import Window
 
-    from .dedup import _cache_scoped, _new_generation
-
     if seq_len < 1:
         raise ValueError("seq_len must be >= 1")
     tok = F.col(token_col) if token_col else token_count(F.col(text_col))
@@ -439,7 +439,8 @@ def pack_sequences(df: DataFrame, seq_len: int, by: str = "source",
     parts = [num_partitions] if num_partitions else []
     rp = (t.repartitionByRange(*parts, F.col(by), F.col(id_col))
           .withColumn("__pid", F.spark_partition_id()))
-    rp = _cache_scoped("pack_sequences_rp", rp, gen=_new_generation())
+    scope = Scope("pack_sequences_rp")
+    rp = scope.persist(rp)
     # phase 1: per-(slice, group) subtotals; exclusive prefix sum
     # across slices per group. The window runs over <= P rows per
     # group of a <= P x G row table — never over the data.
@@ -468,10 +469,11 @@ def pack_sequences(df: DataFrame, seq_len: int, by: str = "source",
                            + F.coalesce(F.col("__off"), F.lit(0)))
                           .cast("long"))
               .drop("__pid", "__opid", "__g", "__off", "__local"))
-    return (packed
-            .withColumn("bin_start",
-                        F.floor(F.col("start_offset") / seq_len))
-            .withColumn("bin_end",
-                        F.floor((F.col("start_offset")
-                                 + F.greatest(F.col("n_tokens") - 1,
-                                              F.lit(0))) / seq_len)))
+    return scope.attach(
+        packed
+        .withColumn("bin_start",
+                    F.floor(F.col("start_offset") / seq_len))
+        .withColumn("bin_end",
+                    F.floor((F.col("start_offset")
+                             + F.greatest(F.col("n_tokens") - 1,
+                                          F.lit(0))) / seq_len)))

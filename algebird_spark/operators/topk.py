@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..agg import STATE_COL, sketch_by_key
+from ..cache import Scope
 from ..sketches import KLL, from_bytes
 from .exact import top_k_per_group
 
@@ -191,9 +192,8 @@ def top_k_pruned(df: DataFrame, keys: Sequence[str], order_col: str, k: int,
     if verify:
         # two consumers (the rank and the safety count) — persist the
         # tiny pruned set so the scan+prune runs once
-        from .dedup import _cache_scoped, _new_generation
-        survivors = _cache_scoped("topk_survivors", survivors,
-                                  gen=_new_generation())
+        scope = Scope("topk_survivors")
+        survivors = scope.persist(survivors)
     ranked = top_k_per_group(
         survivors, keys, order_col, k, ascending=ascending,
         tiebreak=tiebreak).drop("__cutoff", "__nv")
@@ -227,17 +227,17 @@ def top_k_pruned(df: DataFrame, keys: Sequence[str], order_col: str, k: int,
                                                    F.col("__nv")))
              .select(*keys).collect())
     if not short:
-        return ranked
+        return scope.attach(ranked)
     if not keys:
         # global shortfall: rerun the whole top-k unpruned
-        return top_k_per_group(df, keys, order_col, k,
-                               ascending=ascending, tiebreak=tiebreak)
+        return scope.attach(top_k_per_group(
+            df, keys, order_col, k, ascending=ascending, tiebreak=tiebreak))
     bad = F.broadcast(spark.createDataFrame(short, df.select(*keys).schema))
     good = ranked.join(bad, _null_safe_on(ranked, bad, keys), "left_anti")
     redo = top_k_per_group(
         df.join(bad, _null_safe_on(df, bad, keys), "left_semi"),
         keys, order_col, k, ascending=ascending, tiebreak=tiebreak)
-    return good.unionByName(redo)
+    return scope.attach(good.unionByName(redo))
 
 
 def weighted_sample(df: DataFrame, k: int, weight_col: str,

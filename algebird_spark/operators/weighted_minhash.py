@@ -30,6 +30,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..cache import Scope
 from ..functions.hashing import _vfmix64, affine_mod_p61
 
 _P61 = np.uint64((1 << 61) - 1)
@@ -208,19 +209,13 @@ def near_dup_pairs_weighted(df: DataFrame, id_col: str = "doc_id",
     # zero-token docs: prefilter (cheap) + the NULL-bands guard in
     # lsh_candidate_pairs_from_bands (authoritative) — see
     # dedup.has_tokens
-    from .dedup import (CacheHandle, _cache_scoped, _new_generation,
-                        has_tokens, lsh_candidate_pairs_from_bands)
+    from .dedup import has_tokens, lsh_candidate_pairs_from_bands
     nonempty = df.filter(has_tokens(text_col))
-    # invocation-scoped cache: the newest KEEP_GENERATIONS invocations
-    # stay live (see dedup._cache_scoped / release_caches)
-    gen = _new_generation()
-    banded = _cache_scoped(
-        "weighted_minhash",
+    scope = Scope("weighted_minhash")
+    banded = scope.persist(
         add_weighted_minhash_bands(nonempty, text_col, num_perm, bands,
                                    seed)
-        .select(id_col, "wmh_bands"), gen=gen)
+        .select(id_col, "wmh_bands"))
     cands = lsh_candidate_pairs_from_bands(banded, id_col, "wmh_bands")
     scored = weighted_jaccard_exact(cands, nonempty, id_col, text_col)
-    out = scored.filter(F.col("wjaccard") >= threshold)
-    out._algebird_cache = CacheHandle(gen, ("weighted_minhash",))
-    return out
+    return scope.attach(scored.filter(F.col("wjaccard") >= threshold))

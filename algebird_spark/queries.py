@@ -29,6 +29,7 @@ from pyspark.sql.types import (BooleanType, DoubleType, LongType, StringType,
 
 from .agg import (STATE_COL, sketch_by_key, sketch_global, sketch_rollup,
                   with_presented)
+from .cache import Scope
 from .operators import dedup, exact, multimodal, similarity, text
 from .sketches import CMS, HLL, KLL, BloomFilter, MinHash, TDigest, from_bytes
 
@@ -47,8 +48,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def q_hll_distinct_per_group(spark, sf):
     """Distinct l_partkey per l_returnflag via HLL(p=14) vs exact."""
-    from .operators.dedup import _cache_scoped, _new_generation
-
     li = _t(spark, sf, "lineitem")
     p = 14
     # r8 (late): HLL insertion is idempotent (register = max(rho)), so
@@ -61,20 +60,19 @@ def q_hll_distinct_per_group(spark, sf):
     # scripts/ab_r08_hll_distinct.py). The same trick was REJECTED for
     # the rollup sketch queries: their declared output carries the
     # n_values row count, which dedup would change.
-    dk = _cache_scoped(
-        "hll_distinct_pairs",
-        li.select("l_returnflag", "l_partkey").distinct(),
-        gen=_new_generation())
+    scope = Scope("hll_distinct_pairs")
+    dk = scope.persist(li.select("l_returnflag", "l_partkey").distinct())
     dk.count()  # materialize once; both sides below read the cache
     states = sketch_by_key(dk, ["l_returnflag"], "l_partkey", lambda: HLL(p=p))
     est = with_presented(states, lambda sk: {"est": sk.estimate()}, "est double")
     exact_df = dk.groupBy("l_returnflag").agg(
         F.count("l_partkey").alias("exact_distinct"))
     bound = 3.5 * 1.04 / math.sqrt(2 ** p)
-    return (exact_df.join(est.select("l_returnflag", "est"), "l_returnflag")
-            .select("l_returnflag", "exact_distinct",
-                    (F.abs(F.col("est") - F.col("exact_distinct"))
-                     / F.col("exact_distinct") <= bound).alias("hll_ok")))
+    return scope.attach(
+        exact_df.join(est.select("l_returnflag", "est"), "l_returnflag")
+        .select("l_returnflag", "exact_distinct",
+                (F.abs(F.col("est") - F.col("exact_distinct"))
+                 / F.col("exact_distinct") <= bound).alias("hll_ok")))
 
 
 def q_hll_global_distinct(spark, sf):
@@ -281,7 +279,6 @@ def q_asof_rollup(spark, sf):
     side + exact side, submitted concurrently)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from .operators.dedup import _cache_scoped
     from .operators.joins import asof_join
 
     ev = _t(spark, sf, "events")
@@ -292,7 +289,9 @@ def q_asof_rollup(spark, sf):
     enriched = joined.select(
         "user_id", "event_type",
         F.col("ts_asof").isNotNull().alias("has_snap"))
-    enriched = _cache_scoped("asof_rollup_enriched", enriched)
+    # both sides collect, so the cache is dead once they return
+    scope = Scope("asof_rollup_enriched")
+    enriched = scope.persist(enriched)
     enriched.count()
     p = 14
 
@@ -308,7 +307,7 @@ def q_asof_rollup(spark, sf):
                 .agg(F.count_distinct("user_id").alias("exact_distinct"),
                      F.grouping_id().alias("grouping_id"))).collect()
 
-    with ThreadPoolExecutor(2) as pool:
+    with scope, ThreadPoolExecutor(2) as pool:
         f_sk, f_ex = pool.submit(sketch_side), pool.submit(exact_side)
         est_rows, exact_rows = f_sk.result(), f_ex.result()
     exact = {(r["event_type"], r["has_snap"], r["grouping_id"]): r
@@ -430,18 +429,15 @@ def q_bloom_membership(spark, sf):
     filter state ships to executors inside a vectorized pandas UDF;
     presence truth comes from a join against distinct order keys; all
     verdicts fold with aggregates — no key set is ever collected."""
-    from .operators.dedup import _cache_scoped, _new_generation
-
     od = _t(spark, sf, "orders")
     cu = _t(spark, sf, "customer")
     # r8: the distinct key set feeds BOTH the sizing count and the
     # presence-truth join — persist it so the distinct aggregation
     # runs once (was one count job + a second distinct inside the
     # probe plan)
-    dk = _cache_scoped(
-        "bloom_membership_keys",
-        od.select(F.col("o_custkey").alias("c_custkey")).distinct(),
-        gen=_new_generation())
+    scope = Scope("bloom_membership_keys")
+    dk = scope.persist(
+        od.select(F.col("o_custkey").alias("c_custkey")).distinct())
     n_keys = dk.count()
     fpp = 0.01
     # r8 (late): build from the CACHED distinct key set, not a second
@@ -479,7 +475,7 @@ def q_bloom_membership(spark, sf):
         .select(bf_hit(F.col("id").cast("long")).alias("hit"))
     fpp_df = absent.agg(
         (F.avg(F.col("hit").cast("double")) <= 2 * fpp + 1e-4).alias("fpp_ok"))
-    return stats.crossJoin(fpp_df)
+    return scope.attach(stats.crossJoin(fpp_df))
 
 
 _QUANTILE_PS = [0.05, 0.25, 0.5, 0.75, 0.95]
@@ -1710,6 +1706,7 @@ def q_sketchmap_hll_distinct(spark, sf):
     from .agg import sketch_by_key_multi
     from .sketches import SketchMapHLL
     li = _t(spark, sf, "lineitem")
+    scope = Scope("sketchmap_hll_exact")
 
     def build_state():
         # heavy_hitters_count=0: this query probes via values(), so
@@ -1728,12 +1725,11 @@ def q_sketchmap_hll_distinct(spark, sf):
         return from_bytes(bytes(states.collect()[0][STATE_COL]))
 
     def exact_counts():
-        # generation-scoped persist (newest 2 kept): a bare .persist()
+        # invocation-scoped persist (newest 2 kept): a bare persist
         # leaked one cached copy per invocation across bench loops
-        from .operators.dedup import _cache_scoped
         g = li.groupBy("l_suppkey") \
             .agg(F.count_distinct("l_partkey").alias("d"))
-        g = _cache_scoped("sketchmap_hll_exact", g)
+        g = scope.persist(g)
         g.count()  # materialize concurrently with the state build
         return g
 
@@ -1762,11 +1758,11 @@ def q_sketchmap_hll_distinct(spark, sf):
         (F.col("est") >= F.col("d") * (1 - 3.5 * err) - 1e-6).alias("lo_ok"),
         (F.col("est") <= (F.col("d") + eps * d_total) * (1 + 3.5 * err)
          + 1e-6).alias("hi_ok"))
-    return flags.agg(
+    return scope.attach(flags.agg(
         F.count("*").alias("n_keys"),
         F.sum("d").cast("long").alias("total_distinct_pairs"),
         F.bool_and("lo_ok").alias("never_under"),
-        F.bool_and("hi_ok").alias("within_eps"))
+        F.bool_and("hi_ok").alias("within_eps")))
 
 
 def q_sketchmap_set(spark, sf):
@@ -1817,12 +1813,13 @@ def q_sketchmap_set(spark, sf):
                                  p=10))
         return bytes(states.collect()[0][STATE_COL])
 
+    scope = Scope("sketchmap_set_exact")
+
     def exact_sets():
-        from .operators.dedup import _cache_scoped
         g = (slice_.groupBy("l_suppkey")
              .agg(F.sort_array(F.collect_set("l_partkey")).alias("pset"),
                   F.count_distinct("l_partkey").alias("d")))
-        g = _cache_scoped("sketchmap_set_exact", g)
+        g = scope.persist(g)
         g.count()
         return g
 
@@ -1842,10 +1839,10 @@ def q_sketchmap_set(spark, sf):
 
     flags = g.withColumn("ok", set_exact(F.col("l_suppkey"),
                                          F.col("pset")))
-    return flags.agg(
+    return scope.attach(flags.agg(
         F.count("*").alias("n_keys"),
         F.sum("d").cast("long").alias("total_distinct_pairs"),
-        F.bool_and("ok").alias("sets_exact"))
+        F.bool_and("ok").alias("sets_exact")))
 
 
 def q_interval_filter(spark, sf):

@@ -49,8 +49,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import (_cache_scoped, _new_generation,
-                               add_minhash_bands, shingle_hashes_udf)
+from ..cache import Scope
+from ..operators.dedup import add_minhash_bands, shingle_hashes_udf
 
 __all__ = ["write_minhash_index", "near_dups_against_index",
            "read_index_manifest"]
@@ -164,7 +164,6 @@ def near_dups_against_index(spark: SparkSession, path: str,
     ``exclude_same_id`` drops pairs where both sides carry the same id
     — probing docs that were already appended to the index."""
     cfg = read_index_manifest(path)
-    gen = _new_generation()
 
     def _committed(kind: str) -> DataFrame:
         # only manifest-listed segments: an orphan dir from a crashed
@@ -178,10 +177,9 @@ def near_dups_against_index(spark: SparkSession, path: str,
         .select(F.col("doc_id").alias("new_id"), "bucket")
     if broadcast_probe:
         new_b = F.broadcast(new_b)
-    cand = _cache_scoped(
-        "lsh_index_candidates",
-        idx_b.join(new_b, "bucket").select("index_id", "new_id").distinct(),
-        gen=gen)
+    scope = Scope("lsh_index_candidates")
+    cand = scope.persist(
+        idx_b.join(new_b, "bucket").select("index_id", "new_id").distinct())
     if exclude_same_id:
         cand = cand.filter(F.col("index_id") != F.col("new_id"))
 
@@ -204,6 +202,6 @@ def near_dups_against_index(spark: SparkSession, path: str,
     joined = cand.join(idx_sh, "index_id").join(new_sh, "new_id")
     inter = F.size(F.array_intersect(F.col("sh_i"), F.col("sh_n")))
     union = F.size(F.array_union(F.col("sh_i"), F.col("sh_n")))
-    return (joined.select("index_id", "new_id",
-                          (inter / union).alias("jaccard"))
-            .filter(F.col("jaccard") >= threshold))
+    return scope.attach(joined.select("index_id", "new_id",
+                                      (inter / union).alias("jaccard"))
+                        .filter(F.col("jaccard") >= threshold))

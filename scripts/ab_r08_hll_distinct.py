@@ -57,12 +57,9 @@ def main():
                 .select("l_returnflag", "exact_distinct", "est")).collect()
 
     def new_distinct_per_group():
-        from algebird_spark.operators.dedup import (_cache_scoped,
-                                                    _new_generation)
-        dk = _cache_scoped(
-            "ab_hll_pairs",
-            li.select("l_returnflag", "l_partkey").distinct(),
-            gen=_new_generation())
+        from algebird_spark.cache import Scope
+        dk = Scope("ab_hll_pairs").persist(
+            li.select("l_returnflag", "l_partkey").distinct())
         dk.count()
         states = sketch_by_key(dk, ["l_returnflag"], "l_partkey",
                                lambda: HLL(p=14))

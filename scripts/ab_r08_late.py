@@ -47,12 +47,9 @@ def main():
     def old_bloom(spark, sf):
         od = Q._t(spark, sf, "orders")
         cu = Q._t(spark, sf, "customer")
-        from algebird_spark.operators.dedup import (_cache_scoped,
-                                                    _new_generation)
-        dk = _cache_scoped(
-            "ab_old_bloom_keys",
-            od.select(F.col("o_custkey").alias("c_custkey")).distinct(),
-            gen=_new_generation())
+        from algebird_spark.cache import Scope
+        dk = Scope("ab_old_bloom_keys").persist(
+            od.select(F.col("o_custkey").alias("c_custkey")).distinct())
         n_keys = dk.count()
         fpp = 0.01
         bf = sketch_global(od, "o_custkey",

@@ -81,19 +81,9 @@ def main():
             df, "uid", lambda: HLL(p=P)).estimate()
         return out
 
-    # sketch_rollup persists its fine-state table (operator-scoped
-    # cache) and Spark's CacheManager plan-matches a repeat invocation
-    # onto the still-live states — so a naive best-of-2 would time a
-    # cache HIT, not the build. Release between trials for the honest
-    # structural A/B; measure the cache-hit path separately.
-    from algebird_spark.operators.dedup import release_caches
-
     rec = {"rows": N, "sources": SOURCES, "days": DAYS, "p": P,
            "cpus": spark.sparkContext.defaultParallelism,
-           "protocol": ("alternating trials, best-of-2 per plan; "
-                        "sketch_rollup state cache released between "
-                        "trials (a repeat invocation plan-matches the "
-                        "live cache — reported separately)")}
+           "protocol": "alternating trials, best-of-2 per plan"}
     walls = {"direct": [], "rollup": []}
     results = {}
     for _ in range(2):
@@ -101,17 +91,14 @@ def main():
             t0 = time.time()
             results[name] = fn()
             walls[name].append(round(time.time() - t0, 2))
-            if name == "rollup":
-                release_caches("sketch_rollup_fine")
     rec["wall_s"] = {k: min(v) for k, v in walls.items()}
     rec["trials"] = walls
-    # repeat invocation WITHOUT releasing: serves every level from the
-    # live state cache (the "sketch warehouse" read path)
+    # back-to-back repeat invocation (sketch_rollup keeps no state
+    # cache, so this re-runs the single-pass build)
     ests_rollup()
     t0 = time.time()
     cached = ests_rollup()
     rec["wall_s"]["rollup_cached_reuse"] = round(time.time() - t0, 2)
-    release_caches("sketch_rollup_fine")
     rec["levels"] = len(results["rollup"])
     rec["estimates_equal"] = (results["rollup"] == results["direct"]
                               == cached)

@@ -229,6 +229,30 @@ def test_premerge_local_shuffle_free_and_equivalent(spark, tokens):
     assert c == a
 
 
+def test_premerge_plan_build_runs_no_job(spark, tokens):
+    """Building a premerge plan launches no Spark job. With fewer input
+    partitions than cores the states sit above the combine's raw-row
+    Exchange, and a partition-count probe there runs that shuffle's
+    map stage under AQE before any action. The merged states equal the
+    premerge=None ones."""
+    src = tokens.coalesce(1)
+    sc = spark.sparkContext
+    group = "premerge-plan-build"
+    sc.setJobGroup(group, "build a premerge plan")
+    try:
+        pre = sketch_by_key(src, ["source"], "tokens", lambda: HLL(p=12),
+                            premerge=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    plain = sketch_by_key(src, ["source"], "tokens", lambda: HLL(p=12))
+    a = {r["source"]: (bytes(r[STATE_COL]), r["n_values"])
+         for r in pre.collect()}
+    b = {r["source"]: (bytes(r[STATE_COL]), r["n_values"])
+         for r in plain.collect()}
+    assert a == b
+
+
 def test_all_empty_arrays_emit_zero_count_states(spark):
     """Rows whose arrays are all empty still emit states: one
     ``n_values=0`` state per (partition, key) when keyed and one per

@@ -228,17 +228,19 @@ def test_dedup_handles_null_and_empty_texts(spark):
 
 def test_release_dedup_caches_api(spark):
     from pyspark.sql import Row
-    from algebird_spark import api
+    from algebird_spark import api, cache
     from algebird_spark.operators import dedup as d
     df = spark.createDataFrame(
         [Row(doc_id=i, text=f"api cache test doc {i} alpha beta")
          for i in range(20)])
     # above the r8 broadcast gate: the persisted-fingerprint cache
-    # registry under test only exists on the at-scale JVM path
+    # under test only exists on the at-scale JVM path
     d.near_dup_pairs_simhash(df, approx_rows=500_000).count()
-    assert "simhash" in d._OPERATOR_CACHES
+    assert cache.live("simhash")
     api.release_dedup_caches("simhash")
-    assert "simhash" not in d._OPERATOR_CACHES
+    assert cache.live("simhash") == []
+    api.release_dedup_caches()
+    assert cache.live() == []
     api.release_dedup_caches()  # no-op on empty registry
 
 
