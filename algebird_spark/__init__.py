@@ -6,10 +6,9 @@ Layers:
   * ``sketches`` — pure numpy mergeable sketch states (HLL, CMS+HH,
     Bloom, KLL, t-digest, MinHash) with versioned binary envelopes.
   * ``agg`` — the distributed harness: map-side partition combine via
-    ``mapInArrow`` (only (key, state) rows cross the merge shuffle; an
-    input with fewer partitions than cluster parallelism has its raw
-    rows repartitioned first), salted / tree-style merges, present()
-    into estimate columns.
+    ``mapInArrow`` (only (key, state) rows cross the merge shuffle;
+    raw rows move only under ``agg.spread``), salted / tree-style
+    merges, present() into estimate columns.
   * ``operators`` — exact-parity layer (algebird ops that map 1:1 to
     Spark built-ins) + training-data pipeline ops (dedup, similarity,
     text analysis, multimodal plumbing).

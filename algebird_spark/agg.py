@@ -7,9 +7,7 @@ DataFrames + Arrow per SURVEY.md §3.2-3.3:
      partition folds its Arrow batches into one sketch state per group
      key — the analog of Spark's partial HashAggregate, which Catalyst
      cannot do for Python UDAFs. Only ``(key, state)`` rows cross the
-     merge shuffle. The one exception: an input with fewer partitions
-     than ``min_partitions`` (default: cluster parallelism) is first
-     repartitioned, which shuffles its raw rows.
+     merge shuffle; raw rows move only under ``spread``'s one rule.
   2. **Tree merge**: one hash Exchange on the keys co-locates each
      key's states, a per-partition sort makes them adjacent, and one
      ``mapInArrow`` fold streams the sorted batches, merging each run
@@ -179,6 +177,40 @@ def _fold(blobs, counts, acc: Sketch | None = None,
 # stage 1: per-partition combine
 # ---------------------------------------------------------------------------
 
+def _plan_partitions(df: DataFrame) -> int | None:
+    """``df``'s partition count, read off its physical plan; None when
+    the plan (or a plan it caches) shuffles, broadcasts or runs a
+    subquery, as executing it would then run jobs."""
+    plan = df._jdf.queryExecution().executedPlan()
+    todo = [plan]
+    while todo:
+        node = todo.pop()
+        name = node.getClass().getSimpleName()
+        if ("Exchange" in name or name == "AdaptiveSparkPlanExec"
+                or not node.subqueries().isEmpty()):
+            return None
+        for seq in (node.children(), node.innerChildren()):
+            todo += [seq.apply(i) for i in range(seq.size())]
+    return len(plan.execute().partitions())
+
+
+def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+    """The only repartition of raw rows made for parallelism, decided
+    with no Spark job: a plan with no shuffle and fewer than
+    ``min_partitions`` (default: cluster parallelism) partitions is
+    repartitioned to it; anything else, e.g. an input that already
+    went through a shuffle, is returned as is. A small scan arrives
+    as 1-3 partitions, which would serialize a CPU-bound kernel on
+    1-3 cores; on real at-scale inputs (thousands of partitions) this
+    is a no-op."""
+    if min_partitions is None:
+        min_partitions = df.sparkSession.sparkContext.defaultParallelism
+    n = _plan_partitions(df)
+    if n is not None and n < min_partitions:
+        return df.repartition(min_partitions)
+    return df
+
+
 def _combine(df: DataFrame, keys: Sequence[str], value_cols: Sequence[str],
              factory: SketchFactory,
              min_partitions: int | None) -> DataFrame:
@@ -204,16 +236,9 @@ def _combine(df: DataFrame, keys: Sequence[str], value_cols: Sequence[str],
     group whose rows hold no values (all-empty arrays) still emits its
     ``n_values=0`` state.
 
-    ``min_partitions`` (default: cluster parallelism) guards against
-    under-split inputs — a small parquet table may arrive as 1-3
-    partitions, which would serialize the combine — by repartitioning
-    the raw rows, the one place they shuffle. The branch is a no-op on
-    real at-scale inputs (thousands of partitions)."""
+    The input first goes through ``spread(df, min_partitions)``."""
     keys, value_cols = list(keys), list(value_cols)
-    if min_partitions is None:
-        min_partitions = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < min_partitions:
-        df = df.repartition(min_partitions)
+    df = spread(df, min_partitions)
     out_schema = _state_schema(df, keys)
     cap = 8 * _COALESCE_ELEMS
 
@@ -457,6 +482,9 @@ def sketch_global(df: DataFrame, value_col: str, factory: SketchFactory,
     return _fold([r[0] for r in rows], ())[0]
 
 
+_ROLLUP_FUSE_MAX_ROWS = 16_384  # sketch_rollup's fusion gate, see there
+
+
 def sketch_rollup(df: DataFrame, keys: Sequence[str], value_col: str,
                   factory: SketchFactory, grouping: str = "rollup",
                   fanout: int = 0, premerge: int | None = None,
@@ -499,7 +527,7 @@ def sketch_rollup(df: DataFrame, keys: Sequence[str], value_col: str,
     # the same partition states, just in one round. At warehouse
     # scale (many scan partitions) the explode would multiply the
     # state shuffle by the level count, so the two-stage plan stays
-    # the default there.
+    # the default there. A shuffled input counts as parallelism.
     if sets is not None:
         sets = [list(s) for s in sets]
         n_levels = len(sets)
@@ -507,8 +535,8 @@ def sketch_rollup(df: DataFrame, keys: Sequence[str], value_col: str,
         n_levels = (len(keys) + 1 if grouping == "rollup"
                     else 2 ** len(keys))
     parallelism = df.sparkSession.sparkContext.defaultParallelism
-    n_parts = max(df.rdd.getNumPartitions(), parallelism)
-    if n_parts * n_levels <= 16_384:
+    n_parts = max(_plan_partitions(df) or 0, parallelism)
+    if n_parts * n_levels <= _ROLLUP_FUSE_MAX_ROWS:
         states = sketch_partitions(df, value_col, factory, keys)
     else:
         states = sketch_by_key(df, keys, value_col, factory,

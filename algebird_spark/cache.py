@@ -14,6 +14,12 @@ keeps long sessions bounded; eviction is correctness-neutral, since a
 still-referenced evicted result simply recomputes. Code whose cache is
 dead once it returns (training loops, batch jobs) uses
 ``with Scope(op) as s:`` and releases on exit.
+
+Iterative operators truncate lineage with :meth:`Scope.checkpoint` and
+:meth:`Scope.free` each superseded round. A dropped local checkpoint
+cannot be recomputed, so the ring never evicts one: it lives until its
+Scope is released, or until Spark's ContextCleaner collects it once
+nothing references it.
 """
 
 from __future__ import annotations
@@ -34,12 +40,14 @@ _LOCK = threading.Lock()
 
 
 class Scope:
-    """One operator invocation's persisted frames (``frames``). It
-    joins ``op``'s ring on its first :meth:`persist`."""
+    """One operator invocation's persisted frames (``frames``) and
+    local checkpoints (``checkpoints``). It joins ``op``'s ring on its
+    first :meth:`persist`."""
 
     def __init__(self, op: str):
         self.op = op
         self.frames: list[DataFrame] = []
+        self.checkpoints: list[DataFrame] = []
 
     def persist(self, df: DataFrame) -> DataFrame:
         cached = df.persist()
@@ -50,8 +58,27 @@ class Scope:
                 ring.append(self)
             evict = ring[:-KEEP_SCOPES]
         for old in evict:
-            old.release()
+            old._unpersist()
         return cached
+
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        """Eagerly local-checkpoint ``df``, truncating its lineage."""
+        cp = df.localCheckpoint()
+        with _LOCK:
+            self.checkpoints.append(cp)
+        return cp
+
+    def free(self, cp: DataFrame) -> None:
+        """Drop one checkpoint early, e.g. a superseded round."""
+        with _LOCK:
+            self.checkpoints.remove(cp)
+        _drop(cp)
+
+    def adopt(self, other: Scope) -> None:
+        """Take over ``other``'s checkpoints, to drop with this Scope."""
+        with _LOCK:
+            self.checkpoints += other.checkpoints
+            other.checkpoints = []
 
     def attach(self, df: DataFrame) -> DataFrame:
         """Hand this Scope to the caller as ``df._algebird_cache``."""
@@ -59,8 +86,15 @@ class Scope:
         return df
 
     def release(self) -> None:
-        """Unpersist this invocation's frames; releasing twice is a
-        no-op."""
+        """Unpersist this invocation's frames and drop its checkpoints;
+        releasing twice is a no-op."""
+        self._unpersist()
+        with _LOCK:
+            cps, self.checkpoints = self.checkpoints, []
+        for cp in cps:
+            _drop(cp)
+
+    def _unpersist(self) -> None:
         with _LOCK:
             frames, self.frames = self.frames, []
             ring = _LIVE.get(self.op, [])
@@ -79,6 +113,16 @@ class Scope:
 
     def __exit__(self, *exc) -> None:
         self.release()
+
+
+def _drop(cp: DataFrame) -> None:
+    """Unpersist a local checkpoint's blocks. They belong to the RDD
+    under its ``LogicalRDD``, which ``Dataset.unpersist`` never
+    touches."""
+    try:
+        cp._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except Exception:
+        pass  # session already stopped
 
 
 def live(op: str | None = None) -> list[Scope]:

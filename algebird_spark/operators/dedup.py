@@ -22,6 +22,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..agg import spread
 from ..cache import Scope
 from ..functions.hashing import affine_mod_p61
 from .text import fingerprint, simhash64_df
@@ -654,19 +655,15 @@ def near_dup_pairs_ngram(df: DataFrame, id_col: str = "doc_id",
 
     limit = (_NGRAM_BROADCAST_MAX_DOCS if broadcast_max_docs is None
              else broadcast_max_docs)
-    src = df
     # ``approx_rows`` (caller-side cardinality hint, e.g. parquet
     # footer counts) skips the row-count probe job entirely
     if (limit > 0 and isinstance(df.schema[id_col].dataType, LongType)
             and (n_docs_probe := (approx_rows if approx_rows is not None
                                   else df.count())) <= limit):
         # below the gate the corpus is MBs: spread the shingle kernel
-        # across cores when there is real work (a small scan often
-        # arrives as 1-2 input partitions, serializing the kernel); at
-        # tiny counts the round-robin shuffle costs more than it saves
-        par = df.sparkSession.sparkContext.defaultParallelism
-        if n_docs_probe >= 20_000 and df.rdd.getNumPartitions() < par:
-            src = df.repartition(par)
+        # across cores when there is real work; at tiny counts the
+        # round-robin shuffle costs more than it saves
+        src = spread(df) if n_docs_probe >= 20_000 else df
         index = _collect_shingle_index(src, id_col, text_col, shingle_n)
         return Scope("ngram").attach(_ngram_pairs_broadcast(
             df.sparkSession, index, threshold, max_df))
@@ -911,12 +908,8 @@ def near_dup_pairs_simhash(df: DataFrame, id_col: str = "doc_id",
             and max_hamming < 8
             and isinstance(df.schema[id_col].dataType, LongType)):
         # below the gate the corpus is MBs: spread the fingerprint
-        # kernel across cores (small scans arrive as 1-2 partitions,
-        # serializing it — see near_dup_pairs_ngram)
-        src = df
-        par = df.sparkSession.sparkContext.defaultParallelism
-        if approx_rows >= 20_000 and df.rdd.getNumPartitions() < par:
-            src = df.repartition(par)
+        # kernel across cores (see near_dup_pairs_ngram)
+        src = spread(df) if approx_rows >= 20_000 else df
         fp = simhash64_df(src, id_col, text_col) \
             .filter(F.col("simhash").isNotNull())
         return Scope("simhash").attach(

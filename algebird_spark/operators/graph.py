@@ -13,11 +13,10 @@ converges in O(log^2 n) rounds (O(log n) observed). Scale design:
   empty-text fingerprint bucket) would OOM an executor. Both star
   operations reduce to ``groupBy(u).min(v)`` followed by a join back
   to the edges, so the widest shuffle value is one long.
-* Every round materializes via ``localCheckpoint`` to truncate plan
-  lineage — iterative DataFrame algorithms otherwise recompile an
-  exponentially growing plan. On a real cluster point
-  ``spark.sparkContext.setCheckpointDir`` at durable storage and pass
-  ``reliable=True`` for fault-tolerant truncation.
+* Every round materializes via a local checkpoint
+  (``cache.Scope.checkpoint``) to truncate plan lineage — iterative
+  DataFrame algorithms otherwise recompile an exponentially growing
+  plan. Each superseded round is freed once the next one exists.
 * Convergence check is an aggregate signature (count + sum of
   xxhash64 over canonical directed edges), not a set-difference join:
   one extra reduce per round instead of an extra shuffle.
@@ -29,6 +28,8 @@ node at its component's minimum node id.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..cache import Scope
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -76,24 +77,27 @@ def connected_components(edges: DataFrame, src: str = "src",
     ``edges``: undirected edge list (any orientation, duplicates and
     self-loops tolerated). ``vertices``: optional one-column node
     DataFrame; isolated nodes (no edges) appear in the output labeled
-    by themselves. Returns (node, component).
+    by themselves. Returns (node, component), carrying the Scope of
+    the final round's checkpoint as ``_algebird_cache``.
     """
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-              .filter(F.col("src") != F.col("dst"))
-              .select(F.greatest("src", "dst").alias("src"),
-                      F.least("src", "dst").alias("dst"))
-              .distinct()
-              .localCheckpoint())
+    scope = Scope("connected_components")
+    e = scope.checkpoint(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+             .filter(F.col("src") != F.col("dst"))
+             .select(F.greatest("src", "dst").alias("src"),
+                     F.least("src", "dst").alias("dst"))
+             .distinct())
     sig = _signature(e)
     for _ in range(max_iter):
-        e2 = _small_star(_large_star(e)).localCheckpoint()
+        e2 = scope.checkpoint(_small_star(_large_star(e)))
         sig2 = _signature(e2)
-        e.unpersist()
+        scope.free(e)
         e = e2
         if sig2 == sig:
             break
         sig = sig2
     else:
+        scope.release()
         raise RuntimeError(f"connected_components: no convergence "
                            f"in {max_iter} rounds")
     labels = e.select(F.col("src").alias("node"),
@@ -108,7 +112,7 @@ def connected_components(edges: DataFrame, src: str = "src",
         out = (v.join(out, "node", "left")
                 .select("node",
                         F.coalesce("component", "node").alias("component")))
-    return out
+    return scope.attach(out)
 
 
 def dedup_clusters(docs: DataFrame, pairs: DataFrame,
@@ -126,5 +130,6 @@ def dedup_clusters(docs: DataFrame, pairs: DataFrame,
     cc = connected_components(pairs, "id_a", "id_b",
                               vertices=docs.select(id_col),
                               vertex_col=id_col)
-    return cc.select(F.col("node").alias(id_col), "component",
-                     (F.col("node") == F.col("component")).alias("keep"))
+    return cc._algebird_cache.attach(
+        cc.select(F.col("node").alias(id_col), "component",
+                  (F.col("node") == F.col("component")).alias("keep")))

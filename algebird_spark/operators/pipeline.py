@@ -101,8 +101,10 @@ def dedup_pipeline(df: DataFrame, text_col: str = "text",
     edges = exact_edges.unionByName(pairs.select("id_a", "id_b"))
     clusters = dedup_clusters(gated, edges, id_col)
     # clustering ran eagerly into local checkpoints, so nothing reads
-    # the near-dup operator's caches any more
+    # the near-dup operator's caches any more; the final checkpoint,
+    # which ``clusters`` still reads, goes with this pipeline's Scope
     pairs._algebird_cache.release()
+    scope.adopt(clusters._algebird_cache)
     survivors = gated.join(clusters.filter("keep").select(id_col),
                            id_col, "left_semi")
     return {"gated": gated, "exact_kept": exact_kept,

@@ -45,12 +45,6 @@ def punct_ratio(text: Column) -> Column:
     return F.when(n > 0, punct / n).otherwise(F.lit(0.0))
 
 
-def upper_ratio(text: Column) -> Column:
-    n = F.length(text)
-    upper = F.length(F.regexp_replace(text, r"[^A-Z]", ""))
-    return F.when(n > 0, upper / n).otherwise(F.lit(0.0))
-
-
 def mean_word_length(text: Column) -> Column:
     t = F.trim(text)
     n_tok = token_count(text)

@@ -28,7 +28,7 @@ from pyspark.sql.types import (BooleanType, DoubleType, LongType, StringType,
                                StructField, StructType)
 
 from .agg import (STATE_COL, sketch_by_key, sketch_global, sketch_rollup,
-                  with_presented)
+                  spread, with_presented)
 from .cache import Scope
 from .operators import dedup, exact, multimodal, similarity, text
 from .sketches import CMS, HLL, KLL, BloomFilter, MinHash, TDigest, from_bytes
@@ -934,9 +934,6 @@ def q_count_distinct_exact(spark, sf):
 # training-data pipeline queries (documents / embeddings)
 # ===========================================================================
 
-DUP_SELECT = "SUBSTR(MD5(CAST(doc_id AS VARCHAR)), 1, 1) < \'2\'"
-
-
 def _docs_with_dups(spark, sf):
     """documents UNION deterministic duplicates: docs whose
     md5(doc_id) hex starts below '2' (~1/8 of rows, engine-portable
@@ -1083,15 +1080,10 @@ def q_text_repetition(spark, sf):
     docs = (_t(spark, sf, "documents")
             .filter(F.trim(F.col("text")) != "")
             .select("doc_id", "source", "text"))
-    # the per-doc Counter kernel is CPU-bound and the fixture scan
-    # arrives as 1-2 input partitions, serializing it (r8: 1.8 s ->
-    # 0.65 s at sf1.0 for a ~0.1 s round-robin shuffle of a few MB);
-    # at warehouse scale the scan supplies the partitions and this
-    # branch is a no-op
-    par = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(par)
-    st = text.repetition_stats(docs)
+    # the per-doc Counter kernel is CPU-bound: spread it across cores
+    # (r8: 1.8 s -> 0.65 s at sf1.0 for a ~0.1 s round-robin shuffle
+    # of a few MB)
+    st = text.repetition_stats(spread(docs))
     return st.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum((F.col("top2_frac") > 0.2).cast("long"))

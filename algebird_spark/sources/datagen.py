@@ -148,7 +148,3 @@ def write_partitioned_token_table(df: DataFrame, path: str,
     engine relies on — is identical and asserted in tests/test_plans.py).
     """
     df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-
-
-def read_token_table(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)

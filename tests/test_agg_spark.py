@@ -570,3 +570,26 @@ def test_rollup_generic_over_cms(spark, tokens):
         assert got[(s, 0)] == n
     assert got[(None, 1)] == sum(exact.values())
 
+
+
+def test_rollup_fusion_gate_both_sides(spark, tokens, monkeypatch):
+    """Both sides of sketch_rollup's fusion gate give byte-equal HLL
+    levels and equal n_values; the fused plan (partition states fed
+    straight into the level merge) has one Exchange fewer than the
+    two-stage plan (finest-grain merge, then the level merge)."""
+    from algebird_spark import agg
+
+    def build(fuse_max):
+        monkeypatch.setattr(agg, "_ROLLUP_FUSE_MAX_ROWS", fuse_max)
+        levels = agg.sketch_rollup(tokens, ["source"], "tokens",
+                                   lambda: HLL(p=12))
+        exchanges = levels._jdf.queryExecution().executedPlan() \
+                          .toString().count("Exchange")
+        return exchanges, {(r["source"], r["grouping_id"]):
+                           (bytes(r[STATE_COL]), r["n_values"])
+                           for r in levels.collect()}
+
+    two_stage, want = build(0)
+    fused, got = build(10 ** 9)
+    assert got == want and len(got) == 5
+    assert fused == two_stage - 1 > 0

@@ -18,25 +18,23 @@ _RETIRED = ("_cache_scoped", "_new_generation", "CacheHandle",
 
 
 def test_only_the_cache_module_persists():
-    """DataFrame ``.persist(`` / ``.unpersist(`` calls appear only in
-    cache.py; everything else persists through ``scope.persist(``. The
-    one exception is graph.py, which releases its own localCheckpoint
-    frames round by round."""
+    """DataFrame ``.persist(`` / ``.unpersist(`` and checkpoint calls
+    appear only in cache.py; everything else persists through
+    ``scope.persist(`` and checkpoints through ``scope.checkpoint(``."""
     hits = []
     for path in sorted((ROOT / "algebird_spark").rglob("*.py")):
         rel = path.relative_to(ROOT).as_posix()
         for node in ast.walk(ast.parse(path.read_text())):
             if not (isinstance(node, ast.Call)
                     and isinstance(node.func, ast.Attribute)
-                    and node.func.attr in ("persist", "unpersist")):
+                    and node.func.attr in ("persist", "unpersist",
+                                           "checkpoint", "localCheckpoint")):
                 continue
             recv = node.func.value
-            via_scope = (node.func.attr == "persist"
+            via_scope = (node.func.attr in ("persist", "checkpoint")
                          and isinstance(recv, ast.Name)
                          and recv.id == "scope")
-            allowed = (via_scope or rel == "algebird_spark/cache.py"
-                       or (rel == "algebird_spark/operators/graph.py"
-                           and node.func.attr == "unpersist"))
+            allowed = via_scope or rel == "algebird_spark/cache.py"
             if not allowed:
                 hits.append((rel, node.lineno, node.func.attr))
     assert hits == []
@@ -74,6 +72,24 @@ def test_scope_ring_release_and_with_form(spark):
         assert cache.live("test_with") == [s]
     assert cache.live("test_with") == []
     assert not df.storageLevel.useMemory
+
+
+def test_ring_never_evicts_a_checkpoint(spark):
+    """Eviction unpersists an old Scope's frames but keeps its local
+    checkpoints, which cannot be recomputed once dropped; release()
+    drops them."""
+    scopes = [cache.Scope("test_cp") for _ in range(3)]
+    cp = scopes[0].checkpoint(spark.range(15))
+    for n, s in enumerate(scopes):
+        s.persist(spark.range(16 + n)).count()
+    assert cache.live("test_cp") == scopes[1:]
+    assert scopes[0].frames == [] and scopes[0].checkpoints == [cp]
+    assert cp.count() == 15
+    cache.release("test_cp")
+    scopes[0].release()
+    assert scopes[0].checkpoints == []
+    assert not cp._jdf.queryExecution().analyzed().rdd().getStorageLevel() \
+                .useMemory()
 
 
 def test_ring_holds_under_concurrent_invocations():
@@ -124,11 +140,10 @@ def test_ring_holds_under_concurrent_invocations():
 # leak check: release() returns the block manager to its pre-call state
 # ---------------------------------------------------------------------------
 
-def _persisted(spark) -> dict[int, bool]:
-    """Persisted RDD id -> whether it is a (local) checkpoint."""
-    rdds = spark.sparkContext._jsc.getPersistentRDDs()
-    return {int(i): bool(rdds.get(i).rdd().isCheckpointed())
-            for i in rdds.keySet().toArray()}
+def _persisted(spark) -> set[int]:
+    """Ids of the persisted RDDs, local checkpoints included."""
+    return {int(i) for i in
+            spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
 
 
 def _docs(spark, tag, n=40):
@@ -206,7 +221,15 @@ def _dedup_pipeline(spark, tag, tmp_path):
     return stages["survivors"]
 
 
+def _connected_components(spark, tag, tmp_path):
+    from algebird_spark.operators.graph import connected_components
+    edges = spark.createDataFrame([(1, 2), (2, 3), (5, 6)],
+                                  "src long, dst long")
+    return connected_components(edges)
+
+
 _OPERATORS = {
+    "connected_components": _connected_components,
     "near_dup_pairs_minhash": _minhash,
     "near_dup_pairs_simhash": _simhash,
     "near_dup_pairs_weighted": _weighted,
@@ -225,13 +248,9 @@ def test_release_leaves_no_persisted_block(spark, tmp_path, name):
     before = _persisted(spark)
     out = _OPERATORS[name](spark, f"leak {name}", tmp_path)
     out.count()
-    assert set(_persisted(spark)) - set(before), "nothing was cached"
+    assert _persisted(spark) - before, "nothing was cached"
     out._algebird_cache.release()
-    left = {i for i, checkpoint in _persisted(spark).items()
-            if i not in before and not checkpoint}
-    # graph.py's connected-components rounds end in local checkpoints
-    # (the dedup_pipeline case); those are not cache.py persists
-    assert left == set()
+    assert _persisted(spark) - before == set()
 
 
 @pytest.mark.parametrize("train", ["ivf", "pq"])
@@ -246,4 +265,4 @@ def test_training_leaves_nothing_persisted(spark, train):
         train_ivf_centroids(vecs, n_lists=4, n_iter=2)
     else:
         train_pq_codebook(vecs, m=2, k_sub=4, n_iter=2)
-    assert set(_persisted(spark)) - set(before) == set()
+    assert _persisted(spark) - before == set()

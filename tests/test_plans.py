@@ -3,19 +3,24 @@ engine is designed around, so a regression that silently degrades the
 plan (raw-row shuffle, lost pushdown, lost broadcast) fails CI:
 
 1. sketch harness: partition combine (MapInArrow) happens BEFORE any
-   Exchange — only (key, state) rows shuffle, never raw rows.
+   Exchange — only (key, state) rows shuffle; raw rows repartition
+   only under ``agg.spread``'s one rule, decided with no Spark job.
 2. parquet scans: filters push down and the read schema is pruned to
    the referenced columns.
 3. small-side joins broadcast (merge_lookup, cosine_topk query set).
 """
 
+import ast
 import io
+import pathlib
+import re
 from contextlib import redirect_stdout
 
 import pytest
 from pyspark.sql import functions as F
 
-from algebird_spark.agg import sketch_by_key
+from algebird_spark.agg import (sketch_by_key, sketch_partitions,
+                                sketch_rollup)
 from algebird_spark.operators.mapalgebra import merge_lookup
 from algebird_spark.operators.similarity import cosine_topk
 from algebird_spark.sketches import HLL
@@ -54,6 +59,70 @@ def test_partition_combine_before_shuffle(spark):
     assert "Exchange" not in tree[map_pos:]
     # the merge is the sorted mapInArrow fold, not a per-group Python call
     assert "FlatMapGroupsInPandas" not in plan
+
+
+def _one_file_table(spark, path):
+    spark.range(2_000).selectExpr("id % 7 AS k", "id AS v") \
+        .coalesce(1).write.parquet(str(path))
+    return spark.read.parquet(str(path))
+
+
+@pytest.mark.parametrize("min_partitions,spread", [(1, False), (2, True)])
+def test_spread_round_robins_only_an_under_split_scan(
+        spark, tmp_path, min_partitions, spread):
+    """The one-file scan is one partition: below ``min_partitions`` it
+    gets exactly one RoundRobinPartitioning Exchange, under the
+    combine's MapInArrow; at ``min_partitions`` it gets no Exchange."""
+    scan = _one_file_table(spark, tmp_path / "t")
+    states = sketch_partitions(scan, "v", lambda: HLL(p=10),
+                               min_partitions=min_partitions)
+    plan = plan_of(states)
+    tree = plan.split("\n\n")[0]
+    exchanges = re.findall(r"Exchange \(\d+\)", tree)
+    assert len(exchanges) == plan.count("RoundRobinPartitioning") == spread
+    if spread:
+        assert tree.index("MapInArrow") < tree.index("Exchange")
+
+
+def test_spread_keeps_shuffled_input_and_runs_no_job(spark, tmp_path):
+    """A ``distinct()`` input already went through a shuffle: it keeps
+    its partitioning (no RoundRobinPartitioning), and building the
+    by-key, partition and rollup plans over it launches no Spark job —
+    the partition count is never probed through the shuffle."""
+    src = _one_file_table(spark, tmp_path / "t").distinct()
+    sc = spark.sparkContext
+    group = "spread-plan-build"
+    sc.setJobGroup(group, "build sketch plans over a shuffled input")
+    try:
+        built = [
+            sketch_by_key(src, ["k"], "v", lambda: HLL(p=10)),
+            sketch_partitions(src, "v", lambda: HLL(p=10)),
+            sketch_rollup(src, ["k"], "v", lambda: HLL(p=10)),
+        ]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    for df in built:
+        assert "RoundRobinPartitioning" not in plan_of(df)
+
+
+def test_no_rdd_partition_probe_in_library():
+    """No ``getNumPartitions`` and no DataFrame ``.rdd`` anywhere in the
+    library: ``agg.spread`` reads partition counts from the physical
+    plan. A called ``rdd()`` is a JVM accessor on a plan node (cache.py
+    releases a checkpoint's RDD through one), not the DataFrame
+    property, so it is allowed."""
+    root = pathlib.Path(__file__).resolve().parent.parent / "algebird_spark"
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        called = {id(n.func) for n in ast.walk(tree)
+                  if isinstance(n, ast.Call)}
+        hits += [(path.name, n.lineno, n.attr) for n in ast.walk(tree)
+                 if isinstance(n, ast.Attribute)
+                 and (n.attr == "getNumPartitions"
+                      or (n.attr == "rdd" and id(n) not in called))]
+    assert hits == []
 
 
 def test_scan_pushdown_and_pruning(spark):
