@@ -236,11 +236,22 @@ def _combine(df: DataFrame, keys: Sequence[str], value_cols: Sequence[str],
     group whose rows hold no values (all-empty arrays) still emits its
     ``n_values=0`` state.
 
+    A sketch with an ``update_grouped(states, codes, values)`` hook (HLL)
+    takes the grouped path instead when there are keys and one value
+    column: each batch is factorized, its codes repeated over the array
+    lengths, and one call builds every group's state (one hash and one
+    sort per batch, not one kernel call per key); ``n_values`` comes
+    from ``np.bincount``. Every other sketch keeps the per-key path and
+    its coalescing: KLL, for one, compacts on every call, so moving the
+    flush boundaries would change its bytes.
+
     The input first goes through ``spread(df, min_partitions)``."""
     keys, value_cols = list(keys), list(value_cols)
     df = spread(df, min_partitions)
     out_schema = _state_schema(df, keys)
     cap = 8 * _COALESCE_ELEMS
+    grouped = (getattr(factory(), "update_grouped", None)
+               if keys and len(value_cols) == 1 else None)
 
     def columns(batch: pa.RecordBatch):
         """Per-element value arrays + per-row lengths (None: 1 per row)."""
@@ -283,6 +294,19 @@ def _combine(df: DataFrame, keys: Sequence[str], value_cols: Sequence[str],
         for batch in batches:
             cols, lengths = columns(batch)
             if len(cols[0]) == 0 and (lengths is None or batch.num_rows == 0):
+                continue
+            if grouped:
+                codes, uniques = _factorize_rows(batch, keys)
+                if lengths is not None:
+                    codes = np.repeat(codes, lengths)
+                for key in uniques:
+                    if key not in acc:
+                        acc[key] = [factory(), 0]
+                entries = [acc[key] for key in uniques]
+                grouped([e[0] for e in entries], codes, cols[0])
+                counts = np.bincount(codes, minlength=len(uniques))
+                for e, n in zip(entries, counts.tolist()):
+                    e[1] += n
                 continue
             for key, args in groups(batch, cols, lengths):
                 if key not in acc:

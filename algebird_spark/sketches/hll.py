@@ -6,8 +6,10 @@ Semantics follow algebird-core .../HyperLogLog.scala:
     128-bit hash in little-endian bit order (HyperLogLog.scala:94-146);
     low-bits indexing preserves its key property: ``downsize`` to fewer
     bits is exact (HyperLogLog.scala:361-390).
-  * sparse -> dense promotion when ``len(sparse) * 16 > 2^p``
-    (SparseHLL.+, HyperLogLog.scala:404-431).
+  * sparse storage: sorted unique int32 register indexes and their
+    uint8 ranks, the reference's register map merged by per-register
+    max (SparseHLL.+, HyperLogLog.scala:404-431) kept as two arrays;
+    promotion to dense uint8[2^p] registers when ``nonzero * 16 > 2^p``.
   * estimator: raw HLL harmonic mean with small-range linear counting
     only (initialEstimate, HyperLogLog.scala:253-267).
   * error = 1.04 / sqrt(2^p) (HyperLogLog.scala:240); approximateSize
@@ -16,11 +18,19 @@ Semantics follow algebird-core .../HyperLogLog.scala:
   * intersection via inclusion-exclusion (HyperLogLog.scala:626-644) —
     accurate only for small numbers of sets.
   * serialization: sparse states stay sparse on the wire (tag byte like
-    toBytes type 2=dense / 3=sparse, HyperLogLog.scala:158-216).
+    toBytes type 2=dense / 3=sparse, HyperLogLog.scala:158-216). Tag 3's
+    payload is the two sparse arrays as stored, so encoding is a
+    concatenation and decoding two ``frombuffer`` calls, checked strictly
+    (indexes strictly increasing and in range, ranks in [1, 65 - p]).
 
 Vectorization: ``update_batch`` hashes whole int32/int64 numpy batches
 with the murmur kernel and applies a sort-based grouped-max into the
-registers — no per-row Python (SURVEY.md §4.1).
+registers — no per-row Python (SURVEY.md §4.1). Sparse ∪ sparse (an
+update or a merge) is one grouped-max over the concatenated arrays.
+``update_grouped`` builds the states of every group key of an Arrow
+batch in one pass: one hash and one sort of ``(code, idx, rho)`` for
+the whole batch, then a ``searchsorted`` split hands each group its run
+(the grouped combine in ``agg._combine``).
 """
 
 from __future__ import annotations
@@ -74,7 +84,10 @@ class HLL(Sketch):
         self.p = p
         self.m = 1 << p
         self.seed = seed
-        self.sparse: dict[int, int] | None = {}  # idx -> rho; None once dense
+        # sparse: sorted unique register indexes and their ranks (tag 3's
+        # payload layout); replaced, never written in place; None once dense
+        self._idx: np.ndarray | None = np.empty(0, dtype=np.int32)
+        self._rho: np.ndarray | None = np.empty(0, dtype=np.uint8)
         self.registers: np.ndarray | None = None  # uint8[m] once dense
 
     # ------------------------------------------------------------------
@@ -83,22 +96,46 @@ class HLL(Sketch):
 
     @property
     def is_sparse(self) -> bool:
-        return self.sparse is not None
+        return self.registers is None
+
+    def _set_sparse(self, idx: np.ndarray, rho: np.ndarray) -> "HLL":
+        """The one way sparse registers are set: ``idx`` sorted unique
+        register indexes, ``rho`` their ranks; promotes to dense past
+        ``m / SPARSE_FACTOR`` registers. ``HLL(p, seed)._set_sparse(...)``
+        is the constructor from arrays."""
+        self._idx = idx.astype(np.int32, copy=False)
+        self._rho = rho.astype(np.uint8, copy=False)
+        self.registers = None
+        self._maybe_promote()
+        return self
 
     def _to_dense(self) -> None:
-        if self.sparse is None:
+        if self.registers is not None:
             return
         regs = np.zeros(self.m, dtype=np.uint8)
-        if self.sparse:
-            idx = np.fromiter(self.sparse.keys(), dtype=np.int64, count=len(self.sparse))
-            rho = np.fromiter(self.sparse.values(), dtype=np.uint8, count=len(self.sparse))
-            regs[idx] = rho
+        regs[self._idx] = self._rho
         self.registers = regs
-        self.sparse = None
+        self._idx = self._rho = None
 
     def _maybe_promote(self) -> None:
-        if self.sparse is not None and len(self.sparse) * self.SPARSE_FACTOR > self.m:
+        if self.is_sparse and len(self._idx) * self.SPARSE_FACTOR > self.m:
             self._to_dense()
+
+    def _fold_pairs(self, idx: np.ndarray, rho: np.ndarray,
+                    unique: bool = False) -> None:
+        """Fold (idx, rho) pairs into this state's registers; ``unique``:
+        ``idx`` holds no index twice."""
+        if len(idx) == 0:
+            return
+        if self.is_sparse:
+            self._set_sparse(*self._grouped_max(
+                np.concatenate([self._idx, idx]),
+                np.concatenate([self._rho, rho])))
+            return
+        if not unique:
+            idx, rho = self._grouped_max(idx, rho)
+        regs = self.registers
+        regs[idx] = np.maximum(regs[idx], rho)
 
     # ------------------------------------------------------------------
     def _idx_rho(self, values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -108,7 +145,7 @@ class HLL(Sketch):
     def _grouped_max(idx: np.ndarray, rho: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """(unique idx, max rho per idx) via one sort — faster than
         np.maximum.at for large batches."""
-        key = (idx << 7) | rho.astype(np.int64)  # rho <= 61 < 128
+        key = (idx.astype(np.int64, copy=False) << 7) | rho  # rho <= 61 < 128
         key.sort()
         uidx = key >> 7
         last = np.empty(len(key), dtype=bool)
@@ -120,38 +157,49 @@ class HLL(Sketch):
 
     def update_batch(self, values) -> None:
         values = np.asarray(values)
+        for lo in range(0, values.shape[0], self._CHUNK):
+            self._fold_pairs(*self._idx_rho(values[lo:lo + self._CHUNK]))
+
+    @staticmethod
+    def update_grouped(states: list["HLL"], codes: np.ndarray,
+                       values) -> None:
+        """Fold ``values[codes == g]`` into ``states[g]`` for every g,
+        all states from one factory (same p and seed). The batch is
+        hashed once (in cache-sized chunks) into ``code << p | idx``
+        cells, one ``_grouped_max`` sort leaves each cell's max rho, and
+        a ``searchsorted`` split on the code hands each group its sorted
+        run. An empty sparse state takes its run as is (promoted past
+        m/16 registers, like ``update_batch``). Equal, byte for byte,
+        to ``states[g].update_batch(values[codes == g])``."""
+        values = np.asarray(values)
         if values.size == 0:
             return
-        for lo in range(0, values.shape[0], self._CHUNK):
-            idx, rho = self._idx_rho(values[lo:lo + self._CHUNK])
-            uidx, urho = self._grouped_max(idx, rho)
-            if self.sparse is not None:
-                sp = self.sparse
-                for i, r in zip(uidx.tolist(), urho.tolist()):
-                    if r > sp.get(i, 0):
-                        sp[i] = r
-                self._maybe_promote()
+        p, m, seed = states[0].p, states[0].m, states[0].seed
+        cell = np.asarray(codes, dtype=np.int64) << p
+        rho = np.empty(len(values), dtype=np.uint8)
+        for lo in range(0, len(values), HLL._CHUNK):
+            hi = lo + HLL._CHUNK
+            idx, rho[lo:hi] = idx_rho(values[lo:hi], p, m, seed)
+            cell[lo:hi] |= idx
+        cell, run_rho = HLL._grouped_max(cell, rho)
+        run_idx = (cell & (m - 1)).astype(np.int32)
+        bounds = np.searchsorted(cell >> p, np.arange(len(states) + 1))
+        for g, (lo, hi) in enumerate(zip(bounds[:-1].tolist(),
+                                         bounds[1:].tolist())):
+            if lo == hi:
+                continue
+            st, gi, gr = states[g], run_idx[lo:hi], run_rho[lo:hi]
+            if st.is_sparse and len(st._idx) == 0:
+                # copies: a slice would pin the whole batch's arrays
+                st._set_sparse(gi.copy(), gr.copy())
             else:
-                regs = self.registers
-                np.maximum(regs[uidx], urho, out=urho)
-                regs[uidx] = urho
+                st._fold_pairs(gi, gr, unique=True)
 
     # ------------------------------------------------------------------
     def merge_in_place(self, other: "HLL") -> "HLL":
         self.merge_check(other)
-        if other.sparse is not None:
-            if self.sparse is not None:
-                sp = self.sparse
-                for i, r in other.sparse.items():
-                    if r > sp.get(i, 0):
-                        sp[i] = r
-                self._maybe_promote()
-            else:
-                if other.sparse:
-                    idx = np.fromiter(other.sparse.keys(), dtype=np.int64)
-                    rho = np.fromiter(other.sparse.values(), dtype=np.uint8)
-                    np.maximum(self.registers[idx], rho, out=rho)
-                    self.registers[idx] = rho
+        if other.is_sparse:
+            self._fold_pairs(other._idx, other._rho, unique=True)
         else:
             self._to_dense()
             np.maximum(self.registers, other.registers, out=self.registers)
@@ -159,9 +207,9 @@ class HLL(Sketch):
 
     # ------------------------------------------------------------------
     def _sum_and_zeros(self) -> tuple[float, int]:
-        if self.sparse is not None:
-            nz = len(self.sparse)
-            s = float(np.sum(np.exp2(-np.fromiter(self.sparse.values(), dtype=np.float64, count=nz)))) if nz else 0.0
+        if self.is_sparse:
+            nz = len(self._rho)
+            s = float(np.sum(np.exp2(-self._rho.astype(np.float64)))) if nz else 0.0
             zeros = self.m - nz
             return s + zeros, zeros
         regs = self.registers
@@ -206,9 +254,8 @@ class HLL(Sketch):
             out = HLL(self.p, self.seed)
             return out.merge_in_place(self)
         out = HLL(new_p, self.seed)
-        if self.sparse is not None:
-            idx = np.fromiter(self.sparse.keys(), dtype=np.int64, count=len(self.sparse))
-            rho = np.fromiter(self.sparse.values(), dtype=np.int64, count=len(self.sparse))
+        if self.is_sparse:
+            idx, rho = self._idx.astype(np.int64), self._rho.astype(np.int64)
         else:
             idx = np.nonzero(self.registers)[0].astype(np.int64)
             rho = self.registers[idx].astype(np.int64)
@@ -219,10 +266,8 @@ class HLL(Sketch):
         tz = trailing_zeros64(extra).astype(np.int64)
         drop = self.p - new_p
         new_rho = np.where(extra == 0, drop + rho, np.minimum(tz, drop - 1) + 1)
-        uidx, urho = self._grouped_max(new_idx, new_rho.astype(np.uint8))
-        out.sparse = dict(zip(uidx.tolist(), (int(r) for r in urho)))
-        out._maybe_promote()
-        return out
+        return out._set_sparse(*self._grouped_max(new_idx,
+                                                  new_rho.astype(np.uint8)))
 
     @staticmethod
     def intersection_size(hlls: list["HLL"]) -> Approximate:
@@ -245,14 +290,8 @@ class HLL(Sketch):
 
     # ------------------------------------------------------------------
     def _payload(self) -> bytes:
-        if self.sparse is not None:
-            # canonical order: serialization must not depend on dict
-            # insertion order or merges break byte-equality laws
-            n = len(self.sparse)
-            idx = np.fromiter(self.sparse.keys(), dtype=np.int32, count=n)
-            rho = np.fromiter(self.sparse.values(), dtype=np.uint8, count=n)
-            order = np.argsort(idx, kind="stable")
-            return b"\x03" + idx[order].tobytes() + rho[order].tobytes()
+        if self.is_sparse:  # tag 3 = sorted int32 idx, then uint8 rho
+            return b"\x03" + self._idx.tobytes() + self._rho.tobytes()
         return b"\x02" + self.registers.tobytes()  # tag 2 = dense
 
 
@@ -264,7 +303,7 @@ def _decode_hll(params: dict, payload: bytes) -> HLL:
         out.registers = np.frombuffer(body, dtype=np.uint8).copy()
         if len(out.registers) != out.m:
             raise ValueError("dense HLL payload size mismatch")
-        out.sparse = None
+        out._idx = out._rho = None
     elif tag == 3:
         # strict layout check: a truncated sparse payload must fail
         # loudly, not silently decode a subset of the registers
@@ -272,11 +311,18 @@ def _decode_hll(params: dict, payload: bytes) -> HLL:
             raise ValueError("sparse HLL payload size not a multiple "
                              "of the 5-byte (idx, rho) record")
         n = len(body) // 5
-        idx = np.frombuffer(body[: 4 * n], dtype=np.int32)
-        rho = np.frombuffer(body[4 * n:], dtype=np.uint8)
-        if n and (idx.min() < 0 or idx.max() >= out.m):
+        idx = np.frombuffer(body, dtype=np.int32, count=n)
+        rho = np.frombuffer(body, dtype=np.uint8, offset=4 * n)
+        # the arrays are the state, so a payload (maybe read back from
+        # a checkpoint on disk) must hold exactly what _set_sparse keeps
+        if (idx[1:] <= idx[:-1]).any():
+            raise ValueError("sparse HLL register indexes not strictly "
+                             "increasing")
+        if n and (int(idx[0]) < 0 or int(idx[-1]) >= out.m):
             raise ValueError("sparse HLL register index out of range")
-        out.sparse = dict(zip(idx.tolist(), rho.tolist()))
+        if n and (int(rho.min()) < 1 or int(rho.max()) > 65 - out.p):
+            raise ValueError("sparse HLL rank outside [1, 65 - p]")
+        out._set_sparse(idx, rho)
     else:
         raise ValueError(f"bad HLL payload tag {tag}")
     return out

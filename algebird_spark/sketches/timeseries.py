@@ -300,15 +300,15 @@ class HLLSeries(Sketch):
         return self
 
     def since(self, t: float) -> HLL:
-        out = HLL(self.p, self.seed)
-        sp = {}
-        for i, reg in self.rows.items():
-            best = max((r for r, ts in reg.items() if ts >= t), default=0)
+        idx, rho = [], []
+        for i in sorted(self.rows):
+            best = max((r for r, ts in self.rows[i].items() if ts >= t),
+                       default=0)
             if best:
-                sp[i] = best
-        out.sparse = sp
-        out._maybe_promote()
-        return out
+                idx.append(i)
+                rho.append(best)
+        return HLL(self.p, self.seed)._set_sparse(
+            np.array(idx, dtype=np.int32), np.array(rho, dtype=np.uint8))
 
     def present(self) -> float:
         return self.since(-math.inf).estimate()

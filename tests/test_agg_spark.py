@@ -593,3 +593,46 @@ def test_rollup_fusion_gate_both_sides(spark, tokens, monkeypatch):
     fused, got = build(10 ** 9)
     assert got == want and len(got) == 5
     assert fused == two_stage - 1 > 0
+
+
+@pytest.mark.parametrize("batch_rows", ["2", None],
+                         ids=["maxRecordsPerBatch=2", "default"])
+def test_keyed_hll_equals_single_shot_build(spark, batch_rows):
+    """Keyed HLL states (the combine's grouped path, then the merge)
+    equal, byte for byte, one in-process ``update_batch`` over each
+    key's values — with a NULL key, a NaN key, a key whose arrays are
+    all empty (``n_values=0``) and a key large enough to turn dense."""
+    rng = np.random.default_rng(11)
+    nan = float("nan")
+    rows = []
+    for i in range(240):
+        k = [None, nan, 1.0, 2.0, -0.0][i % 5]
+        n = int(rng.integers(0, {1.0: 160, 2.0: 2}.get(k, 40)))
+        rows.append((k, rng.integers(-2**31, 2**31, n).tolist()))
+    rows += [(3.0, [])] * 7
+    df = spark.createDataFrame(rows, "k double, v array<int>").repartition(3)
+
+    def norm(k):
+        return "NaN" if k is not None and k != k else k
+
+    expected = {}
+    for k, v in rows:
+        expected.setdefault(norm(k), []).extend(v)
+    for k, v in expected.items():
+        h = HLL(p=10)
+        h.update_batch(np.array(v, dtype=np.int32))
+        expected[k] = (h.to_bytes(), len(v))
+    assert not from_bytes(expected[1.0][0]).is_sparse
+    assert from_bytes(expected[2.0][0]).is_sparse
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    try:
+        if batch_rows is not None:
+            spark.conf.set(conf, batch_rows)
+        got = {norm(r["k"]): (bytes(r[STATE_COL]), r["n_values"]) for r in
+               sketch_by_key(df, ["k"], "v", lambda: HLL(p=10)).collect()}
+    finally:
+        spark.conf.set(conf, prev)
+    assert got == expected
+    assert got[3.0] == (HLL(p=10).to_bytes(), 0)

@@ -104,3 +104,32 @@ def test_valid_states_still_roundtrip():
     for s in _states():
         r = from_bytes(s.to_bytes())
         assert r.to_bytes() == s.to_bytes(), type(s).__name__
+
+
+def _sparse_hll_blob(idx, rho, p=10):
+    """A sparse HLL envelope whose tag-3 payload holds exactly these
+    (idx, rho) arrays."""
+    h = HLL(p=p)
+    h.update_batch(np.arange(5, dtype=np.int32))
+    header = h.to_bytes()[:-len(h._payload())]
+    return (header + b"\x03" + np.asarray(idx, dtype=np.int32).tobytes()
+            + np.asarray(rho, dtype=np.uint8).tobytes())
+
+
+def test_sparse_hll_accepts_sorted_unique_indexes():
+    r = from_bytes(_sparse_hll_blob([3, 17, 900], [1, 55, 2]))
+    assert r.is_sparse
+    assert r.to_bytes() == _sparse_hll_blob([3, 17, 900], [1, 55, 2])
+
+
+@pytest.mark.parametrize("idx", [[17, 3, 900], [3, 17, 17]],
+                         ids=["unsorted", "repeated"])
+def test_sparse_hll_rejects_unsorted_or_repeated_indexes(idx):
+    with pytest.raises(ValueError, match="strictly increasing"):
+        from_bytes(_sparse_hll_blob(idx, [1, 2, 3]))
+
+
+@pytest.mark.parametrize("bad_rho", [0, 65 - 10 + 1, 255])
+def test_sparse_hll_rejects_rank_out_of_range(bad_rho):
+    with pytest.raises(ValueError, match="rank"):
+        from_bytes(_sparse_hll_blob([3, 17, 900], [1, bad_rho, 2]))
