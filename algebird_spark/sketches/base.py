@@ -48,6 +48,16 @@ KIND_MOMENTS = 9
 KIND_EXPHIST = 10
 KIND_SETSIZE = 11
 KIND_DECAYED = 12
+KIND_MULTI = 20
+KIND_HLLSERIES = 21
+KIND_SKETCHMAP = 22
+KIND_DECAYINGCMS = 23
+KIND_SCOPEDTOPN = 24
+KIND_DECAYEDVECTOR = 25
+KIND_EVENTUALLY = 26
+KIND_SKETCHMAP_HLL = 27
+KIND_SKETCHMAP_SET = 28
+KIND_FREQDIR = 29
 
 _DECODERS: dict[int, Callable[[dict, bytes], "Sketch"]] = {}
 

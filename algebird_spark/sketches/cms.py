@@ -18,8 +18,16 @@ Semantics follow algebird-core .../CountMinSketch.scala:
     :1004-1016). TopN is order-biased (:1084-1106) and intentionally
     NOT the default here.
 
+Storage: the sparse-exact counts and the heavy-hitter candidates are
+each one :class:`~.keyed.KeyedValues` (sorted unique int64 keys, int64
+values), kept exactly as they go on the wire. Payload tag 1 = total,
+candidates, exact counts; tag 2 = total, candidates, dense table.
+
 Vectorization: dense updates are ``np.bincount`` per depth row over the
-whole batch; candidate tracking does one unique-pass per batch.
+whole batch. When counts are exact or candidates are tracked, each chunk
+is also reduced by one ``np.unique`` to (key, count) pairs: the exact
+counts take them as one grouped add, the candidates take the keys as one
+upsert (TopPct) or one re-estimate over the key union (TopN).
 """
 
 from __future__ import annotations
@@ -31,6 +39,7 @@ import numpy as np
 from ..functions.hashing import (cms_hash_limbs, cms_hash_params, cms_limbs,
                                  prepare_keys)
 from .base import KIND_CMS, Approximate, IncompatibleSketchError, Sketch, register
+from .keyed import KeyedValues
 
 DEFAULT_CMS_SEED = 1
 
@@ -84,9 +93,10 @@ class CMS(Sketch):
         self.max_exact = max(self.width * self.depth // 100, 50)
         self._a = cms_hash_params(self.depth, seed)
         self.total = 0
-        self.exact: dict[int, int] | None = {}     # sparse-exact mode
+        # sparse-exact counts until max_exact keys, then None
+        self.exact: KeyedValues | None = KeyedValues.empty(np.int64)
         self.table: np.ndarray | None = None       # int64[depth, width]
-        self.hh: dict[int, int] = {}               # candidate -> est count
+        self.hh = KeyedValues.empty(np.int64)      # candidate -> est count
 
     # ------------------------------------------------------------------
     def _params(self) -> dict:
@@ -107,11 +117,18 @@ class CMS(Sketch):
         if self.exact is None:
             return
         self.table = np.zeros((self.depth, self.width), dtype=np.int64)
-        if self.exact:
-            keys = np.fromiter(self.exact.keys(), dtype=np.int64, count=len(self.exact))
-            cnts = np.fromiter(self.exact.values(), dtype=np.int64, count=len(self.exact))
-            self._add_dense(keys, cnts)
+        self._add_dense(self.exact.keys, self.exact.values)
         self.exact = None
+
+    def _add(self, keys: np.ndarray, counts: np.ndarray) -> None:
+        """Add (key, count) pairs: to the exact counts while they hold at
+        most ``max_exact`` keys, else to the table."""
+        if self.exact is not None:
+            self.exact = self.exact.add(keys, counts)
+            if len(self.exact) > self.max_exact:
+                self._to_dense()
+        else:
+            self._add_dense(keys, counts)
 
     def _add_dense(self, keys: np.ndarray, counts: np.ndarray) -> None:
         limbs = cms_limbs(keys)  # hoisted once across all depth rows
@@ -129,41 +146,27 @@ class CMS(Sketch):
         values = np.asarray(values)
         if values.size == 0:
             return
+        keys = prepare_keys(values)
         if counts is not None:
-            keys = prepare_keys(values)
             cnts = np.asarray(counts).astype(np.int64, copy=False)
             self.total += int(cnts.sum())
-            if self.exact is not None:
-                self._update_exact(keys, cnts)
-            else:
-                self._add_dense(keys, cnts)
-            if self.hh_pct is not None or self.hh_n is not None:
-                self._update_hh(keys)
+            self._add(keys, cnts)
+            self._update_hh(keys)
             return
-        values = prepare_keys(values)
-        self.total += int(values.size)
-        for lo in range(0, values.shape[0], self._CHUNK):
-            chunk = values[lo:lo + self._CHUNK]
-            if (self.exact is not None or self.hh_pct is not None
-                    or self.hh_n is not None):
-                keys, cnts = np.unique(chunk, return_counts=True)
-                if self.exact is not None:
-                    self._update_exact(keys, cnts.astype(np.int64))
-                else:
-                    self._add_dense_ones(chunk)
-                if self.hh_pct is not None or self.hh_n is not None:
-                    self._update_hh(keys)
-            else:
+        self.total += int(keys.size)
+        for lo in range(0, keys.shape[0], self._CHUNK):
+            chunk = keys[lo:lo + self._CHUNK]
+            if self.exact is None and not self._tracks_hh:
                 # dense fast path: no sort/unique — hash the raw chunk per
                 # depth row and bincount into the (cache-resident) row
                 self._add_dense_ones(chunk)
-
-    def _update_exact(self, keys: np.ndarray, cnts: np.ndarray) -> None:
-        ex = self.exact
-        for k, c in zip(keys.tolist(), cnts.tolist()):
-            ex[k] = ex.get(k, 0) + c
-        if len(ex) > self.max_exact:
-            self._to_dense()
+                continue
+            uniq, cnts = np.unique(chunk, return_counts=True)
+            if self.exact is not None:
+                self._add(uniq, cnts.astype(np.int64))
+            else:
+                self._add_dense_ones(chunk)
+            self._update_hh(uniq)
 
     def _add_dense_ones(self, chunk: np.ndarray) -> None:
         limbs = cms_limbs(chunk)  # hoisted once across all depth rows
@@ -171,36 +174,28 @@ class CMS(Sketch):
             h = cms_hash_limbs(self._a[i], *limbs, self.width)
             self.table[i] += np.bincount(h, minlength=self.width)
 
+    @property
+    def _tracks_hh(self) -> bool:
+        return self.hh_pct is not None or self.hh_n is not None
+
     def _update_hh(self, keys: np.ndarray) -> None:
         if self.hh_pct is not None:
+            # TopPct: keys now at or above pct * total enter with their
+            # estimate, then everything below the new threshold leaves
             thresh = self.hh_pct * self.total
             est = self._estimate_many(keys)
-            for k, e in zip(keys.tolist(), est.tolist()):
-                if e >= thresh:
-                    self.hh[k] = e
-        else:  # TopN (TopNLogic, CountMinSketch.scala:1084-1106)
-            cand = np.unique(np.concatenate([
-                keys, np.fromiter(self.hh.keys(), dtype=np.int64,
-                                  count=len(self.hh))]))
-            est = self._estimate_many(cand)
-            self.hh = dict(zip(cand.tolist(), est.tolist()))
-        self._purge_hh()
-
-    def _purge_hh(self) -> None:
-        if self.hh_pct is not None:
-            thresh = self.hh_pct * self.total
-            self.hh = {k: v for k, v in self.hh.items() if v >= thresh}
-        elif self.hh_n is not None and len(self.hh) > self.hh_n:
-            top = sorted(self.hh.items(), key=lambda kv: (-kv[1], kv[0]))
-            self.hh = dict(top[: self.hh_n])
+            hot = est >= thresh
+            self.hh = self.hh.upsert(keys[hot], est[hot]).purge(thresh)
+        elif self.hh_n is not None:
+            # TopN (TopNLogic, CountMinSketch.scala:1084-1106)
+            self.hh = self.hh.reestimate(keys, self._estimate_many) \
+                .purge(top=self.hh_n)
 
     # ------------------------------------------------------------------
     def _estimate_many(self, keys: np.ndarray) -> np.ndarray:
         keys = prepare_keys(np.asarray(keys))
         if self.exact is not None:
-            ex = self.exact
-            return np.fromiter((ex.get(int(k), 0) for k in keys), dtype=np.int64,
-                               count=len(keys))
+            return self.exact.lookup(keys)
         est = np.full(len(keys), np.iinfo(np.int64).max, dtype=np.int64)
         limbs = cms_limbs(keys)
         for i in range(self.depth):
@@ -230,7 +225,7 @@ class CMS(Sketch):
         if self.exact is None:
             return self.table
         tmp = CMS(self.eps, self.delta, self.seed, self.hh_pct, self.hh_n)
-        tmp.exact = dict(self.exact)
+        tmp.exact = self.exact
         tmp.total = self.total
         tmp._to_dense()
         return tmp.table
@@ -238,10 +233,10 @@ class CMS(Sketch):
     def heavy_hitters(self) -> dict[int, int]:
         """TopPct: candidates with estimated count >= pct * total.
         TopN: the current top-n candidates by estimated count."""
-        if self.hh_pct is None and self.hh_n is None:
+        if not self._tracks_hh:
             raise ValueError(
                 "sketch was built without heavy_hitters_pct/_n")
-        return dict(sorted(self.hh.items(), key=lambda kv: (-kv[1], kv[0])))
+        return dict(self.hh.ranked())
 
     # ------------------------------------------------------------------
     def merge_in_place(self, other: "CMS") -> "CMS":
@@ -250,82 +245,47 @@ class CMS(Sketch):
             raise IncompatibleSketchError("CMS hash families differ")
         self.total += other.total
         if other.exact is not None:
-            if self.exact is not None:
-                ex = self.exact
-                for k, c in other.exact.items():
-                    ex[k] = ex.get(k, 0) + c
-                if len(ex) > self.max_exact:
-                    self._to_dense()
-            else:
-                if other.exact:
-                    keys = np.fromiter(other.exact.keys(), dtype=np.int64)
-                    cnts = np.fromiter(other.exact.values(), dtype=np.int64)
-                    self._add_dense(keys, cnts)
+            self._add(other.exact.keys, other.exact.values)
         else:
             self._to_dense()
             self.table += other.table
-        if self.hh_pct is not None or self.hh_n is not None:
+        if self._tracks_hh:
             # union candidates, re-estimate vs merged sketch, purge
             # (TopCMS sum, CountMinSketch.scala:1004-1016). For TopN
             # this carries the reference's DOCUMENTED merge-order bias
             # (:1084-1106): candidates dropped before the merge cannot
             # come back — prefer TopPct for strict mergeability.
-            cand = np.array(sorted(set(self.hh) | set(other.hh)), dtype=np.int64)
-            if len(cand):
-                est = self._estimate_many(cand)
-                self.hh = {int(k): int(e) for k, e in zip(cand, est)}
-                self._purge_hh()
-            else:
-                self.hh = {}
+            thresh = None if self.hh_pct is None else self.hh_pct * self.total
+            self.hh = self.hh.reestimate(other.hh.keys, self._estimate_many) \
+                .purge(thresh, self.hh_n)
         return self
 
     def present(self) -> dict:
         out = {"total": self.total}
-        if self.hh_pct is not None or self.hh_n is not None:
+        if self._tracks_hh:
             out["heavy_hitters"] = self.heavy_hitters()
         return out
 
     # ------------------------------------------------------------------
     def _payload(self) -> bytes:
-        # canonical (sorted) order so serialization is independent of
-        # dict insertion order — byte-equality laws depend on it
-        head = np.array([self.total], dtype=np.int64).tobytes()
-        hh_keys = np.fromiter(self.hh.keys(), dtype=np.int64, count=len(self.hh))
-        hh_vals = np.fromiter(self.hh.values(), dtype=np.int64, count=len(self.hh))
-        ho = np.argsort(hh_keys, kind="stable")
-        hh_blob = (np.array([len(self.hh)], dtype=np.int64).tobytes()
-                   + hh_keys[ho].tobytes() + hh_vals[ho].tobytes())
+        head = np.array([self.total], dtype=np.int64).tobytes() + self.hh.encode()
         if self.exact is not None:
-            n = len(self.exact)
-            keys = np.fromiter(self.exact.keys(), dtype=np.int64, count=n)
-            cnts = np.fromiter(self.exact.values(), dtype=np.int64, count=n)
-            ko = np.argsort(keys, kind="stable")
-            return (b"\x01" + head + hh_blob
-                    + np.array([n], dtype=np.int64).tobytes()
-                    + keys[ko].tobytes() + cnts[ko].tobytes())
-        return b"\x02" + head + hh_blob + self.table.tobytes()
+            return b"\x01" + head + self.exact.encode()
+        return b"\x02" + head + self.table.tobytes()
 
 
 @register(KIND_CMS)
 def _decode_cms(params: dict, payload: bytes) -> CMS:
     out = CMS(params["eps"], params["delta"], params["seed"],
-              params["hh_pct"], params.get("hh_n"))
+              params["hh_pct"], params["hh_n"])
     tag = payload[0]
     buf = payload[1:]
     out.total = int(np.frombuffer(buf[:8], dtype=np.int64)[0])
-    nhh = int(np.frombuffer(buf[8:16], dtype=np.int64)[0])
-    off = 16
-    hh_keys = np.frombuffer(buf[off : off + 8 * nhh], dtype=np.int64)
-    off += 8 * nhh
-    hh_vals = np.frombuffer(buf[off : off + 8 * nhh], dtype=np.int64)
-    off += 8 * nhh
-    out.hh = dict(zip(hh_keys.tolist(), hh_vals.tolist()))
+    out.hh, off = KeyedValues.decode(buf, 8, np.int64)
     if tag == 1:
-        n = int(np.frombuffer(buf[off : off + 8], dtype=np.int64)[0])
-        off += 8
-        keys = np.frombuffer(buf[off : off + 8 * n], dtype=np.int64)
-        cnts = np.frombuffer(buf[off + 8 * n : off + 16 * n], dtype=np.int64)
-        out.exact = dict(zip(keys.tolist(), cnts.tolist()))
+        out.exact, off = KeyedValues.decode(buf, off, np.int64)
+        if off != len(buf):
+            raise ValueError("trailing bytes after CMS exact counts")
     elif tag == 2:
         out.exact = None
         out.table = np.frombuffer(buf[off:], dtype=np.int64).reshape(

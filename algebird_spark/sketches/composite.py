@@ -12,9 +12,7 @@ from __future__ import annotations
 
 import struct
 
-from .base import Sketch, from_bytes, register
-
-KIND_MULTI = 20
+from .base import KIND_MULTI, Sketch, from_bytes, register
 
 
 class MultiSketch(Sketch):

@@ -31,9 +31,7 @@ import struct
 
 import numpy as np
 
-from .base import Sketch, from_bytes, register
-
-KIND_EVENTUALLY = 26  # 24 = ScopedTopN, 25 = DecayedVector
+from .base import KIND_EVENTUALLY, Sketch, from_bytes, register
 
 _MODES = ("set", "list")
 

@@ -40,10 +40,7 @@ import struct
 
 import numpy as np
 
-from .base import Sketch, register
-
-KIND_FREQDIR = 29  # 24-28 = ScopedTopN, DecayedVector, Eventually,
-#                    SketchMapHLL, SketchMapSet
+from .base import KIND_FREQDIR, Sketch, register
 
 
 class FrequentDirections(Sketch):

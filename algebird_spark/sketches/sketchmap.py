@@ -4,13 +4,21 @@
 * ``SketchMap`` — approximate Map[K, V] for any *summable* V: the CMS
   table cells hold V-sums (float64 here) instead of counts; point query
   = min-by-|.| over rows like algebird's ordered-minimum; tracks the
-  top ``heavy_hitters_count`` keys by estimated value. Backed by a
-  dense (depth, width) float64 matrix — AdaptiveMatrix's dense mode;
-  the sparse mode is the exact dict below ``max_exact`` like CMS.
+  top ``heavy_hitters_count`` keys by estimated |value|. Backed by a
+  dense (depth, width) float64 matrix — AdaptiveMatrix's dense mode
+  only; there is no sparse mode.
+* ``SketchMapHLL`` and ``SketchMapSet`` — SketchMap with HLL-register
+  and exact-then-HLL set cells (approximate ``Map[K, distinct-count]``
+  and ``Map[K, Set[V]]``).
 * ``DecayingCMS`` — CMS whose cells are exponentially decayed doubles
   with ``half_life``; every cell is normalized to the sketch's newest
   timestamp; merge rescales the older side by
   2^((t_old - t_new)/half_life). Commutative: late data decays itself.
+
+SketchMap and SketchMapHLL keep their top keys in a
+:class:`~.keyed.KeyedValues` (sorted int64 keys, float64 estimates) —
+the record CMS keeps its candidates in, merged the same way: union of
+the keys, re-estimate against the merged table, keep the top ``n``.
 """
 
 from __future__ import annotations
@@ -21,12 +29,9 @@ import numpy as np
 
 from ..functions.hashing import (cms_hash, cms_hash_limbs, cms_hash_params,
                                  cms_limbs, prepare_keys)
-from .base import Sketch, register
-
-KIND_SKETCHMAP = 22
-KIND_DECAYINGCMS = 23
-KIND_SKETCHMAP_HLL = 27  # 24-26 = ScopedTopN, DecayedVector, Eventually
-KIND_SKETCHMAP_SET = 28
+from .base import (KIND_DECAYINGCMS, KIND_SKETCHMAP, KIND_SKETCHMAP_HLL,
+                   KIND_SKETCHMAP_SET, Sketch, register)
+from .keyed import KeyedValues
 
 
 _SM_COMBINES = ("sum", "min", "max")
@@ -65,7 +70,7 @@ class SketchMap(Sketch):
         self.table = np.full((self.depth, self.width), self._identity(),
                              dtype=np.float64)
         self.total = 0.0
-        self.hh: dict[int, float] = {}
+        self.hh = KeyedValues.empty(np.float64)
 
     def _identity(self) -> float:
         return {"sum": 0.0, "max": -math.inf, "min": math.inf}[self.combine]
@@ -97,15 +102,8 @@ class SketchMap(Sketch):
             else:
                 np.minimum.at(self.table[i], h, w)
         uniq = np.unique(keys)
-        est = self.values(uniq)
-        for k, v in zip(uniq.tolist(), est.tolist()):
-            self.hh[k] = v
-        self._purge()
-
-    def _purge(self) -> None:
-        if len(self.hh) > self.hh_count:
-            top = sorted(self.hh.items(), key=lambda kv: (-abs(kv[1]), kv[0]))
-            self.hh = dict(top[: self.hh_count])
+        self.hh = self.hh.upsert(uniq, self.values(uniq)) \
+            .purge(top=self.hh_count, by_abs=True)
 
     def values(self, keys) -> np.ndarray:
         """Estimated V per key. sum: the row value with minimum
@@ -138,28 +136,19 @@ class SketchMap(Sketch):
         else:
             np.minimum(self.table, other.table, out=self.table)
         self.total += other.total
-        cand = np.array(sorted(set(self.hh) | set(other.hh)), dtype=np.int64)
-        if len(cand):
-            est = self.values(cand)
-            self.hh = dict(zip(cand.tolist(), est.tolist()))
-            self._purge()
+        self.hh = self.hh.reestimate(other.hh.keys, self.values) \
+            .purge(top=self.hh_count, by_abs=True)
         return self
 
     def heavy_hitters(self) -> list[tuple[int, float]]:
-        return sorted(self.hh.items(), key=lambda kv: (-abs(kv[1]), kv[0]))
+        return self.hh.ranked(by_abs=True)
 
     def present(self) -> dict:
         return {"total": self.total, "heavy_hitters": self.heavy_hitters()}
 
     def _payload(self) -> bytes:
-        n = len(self.hh)
-        keys = np.fromiter(self.hh.keys(), dtype=np.int64, count=n)
-        vals = np.fromiter(self.hh.values(), dtype=np.float64, count=n)
-        o = np.argsort(keys, kind="stable")
         return (np.array([self.total], dtype=np.float64).tobytes()
-                + np.array([n], dtype=np.int64).tobytes()
-                + keys[o].tobytes() + vals[o].tobytes()
-                + self.table.tobytes())
+                + self.hh.encode() + self.table.tobytes())
 
 
 @register(KIND_SKETCHMAP)
@@ -168,11 +157,8 @@ def _decode_sketchmap(params: dict, payload: bytes) -> SketchMap:
                     params["hh_count"],
                     params.get("combine", "sum"))  # pre-r4 states: sum
     out.total = float(np.frombuffer(payload[:8], dtype=np.float64)[0])
-    n = int(np.frombuffer(payload[8:16], dtype=np.int64)[0])
-    keys = np.frombuffer(payload[16 : 16 + 8 * n], dtype=np.int64)
-    vals = np.frombuffer(payload[16 + 8 * n : 16 + 16 * n], dtype=np.float64)
-    out.hh = dict(zip(keys.tolist(), vals.tolist()))
-    out.table = np.frombuffer(payload[16 + 16 * n :], dtype=np.float64) \
+    out.hh, off = KeyedValues.decode(payload, 8, np.float64)
+    out.table = np.frombuffer(payload[off:], dtype=np.float64) \
         .reshape(out.depth, out.width).copy()
     return out
 
@@ -221,7 +207,7 @@ class SketchMapHLL(Sketch):
         self.table = np.zeros((self.depth, self.width * self.m),
                               dtype=np.uint8)
         self.n_pairs = 0  # observed (key, value) pairs (not distinct)
-        self.hh: dict[int, float] = {}
+        self.hh = KeyedValues.empty(np.float64)
         # heavy-hitter candidates seen since the last estimate flush:
         # estimating every batch's unique keys costs a 5 x m-register
         # gather per key PER BATCH (~25x the table-update kernel,
@@ -282,21 +268,11 @@ class SketchMapHLL(Sketch):
         """Estimate every pending candidate (plus current heavy
         hitters, whose table estimates may have grown) and purge to
         ``hh_count``. Amortized O(1) estimates per row."""
-        if not self._pending and not self.hh:
-            return
-        cand = np.array(sorted(set(self.hh) | self._pending),
-                        dtype=np.int64)
+        pending = np.fromiter(self._pending, dtype=np.int64,
+                              count=len(self._pending))
         self._pending.clear()
-        if len(cand) == 0:
-            return
-        est = self.values(cand)
-        self.hh = dict(zip(cand.tolist(), est.tolist()))
-        self._purge()
-
-    def _purge(self) -> None:
-        if len(self.hh) > self.hh_count:
-            top = sorted(self.hh.items(), key=lambda kv: (-kv[1], kv[0]))
-            self.hh = dict(top[: self.hh_count])
+        self.hh = self.hh.reestimate(pending, self.values) \
+            .purge(top=self.hh_count)
 
     @staticmethod
     def _estimate_rows(regs: np.ndarray) -> np.ndarray:
@@ -345,16 +321,13 @@ class SketchMapHLL(Sketch):
         other._flush_hh()
         np.maximum(self.table, other.table, out=self.table)
         self.n_pairs += other.n_pairs
-        cand = np.array(sorted(set(self.hh) | set(other.hh)), dtype=np.int64)
-        if len(cand):
-            est = self.values(cand)
-            self.hh = dict(zip(cand.tolist(), est.tolist()))
-            self._purge()
+        self.hh = self.hh.reestimate(other.hh.keys, self.values) \
+            .purge(top=self.hh_count)
         return self
 
     def heavy_hitters(self) -> list[tuple[int, float]]:
         self._flush_hh()
-        return sorted(self.hh.items(), key=lambda kv: (-kv[1], kv[0]))
+        return self.hh.ranked()
 
     def present(self) -> dict:
         return {"n_pairs": self.n_pairs,
@@ -362,13 +335,8 @@ class SketchMapHLL(Sketch):
 
     def _payload(self) -> bytes:
         self._flush_hh()
-        n = len(self.hh)
-        keys = np.fromiter(self.hh.keys(), dtype=np.int64, count=n)
-        vals = np.fromiter(self.hh.values(), dtype=np.float64, count=n)
-        o = np.argsort(keys, kind="stable")
-        return (np.array([self.n_pairs, n], dtype=np.int64).tobytes()
-                + keys[o].tobytes() + vals[o].tobytes()
-                + self.table.tobytes())
+        return (np.array([self.n_pairs], dtype=np.int64).tobytes()
+                + self.hh.encode() + self.table.tobytes())
 
 
 @register(KIND_SKETCHMAP_HLL)
@@ -376,11 +344,8 @@ def _decode_sketchmap_hll(params: dict, payload: bytes) -> SketchMapHLL:
     out = SketchMapHLL(params["eps"], params["delta"], params["p"],
                        params["seed"], params["hh_count"])
     out.n_pairs = int(np.frombuffer(payload[:8], dtype=np.int64)[0])
-    n = int(np.frombuffer(payload[8:16], dtype=np.int64)[0])
-    keys = np.frombuffer(payload[16: 16 + 8 * n], dtype=np.int64)
-    vals = np.frombuffer(payload[16 + 8 * n: 16 + 16 * n], dtype=np.float64)
-    out.hh = dict(zip(keys.tolist(), vals.tolist()))
-    table = np.frombuffer(payload[16 + 16 * n:], dtype=np.uint8)
+    out.hh, off = KeyedValues.decode(payload, 8, np.float64)
+    table = np.frombuffer(payload[off:], dtype=np.uint8)
     if table.size != out.depth * out.width * out.m:
         raise ValueError("SketchMapHLL table payload size mismatch")
     out.table = table.reshape(out.depth, out.width * out.m).copy()

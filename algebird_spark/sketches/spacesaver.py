@@ -20,7 +20,8 @@ import json
 import numpy as np
 
 from ..functions.hashing import prepare_keys
-from .base import KIND_SPACESAVER, Sketch, register
+from .base import (KIND_SCOPEDTOPN, KIND_SPACESAVER, Sketch, from_bytes,
+                   register)
 
 
 class SpaceSaver(Sketch):
@@ -142,7 +143,7 @@ class ScopedTopN(Sketch):
     SpaceSaver per scope. Same merge-order caveat as TopN — prefer
     TopPct CMS when strict mergeability matters."""
 
-    KIND = 24
+    KIND = KIND_SCOPEDTOPN
 
     def __init__(self, n: int = 10, max_scopes: int = 1024,
                  capacity: int | None = None):
@@ -203,10 +204,7 @@ class ScopedTopN(Sketch):
         return b"".join(parts)
 
 
-from .base import from_bytes, register as _register  # noqa: E402
-
-
-@_register(24)
+@register(KIND_SCOPEDTOPN)
 def _decode_scopedtopn(params: dict, payload: bytes) -> "ScopedTopN":
     import struct
     out = ScopedTopN(params["n"], params["max_scopes"], params["capacity"])

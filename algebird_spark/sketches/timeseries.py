@@ -23,11 +23,10 @@ import math
 
 import numpy as np
 
-from ..functions.hashing import DEFAULT_SEED, murmur64_any, trailing_zeros64
-from .base import KIND_DECAYED, KIND_EXPHIST, Sketch, register
-from .hll import HLL
-
-KIND_HLLSERIES = 21
+from ..functions.hashing import DEFAULT_SEED
+from .base import (KIND_DECAYED, KIND_DECAYEDVECTOR, KIND_EXPHIST,
+                   KIND_HLLSERIES, Sketch, register)
+from .hll import HLL, idx_rho
 
 
 class DecayedValue(Sketch):
@@ -259,10 +258,7 @@ class HLLSeries(Sketch):
         if timestamps is None:
             timestamps = np.zeros(values.shape[0])
         ts = np.asarray(timestamps, dtype=np.float64)
-        h = murmur64_any(values, self.seed)
-        idx = (h & np.uint64(self.m - 1)).astype(np.int64)
-        w = h >> np.uint64(self.p)
-        rho = np.minimum(trailing_zeros64(w).astype(np.int64) + 1, 64 - self.p + 1)
+        idx, rho = idx_rho(values, self.p, self.m, self.seed)
         # reduce the batch to max-ts per (register, rho) first — the
         # Python dict update then touches only distinct pairs (bounded
         # by state size), never one iteration per event
@@ -353,7 +349,7 @@ class DecayedVector(Sketch):
     element-wise exponentially decayed sum, all elements normalized to
     one timestamp."""
 
-    KIND = 25
+    KIND = KIND_DECAYEDVECTOR
 
     def __init__(self, dim: int, half_life: float = 86_400.0):
         self.dim = dim
@@ -412,7 +408,7 @@ class DecayedVector(Sketch):
                 + self.vec.tobytes())
 
 
-@register(25)
+@register(KIND_DECAYEDVECTOR)
 def _decode_decayedvector(params: dict, payload: bytes) -> DecayedVector:
     out = DecayedVector(params["dim"], params["half_life"])
     out.ts = float(np.frombuffer(payload[:8], dtype=np.float64)[0])

@@ -3,10 +3,13 @@ builds, so two checkouts can be compared for bit-identical states.
 
 Cases: ``sketch_partitions`` (keyed), ``sketch_by_key`` (keyed, keyed
 with ``fanout=2``, keyless, keyed with ``premerge=2``),
-``sketch_global``, a 2-key cube (``sketch_rollup``) and
-``sketch_by_key_multi`` (HLLSeries, SketchMap), for HLL (p=8, 12, 14),
-CMS, CMS with heavy hitters, KLL, t-digest, Bloom and MultiSketch, at
-``maxRecordsPerBatch`` 10000 and 64. One line per case:
+``sketch_global`` and a 2-key cube (``sketch_rollup``) for HLL (p=8,
+12, 14), CMS, CMS with TopPct and with TopN heavy hitters, a CMS over
+a 128-value column whose small states stay sparse-exact, KLL, t-digest,
+Bloom and MultiSketch; and ``sketch_by_key_multi`` for HLLSeries,
+SketchMap (sum, max, min), SketchMapHLL and a weighted CMS
+(``update_batch(values, counts)``). All at ``maxRecordsPerBatch`` 10000
+and 64. One line per case:
 ``<batch> <build> <sketch> <sha256 of the sorted row digests> <rows>``.
 
 Usage:
@@ -37,6 +40,8 @@ def factories():
         "hll14": lambda: HLL(p=14),
         "cms": lambda: CMS(eps=0.01, delta=1e-3),
         "cms_hh": lambda: CMS(eps=0.01, delta=1e-3, heavy_hitters_pct=0.01),
+        "cms_topn": lambda: CMS(eps=0.01, delta=1e-3, heavy_hitters_n=10),
+        "cms_sparse": lambda: CMS(eps=0.002, delta=1e-3),  # max_exact 95
         "kll": lambda: KLL(k=100),
         "tdigest": lambda: TDigest(100),
         "bloom": lambda: BloomFilter(num_entries=20_000, fp_prob=0.01),
@@ -47,17 +52,29 @@ def factories():
     }
 
 
+# the array column each factory sketches (default "tokens")
+COLUMNS = {"cms_sparse": "few_tokens"}
+
+
 def multi_factories():
-    from algebird_spark.sketches import HLLSeries, SketchMap
+    from algebird_spark.sketches import CMS, HLLSeries, SketchMap, SketchMapHLL
     return {"hllseries": lambda: HLLSeries(p=10),
-            "sketchmap": lambda: SketchMap(eps=0.01, delta=1e-3)}
+            "sketchmap": lambda: SketchMap(eps=0.01, delta=1e-3),
+            "sketchmap_max": lambda: SketchMap(eps=0.01, delta=1e-3,
+                                               combine="max"),
+            "sketchmap_min": lambda: SketchMap(eps=0.01, delta=1e-3,
+                                               combine="min"),
+            "sketchmap_hll": lambda: SketchMapHLL(eps=0.05, delta=0.05, p=8),
+            "cms_weighted": lambda: CMS(eps=0.01, delta=1e-3,
+                                        heavy_hitters_pct=0.05)}
 
 
 def table(spark):
     """Token arrays keyed by source and by a 48-value bucket that is
     NULL on every 97th row; 8 partitions, so each bucket's slice of a
     partition is a few hundred tokens (sparse HLL states next to dense
-    ones)."""
+    ones). ``few_tokens`` folds the tokens onto 128 values (sparse-exact
+    CMS states next to dense ones)."""
     from pyspark.sql import functions as F
     from algebird_spark.sources.datagen import token_table
     df = token_table(spark, rows=3_000, n_sources=5, vocab=40_000,
@@ -67,6 +84,7 @@ def table(spark):
                           .otherwise(row % 48).cast("int"))
               .withColumn("t", (row % 31).cast("double"))
               .withColumn("v", (row * 2654435761 % 4001).cast("long"))
+              .withColumn("few_tokens", F.transform("tokens", lambda x: x % 128))
               .cache())
 
 
@@ -81,24 +99,25 @@ def digest_rows(rows, keys) -> tuple[str, int]:
 def cases(spark, df):
     from algebird_spark import agg
     for name, make in factories().items():
+        col = COLUMNS.get(name, "tokens")
         builds = {
             "partitions": (["b"], lambda: agg.sketch_partitions(
-                df, "tokens", make, ["b"])),
+                df, col, make, ["b"])),
             "by_key": (["b"], lambda: agg.sketch_by_key(
-                df, ["b"], "tokens", make)),
+                df, ["b"], col, make)),
             "by_key_fanout2": (["source"], lambda: agg.sketch_by_key(
-                df, ["source"], "tokens", make, fanout=2)),
+                df, ["source"], col, make, fanout=2)),
             "by_key_keyless": ([], lambda: agg.sketch_by_key(
-                df, [], "tokens", make)),
+                df, [], col, make)),
             "premerge": (["b"], lambda: agg.sketch_by_key(
-                df, ["b"], "tokens", make, premerge=2)),
+                df, ["b"], col, make, premerge=2)),
             "cube": (["source", "b", "grouping_id"],
-                     lambda: agg.sketch_rollup(df, ["source", "b"], "tokens",
+                     lambda: agg.sketch_rollup(df, ["source", "b"], col,
                                                make, grouping="cube")),
         }
         for build, (keys, fn) in builds.items():
             yield build, name, digest_rows(fn().collect(), keys)
-        blob = agg.sketch_global(df, "tokens", make).to_bytes()
+        blob = agg.sketch_global(df, col, make).to_bytes()
         yield "global", name, (hashlib.sha256(blob).hexdigest(), 1)
     for name, make in multi_factories().items():
         rows = agg.sketch_by_key_multi(df, ["b"], ["v", "t"], make).collect()

@@ -16,6 +16,7 @@ def _states():
     rng = np.random.default_rng(0)
     ints = rng.integers(0, 100_000, 500)
     floats = rng.random(500) * 1000
+    skewed = rng.zipf(1.5, 2000).astype(np.int64)
     out = []
     for make, vals in [
         (lambda: HLL(p=10), ints),                       # sparse HLL
@@ -37,6 +38,11 @@ def _states():
         (lambda: Eventually(HLL(p=8), 10**6, "set"), ints),
         (lambda: MultiSketch({"h": HLL(p=8), "k": KLL(k=50)}), ints),
         (lambda: FrequentDirections(d=10, ell=4), floats),  # 50 rows x 10
+        (lambda: CMS(eps=0.001, delta=1e-3), ints % 150),  # sparse-exact
+        (lambda: CMS(eps=0.001, delta=1e-3, heavy_hitters_pct=0.02),
+         skewed % 150),                                    # sparse TopPct
+        (lambda: CMS(eps=0.01, delta=1e-3, heavy_hitters_pct=0.02), skewed),
+        (lambda: CMS(eps=0.01, delta=1e-3, heavy_hitters_n=5), skewed),
     ]:
         s = make()
         s.update_batch(vals)
@@ -44,6 +50,10 @@ def _states():
     smh = SketchMapHLL(eps=0.05, delta=0.05, p=8)  # two-array update
     smh.update_batch(ints % 50, ints)
     out.append(smh)
+    sm = SketchMap(eps=0.01, delta=1e-3, heavy_hitters_count=5,
+                   combine="max")
+    sm.update_batch(skewed, floats[skewed % 500])
+    out.append(sm)
     return out
 
 
@@ -133,3 +143,46 @@ def test_sparse_hll_rejects_unsorted_or_repeated_indexes(idx):
 def test_sparse_hll_rejects_rank_out_of_range(bad_rho):
     with pytest.raises(ValueError, match="rank"):
         from_bytes(_sparse_hll_blob([3, 17, 900], [1, bad_rho, 2]))
+
+
+def _cms_exact_blob(keys, counts, tail=b""):
+    """A sparse-exact CMS envelope whose tag-1 payload holds these
+    (key, count) arrays and no heavy-hitter candidates."""
+    c = CMS(eps=0.01, delta=1e-3)
+    c.update_batch(np.arange(3))
+    header = c.to_bytes()[:-len(c._payload())]
+    n = np.array([len(keys)], dtype=np.int64).tobytes()
+    return (header + b"\x01" + np.array([3, 0], dtype=np.int64).tobytes()
+            + n + np.asarray(keys, dtype=np.int64).tobytes()
+            + np.ones(len(keys), dtype=np.int64).tobytes() + tail)
+
+
+def test_cms_exact_accepts_sorted_unique_keys():
+    blob = _cms_exact_blob([0, 1, 2], [1, 1, 1])
+    r = from_bytes(blob)
+    assert r.is_sparse and r.frequencies([0, 1, 2, 3]).tolist() == [1, 1, 1, 0]
+    assert r.to_bytes() == blob
+
+
+@pytest.mark.parametrize("keys", [[2, 0, 1], [0, 1, 1]],
+                         ids=["unsorted", "repeated"])
+def test_cms_exact_rejects_unsorted_or_repeated_keys(keys):
+    with pytest.raises(ValueError, match="strictly increasing"):
+        from_bytes(_cms_exact_blob(keys, [1, 1, 1]))
+
+
+def test_cms_exact_rejects_trailing_bytes():
+    with pytest.raises(ValueError, match="trailing"):
+        from_bytes(_cms_exact_blob([0, 1, 2], [1, 1, 1], tail=b"\0" * 8))
+
+
+@pytest.mark.parametrize("keys", [[9, 4], [4, 4]],
+                         ids=["unsorted", "repeated"])
+def test_sketchmap_rejects_unsorted_or_repeated_candidates(keys):
+    sm = SketchMap(eps=0.1, delta=0.1, heavy_hitters_count=2)
+    sm.update_batch(np.array([4, 9]), np.array([1.0, 2.0]))
+    blob = bytearray(sm.to_bytes())
+    at = len(blob) - len(sm._payload()) + 16  # after total, n
+    blob[at:at + 16] = np.array(keys, dtype=np.int64).tobytes()
+    with pytest.raises(ValueError, match="strictly increasing"):
+        from_bytes(bytes(blob))
