@@ -17,8 +17,14 @@ DataFrames + Arrow per SURVEY.md §3.2-3.3:
      reducer's fan-in bounded — treeAggregate-style two-level merge,
      never ``repartition(1)`` on a big fan-in (the anti-pattern called
      out in AlgebirdRDD.scala:28).
-  3. **present()**: decode the (few, one-per-group) final states into
-     estimate columns.
+  3. **present()** where the reduce ends, as algebird's Aggregator
+     does (Aggregator.scala:367-507): on a frame fresh from the merge,
+     ``with_presented`` / ``present_explode`` rebuild the merge's fold
+     with the presenter as its finisher, so each final state becomes
+     its estimate columns in the task that finished it. Any other
+     states frame (cached, filtered, joined, read back from a
+     checkpoint) is presented by one ``mapInArrow`` pass over its state
+     rows.
 
 Requires a commutative merge, exactly like the reference
 (AlgebirdRDD.scala:17,37,47) — guaranteed by the sketch monoid laws
@@ -137,17 +143,16 @@ def _factorize_rows(batch: pa.RecordBatch, keys: Sequence[str]):
                        for r in first.tolist()]
 
 
-def _state_batch(rows: list[tuple], out_schema: StructType) -> pa.RecordBatch:
-    """The ``(keys..., state, count)`` output batch from ``(key tuple,
-    state bytes, n_values)`` rows, each column built in its declared
-    Arrow type; ``_NAN`` turns back into NaN."""
+def _rows_batch(rows: list[tuple], schema: StructType) -> pa.RecordBatch:
+    """The batch of ``schema`` from rows of Python values, each column
+    built in its declared Arrow type; ``_NAN`` turns back into NaN."""
     from pyspark.sql.pandas.types import to_arrow_type
-    cols = zip(*([float("nan") if v is _NAN else v for v in key] + [blob, n]
-                 for key, blob, n in rows))
+    cols = zip(*rows) if rows else [()] * len(schema.fields)
     return pa.RecordBatch.from_arrays(
-        [pa.array(list(col), type=to_arrow_type(f.dataType))
-         for f, col in zip(out_schema.fields, cols)],
-        names=[f.name for f in out_schema.fields])
+        [pa.array([float("nan") if v is _NAN else v for v in col],
+                  type=to_arrow_type(f.dataType))
+         for f, col in zip(schema.fields, cols)],
+        names=[f.name for f in schema.fields])
 
 
 def _state_schema(df: DataFrame, keys: Sequence[str]) -> StructType:
@@ -331,8 +336,8 @@ def _combine(df: DataFrame, keys: Sequence[str], value_cols: Sequence[str],
         for key in list(pend):
             flush(key)
         if acc:
-            yield _state_batch([(k, sk.to_bytes(), n)
-                                for k, (sk, n) in acc.items()], out_schema)
+            yield _rows_batch([(*k, sk.to_bytes(), n)
+                               for k, (sk, n) in acc.items()], out_schema)
 
     return df.select(*(keys + value_cols)).mapInArrow(run, out_schema)
 
@@ -355,15 +360,41 @@ def sketch_partitions(df: DataFrame, value_col: str, factory: SketchFactory,
 _EMIT_BYTES = 8 << 20
 
 
-def _fold_sorted(placed: DataFrame, keys: list[str]) -> DataFrame:
+class _States:
+    """The fold's default finisher: each finished group becomes a
+    ``(keys..., sketch_state, n_values)`` row, and a batch is yielded
+    every ``_EMIT_BYTES`` of state."""
+
+    limit = _EMIT_BYTES
+
+    def __init__(self, schema: StructType):
+        self.schema = schema
+
+    @staticmethod
+    def finish(sk: Sketch) -> bytes:
+        return sk.to_bytes()
+
+    size = staticmethod(len)
+
+    def batch(self, done: list[tuple]) -> pa.RecordBatch:
+        return _rows_batch([(*key, blob, n) for key, blob, n in done],
+                           self.schema)
+
+
+def _fold_sorted(placed: DataFrame, keys: list[str],
+                 finish=None) -> DataFrame:
     """The one merge: sort ``placed``, which already holds each key's
     states in one partition, by ``keys`` within partitions and stream
     the sorted Arrow batches through one ``mapInArrow`` fold. Each run
     of equal keys (``_group_key`` equality) folds through ``_fold``; on
-    a key change the finished state goes into the output batch, which
-    is yielded every ``_EMIT_BYTES``. Per group this costs a key
-    comparison, not a Python call and an Arrow round trip."""
-    out_schema = _state_schema(placed, keys)
+    a key change ``finish.finish`` turns the finished state into its
+    output, and the ``(key, output, n_values)`` rows are yielded as
+    ``finish.batch`` once their ``finish.size`` reaches ``finish.limit``.
+    Per group this costs a key comparison, not a Python call and an
+    Arrow round trip. The default finisher (``_States``) emits the
+    state rows; ``_Present`` presents each state where the reduce
+    ends."""
+    finish = finish or _States(_state_schema(placed, keys))
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         done: list[tuple] = []
@@ -377,22 +408,22 @@ def _fold_sorted(placed: DataFrame, keys: list[str]) -> DataFrame:
             counts = batch.column(COUNT_COL).to_pylist()
             for k, blob, c in zip(ks, blobs, counts):
                 if acc is not None and k != key:
-                    done.append((key, acc.to_bytes(), n))
-                    size += len(done[-1][1])
+                    done.append((key, finish.finish(acc), n))
+                    size += finish.size(done[-1][1])
                     acc, n = None, 0
-                    if size >= _EMIT_BYTES:
-                        yield _state_batch(done, out_schema)
+                    if size >= finish.limit:
+                        yield finish.batch(done)
                         done, size = [], 0
                 key = k
                 acc, n = _fold([blob], [c], acc, n)
         if acc is not None:
-            done.append((key, acc.to_bytes(), n))
+            done.append((key, finish.finish(acc), n))
         if done:
-            yield _state_batch(done, out_schema)
+            yield finish.batch(done)
 
     if keys:
         placed = placed.sortWithinPartitions(*keys)
-    return placed.mapInArrow(run, out_schema)
+    return placed.mapInArrow(run, finish.schema)
 
 
 def premerge_local(states_df: DataFrame, keys: Sequence[str] = (),
@@ -455,7 +486,18 @@ def merge_sketches(states_df: DataFrame, keys: Sequence[str] = (),
     if fanout:
         states_df = _fanout_merge(states_df, keys, fanout)
     placed = states_df.repartition(*keys) if keys else states_df.repartition(1)
-    return _fold_sorted(placed, keys)
+    return _tag(_fold_sorted(placed, keys), placed, keys, keys)
+
+
+def _tag(merged: DataFrame, placed: DataFrame, keys: list[str],
+         out_keys: list[str]) -> DataFrame:
+    """Tag ``merged``, the states ``(out_keys..., sketch_state,
+    n_values)`` of the fold of ``placed`` by ``keys``, with that fold,
+    as ``merged._algebird_fold``, so a present can rebuild it with the
+    presenter as its finisher (``_present``). ``out_keys`` are the key
+    columns ``merged`` keeps, in its order."""
+    merged._algebird_fold = (placed, keys, out_keys)
+    return merged
 
 
 # ---------------------------------------------------------------------------
@@ -634,35 +676,113 @@ def rollup_levels(fine: DataFrame, keys: Sequence[str],
             [(s, (2 ** d) - 1) + (None,) * d + (zero, 0) for s in totals],
             flat.schema))
     merged = merge_sketches(flat, ["__set", "grouping_id"] + keys)
-    return merged.select(*keys, "grouping_id", STATE_COL, COUNT_COL)
+    placed, fold_keys, _ = merged._algebird_fold
+    return _tag(merged.select(*keys, "grouping_id", STATE_COL, COUNT_COL),
+                placed, fold_keys, keys + ["grouping_id"])
 
 
 # ---------------------------------------------------------------------------
 # present: decode final states into estimate columns
 # ---------------------------------------------------------------------------
 
+class _Present:
+    """``present()`` as a finisher: a presenter's output rows, as a batch
+    of ``schema`` = the carried columns, then the presented ``fields``.
+    ``explode``: the presenter returns a list of rows per state, else
+    one row. In a fused fold (``_fold_sorted``) the carried columns are
+    the key columns at positions ``pick`` of the fold's key tuple, then
+    ``n_values`` when ``count``, and a batch is yielded every Arrow
+    batch's worth (``maxRecordsPerBatch``) of presented rows."""
+
+    size = staticmethod(len)
+
+    def __init__(self, presenter: Callable, explode: bool,
+                 carry: StructType, fields: StructType, limit: int,
+                 pick: list[int] = (), count: bool = False):
+        self.presenter, self.explode = presenter, explode
+        self.carry, self.fields = carry, fields
+        self.schema = StructType(carry.fields + fields.fields)
+        self.limit, self.pick, self.count = limit, list(pick), count
+
+    def finish(self, sk: Sketch) -> list[dict]:
+        out = self.presenter(sk)
+        return out if self.explode else [out]
+
+    def batch(self, done: list[tuple]) -> pa.RecordBatch:
+        carried = _rows_batch(
+            [tuple(key[i] for i in self.pick) + ((n,) if self.count else ())
+             for key, _, n in done], self.carry)
+        return self.table(carried, [rows for _, rows, _ in done])
+
+    def table(self, carried: pa.RecordBatch,
+              rows: list[list[dict]]) -> pa.RecordBatch:
+        """Each carried row repeated once per presented row of its
+        state, then the presented columns. A presented value converts
+        as from pandas: NaN and None read as NULL, and the value is
+        cast (unchecked) to its field's type."""
+        from pyspark.sql.pandas.types import to_arrow_type
+        take = np.repeat(np.arange(len(rows)), [len(r) for r in rows])
+        flat = [r for rs in rows for r in rs]
+        cols = carried.take(pa.array(take, type=pa.int64())).columns + [
+            pa.array([r.get(f.name) for r in flat], from_pandas=True)
+            .cast(to_arrow_type(f.dataType), safe=False)
+            for f in self.fields]
+        return pa.RecordBatch.from_arrays(
+            cols, names=[f.name for f in self.schema.fields])
+
+
+def _present(states_df: DataFrame, presenter: Callable, out_fields: str,
+             explode: bool) -> DataFrame:
+    """The one present: ``states_df``'s non-state columns (without
+    ``n_values`` when ``explode``), then the ``out_fields`` DDL columns.
+
+    A states frame fresh from ``merge_sketches`` (tagged, not cached)
+    is rebuilt as its fold with this present as the finisher: each
+    state is presented where the reduce ends, and never crosses
+    ``to_bytes`` → JVM → Arrow → ``from_bytes`` again. Any other frame
+    (a checkpoint read; a cached, filtered or joined states frame) gets
+    one ``mapInArrow`` over its state rows. A cached frame is never
+    fused: the rebuilt fold would recompute the merge it caches."""
+    from pyspark.sql.types import _parse_datatype_string
+    carried = [f for f in states_df.schema.fields if f.name != STATE_COL
+               and not (explode and f.name == COUNT_COL)]
+    # one DDL string, so every output column is nullable as declared
+    schema = _parse_datatype_string(", ".join(
+        [f"`{f.name}` {f.dataType.simpleString()}" for f in carried]
+        + [out_fields]))
+    carry = StructType(schema.fields[:len(carried)])
+    fields = StructType(schema.fields[len(carried):])
+    limit = int(states_df.sparkSession.conf.get(
+        "spark.sql.execution.arrow.maxRecordsPerBatch"))
+    tag = getattr(states_df, "_algebird_fold", None)
+    if tag is not None and not states_df.is_cached:
+        placed, keys, out_keys = tag
+        return _fold_sorted(placed, keys, _Present(
+            presenter, explode, carry, fields, limit,
+            pick=[keys.index(k) for k in out_keys], count=not explode))
+    present = _Present(presenter, explode, carry, fields, limit)
+    names = [f.name for f in carry.fields]
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if batch.num_rows:
+                yield present.table(batch.select(names), [
+                    present.finish(from_bytes(b))
+                    for b in batch.column(STATE_COL).to_pylist()])
+
+    return states_df.mapInArrow(run, present.schema)
+
+
 def with_presented(states_df: DataFrame, presenter: Callable[[Sketch], dict],
                    out_fields: str) -> DataFrame:
-    """Apply ``presenter(sketch) -> dict`` to each final state row.
-
-    ``out_fields`` is a DDL string for the presented columns, e.g.
-    ``"estimate double, low double, high double"``. Runs driver-free via
-    mapInPandas; final states are one row per group, so this is cheap.
-    """
-    in_fields = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                          for f in states_df.schema.fields
-                          if f.name != STATE_COL)
-    schema = f"{in_fields}, {out_fields}"
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            presented = [presenter(from_bytes(bytes(b))) for b in pdf[STATE_COL]]
-            out = pdf.drop(columns=[STATE_COL]).reset_index(drop=True)
-            yield pd.concat([out, pd.DataFrame(presented)], axis=1)
-
-    return states_df.mapInPandas(run, schema)
+    """Apply ``presenter(sketch) -> dict`` to each final state row: the
+    output is every non-state column (keys, ``n_values``), then the
+    presented columns. ``out_fields`` is a DDL string for those, e.g.
+    ``"estimate double, low double, high double"``. Runs in-plan and
+    driver-free: on a frame fresh from ``merge_sketches`` (or the
+    rollups) inside the merge's own fold, else as one ``mapInArrow``
+    pass (see ``_present``)."""
+    return _present(states_df, presenter, out_fields, explode=False)
 
 
 def present_explode(states_df: DataFrame,
@@ -671,25 +791,7 @@ def present_explode(states_df: DataFrame,
     """Like ``with_presented`` but ``presenter(sketch) -> list[dict]``:
     zero or more output rows per final state (e.g. top-N per scope from
     a ScopedTopN state). Group-key columns are carried onto every
-    emitted row; ``out_fields`` is a DDL string for the presented
-    columns. Runs in-plan via mapInPandas — final states are one row
-    per group, so this is cheap and never touches the driver."""
-    key_cols = [f.name for f in states_df.schema.fields
-                if f.name not in (STATE_COL, COUNT_COL)]
-    key_ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                        for f in states_df.schema.fields
-                        if f.name in key_cols)
-    schema = f"{key_ddl}, {out_fields}" if key_ddl else out_fields
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: list[dict] = []
-            for i in range(len(pdf)):
-                for d in presenter(from_bytes(bytes(pdf[STATE_COL].iloc[i]))):
-                    row = {k: pdf[k].iloc[i] for k in key_cols}
-                    row.update(d)
-                    rows.append(row)
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return states_df.mapInPandas(run, schema)
+    emitted row (``n_values`` is not); ``out_fields`` is a DDL string
+    for the presented columns. Runs in-plan exactly as
+    ``with_presented`` does."""
+    return _present(states_df, presenter, out_fields, explode=True)

@@ -102,12 +102,13 @@ def main(argv=None, spark=None):
         p = sk.present()
         return {"presented": json.dumps(p, default=str)}
 
-    out = with_presented(states, presenter, "presented string") \
-        if args.output else states
     if args.output:
+        # present from the written states, so the merge runs once
         states.write.mode("overwrite").parquet(args.output + "/states")
-        out.write.mode("overwrite").json(args.output + "/estimates")
-        n = spark.read.parquet(args.output + "/states").count()
+        written = spark.read.parquet(args.output + "/states")
+        with_presented(written, presenter, "presented string") \
+            .write.mode("overwrite").json(args.output + "/estimates")
+        n = written.count()
     else:
         n = states.count()
     metrics = {"groups": n, "seconds": round(time.time() - t0, 2),

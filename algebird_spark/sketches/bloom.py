@@ -66,6 +66,14 @@ class BloomFilter(Sketch):
 
     def update_batch(self, values) -> None:
         values = np.asarray(values)
+        self.update_prepared(values, None, values.size)
+
+    def update_prepared(self, uniq, counts, n_raw: int) -> None:
+        """The prepared-chunk hook (``MultiSketch.update_batch``): a chunk
+        of ``n_raw`` values given as its distinct values ``uniq``. Each
+        distinct value sets its bits once; ``n_inserted`` counts all
+        ``n_raw`` values, as ``update_batch`` does."""
+        values = np.asarray(uniq)
         if values.size == 0:
             return
         # r8: scatter into a lazy bool bitmap instead of
@@ -78,7 +86,7 @@ class BloomFilter(Sketch):
             self._mark = np.zeros(self.m, dtype=bool)
         for lo in range(0, values.shape[0], self._CHUNK):
             self._mark[self._slots(values[lo:lo + self._CHUNK]).ravel()] = True
-        self.n_inserted += int(values.size)
+        self.n_inserted += int(n_raw)
 
     def _sync(self) -> None:
         """Fold the lazy scatter map into the packed bit array."""

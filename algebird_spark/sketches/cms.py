@@ -25,9 +25,11 @@ candidates, exact counts; tag 2 = total, candidates, dense table.
 
 Vectorization: dense updates are ``np.bincount`` per depth row over the
 whole batch. When counts are exact or candidates are tracked, each chunk
-is also reduced by one ``np.unique`` to (key, count) pairs: the exact
-counts take them as one grouped add, the candidates take the keys as one
-upsert (TopPct) or one re-estimate over the key union (TopN).
+is first reduced by one ``np.unique`` to (key, count) pairs: the exact
+counts take them as one grouped add, the dense table as one weighted
+``np.bincount`` per depth row (each distinct key hashed once), and the
+candidates take the keys as one upsert (TopPct) or one re-estimate over
+the key union (TopN). ``update_prepared`` takes such pairs ready-made.
 """
 
 from __future__ import annotations
@@ -162,11 +164,19 @@ class CMS(Sketch):
                 self._add_dense_ones(chunk)
                 continue
             uniq, cnts = np.unique(chunk, return_counts=True)
-            if self.exact is not None:
-                self._add(uniq, cnts.astype(np.int64))
-            else:
-                self._add_dense_ones(chunk)
+            self._add(uniq, cnts.astype(np.int64))
             self._update_hh(uniq)
+
+    def update_prepared(self, uniq, counts, n_raw: int) -> None:
+        """The prepared-chunk hook (``MultiSketch.update_batch``): one
+        chunk of ``n_raw`` values given as its distinct values and their
+        counts. The same state as ``update_batch(chunk)``: the counts
+        and the table are additive, and the candidates see each key once
+        either way."""
+        keys = prepare_keys(np.asarray(uniq))
+        self.total += int(n_raw)
+        self._add(keys, np.asarray(counts).astype(np.int64, copy=False))
+        self._update_hh(keys)
 
     def _add_dense_ones(self, chunk: np.ndarray) -> None:
         limbs = cms_limbs(chunk)  # hoisted once across all depth rows

@@ -160,6 +160,13 @@ class HLL(Sketch):
         for lo in range(0, values.shape[0], self._CHUNK):
             self._fold_pairs(*self._idx_rho(values[lo:lo + self._CHUNK]))
 
+    def update_prepared(self, uniq, counts, n_raw: int) -> None:
+        """The prepared-chunk hook (``MultiSketch.update_batch``): a chunk
+        given as its distinct values. The registers, and so the state,
+        depend only on the set of values seen, so the distinct values
+        alone build the same bytes."""
+        self.update_batch(uniq)
+
     @staticmethod
     def update_grouped(states: list["HLL"], codes: np.ndarray,
                        values) -> None:

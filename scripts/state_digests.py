@@ -6,7 +6,9 @@ with ``fanout=2``, keyless, keyed with ``premerge=2``),
 ``sketch_global`` and a 2-key cube (``sketch_rollup``) for HLL (p=8,
 12, 14), CMS, CMS with TopPct and with TopN heavy hitters, a CMS over
 a 128-value column whose small states stay sparse-exact, KLL, t-digest,
-Bloom and MultiSketch; and ``sketch_by_key_multi`` for HLLSeries,
+Bloom and MultiSketch, a MultiSketch over a float column holding
+``-0.0``, ``0.0`` and NaN next to other values, and a MultiSketch of a
+plain CMS and a TopN CMS; and ``sketch_by_key_multi`` for HLLSeries,
 SketchMap (sum, max, min), SketchMapHLL and a weighted CMS
 (``update_batch(values, counts)``). All at ``maxRecordsPerBatch`` 10000
 and 64. One line per case:
@@ -49,11 +51,19 @@ def factories():
             "hll": HLL(p=14), "cms": CMS(eps=0.01, delta=1e-3),
             "kll": KLL(k=100), "tdigest": TDigest(100),
             "bloom": BloomFilter(num_entries=20_000, fp_prob=0.01)}),
+        "multi_float": lambda: MultiSketch({
+            "hll": HLL(p=12), "cms": CMS(eps=0.01, delta=1e-3,
+                                         heavy_hitters_pct=0.01),
+            "kll": KLL(k=100),
+            "bloom": BloomFilter(num_entries=20_000, fp_prob=0.01)}),
+        "multi_topn": lambda: MultiSketch({
+            "cms": CMS(eps=0.01, delta=1e-3),
+            "topn": CMS(eps=0.01, delta=1e-3, heavy_hitters_n=10)}),
     }
 
 
 # the array column each factory sketches (default "tokens")
-COLUMNS = {"cms_sparse": "few_tokens"}
+COLUMNS = {"cms_sparse": "few_tokens", "multi_float": "float_tokens"}
 
 
 def multi_factories():
@@ -74,7 +84,9 @@ def table(spark):
     NULL on every 97th row; 8 partitions, so each bucket's slice of a
     partition is a few hundred tokens (sparse HLL states next to dense
     ones). ``few_tokens`` folds the tokens onto 128 values (sparse-exact
-    CMS states next to dense ones)."""
+    CMS states next to dense ones); ``float_tokens`` maps them to
+    doubles, every 7th to ``-0.0``, every 11th to ``0.0``, every 13th
+    to NaN and every 17th to a negated NaN."""
     from pyspark.sql import functions as F
     from algebird_spark.sources.datagen import token_table
     df = token_table(spark, rows=3_000, n_sources=5, vocab=40_000,
@@ -85,6 +97,12 @@ def table(spark):
               .withColumn("t", (row % 31).cast("double"))
               .withColumn("v", (row * 2654435761 % 4001).cast("long"))
               .withColumn("few_tokens", F.transform("tokens", lambda x: x % 128))
+              .withColumn("float_tokens", F.transform("tokens", lambda x: (
+                  F.when(x % 7 == 0, F.lit(-0.0))
+                  .when(x % 11 == 0, F.lit(0.0))
+                  .when(x % 13 == 0, F.lit(float("nan")))
+                  .when(x % 17 == 0, -F.lit(float("nan")))
+                  .otherwise(x / 8.0))))
               .cache())
 
 
