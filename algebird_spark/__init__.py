@@ -7,8 +7,8 @@ Layers:
     Bloom, KLL, t-digest, MinHash) with versioned binary envelopes.
   * ``agg`` — the distributed harness: map-side partition combine via
     ``mapInArrow`` (only (key, state) rows cross the merge shuffle;
-    raw rows move only under ``agg.spread``), salted / tree-style
-    merges, present() into estimate columns.
+    raw rows move only under ``agg.spread``), one sorted streaming
+    merge, present() into estimate columns.
   * ``operators`` — exact-parity layer (algebird ops that map 1:1 to
     Spark built-ins) + training-data pipeline ops (dedup, similarity,
     text analysis, multimodal plumbing).

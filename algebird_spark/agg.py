@@ -8,15 +8,15 @@ DataFrames + Arrow per SURVEY.md §3.2-3.3:
      key — the analog of Spark's partial HashAggregate, which Catalyst
      cannot do for Python UDAFs. Only ``(key, state)`` rows cross the
      merge shuffle; raw rows move only under ``spread``'s one rule.
-  2. **Tree merge**: one hash Exchange on the keys co-locates each
-     key's states, a per-partition sort makes them adjacent, and one
-     ``mapInArrow`` fold streams the sorted batches, merging each run
-     of equal keys — one open state per worker, no per-group Python
-     call. When the number of partition states is large, an
-     intermediate salted round (``fanout`` buckets) keeps any single
-     reducer's fan-in bounded — treeAggregate-style two-level merge,
-     never ``repartition(1)`` on a big fan-in (the anti-pattern called
-     out in AlgebirdRDD.scala:28).
+  2. **Merge**: one hash Exchange on the keys (keyless: onto one
+     partition) co-locates each key's states, a per-partition sort
+     makes them adjacent, and one ``mapInArrow`` fold streams the
+     sorted batches, merging each run of equal keys — one open state
+     per worker at any fan-in, no per-group Python call. Every build,
+     keyed or keyless, goes through this one merge. The one fan-in
+     lever is ``premerge``: a shuffle-free coalesce-level fold before
+     the Exchange, for scans with far more partitions than cores
+     (``premerge_local``).
   3. **present()** where the reduce ends, as algebird's Aggregator
      does (Aggregator.scala:367-507): on a frame fresh from the merge,
      ``with_presented`` / ``present_explode`` rebuild the merge's fold
@@ -161,21 +161,6 @@ def _state_schema(df: DataFrame, keys: Sequence[str]) -> StructType:
         StructField(STATE_COL, BinaryType(), False),
         StructField(COUNT_COL, LongType(), False),
     ])
-
-
-def _fold(blobs, counts, acc: Sketch | None = None,
-          n: int = 0) -> tuple[Sketch | None, int]:
-    """The one state fold: merge serialized states, in order, into
-    ``acc`` (the first blob seeds it when None) and add their value
-    counts to ``n``. Every merge (``_fold_sorted``) and sketch_global's
-    driver tail fold through here."""
-    for blob in blobs:
-        sk = from_bytes(bytes(blob))
-        if acc is None:
-            acc = sk
-        else:
-            acc.merge_in_place(sk)
-    return acc, n + sum(counts)
 
 
 # ---------------------------------------------------------------------------
@@ -352,7 +337,7 @@ def sketch_partitions(df: DataFrame, value_col: str, factory: SketchFactory,
 
 
 # ---------------------------------------------------------------------------
-# stage 2: (optionally layered) merge of states by key
+# stage 2: merge of states by key
 # ---------------------------------------------------------------------------
 
 # A merge task yields its finished states once they reach this many
@@ -386,14 +371,14 @@ def _fold_sorted(placed: DataFrame, keys: list[str],
     """The one merge: sort ``placed``, which already holds each key's
     states in one partition, by ``keys`` within partitions and stream
     the sorted Arrow batches through one ``mapInArrow`` fold. Each run
-    of equal keys (``_group_key`` equality) folds through ``_fold``; on
-    a key change ``finish.finish`` turns the finished state into its
-    output, and the ``(key, output, n_values)`` rows are yielded as
-    ``finish.batch`` once their ``finish.size`` reaches ``finish.limit``.
-    Per group this costs a key comparison, not a Python call and an
-    Arrow round trip. The default finisher (``_States``) emits the
-    state rows; ``_Present`` presents each state where the reduce
-    ends."""
+    of equal keys (``_group_key`` equality) merges, in order, into the
+    state its first row decodes to; on a key change ``finish.finish``
+    turns the finished state into its output, and the ``(key, output,
+    n_values)`` rows are yielded as ``finish.batch`` once their
+    ``finish.size`` reaches ``finish.limit``. Per group this costs a
+    key comparison, not a Python call and an Arrow round trip. The
+    default finisher (``_States``) emits the state rows; ``_Present``
+    presents each state where the reduce ends."""
     finish = finish or _States(_state_schema(placed, keys))
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -415,7 +400,12 @@ def _fold_sorted(placed: DataFrame, keys: list[str],
                         yield finish.batch(done)
                         done, size = [], 0
                 key = k
-                acc, n = _fold([blob], [c], acc, n)
+                sk = from_bytes(bytes(blob))
+                if acc is None:
+                    acc = sk
+                else:
+                    acc.merge_in_place(sk)
+                n += c
         if acc is not None:
             done.append((key, finish.finish(acc), n))
         if done:
@@ -454,37 +444,20 @@ def premerge_local(states_df: DataFrame, keys: Sequence[str] = (),
     return _fold_sorted(states_df.coalesce(target_partitions), list(keys))
 
 
-def _fanout_merge(states_df: DataFrame, keys: list[str],
-                  fanout: int) -> DataFrame:
-    """Salted intermediate round: states merge within ``fanout``
-    buckets per key (by input partition), bounding any one reducer's
-    fan-in — the treeAggregate level."""
-    by = keys + ["__bucket"]
-    salted = states_df.withColumn(
-        "__bucket", F.pmod(F.spark_partition_id(), F.lit(fanout)))
-    return _fold_sorted(salted.repartition(*by), by).drop("__bucket")
-
-
 def merge_sketches(states_df: DataFrame, keys: Sequence[str] = (),
-                   fanout: int = 0,
                    premerge: int | None = None) -> DataFrame:
-    """Merge per-partition states down to one state per key.
+    """Merge per-partition states down to one state per key: the one
+    merge behind every build.
 
     One hash Exchange on ``keys`` (keyless: onto one partition), then
     the sorted streaming fold: a worker holds one open state plus one
-    bounded output batch, at any key count.
-
-    ``fanout > 0`` inserts an intermediate salted round: states first
-    merge within ``fanout`` buckets per key, bounding any single
-    reducer's fan-in (treeAggregate-style; use when #partitions is
-    large or a key is hot). ``premerge`` additionally inserts the
-    shuffle-free coalesce-level combine (see premerge_local) BEFORE the
-    keyed shuffle — the lever for very high input partition counts."""
+    bounded output batch, at any key count and any fan-in.
+    ``premerge`` inserts the shuffle-free coalesce-level combine (see
+    premerge_local) BEFORE the keyed shuffle — the lever for very high
+    input partition counts."""
     if premerge is not None:
         states_df = premerge_local(states_df, keys, premerge)
     keys = list(keys)
-    if fanout:
-        states_df = _fanout_merge(states_df, keys, fanout)
     placed = states_df.repartition(*keys) if keys else states_df.repartition(1)
     return _tag(_fold_sorted(placed, keys), placed, keys, keys)
 
@@ -504,48 +477,39 @@ def _tag(merged: DataFrame, placed: DataFrame, keys: list[str],
 # top-level entry points (the AlgebirdRDD API analogs)
 # ---------------------------------------------------------------------------
 
-def sketch_by_key(df: DataFrame, keys: Sequence[str], value_col: str,
-                  factory: SketchFactory, fanout: int = 0,
+def sketch_by_key(df: DataFrame, keys: Sequence[str],
+                  value_cols: str | Sequence[str], factory: SketchFactory,
                   min_partitions: int | None = None,
                   premerge: int | None = None) -> DataFrame:
     """``rdd.algebird.aggregateByKey`` analog: DataFrame of
-    ``keys..., sketch_state, n_values`` with one row per key.
+    ``keys..., sketch_state, n_values`` with one row per key (no keys:
+    one row, none on empty input).
+
+    ``value_cols`` is one column (scalar or array) or a list of them.
+    Several columns feed sketches whose ``update_batch`` takes aligned
+    companion arrays — SketchMap(keys, weights), DecayingCMS(keys,
+    timestamps, weights), HLLSeries(values, timestamps),
+    ScopedTopN(items, scopes); they must be scalar columns, and each
+    batch calls ``update_batch(col0, col1, ...)`` positionally.
     ``premerge``: shuffle-free coalesce-level combine before the keyed
     merge — set to ~cluster cores when the scan has far more
     partitions than executors (see premerge_local)."""
-    states = sketch_partitions(df, value_col, factory, keys,
-                               min_partitions=min_partitions)
-    return merge_sketches(states, keys, fanout=fanout, premerge=premerge)
-
-
-def sketch_by_key_multi(df: DataFrame, keys: Sequence[str],
-                        value_cols: Sequence[str], factory: SketchFactory,
-                        fanout: int = 0,
-                        min_partitions: int | None = None,
-                        premerge: int | None = None) -> DataFrame:
-    """Multi-argument variant for sketches whose ``update_batch`` takes
-    aligned companion arrays — SketchMap(keys, weights),
-    DecayingCMS(keys, timestamps, weights), HLLSeries(values, timestamps),
-    ScopedTopN(items, scopes). All ``value_cols`` must be scalar columns;
-    each batch calls ``update_batch(col0, col1, ...)`` positionally.
-    """
+    value_cols = [value_cols] if isinstance(value_cols, str) else value_cols
     states = _combine(df, keys, value_cols, factory, min_partitions)
-    return merge_sketches(states, keys, fanout=fanout, premerge=premerge)
+    return merge_sketches(states, keys, premerge=premerge)
 
 
-def sketch_global(df: DataFrame, value_col: str, factory: SketchFactory,
-                  fanout: int = 32) -> Sketch:
-    """``rdd.algebird.aggregate`` analog: one sketch for the whole frame.
-
-    Partition states partial-merge into ``fanout`` buckets in parallel;
-    the driver folds only the <= fanout survivors (treeAggregate tail).
-    """
-    partial = _fanout_merge(sketch_partitions(df, value_col, factory),
-                            [], fanout)
-    rows = partial.select(STATE_COL).collect()
-    if not rows:
-        return factory()  # monoid zero on empty input
-    return _fold([r[0] for r in rows], ())[0]
+def sketch_global(df: DataFrame, value_cols: str | Sequence[str],
+                  factory: SketchFactory) -> Sketch:
+    """``rdd.algebird.aggregate`` analog: one sketch for the whole frame,
+    the keyless ``sketch_by_key`` with its one state read back;
+    ``factory()``, the monoid zero, on empty input. Its fold merges
+    every partition state in one task; for a scan with far more
+    partitions than cores, read back the row of ``sketch_by_key(df,
+    [], value_cols, factory, premerge=...)`` instead (SCALE.md §1)."""
+    rows = sketch_by_key(df, [], value_cols, factory).select(
+        STATE_COL).collect()
+    return from_bytes(bytes(rows[0][0])) if rows else factory()
 
 
 _ROLLUP_FUSE_MAX_ROWS = 16_384  # sketch_rollup's fusion gate, see there
@@ -553,7 +517,7 @@ _ROLLUP_FUSE_MAX_ROWS = 16_384  # sketch_rollup's fusion gate, see there
 
 def sketch_rollup(df: DataFrame, keys: Sequence[str], value_col: str,
                   factory: SketchFactory, grouping: str = "rollup",
-                  fanout: int = 0, premerge: int | None = None,
+                  premerge: int | None = None,
                   sets: Sequence[Sequence[str]] | None = None) -> DataFrame:
     """Every ROLLUP / CUBE grouping level from ONE scan of the input:
     build sketch states at the finest key grain, then derive each
@@ -606,7 +570,7 @@ def sketch_rollup(df: DataFrame, keys: Sequence[str], value_col: str,
         states = sketch_partitions(df, value_col, factory, keys)
     else:
         states = sketch_by_key(df, keys, value_col, factory,
-                               fanout=fanout, premerge=premerge)
+                               premerge=premerge)
     return rollup_levels(states, keys, factory, grouping=grouping, sets=sets)
 
 

@@ -22,7 +22,7 @@ from .sketches import (CMS, HLL, KLL, BloomFilter, TDigest,
 
 
 def distinct_count(df: DataFrame, col: str, by: Sequence[str] = (),
-                   error: float = 0.01, fanout: int = 0):
+                   error: float = 0.01):
     """Approximate distinct count with relative error <= ``error``
     (HyperLogLogAggregator.withError analog).
 
@@ -31,7 +31,7 @@ def distinct_count(df: DataFrame, col: str, by: Sequence[str] = (),
     p = bits_for_error(error)
     factory = lambda: HLL(p=p)  # noqa: E731
     if by:
-        states = sketch_by_key(df, by, col, factory, fanout=fanout)
+        states = sketch_by_key(df, by, col, factory)
         return with_presented(
             states,
             lambda sk: {"estimate": sk.estimate(),
@@ -43,7 +43,6 @@ def distinct_count(df: DataFrame, col: str, by: Sequence[str] = (),
 
 def distinct_rollup(df: DataFrame, col: str, by: Sequence[str],
                     error: float = 0.01, grouping: str = "rollup",
-                    fanout: int = 0,
                     sets: Sequence[Sequence[str]] | None = None) -> DataFrame:
     """Approximate distinct count at EVERY ``by`` grouping level from
     one input scan (``agg.sketch_rollup``): the finest HLL states build
@@ -54,7 +53,7 @@ def distinct_rollup(df: DataFrame, col: str, by: Sequence[str],
     (``grouping_id`` disambiguates rolled-up NULLs)."""
     p = bits_for_error(error)
     levels = sketch_rollup(df, by, col, lambda: HLL(p=p),
-                           grouping=grouping, fanout=fanout, sets=sets)
+                           grouping=grouping, sets=sets)
     return with_presented(
         levels,
         lambda sk: {"estimate": sk.estimate(),
@@ -66,7 +65,6 @@ def distinct_rollup(df: DataFrame, col: str, by: Sequence[str],
 def quantile_rollup(df: DataFrame, col: str, by: Sequence[str],
                     quantiles: Sequence[float] = (0.25, 0.5, 0.75, 0.95),
                     k: int = 200, grouping: str = "rollup",
-                    fanout: int = 0,
                     sets: Sequence[Sequence[str]] | None = None) -> DataFrame:
     """Approximate quantiles at EVERY ``by`` grouping level from one
     input scan: the finest KLL(k) states build once
@@ -78,7 +76,7 @@ def quantile_rollup(df: DataFrame, col: str, by: Sequence[str],
     ``grouping_id`` carries SQL ROLLUP/CUBE null semantics."""
     ps = [float(q) for q in quantiles]
     levels = sketch_rollup(df, by, col, lambda: KLL(k=k),
-                           grouping=grouping, fanout=fanout, sets=sets)
+                           grouping=grouping, sets=sets)
 
     def present(sk):
         if sk.n == 0:
@@ -96,7 +94,6 @@ def quantile_rollup(df: DataFrame, col: str, by: Sequence[str],
 
 def topk_rollup(df: DataFrame, col: str, by: Sequence[str], k: int = 5,
                 capacity: int = 4096, grouping: str = "rollup",
-                fanout: int = 0,
                 sets: Sequence[Sequence[str]] | None = None) -> DataFrame:
     """Top-k heavy hitters at EVERY ``by`` grouping level from one
     input scan: finest SpaceSaver(capacity) states build once
@@ -117,7 +114,7 @@ def topk_rollup(df: DataFrame, col: str, by: Sequence[str], k: int = 5,
             "those — other dtypes would surface opaque hashed keys)")
     levels = sketch_rollup(df, by, col,
                            lambda: SpaceSaver(capacity=capacity),
-                           grouping=grouping, fanout=fanout, sets=sets)
+                           grouping=grouping, sets=sets)
 
     def present(sk):
         return [{"rank": i + 1,
@@ -133,14 +130,14 @@ def topk_rollup(df: DataFrame, col: str, by: Sequence[str], k: int = 5,
 
 def heavy_hitters(df: DataFrame, col: str, by: Sequence[str] = (),
                   pct: float = 0.01, eps: float | None = None,
-                  delta: float = 1e-6, fanout: int = 0):
+                  delta: float = 1e-6):
     """Keys with frequency >= pct * total (TopPctCMS semantics: the
     result provably contains every such key and nothing below
     (pct - eps) * total w.p. 1-delta)."""
     eps = eps if eps is not None else pct / 10
     factory = lambda: CMS(eps=eps, delta=delta, heavy_hitters_pct=pct)  # noqa: E731
     if by:
-        states = sketch_by_key(df, by, col, factory, fanout=fanout)
+        states = sketch_by_key(df, by, col, factory)
         return with_presented(
             states,
             lambda sk: {"heavy_hitters": [int(k) for k in sk.heavy_hitters()],
@@ -151,8 +148,7 @@ def heavy_hitters(df: DataFrame, col: str, by: Sequence[str] = (),
 
 def estimate_join_size(left: DataFrame, left_key: str,
                        right: DataFrame, right_key: str | None = None,
-                       eps: float = 0.0005, delta: float = 1e-6,
-                       fanout: int = 16):
+                       eps: float = 0.0005, delta: float = 1e-6):
     """Approximate inner-join output cardinality WITHOUT running the
     join: two independent CMS passes (one scan each, no shuffle of the
     join itself), then ``innerProduct`` = sum_k fL(k)*fR(k) — the CMS
@@ -164,13 +160,13 @@ def estimate_join_size(left: DataFrame, left_key: str,
     the join at 100 TB."""
     right_key = right_key or left_key
     factory = lambda: CMS(eps=eps, delta=delta)  # noqa: E731
-    skl = sketch_global(left, left_key, factory, fanout=fanout)
-    skr = sketch_global(right, right_key, factory, fanout=fanout)
+    skl = sketch_global(left, left_key, factory)
+    skr = sketch_global(right, right_key, factory)
     return skl.inner_product(skr)
 
 
 def top_k(df: DataFrame, col: str, k: int = 10, by: Sequence[str] = (),
-          capacity: int | None = None, fanout: int = 0):
+          capacity: int | None = None):
     """Top-k items with SpaceSaver per-item error bounds; string columns
     come back as the ORIGINAL strings (label tracking survives the
     distributed merge). With ``by``: DataFrame of keys + parallel arrays
@@ -188,7 +184,7 @@ def top_k(df: DataFrame, col: str, k: int = 10, by: Sequence[str] = (),
                 "guaranteed": [bool(g) for _i, _c, _e, g in top]}
 
     if by:
-        states = sketch_by_key(df, by, col, factory, fanout=fanout)
+        states = sketch_by_key(df, by, col, factory)
         return with_presented(
             states, present,
             "items array<string>, counts array<long>, "
@@ -197,7 +193,7 @@ def top_k(df: DataFrame, col: str, k: int = 10, by: Sequence[str] = (),
 
 
 def quantiles(df: DataFrame, col: str, probs: Sequence[float],
-              by: Sequence[str] = (), k: int = 200, fanout: int = 0):
+              by: Sequence[str] = (), k: int = 200):
     """Approximate quantiles with KLL rank error eps(k) plus
     (lower, upper) bound columns (QTreeAggregator contract)."""
     factory = lambda: KLL(k=k)  # noqa: E731
@@ -217,7 +213,7 @@ def quantiles(df: DataFrame, col: str, probs: Sequence[float],
         f"q{str(p).replace('.', '_')}_lo double, "
         f"q{str(p).replace('.', '_')}_hi double" for p in probs)
     if by:
-        states = sketch_by_key(df, by, col, factory, fanout=fanout)
+        states = sketch_by_key(df, by, col, factory)
         return with_presented(states, present, fields)
     sk = sketch_global(df, col, factory)
     return {p: sk.quantile_bounds(p) for p in probs}
@@ -373,16 +369,12 @@ def distinct_count_per_key(df: DataFrame, key_col: str, value_col: str,
     and batch-query it with ``.values(keys)``; ``heavy_hitters()``
     gives the top keys by estimated distinct count. Returns the merged
     sketch (driver-side object), built with the scale topology."""
-    from .agg import sketch_by_key_multi
-    from .sketches import SketchMapHLL, from_bytes
+    from .sketches import SketchMapHLL
 
-    factory = lambda: SketchMapHLL(eps=eps, delta=delta, p=p,  # noqa: E731
-                                   heavy_hitters_count=heavy_hitters_count)
-    rows = sketch_by_key_multi(df, [], [key_col, value_col],
-                               factory).collect()
-    if not rows:  # monoid zero on empty input, like sketch_global
-        return factory()
-    return from_bytes(bytes(rows[0]["sketch_state"]))
+    return sketch_global(
+        df, [key_col, value_col],
+        lambda: SketchMapHLL(eps=eps, delta=delta, p=p,
+                             heavy_hitters_count=heavy_hitters_count))
 
 
 def scan_fold(df: DataFrame, keys: Sequence[str], order, step, init,

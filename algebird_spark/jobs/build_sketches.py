@@ -53,7 +53,6 @@ def main(argv=None, spark=None):
                          "fingerprint — O(1), no file walk or count scan; "
                          "omit to fall back to the file-level fingerprint")
     ap.add_argument("--output", default=None)
-    ap.add_argument("--fanout", type=int, default=0)
     ap.add_argument("--premerge", type=int, default=None,
                     help="shuffle-free coalesce-level state combine before "
                          "the keyed merge; set to ~cluster cores when the "
@@ -91,12 +90,11 @@ def main(argv=None, spark=None):
     t0 = time.time()
     if args.checkpoint:
         states = build_or_resume(spark, df, keys, args.value_col, factory,
-                                 args.checkpoint, fanout=args.fanout,
-                                 premerge=args.premerge,
+                                 args.checkpoint, premerge=args.premerge,
                                  snapshot_id=args.snapshot_id)
     else:
         states = sketch_by_key(df, keys, args.value_col, factory,
-                               fanout=args.fanout, premerge=args.premerge)
+                               premerge=args.premerge)
 
     def presenter(sk):
         p = sk.present()

@@ -52,7 +52,6 @@ __all__ = ["bloom_prune", "bloom_join", "hot_keys", "skew_join",
 
 def bloom_prune(big: DataFrame, keys: DataFrame, big_key: str, keys_key: str,
                 fp_prob: float = 0.01, num_entries: int | None = None,
-                fanout: int = 16,
                 max_collect_keys: int = 4_000_000) -> DataFrame:
     """Filter ``big`` to rows whose ``big_key`` *may* appear in
     ``keys[keys_key]``: a superset of the matching rows (no false
@@ -96,8 +95,7 @@ def bloom_prune(big: DataFrame, keys: DataFrame, big_key: str, keys_key: str,
     if num_entries is not None:
         bf = sketch_global(keys.where(F.col(keys_key).isNotNull()), keys_key,
                            lambda: BloomFilter(num_entries=num_entries,
-                                               fp_prob=fp_prob),
-                           fanout=fanout)
+                                               fp_prob=fp_prob))
     spark = big.sparkSession
     bc = spark.sparkContext.broadcast(bf.to_bytes())
     # dtype fidelity: a nullable int column reaches pandas as float64

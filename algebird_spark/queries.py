@@ -78,7 +78,7 @@ def q_hll_distinct_per_group(spark, sf):
 def q_hll_global_distinct(spark, sf):
     """Global distinct o_custkey via HLL(p=14)."""
     od = _t(spark, sf, "orders")
-    sk = sketch_global(od, "o_custkey", lambda: HLL(p=14), fanout=16)
+    sk = sketch_global(od, "o_custkey", lambda: HLL(p=14))
     exact = od.agg(F.count_distinct("o_custkey")).collect()[0][0]
     ok = abs(sk.estimate() - exact) / exact <= 3.5 * 1.04 / math.sqrt(2 ** 14)
     return spark.createDataFrame(
@@ -379,10 +379,9 @@ def q_cms_point_queries(spark, sf):
     # (r8 late: overlapping the exact groupBy with the build via the
     # thread pattern was MEASURED NEUTRAL at sf0.1 AND at a 6M-row
     # fixture — the Python build already saturates all cores, so the
-    # concurrent JVM job just waits for slots; scripts/ab_r08_late.py.
+    # concurrent JVM job just waits for slots; OPTIMIZATION_r08.md.
     # Kept sequential.)
-    sk = sketch_global(li, "l_partkey", lambda: CMS(eps=eps, delta=delta),
-                       fanout=16)
+    sk = sketch_global(li, "l_partkey", lambda: CMS(eps=eps, delta=delta))
     sk_bytes, total = sk.to_bytes(), sk.total
 
     @F.pandas_udf("long")
@@ -407,8 +406,7 @@ def q_cms_heavy_hitters(spark, sf):
     li = _t(spark, sf, "lineitem")
     pct, eps = 0.005, 0.0005
     sk = sketch_global(li, "l_suppkey",
-                       lambda: CMS(eps=eps, delta=1e-6, heavy_hitters_pct=pct),
-                       fanout=16)
+                       lambda: CMS(eps=eps, delta=1e-6, heavy_hitters_pct=pct))
     # the heavy-hitter set is tiny by construction (<= 1/pct keys) — it
     # broadcasts into the plan; exact counts stay distributed and the
     # verdicts fold with aggregates (no per-key collect)
@@ -451,7 +449,7 @@ def q_bloom_membership(spark, sf):
     # boundary
     bf = sketch_global(dk, "c_custkey",
                        lambda: BloomFilter(num_entries=max(n_keys, 64),
-                                           fp_prob=fpp), fanout=16)
+                                           fp_prob=fpp))
     bf_bytes = bf.to_bytes()
 
     @F.pandas_udf("boolean")
@@ -1408,8 +1406,7 @@ def q_spacesaver_topk(spark, sf):
     """SpaceSaver top-5 l_suppkey: capacity > cardinality -> exact counts."""
     from .sketches import SpaceSaver
     li = _t(spark, sf, "lineitem")
-    sk = sketch_global(li, "l_suppkey", lambda: SpaceSaver(capacity=4096),
-                       fanout=16)
+    sk = sketch_global(li, "l_suppkey", lambda: SpaceSaver(capacity=4096))
     rows = [Row(l_suppkey=int(item), cnt=int(count))
             for item, count, _err, _g in sk.top_k(5)]
     return spark.createDataFrame(rows, StructType([
@@ -1435,14 +1432,13 @@ def q_hllseries_since(spark, sf):
     the distributed multi-column harness (partition combine -> state
     merge); only the window midpoint (2 scalars) touches the driver —
     the state itself is presented in-plan."""
-    from .agg import sketch_by_key_multi
     from .sketches.timeseries import HLLSeries
     ev = _t(spark, sf, "events").withColumn(
         "us", F.unix_micros(F.col("ts").cast("timestamp")).cast("double"))
     lo, hi = ev.agg(F.min("us"), F.max("us")).collect()[0]
     mid_us = (float(lo) + float(hi)) / 2
-    states = sketch_by_key_multi(ev, [], ["user_id", "us"],
-                                 lambda: HLLSeries(p=14))
+    states = sketch_by_key(ev, [], ["user_id", "us"],
+                           lambda: HLLSeries(p=14))
     est = with_presented(
         states, lambda sk: {"est": float(sk.since(mid_us).estimate())},
         "est double")
@@ -1462,13 +1458,12 @@ def q_decayed_value_sketch(spark, sf):
     expression to 1e-9 relative (DecayedValue.scala:31-58 semantics).
     The comparison itself runs in-plan: states join the exact SQL
     answer per user and only the folded (n_users, bool) pair returns."""
-    from .agg import sketch_by_key_multi
     from .sketches.timeseries import DecayedValue
     half = 7 * 86400.0
     ev = _t(spark, sf, "events").withColumn(
         "sec", F.col("ts").cast("timestamp").cast("double"))
-    states = sketch_by_key_multi(ev, ["user_id"], ["value", "sec"],
-                                 lambda: DecayedValue(half_life=half))
+    states = sketch_by_key(ev, ["user_id"], ["value", "sec"],
+                           lambda: DecayedValue(half_life=half))
     est = with_presented(states, lambda sk: {"est": float(sk.present())},
                          "est double")
     exact_df = exact.decayed_sum(ev, ["user_id"], "ts", "value",
@@ -1566,7 +1561,7 @@ def q_scoped_topn(spark, sf):
     state explodes to (scope, rank, item, count) rows in-plan and joins
     back to the flag names with a broadcast join — only the tiny
     scope-code dictionary (3 rows) touches the driver."""
-    from .agg import present_explode, sketch_by_key_multi
+    from .agg import present_explode
     from .sketches.spacesaver import ScopedTopN
     li = _t(spark, sf, "lineitem")
     flags = sorted(r[0] for r in li.select("l_returnflag").distinct().collect())
@@ -1575,8 +1570,8 @@ def q_scoped_topn(spark, sf):
         *[x for f, c in scope_of.items() for x in (F.lit(f), F.lit(c))]
     )[F.col("l_returnflag")]
     coded = li.withColumn("scope", code_expr.cast("long"))
-    states = sketch_by_key_multi(coded, [], ["l_suppkey", "scope"],
-                                 lambda: ScopedTopN(n=2, capacity=4096))
+    states = sketch_by_key(coded, [], ["l_suppkey", "scope"],
+                           lambda: ScopedTopN(n=2, capacity=4096))
 
     def top_rows(sk):
         return [{"scope": int(scope), "rank": rank, "l_suppkey": int(item),
@@ -1601,13 +1596,11 @@ def q_sketchmap_sums(spark, sf):
     thing the driver holds) ships into a vectorized pandas UDF scoring
     the exact distributed groupBy sums; bound verdicts fold with
     bool_and. No per-key collect — stays runnable at sf10+."""
-    from .agg import sketch_by_key_multi
     from .sketches import SketchMap
     li = _t(spark, sf, "lineitem")
-    states = sketch_by_key_multi(
-        li, [], ["l_suppkey", "l_quantity"],
+    sk = sketch_global(
+        li, ["l_suppkey", "l_quantity"],
         lambda: SketchMap(eps=0.0005, delta=1e-4, heavy_hitters_count=5))
-    sk = from_bytes(bytes(states.collect()[0][STATE_COL]))
     sk_bytes, eps_mass = sk.to_bytes(), sk.eps * sk.total
 
     @F.pandas_udf("double")
@@ -1638,15 +1631,13 @@ def q_sketchmap_minmax(spark, sf):
     """
     from pyspark.sql import Window
 
-    from .agg import sketch_by_key_multi
     from .sketches import SketchMap
     li = _t(spark, sf, "lineitem")
-    mk = lambda mode: sketch_by_key_multi(  # noqa: E731
-        li, [], ["l_suppkey", "l_extendedprice"],
+    mk = lambda mode: sketch_global(  # noqa: E731
+        li, ["l_suppkey", "l_extendedprice"],
         lambda: SketchMap(eps=0.0005, delta=1e-4, heavy_hitters_count=5,
                           combine=mode))
-    blobs = {mode: bytes(mk(mode).collect()[0][STATE_COL])
-             for mode in ("max", "min")}
+    blobs = {mode: mk(mode).to_bytes() for mode in ("max", "min")}
 
     def est_udf(blob):
         @F.pandas_udf("double")
@@ -1695,7 +1686,6 @@ def q_sketchmap_hll_distinct(spark, sf):
 
     from concurrent.futures import ThreadPoolExecutor
 
-    from .agg import sketch_by_key_multi
     from .sketches import SketchMapHLL
     li = _t(spark, sf, "lineitem")
     scope = Scope("sketchmap_hll_exact")
@@ -1708,13 +1698,16 @@ def q_sketchmap_hll_distinct(spark, sf):
         # min_partitions=8: the update kernel clears ~3M pairs/s/core,
         # so at sf-bench scale the build cost is SHIPPING the 1.4 MB
         # partition states, not updating them — 8 states instead of 32
-        # quarters the merge traffic while the kernel stays unbound
-        states = sketch_by_key_multi(
-            li, [], ["l_suppkey", "l_partkey"],
-            lambda: SketchMapHLL(eps=0.01, delta=0.01, p=10,
-                                 heavy_hitters_count=0),
-            min_partitions=8)
-        return from_bytes(bytes(states.collect()[0][STATE_COL]))
+        # quarters the merge traffic while the kernel stays unbound.
+        # sketch_global has no min_partitions, so this is its keyless
+        # sketch_by_key with the bound kept
+        def factory():
+            return SketchMapHLL(eps=0.01, delta=0.01, p=10,
+                                heavy_hitters_count=0)
+
+        rows = sketch_by_key(li, [], ["l_suppkey", "l_partkey"], factory,
+                             min_partitions=8).select(STATE_COL).collect()
+        return from_bytes(bytes(rows[0][0])) if rows else factory()
 
     def exact_counts():
         # invocation-scoped persist (newest 2 kept): a bare persist
@@ -1771,7 +1764,6 @@ def q_sketchmap_set(spark, sf):
     pins the exact-recovery contract the HLL variant cannot offer."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from .agg import sketch_by_key_multi
     from .sketches import SketchMapSet
     li = _t(spark, sf, "lineitem")
     slice_ = (li.filter(F.col("l_partkey") % 41 == 0)
@@ -1793,8 +1785,8 @@ def q_sketchmap_set(spark, sf):
             "before running it on a larger fixture")
 
     def build_state():
-        states = sketch_by_key_multi(
-            slice_, [], ["l_suppkey", "l_partkey"],
+        return sketch_global(
+            slice_, ["l_suppkey", "l_partkey"],
             # a value here is held by MANY keys (a partkey ships from
             # ~dozens of suppliers), so a foreign value survives key
             # k's intersection if ANY of its holders collides with k
@@ -1802,8 +1794,7 @@ def q_sketchmap_set(spark, sf):
             # depth 7 puts the expected survivor count across all
             # (key, value) pairs below 1e-6 at sf0.1.
             lambda: SketchMapSet(eps=0.004, delta=0.001, max_exact=2048,
-                                 p=10))
-        return bytes(states.collect()[0][STATE_COL])
+                                 p=10)).to_bytes()
 
     scope = Scope("sketchmap_set_exact")
 
@@ -2269,17 +2260,15 @@ def q_decaying_cms(spark, sf):
     global max timestamp, never underestimates the SQL decay expression
     and overestimates by <= eps * total decayed mass
     (DecayingCMS.scala:26-651 semantics). Probed in-plan."""
-    from .agg import sketch_by_key_multi
     from .sketches.sketchmap import DecayingCMS
     half = 7 * 86400.0
     eps, delta = 0.005, 1e-4
     ev = _t(spark, sf, "events").withColumn(
         "sec", F.col("ts").cast("timestamp").cast("double"))
     t_max = float(ev.agg(F.max("sec")).collect()[0][0])
-    states = sketch_by_key_multi(
-        ev, [], ["user_id", "sec", "value"],
-        lambda: DecayingCMS(eps=eps, delta=delta, half_life=half))
-    sk_bytes = bytes(states.collect()[0][STATE_COL])
+    sk_bytes = sketch_global(
+        ev, ["user_id", "sec", "value"],
+        lambda: DecayingCMS(eps=eps, delta=delta, half_life=half)).to_bytes()
 
     @F.pandas_udf("double")
     def dcms_est(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
@@ -2311,7 +2300,6 @@ def q_decaying_cms_inner(spark, sf):
     <= eps * massA * massB; l2Norm^2 obeys the same one-sided bound
     against the exact squared norm. Exact vectors stay distributed;
     only the two small sketch states reach the driver."""
-    from .agg import sketch_by_key_multi
     from .sketches.sketchmap import DecayingCMS
     half = 7 * 86400.0
     eps, delta = 0.005, 1e-4
@@ -2320,12 +2308,10 @@ def q_decaying_cms_inner(spark, sf):
           .withColumn("one", F.lit(1.0)))
     t_max = float(ev.agg(F.max("sec")).collect()[0][0])
     halves = [ev.filter(F.col("event_id") % 2 == i) for i in (0, 1)]
-    sks = []
-    for h in halves:
-        states = sketch_by_key_multi(
-            h, [], ["user_id", "sec", "one"],
-            lambda: DecayingCMS(eps=eps, delta=delta, half_life=half))
-        sks.append(from_bytes(bytes(states.collect()[0][STATE_COL])))
+    sks = [sketch_global(
+        h, ["user_id", "sec", "one"],
+        lambda: DecayingCMS(eps=eps, delta=delta, half_life=half))
+        for h in halves]
     ip = sks[0].inner_product(sks[1], at_ts=t_max)
     l2a_sq = sks[0].l2_norm(at_ts=t_max) ** 2
 
@@ -2380,8 +2366,7 @@ def q_cms_string_keys(spark, sf):
     Probed in-plan like cms_point_queries."""
     docs = _t(spark, sf, "documents")
     eps, delta = 0.002, 1e-4
-    sk = sketch_global(docs, "text", lambda: CMS(eps=eps, delta=delta),
-                       fanout=16)
+    sk = sketch_global(docs, "text", lambda: CMS(eps=eps, delta=delta))
     sk_bytes, total = sk.to_bytes(), sk.total
 
     @F.pandas_udf("long")
@@ -2422,15 +2407,14 @@ def q_decayed_vector(spark, sf):
     per-user element-wise decayed sums of [value, value^2] agree with
     the SQL decay expressions to 1e-9 relative
     (DecayedVector.scala semantics). Compared in-plan per user."""
-    from .agg import sketch_by_key_multi
     from .sketches.timeseries import DecayedVector
     half = 7 * 86400.0
     ev = (_t(spark, sf, "events")
           .withColumn("sec", F.col("ts").cast("timestamp").cast("double"))
           .withColumn("vec", F.array(F.col("value"),
                                      F.col("value") * F.col("value"))))
-    states = sketch_by_key_multi(ev, ["user_id"], ["vec", "sec"],
-                                 lambda: DecayedVector(dim=2, half_life=half))
+    states = sketch_by_key(ev, ["user_id"], ["vec", "sec"],
+                           lambda: DecayedVector(dim=2, half_life=half))
     est = with_presented(
         states,
         lambda sk: {"e0": float(sk.vec[0]), "e1": float(sk.vec[1])},
@@ -2958,10 +2942,8 @@ def q_cms_inner_product(spark, sf):
     a = li.filter(F.col("l_returnflag") == "A")
     r = li.filter(F.col("l_returnflag") == "R")
     eps, delta = 0.0005, 1e-6
-    ska = sketch_global(a, "l_partkey", lambda: CMS(eps=eps, delta=delta),
-                        fanout=16)
-    skr = sketch_global(r, "l_partkey", lambda: CMS(eps=eps, delta=delta),
-                        fanout=16)
+    ska = sketch_global(a, "l_partkey", lambda: CMS(eps=eps, delta=delta))
+    skr = sketch_global(r, "l_partkey", lambda: CMS(eps=eps, delta=delta))
     approx = ska.inner_product(skr)
     ca = a.groupBy("l_partkey").agg(F.count("*").alias("ca"))
     cr = r.groupBy("l_partkey").agg(F.count("*").alias("cr"))

@@ -54,8 +54,8 @@ class DecayedValue(Sketch):
 
     def update_batch(self, values, timestamps=None) -> None:
         """Either aligned (values, timestamps) columns — the
-        ``sketch_by_key_multi`` calling convention — or a single (n, 2)
-        array of [value, ts] pairs."""
+        multi-column ``sketch_by_key`` calling convention — or a single
+        (n, 2) array of [value, ts] pairs."""
         if timestamps is None:
             arr = np.asarray(values, dtype=np.float64)
             if arr.size == 0:

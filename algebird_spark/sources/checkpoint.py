@@ -86,7 +86,7 @@ def _incremental_files(manifest: dict, fp: dict) -> list[str] | None:
 
 def build_or_resume(spark: SparkSession, df: DataFrame, keys: Sequence[str],
                     value_col: str, factory: SketchFactory,
-                    checkpoint_dir: str, fanout: int = 0,
+                    checkpoint_dir: str,
                     premerge: int | None = None,
                     job_id: str = "sketch_job",
                     snapshot_id: str | int | None = None) -> DataFrame:
@@ -132,8 +132,7 @@ def build_or_resume(spark: SparkSession, df: DataFrame, keys: Sequence[str],
                               for p in _state_paths(manifest)))
         if compatible and manifest.get("input_fingerprint") == fp:
             states = spark.read.parquet(*_state_paths(manifest))
-            return merge_sketches(states, keys, fanout=fanout,
-                                  premerge=premerge)
+            return merge_sketches(states, keys, premerge=premerge)
         if compatible:
             incr_files = _incremental_files(manifest, fp)
 
@@ -181,7 +180,7 @@ def build_or_resume(spark: SparkSession, df: DataFrame, keys: Sequence[str],
         "lineage": {
             "engine": "algebird_spark",
             "topology": "mapInArrow partition-combine -> parquet checkpoint"
-                        " -> sorted merge" + (f" (fanout={fanout})" if fanout else ""),
+                        " -> sorted merge",
         },
     }
     # Atomic commit: the manifest is the only pointer readers follow, so
@@ -190,7 +189,7 @@ def build_or_resume(spark: SparkSession, df: DataFrame, keys: Sequence[str],
     with open(tmp_path, "w") as f:
         json.dump(manifest, f, indent=2)
     os.replace(tmp_path, man_path)
-    return merge_sketches(states, keys, fanout=fanout, premerge=premerge)
+    return merge_sketches(states, keys, premerge=premerge)
 
 
 def rollup_or_resume(spark: SparkSession, df: DataFrame,
@@ -198,7 +197,7 @@ def rollup_or_resume(spark: SparkSession, df: DataFrame,
                      factory: SketchFactory, checkpoint_dir: str,
                      grouping: str = "rollup",
                      sets: Sequence[Sequence[str]] | None = None,
-                     fanout: int = 0, premerge: int | None = None,
+                     premerge: int | None = None,
                      job_id: str = "rollup_job",
                      snapshot_id: str | int | None = None) -> DataFrame:
     """Incrementally-maintained ROLLUP/CUBE: the finest-grain states
@@ -214,7 +213,6 @@ def rollup_or_resume(spark: SparkSession, df: DataFrame,
     n_values``."""
     from ..agg import rollup_levels
     fine = build_or_resume(spark, df, keys, value_col, factory,
-                           checkpoint_dir, fanout=fanout,
-                           premerge=premerge, job_id=job_id,
+                           checkpoint_dir, premerge=premerge, job_id=job_id,
                            snapshot_id=snapshot_id)
     return rollup_levels(fine, keys, factory, grouping=grouping, sets=sets)

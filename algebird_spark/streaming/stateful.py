@@ -124,8 +124,8 @@ def sliding_counts(sdf: DataFrame, ts_col: str, window: str, slide: str,
 def sketch_state_stream_by_key(sdf: DataFrame, keys: Sequence[str],
                                update_cols: Sequence[str],
                                factory: SketchFactory) -> DataFrame:
-    """Streaming analog of ``agg.sketch_by_key_multi``: one sketch per
-    key group, updated each micro-batch with
+    """Streaming analog of multi-column ``agg.sketch_by_key``: one
+    sketch per key group, updated each micro-batch with
     ``update_batch(col0, col1, ...)`` (positional — e.g. DecayingCMS
     takes (values, timestamps, weights)), emitting the SERIALIZED
     state alongside the running value count.

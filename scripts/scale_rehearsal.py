@@ -157,8 +157,8 @@ def main():
         # distinct pairs, so heavy tokens (the ones DF/IDF filtering
         # acts on) are measurable and the long tail degrades to the
         # documented one-sided bounds.
-        from algebird_spark.agg import STATE_COL, sketch_by_key_multi
-        from algebird_spark.sketches import SketchMapHLL, from_bytes
+        from algebird_spark.agg import sketch_global
+        from algebird_spark.sketches import SketchMapHLL
 
         tok = spark.read.parquet(tok_path)
         pairs = tok.select(F.explode("tokens").alias("tok"),
@@ -170,8 +170,7 @@ def main():
                                 heavy_hitters_count=0)
 
         t0 = time.time()
-        states = sketch_by_key_multi(pairs, [], ["tok", "doc"], factory)
-        sk = from_bytes(bytes(states.collect()[0][STATE_COL]))
+        sk = sketch_global(pairs, ["tok", "doc"], factory)
         wall = time.time() - t0
 
         # validate bounds on the 24 most frequent tokens (exact DF via

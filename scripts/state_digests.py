@@ -1,18 +1,20 @@
 """Print the sha256 of every sketch state row the aggregation harness
 builds, so two checkouts can be compared for bit-identical states.
 
-Cases: ``sketch_partitions`` (keyed), ``sketch_by_key`` (keyed, keyed
-with ``fanout=2``, keyless, keyed with ``premerge=2``),
-``sketch_global`` and a 2-key cube (``sketch_rollup``) for HLL (p=8,
-12, 14), CMS, CMS with TopPct and with TopN heavy hitters, a CMS over
-a 128-value column whose small states stay sparse-exact, KLL, t-digest,
-Bloom and MultiSketch, a MultiSketch over a float column holding
-``-0.0``, ``0.0`` and NaN next to other values, and a MultiSketch of a
-plain CMS and a TopN CMS; and ``sketch_by_key_multi`` for HLLSeries,
-SketchMap (sum, max, min), SketchMapHLL and a weighted CMS
-(``update_batch(values, counts)``). All at ``maxRecordsPerBatch`` 10000
-and 64. One line per case:
+Cases: ``sketch_partitions`` (keyed), ``sketch_by_key`` (keyed,
+keyless, keyed with ``premerge=2``), ``sketch_global`` and a 2-key cube
+(``sketch_rollup``) for HLL (p=8, 12, 14), CMS, CMS with TopPct and
+with TopN heavy hitters, a CMS over a 128-value column whose small
+states stay sparse-exact, KLL, t-digest, Bloom and MultiSketch, a
+MultiSketch over a float column holding ``-0.0``, ``0.0`` and NaN next
+to other values, and a MultiSketch of a plain CMS and a TopN CMS;
+keyed two-column ``sketch_by_key`` for HLLSeries, SketchMap (sum, max,
+min), SketchMapHLL and a weighted CMS (``update_batch(values,
+counts)``); and a two-column ``sketch_global`` for SketchMap. All at
+``maxRecordsPerBatch`` 10000 and 64. One line per case:
 ``<batch> <build> <sketch> <sha256 of the sorted row digests> <rows>``.
+A ``global`` case digests its one state as the row a keyless
+``sketch_by_key`` of the same columns returns, so the two agree.
 
 Usage:
   python scripts/state_digests.py [--checkout DIR] > digests.txt
@@ -114,6 +116,21 @@ def digest_rows(rows, keys) -> tuple[str, int]:
     return hashlib.sha256("\n".join(lines).encode()).hexdigest(), len(lines)
 
 
+def global_digest(df, cols, make) -> tuple[str, int]:
+    """``sketch_global``'s state, digested as a keyless
+    ``sketch_by_key`` row: its ``n_values`` is the count of non-null
+    elements of one array column, or of rows under several columns."""
+    from pyspark.sql import functions as F
+    from algebird_spark import agg
+    if len(cols) > 1:
+        n = df.count()
+    else:
+        n = (df.select(F.explode(cols[0]).alias("x"))
+             .where(F.col("x").isNotNull()).count())
+    blob = agg.sketch_global(df, cols, make).to_bytes()
+    return digest_rows([{agg.STATE_COL: blob, agg.COUNT_COL: n}], [])
+
+
 def cases(spark, df):
     from algebird_spark import agg
     for name, make in factories().items():
@@ -123,8 +140,6 @@ def cases(spark, df):
                 df, col, make, ["b"])),
             "by_key": (["b"], lambda: agg.sketch_by_key(
                 df, ["b"], col, make)),
-            "by_key_fanout2": (["source"], lambda: agg.sketch_by_key(
-                df, ["source"], col, make, fanout=2)),
             "by_key_keyless": ([], lambda: agg.sketch_by_key(
                 df, [], col, make)),
             "premerge": (["b"], lambda: agg.sketch_by_key(
@@ -135,11 +150,12 @@ def cases(spark, df):
         }
         for build, (keys, fn) in builds.items():
             yield build, name, digest_rows(fn().collect(), keys)
-        blob = agg.sketch_global(df, col, make).to_bytes()
-        yield "global", name, (hashlib.sha256(blob).hexdigest(), 1)
+        yield "global", name, global_digest(df, [col], make)
     for name, make in multi_factories().items():
-        rows = agg.sketch_by_key_multi(df, ["b"], ["v", "t"], make).collect()
+        rows = agg.sketch_by_key(df, ["b"], ["v", "t"], make).collect()
         yield "by_key_multi", name, digest_rows(rows, ["b"])
+    yield "global", "sketchmap", global_digest(
+        df, ["v", "t"], multi_factories()["sketchmap"])
 
 
 def measure(checkout: str) -> None:

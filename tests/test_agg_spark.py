@@ -60,8 +60,8 @@ def test_hll_partition_reorder_byte_equal(spark, tokens):
         assert from_bytes(sa[s]).estimate() == from_bytes(sb[s]).estimate()
 
 
-def test_global_sketch_and_fanout(spark, tokens):
-    h = sketch_global(tokens, "tokens", lambda: HLL(p=12), fanout=4)
+def test_global_sketch_vs_exact(spark, tokens):
+    h = sketch_global(tokens, "tokens", lambda: HLL(p=12))
     exact = tokens.select(F.explode("tokens").alias("t")) \
                   .agg(F.countDistinct("t")).collect()[0][0]
     assert abs(h.estimate() - exact) / exact <= 3.5 * 1.04 / np.sqrt(2**12)
@@ -70,7 +70,7 @@ def test_global_sketch_and_fanout(spark, tokens):
 def test_cms_by_key_totals_and_guarantee(spark, tokens):
     eps = 0.005
     states = sketch_by_key(tokens, ["source"], "tokens",
-                           lambda: CMS(eps=eps, delta=1e-4), fanout=2)
+                           lambda: CMS(eps=eps, delta=1e-4))
     rows = states.collect()
     exact_tot = {r["source"]: r["n"] for r in
                  tokens.select("source", F.explode("tokens").alias("t"))
@@ -121,6 +121,28 @@ def test_empty_input(spark):
     assert states.count() == 0
 
 
+def test_sketch_global_is_the_keyless_merge(spark):
+    """sketch_global is keyless sketch_by_key with its one state read
+    back: over one or several value columns it returns the same state
+    bytes, and on empty input (no state row) the factory's zero."""
+    from algebird_spark.sketches import SketchMap
+
+    def sketchmap():
+        return SketchMap(eps=0.01, delta=1e-3)
+
+    empty = spark.createDataFrame([], "k long, w double")
+    assert (sketch_global(empty, ["k", "w"], sketchmap).to_bytes()
+            == sketchmap().to_bytes())
+    df = spark.range(5_000).select(
+        (F.col("id") * 2654435761 % 997).alias("k"),
+        (F.col("id") % 13).cast("double").alias("w")).repartition(4)
+    for cols, factory in ((["k", "w"], sketchmap),
+                          ("k", lambda: HLL(p=12))):
+        [row] = sketch_by_key(df, [], cols, factory).collect()
+        assert (sketch_global(df, cols, factory).to_bytes()
+                == bytes(row[STATE_COL]))
+
+
 def test_null_handling_matches_sql_semantics(spark):
     df = spark.createDataFrame(
         [("a", 1), ("a", None), ("b", 2), ("b", 2), ("a", 3), ("b", None)],
@@ -163,13 +185,12 @@ def test_nan_and_null_keys_group_like_spark(spark):
 
 
 def test_multi_column_harness_sketchmap_and_hllseries(spark):
-    from algebird_spark.agg import sketch_by_key_multi
     from algebird_spark.sketches import SketchMap
     from algebird_spark.sketches.timeseries import HLLSeries
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
 
     # SketchMap(keys, weights): total quantity per suppkey, per returnflag
-    states = sketch_by_key_multi(
+    states = sketch_by_key(
         li, ["l_returnflag"], ["l_suppkey", "l_quantity"],
         lambda: SketchMap(eps=0.001, delta=1e-4, heavy_hitters_count=3))
     exact = {(r[0], r[1]): r[2] for r in
@@ -187,9 +208,7 @@ def test_multi_column_harness_sketchmap_and_hllseries(spark):
     # HLLSeries(values, timestamps): distinct users since mid-time
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet") \
         .withColumn("sec", F.col("ts").cast("timestamp").cast("double"))
-    states = sketch_by_key_multi(ev, [], ["user_id", "sec"],
-                                 lambda: HLLSeries(p=12))
-    sk = from_bytes(bytes(states.collect()[0][STATE_COL]))
+    sk = sketch_global(ev, ["user_id", "sec"], lambda: HLLSeries(p=12))
     lo, hi = ev.agg(F.min("sec"), F.max("sec")).collect()[0]
     mid = (lo + hi) / 2
     exact_recent = ev.filter(F.col("sec") >= mid) \
@@ -289,7 +308,7 @@ def test_all_empty_arrays_emit_zero_count_states(spark):
 @pytest.mark.parametrize("case", ["keyed", "global", "multi"])
 def test_keyed_coalescing_invariant_under_tiny_arrow_batches(spark, case):
     """Regression pin for the cross-batch buffering in the one combine
-    kernel behind sketch_partitions and sketch_by_key_multi (keyed
+    kernel behind sketch_partitions and sketch_by_key (keyed
     single-column, global, and multi-column keyed): with Arrow batches
     forced down to 64 rows the kernel sees hundreds of per-(batch,
     group) slices, exercising the per-key buffers, the direct
@@ -299,7 +318,6 @@ def test_keyed_coalescing_invariant_under_tiny_arrow_batches(spark, case):
     SpaceSaver (order-sensitive eviction) must see the identical
     per-key element sequence, so its exact-mode counts must match
     too."""
-    from algebird_spark.agg import sketch_by_key_multi
     from algebird_spark.sketches import HLL, SpaceSaver
     from algebird_spark.sketches.timeseries import HLLSeries
 
@@ -313,7 +331,7 @@ def test_keyed_coalescing_invariant_under_tiny_arrow_batches(spark, case):
         factories = {"canonical": lambda: HLLSeries(p=12)}
 
         def build(factory):
-            return sketch_by_key_multi(df, keys, ["v", "t"], factory)
+            return sketch_by_key(df, keys, ["v", "t"], factory)
     else:
         factories = {"canonical": lambda: HLL(p=12),
                      "spacesaver": lambda: SpaceSaver(capacity=64)}
@@ -346,7 +364,7 @@ def test_keyed_coalescing_invariant_under_tiny_arrow_batches(spark, case):
 def test_merge_folds_states_split_across_arrow_batches(spark, tokens):
     """At two rows per Arrow batch one key's state rows span several
     batches into the sorted merge fold, which must carry the open state
-    across batch boundaries: keyed, keyless, fanout, premerge and a
+    across batch boundaries: keyed, keyless, premerge and a
     2-key cube give the same HLL state bytes and n_values as at the
     default batch size, with one row per key (per grouping_id in the
     cube, where rolled-up keys are NULL)."""
@@ -360,8 +378,6 @@ def test_merge_folds_states_split_across_arrow_batches(spark, tokens):
     builds = {
         "keyed": lambda: sketch_by_key(df, ["source"], "tokens", factory),
         "keyless": lambda: sketch_by_key(df, [], "tokens", factory),
-        "fanout": lambda: sketch_by_key(df, ["source"], "tokens", factory,
-                                        fanout=3),
         "premerge": lambda: sketch_by_key(df, ["source"], "tokens", factory,
                                           premerge=4),
         "cube": lambda: sketch_rollup(df, ["source", "par"], "tokens",

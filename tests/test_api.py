@@ -416,8 +416,8 @@ def test_bloom_from_distinct_keys_bit_identical(spark):
     def factory():
         return BloomFilter(num_entries=max(n_keys, 64), fp_prob=0.01)
 
-    bf_full = sketch_global(od, "o_custkey", factory, fanout=16)
-    bf_dist = sketch_global(dk, "c_custkey", factory, fanout=16)
+    bf_full = sketch_global(od, "o_custkey", factory)
+    bf_dist = sketch_global(dk, "c_custkey", factory)
     assert np.array_equal(bf_full.bits, bf_dist.bits)
     assert bf_full.n_inserted == n_rows and bf_dist.n_inserted == n_keys
     probe = np.array([1, 2, 3, 10**9, 10**9 + 1], dtype=np.int64)

@@ -61,6 +61,43 @@ def test_partition_combine_before_shuffle(spark):
     assert "FlatMapGroupsInPandas" not in plan
 
 
+def test_sketch_global_is_one_keyless_merge(spark, monkeypatch):
+    """The states frame sketch_global collects is keyless
+    sketch_by_key's: one SinglePartition Exchange between the combine's
+    MapInArrow and the one MapInArrow fold, with no salted bucket
+    column, and the same operator tree."""
+    from algebird_spark.agg import STATE_COL, sketch_global
+
+    src = spark.range(6_000).selectExpr("id % 997 AS v") \
+        .repartition(8).cache()
+    src.count()
+    plans = []
+    collect = type(src).collect
+
+    def spy(self):
+        plans.append(plan_of(self))
+        return collect(self)
+
+    monkeypatch.setattr(type(src), "collect", spy)
+    sketch_global(src, "v", lambda: HLL(p=10))
+    monkeypatch.undo()
+    keyless = plan_of(sketch_by_key(src, [], "v", lambda: HLL(p=10))
+                      .select(STATE_COL))
+    [plan] = plans
+
+    def live_tree(p):
+        tree = p.split("\n\n")[0]
+        return tree[: tree.index("InMemoryTableScan")]
+
+    tree = live_tree(plan)
+    assert len(re.findall(r"Exchange \(\d+\)", tree)) == 1
+    assert len(re.findall(r"MapInArrow \(\d+\)", tree)) == 2
+    assert (tree.index("MapInArrow") < tree.index("Exchange")
+            < tree.rindex("MapInArrow"))
+    assert "SinglePartition" in plan and "__bucket" not in plan
+    assert tree == live_tree(keyless)
+
+
 def _one_file_table(spark, path):
     spark.range(2_000).selectExpr("id % 7 AS k", "id AS v") \
         .coalesce(1).write.parquet(str(path))
