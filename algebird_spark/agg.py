@@ -25,6 +25,10 @@ DataFrames + Arrow per SURVEY.md §3.2-3.3:
      states frame (cached, filtered, joined, read back from a
      checkpoint) is presented by one ``mapInArrow`` pass over its state
      rows.
+  4. **probe()**: algebird's point queries of one merged value
+     (``CMS.frequency``, ``BloomFilter.contains``) asked of every row of
+     a key column, in-plan: one Arrow UDF decodes the state once per
+     task and answers a batch per call.
 
 Requires a commutative merge, exactly like the reference
 (AlgebirdRDD.scala:17,37,47) — guaranteed by the sketch monoid laws
@@ -153,6 +157,12 @@ def _rows_batch(rows: list[tuple], schema: StructType) -> pa.RecordBatch:
                   type=to_arrow_type(f.dataType))
          for f, col in zip(schema.fields, cols)],
         names=[f.name for f in schema.fields])
+
+
+def _to_arrow(values, arrow_type: pa.DataType) -> pa.Array:
+    """``values`` as an Arrow array of ``arrow_type``, converted as from
+    pandas: NaN and None read as NULL, and the cast is unchecked."""
+    return pa.array(values, from_pandas=True).cast(arrow_type, safe=False)
 
 
 def _state_schema(df: DataFrame, keys: Sequence[str]) -> StructType:
@@ -688,8 +698,8 @@ class _Present:
         take = np.repeat(np.arange(len(rows)), [len(r) for r in rows])
         flat = [r for rs in rows for r in rs]
         cols = carried.take(pa.array(take, type=pa.int64())).columns + [
-            pa.array([r.get(f.name) for r in flat], from_pandas=True)
-            .cast(to_arrow_type(f.dataType), safe=False)
+            _to_arrow([r.get(f.name) for r in flat],
+                      to_arrow_type(f.dataType))
             for f in self.fields]
         return pa.RecordBatch.from_arrays(
             cols, names=[f.name for f in self.schema.fields])
@@ -759,3 +769,44 @@ def present_explode(states_df: DataFrame,
     for the presented columns. Runs in-plan exactly as
     ``with_presented`` does."""
     return _present(states_df, presenter, out_fields, explode=True)
+
+
+# ---------------------------------------------------------------------------
+# probe: point queries of one merged state, in-plan
+# ---------------------------------------------------------------------------
+
+def probe(sk: Sketch, fn: Callable[[Sketch, np.ndarray], Sequence],
+          return_type: str) -> Callable:
+    """A column function asking one merged state ``sk`` a point query
+    per row: ``probe(sk, CMS.frequencies, "long")(F.col("k"))`` is
+    algebird's ``cms.frequency(k)`` (CountMinSketch.scala:418-425) for
+    every row, evaluated where the column's rows are.
+
+    One Arrow UDF (plan node ``ArrowEvalPython``) decodes ``sk`` once
+    per task and calls ``fn(sketch, values)`` once per Arrow batch, on
+    the batch's non-null values of the scalar column converted as the
+    combine converts them (``_flatten_values``), so an integer key stays
+    an exact integer whatever NULLs share its batch. ``fn`` returns one
+    answer per value, converted as a presented value is (``_to_arrow``)
+    to the ``return_type`` DDL type; a NULL input row gets NULL. The
+    state rides in the UDF's closure, which PySpark itself ships as a
+    broadcast once it passes ``spark.broadcast.UDFCompressionThreshold``
+    (1 MB)."""
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import _parse_datatype_string
+    blob = sk.to_bytes()
+    out_type = to_arrow_type(_parse_datatype_string(return_type))
+
+    def run(cols: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        local = from_bytes(blob)
+        for col in cols:
+            values, valid = _flatten_values(col)
+            out = _to_arrow(fn(local, values) if len(values) else [],
+                            out_type)
+            if valid is not None:
+                # a NULL row takes a NULL index, and take() gives NULL
+                out = out.take(pa.array(np.cumsum(valid) - 1,
+                                        mask=valid == 0))
+            yield out
+
+    return F.arrow_udf(run, return_type)

@@ -36,15 +36,11 @@ oracle-checkable):
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..agg import sketch_global
-from ..sketches import BloomFilter, SpaceSaver, from_bytes
+from ..agg import probe, sketch_global
+from ..sketches import BloomFilter, SpaceSaver
 
 __all__ = ["bloom_prune", "bloom_join", "hot_keys", "skew_join",
            "asof_join"]
@@ -74,10 +70,11 @@ def bloom_prune(big: DataFrame, keys: DataFrame, big_key: str, keys_key: str,
     always collects (the pre-cap behavior).
 
     The returned DataFrame's filter is a vectorized Arrow-batch probe
-    (one murmur128 call per batch) evaluated wherever ``big``'s scan
-    runs — upstream of any later join Exchange, so pruned rows are
-    never shuffled. The filter bytes ship to executors via a Spark
-    broadcast (one copy per executor, not per task).
+    (``agg.probe``: one murmur128 call per batch) evaluated wherever
+    ``big``'s scan runs — upstream of any later join Exchange, so
+    pruned rows are never shuffled. The filter bytes ride in the
+    probe's closure, which PySpark ships as a broadcast (one copy per
+    executor) once it passes 1 MB.
     """
     if num_entries is None:
         kd = (keys.select(keys_key)
@@ -96,38 +93,7 @@ def bloom_prune(big: DataFrame, keys: DataFrame, big_key: str, keys_key: str,
         bf = sketch_global(keys.where(F.col(keys_key).isNotNull()), keys_key,
                            lambda: BloomFilter(num_entries=num_entries,
                                                fp_prob=fp_prob))
-    spark = big.sparkSession
-    bc = spark.sparkContext.broadcast(bf.to_bytes())
-    # dtype fidelity: a nullable int column reaches pandas as float64
-    # (NaN for NULL) while the filter was built from Arrow int64. The
-    # isNotNull prefilter below sits UNDER the Arrow eval (Spark's
-    # ExtractPythonUDFs keeps pure-JVM conjuncts below the Python
-    # projection), so probe batches stay int64. If a float batch ever
-    # reaches the probe anyway, casting is only safe below 2**53 —
-    # beyond that the float64 round-trip corrupts the key and would
-    # silently FALSE-NEGATIVE (e.g. snowflake ids), so fail loudly.
-    int_key = big.schema[big_key].dataType.simpleString() in (
-        "tinyint", "smallint", "int", "bigint")
-
-    @F.pandas_udf("boolean")
-    def may_match(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        import numpy as np
-        local = from_bytes(bc.value)
-        for s in it:
-            mask = s.isna().to_numpy()
-            out = np.zeros(len(s), dtype=bool)
-            if (~mask).any():
-                arr = s[~mask].to_numpy()
-                if int_key and arr.dtype.kind == "f":
-                    if np.abs(arr).max() >= 2.0 ** 53:
-                        raise ValueError(
-                            "bloom_prune: int64 key batch arrived as "
-                            "float64 with values >= 2**53; the round-"
-                            "trip is lossy and would drop matches")
-                    arr = arr.astype(np.int64)
-                out[~mask] = local.contains_batch(arr)
-            yield pd.Series(out)
-
+    may_match = probe(bf, BloomFilter.contains_batch, "boolean")
     return big.filter(F.col(big_key).isNotNull()).filter(
         may_match(F.col(big_key)))
 

@@ -12,13 +12,11 @@ sketch:
   rows survive ``order_col >= cutoff``. The prune is a broadcast
   join + filter evaluated in the big side's scan stage, so the window's
   Exchange ships ``~k + O(eps * n)`` rows per group instead of ``n``.
-  The default cutoff source is pure JVM (``percentile_approx`` —
+  The cutoff source is pure JVM (``percentile_approx`` —
   Greenwald–Khanna, DETERMINISTIC rank bound — over a dyadic grid of
   top quantiles, each group picking its grid index in SQL from its
-  exact count: measured 8.5x faster to build than the Python-kernel
-  path and driver-free at any group cardinality); ``method='kll'``
-  builds this repo's mergeable KLL states instead when the caller
-  wants to persist/reuse them. Either way the operator VERIFIES the
+  exact count: measured 8.5x faster to build than a KLL-state pass
+  and driver-free at any group cardinality). The operator VERIFIES the
   survivor count per group against min(k, n) — n is exact — and falls
   back to the unpruned window for any shortfall group (normally none),
   so the result is unconditionally EXACT: the sketch can only change
@@ -35,22 +33,18 @@ sketch:
   u ~ Uniform(0,1]. Drawing u from the md5 of the row id (the
   ``deterministic_sample`` convention, 48-bit resolution) makes the
   sample REPRODUCIBLE across engines and reruns — no RNG state — and
-  SQL-checkable. Composes with the KLL prune above: the sample IS a
+  SQL-checkable. Composes with the quantile prune above: the sample IS a
   top-k, so at scale the window never sees the full corpus.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
-
-import pandas as pd
+from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..agg import STATE_COL, sketch_by_key
 from ..cache import Scope
-from ..sketches import KLL, from_bytes
 from .exact import top_k_per_group
 
 __all__ = ["top_k_pruned", "weighted_sample"]
@@ -69,8 +63,7 @@ def _null_safe_on(left: DataFrame, right: DataFrame, keys: Sequence[str],
 
 def top_k_pruned(df: DataFrame, keys: Sequence[str], order_col: str, k: int,
                  ascending: bool = False, tiebreak: str | None = None,
-                 method: str = "grid", accuracy: int = 10000,
-                 kll_k: int = 200, prune_margin: float = 2.0,
+                 accuracy: int = 10000, prune_margin: float = 2.0,
                  verify: bool = True) -> DataFrame:
     """Exact per-group top-k with a quantile-sketch scan-stage prune
     (module doc).
@@ -82,24 +75,20 @@ def top_k_pruned(df: DataFrame, keys: Sequence[str], order_col: str, k: int,
     and with ``verify=True`` a count over the pruned set), like the
     other sketch-steered operators (``bloom_prune``, ``hot_keys``).
 
-    ``method='grid'`` (default) computes the cutoff entirely JVM-side:
-    one ``percentile_approx`` pass per group over a dyadic grid of top
-    quantiles ``1 - 2^-j`` (Greenwald–Khanna summaries — rank error
-    ``<= n/accuracy`` DETERMINISTIC, and whole-stage-codegen fast),
-    then picks each group's grid index IN SQL from its exact count, so
-    there is no driver round-trip at any group cardinality; the dyadic
-    spacing costs at most 2x the optimal survivor count.
-    ``method='kll'`` builds this repo's mergeable KLL states instead
-    (``sketch_by_key``) — same shape as every other sketch query, so
-    the states can be persisted/reused — at Python-kernel build cost.
+    The cutoff is computed entirely JVM-side: one ``percentile_approx``
+    pass per group over a dyadic grid of top quantiles ``1 - 2^-j``
+    (Greenwald–Khanna summaries — rank error ``<= n/accuracy``
+    DETERMINISTIC, and whole-stage-codegen fast), then each group's
+    grid index is picked IN SQL from its exact count, so there is no
+    driver round-trip at any group cardinality; the dyadic spacing
+    costs at most 2x the optimal survivor count.
 
     ``prune_margin`` scales the rank-error safety margin on the cutoff
     (cutoff rank = 1 - k/n - margin*eps for descending); the default 2
-    makes a shortfall vanishingly rare ('grid' cannot shortfall at all
-    for margin >= 1 — the GK bound is deterministic — but the verify
-    count is kept as an invariant check). ``verify=False`` skips the
-    safety count — only for callers that tolerate a (provably rare)
-    short group.
+    makes a shortfall vanishingly rare (none at all for margin >= 1 —
+    the GK bound is deterministic — but the verify count is kept as an
+    invariant check). ``verify=False`` skips the safety count — only
+    for callers that tolerate a (provably rare) short group.
 
     NULL ``order_col`` rows always survive the prune and rank wherever
     Spark's total order puts them, so groups with fewer than k non-null
@@ -109,70 +98,31 @@ def top_k_pruned(df: DataFrame, keys: Sequence[str], order_col: str, k: int,
     ascending one."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    if method not in ("grid", "kll"):
-        raise ValueError("method must be 'grid' or 'kll'")
     keys = list(keys)
     spark = df.sparkSession
 
     # unambiguous key names for the two joins below
     kcols = [f"__tk{i}" for i in range(len(keys))]
 
-    if method == "grid":
-        _J = 40
-        vcol = F.col(order_col).cast("double")
-        ps = [(2.0 ** -j) if ascending else (1.0 - 2.0 ** -j)
-              for j in range(1, _J + 1)]
-        agg = df.groupBy(*keys).agg(
-            F.count(vcol).alias("__nv"),
-            F.percentile_approx(
-                vcol, F.array(*[F.lit(p) for p in ps]),
-                F.lit(accuracy)).alias("__qs"))
-        slack = (F.lit(float(k))
-                 + F.lit(prune_margin / accuracy) * F.col("__nv"))
-        jidx = F.when(slack <= 0, F.lit(_J)).otherwise(
-            F.floor(F.log2(F.col("__nv") / slack)).cast("int"))
-        cutoff = F.when(jidx >= 1,
-                        F.element_at("__qs", F.least(jidx, F.lit(_J)))) \
-                  .otherwise(F.lit(None).cast("double"))
-        cuts = agg.select(
-            *[F.col(c).alias(a) for c, a in zip(keys, kcols)],
-            cutoff.alias("__cutoff"), "__nv")
-    else:
-        states = sketch_by_key(
-            df.select(*keys, F.col(order_col).cast("double").alias("__v")),
-            keys, "__v", lambda: KLL(k=kll_k))
-
-        cut_schema = ", ".join(
-            [f"{f.name} {f.dataType.simpleString()}"
-             for f in df.select(*keys).schema.fields]
-            + ["__cutoff double", "__nv long"])
-
-        def cutoffs(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                outs, ns = [], []
-                for raw in pdf[STATE_COL]:
-                    sk = from_bytes(bytes(raw))
-                    n = sk.n
-                    ns.append(n)
-                    # rank slack: k/n + margin*eps below the top
-                    # (desc). n <= that slack in rows -> keep all.
-                    slack = k + prune_margin * sk.eps * n
-                    if slack <= 0:
-                        outs.append(sk.quantile(0.0 if ascending else 1.0))
-                    elif n <= slack:
-                        outs.append(None)
-                    elif ascending:
-                        outs.append(sk.quantile(min(1.0, slack / n)))
-                    else:
-                        outs.append(sk.quantile(max(0.0, 1.0 - slack / n)))
-                out = pdf[keys].copy()
-                out["__cutoff"] = pd.array(outs, dtype="float64")
-                out["__nv"] = ns
-                yield out
-
-        cuts = (states.mapInPandas(cutoffs, cut_schema)
-                .select(*[F.col(c).alias(a) for c, a in zip(keys, kcols)],
-                        "__cutoff", "__nv"))
+    _J = 40
+    vcol = F.col(order_col).cast("double")
+    ps = [(2.0 ** -j) if ascending else (1.0 - 2.0 ** -j)
+          for j in range(1, _J + 1)]
+    agg = df.groupBy(*keys).agg(
+        F.count(vcol).alias("__nv"),
+        F.percentile_approx(
+            vcol, F.array(*[F.lit(p) for p in ps]),
+            F.lit(accuracy)).alias("__qs"))
+    slack = (F.lit(float(k))
+             + F.lit(prune_margin / accuracy) * F.col("__nv"))
+    jidx = F.when(slack <= 0, F.lit(_J)).otherwise(
+        F.floor(F.log2(F.col("__nv") / slack)).cast("int"))
+    cutoff = F.when(jidx >= 1,
+                    F.element_at("__qs", F.least(jidx, F.lit(_J)))) \
+              .otherwise(F.lit(None).cast("double"))
+    cuts = agg.select(
+        *[F.col(c).alias(a) for c, a in zip(keys, kcols)],
+        cutoff.alias("__cutoff"), "__nv")
     oc = F.col(order_col)
     if ascending:
         keep = oc <= F.col("__cutoff")

@@ -17,7 +17,7 @@ rows) are presented driver-side.
 from __future__ import annotations
 
 import math
-from typing import Iterator, Tuple
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -27,8 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (BooleanType, DoubleType, LongType, StringType,
                                StructField, StructType)
 
-from .agg import (STATE_COL, sketch_by_key, sketch_global, sketch_rollup,
-                  spread, with_presented)
+from .agg import (STATE_COL, probe, sketch_by_key, sketch_global,
+                  sketch_rollup, spread, with_presented)
 from .cache import Scope
 from .operators import dedup, exact, multimodal, similarity, text
 from .sketches import CMS, HLL, KLL, BloomFilter, MinHash, TDigest, from_bytes
@@ -371,9 +371,9 @@ def q_cms_point_queries(spark, sf):
     """CMS frequency of every distinct l_partkey: never underestimates,
     overestimate <= eps*N. The probe runs IN-PLAN: the final sketch
     state (one ~600 KB blob — the only thing the driver ever holds)
-    ships to executors inside a vectorized pandas UDF that scores the
-    exact groupBy counts; the bound verdicts fold with bool_and. No
-    full key set is ever collected — stays runnable at sf10+."""
+    ships to executors inside ``agg.probe``, which scores the exact
+    groupBy counts; the bound verdicts fold with bool_and. No full key
+    set is ever collected — stays runnable at sf10+."""
     li = _t(spark, sf, "lineitem")
     eps, delta = 0.0005, 1e-6
     # (r8 late: overlapping the exact groupBy with the build via the
@@ -382,14 +382,8 @@ def q_cms_point_queries(spark, sf):
     # concurrent JVM job just waits for slots; OPTIMIZATION_r08.md.
     # Kept sequential.)
     sk = sketch_global(li, "l_partkey", lambda: CMS(eps=eps, delta=delta))
-    sk_bytes, total = sk.to_bytes(), sk.total
-
-    @F.pandas_udf("long")
-    def cms_est(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        local = from_bytes(sk_bytes)  # decode once per task
-        for s in it:
-            yield pd.Series(local.frequencies(s.to_numpy()).astype("int64"))
-
+    cms_est = probe(sk, CMS.frequencies, "long")
+    total = sk.total
     probed = (li.groupBy("l_partkey").count()
               .withColumn("est", cms_est(F.col("l_partkey"))))
     return probed.agg(
@@ -424,7 +418,7 @@ def q_cms_heavy_hitters(spark, sf):
 def q_bloom_membership(spark, sf):
     """Bloom over o_custkey; probe every c_custkey IN-PLAN: zero false
     negatives, FPP on a guaranteed-absent id range <= 2x target. The
-    filter state ships to executors inside a vectorized pandas UDF;
+    filter state ships to executors inside ``agg.probe``;
     presence truth comes from a join against distinct order keys; all
     verdicts fold with aggregates — no key set is ever collected."""
     od = _t(spark, sf, "orders")
@@ -450,14 +444,7 @@ def q_bloom_membership(spark, sf):
     bf = sketch_global(dk, "c_custkey",
                        lambda: BloomFilter(num_entries=max(n_keys, 64),
                                            fp_prob=fpp))
-    bf_bytes = bf.to_bytes()
-
-    @F.pandas_udf("boolean")
-    def bf_hit(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        local = from_bytes(bf_bytes)
-        for s in it:
-            yield pd.Series(local.contains_batch(s.to_numpy()))
-
+    bf_hit = probe(bf, BloomFilter.contains_batch, "boolean")
     present = dk.withColumn("__present", F.lit(True))
     probed = (cu.select("c_custkey")
               .join(present, "c_custkey", "left")
@@ -1593,22 +1580,16 @@ def q_sketchmap_sums(spark, sf):
     distributed (multi-column harness); estimates never underestimate
     and overestimate <= eps * total-mass. Validation runs IN-PLAN like
     q_cms_point_queries: the final state (one small blob — the only
-    thing the driver holds) ships into a vectorized pandas UDF scoring
-    the exact distributed groupBy sums; bound verdicts fold with
-    bool_and. No per-key collect — stays runnable at sf10+."""
+    thing the driver holds) ships into ``agg.probe``, scoring the exact
+    distributed groupBy sums; bound verdicts fold with bool_and. No
+    per-key collect — stays runnable at sf10+."""
     from .sketches import SketchMap
     li = _t(spark, sf, "lineitem")
     sk = sketch_global(
         li, ["l_suppkey", "l_quantity"],
         lambda: SketchMap(eps=0.0005, delta=1e-4, heavy_hitters_count=5))
-    sk_bytes, eps_mass = sk.to_bytes(), sk.eps * sk.total
-
-    @F.pandas_udf("double")
-    def sm_est(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        local = from_bytes(sk_bytes)  # decode once per task
-        for s in it:
-            yield pd.Series(local.values(s.to_numpy(dtype="int64")))
-
+    sm_est = probe(sk, SketchMap.values, "double")
+    eps_mass = sk.eps * sk.total
     probed = (li.groupBy("l_suppkey").agg(F.sum("l_quantity").alias("q"))
               .withColumn("est", sm_est(F.col("l_suppkey"))))
     return probed.agg(
@@ -1637,21 +1618,13 @@ def q_sketchmap_minmax(spark, sf):
         li, ["l_suppkey", "l_extendedprice"],
         lambda: SketchMap(eps=0.0005, delta=1e-4, heavy_hitters_count=5,
                           combine=mode))
-    blobs = {mode: mk(mode).to_bytes() for mode in ("max", "min")}
-
-    def est_udf(blob):
-        @F.pandas_udf("double")
-        def est(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-            local = from_bytes(blob)  # decode once per task
-            for s in it:
-                yield pd.Series(local.values(s.to_numpy(dtype="int64")))
-        return est
-
+    est = {mode: probe(mk(mode), SketchMap.values, "double")
+           for mode in ("max", "min")}
     probed = (li.groupBy("l_suppkey")
               .agg(F.max("l_extendedprice").alias("mx"),
                    F.min("l_extendedprice").alias("mn"))
-              .withColumn("est_mx", est_udf(blobs["max"])(F.col("l_suppkey")))
-              .withColumn("est_mn", est_udf(blobs["min"])(F.col("l_suppkey"))))
+              .withColumn("est_mx", est["max"](F.col("l_suppkey")))
+              .withColumn("est_mn", est["min"](F.col("l_suppkey"))))
     gmax = F.max("mx").over(Window.partitionBy())
     gmin = F.min("mn").over(Window.partitionBy())
     flags = probed.select(
@@ -1724,18 +1697,11 @@ def q_sketchmap_hll_distinct(spark, sf):
         f_sk, f_g = pool.submit(build_state), pool.submit(exact_counts)
         sk, g = f_sk.result(), f_g.result()
     err, eps = sk.error, sk.eps
-    # the 1.4 MB state ships ONCE per executor as a broadcast, not
-    # once per task in the pickled closure; the probe side coalesces
-    # to one partition (<= a few thousand key rows) so a single python
-    # worker decodes the state once
-    bc_sk = spark.sparkContext.broadcast(sk.to_bytes())
-
-    @F.pandas_udf("double")
-    def smh_est(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        local = from_bytes(bc_sk.value)  # decode once per task
-        for s in it:
-            yield pd.Series(local.values(s.to_numpy(dtype="int64")))
-
+    # the 1.4 MB state rides in the probe's closure, which PySpark
+    # ships as a broadcast (it is over the 1 MB UDF threshold); the
+    # probe side coalesces to one partition (<= a few thousand key
+    # rows) so a single python worker decodes the state once
+    smh_est = probe(sk, SketchMapHLL.values, "double")
     grouped = g.coalesce(1).withColumn("est", smh_est(F.col("l_suppkey")))
     d_total = F.sum("d").over(Window.partitionBy())
     flags = grouped.select(
@@ -1794,7 +1760,7 @@ def q_sketchmap_set(spark, sf):
             # depth 7 puts the expected survivor count across all
             # (key, value) pairs below 1e-6 at sf0.1.
             lambda: SketchMapSet(eps=0.004, delta=0.001, max_exact=2048,
-                                 p=10)).to_bytes()
+                                 p=10))
 
     scope = Scope("sketchmap_set_exact")
 
@@ -1808,20 +1774,13 @@ def q_sketchmap_set(spark, sf):
 
     with ThreadPoolExecutor(2) as pool:
         f_sk, f_g = pool.submit(build_state), pool.submit(exact_sets)
-        sk_bytes, g = f_sk.result(), f_g.result()
+        sk, g = f_sk.result(), f_g.result()
 
-    @F.pandas_udf("boolean")
-    def set_exact(it: Iterator[Tuple[pd.Series, pd.Series]]
-                  ) -> Iterator[pd.Series]:
-        local = from_bytes(sk_bytes)
-        for keys, psets in it:
-            rec = local.value_sets(keys.to_numpy(dtype="int64"))
-            ok = [r is not None and r == sorted(p)
-                  for r, p in zip(rec, psets)]
-            yield pd.Series(ok)
-
-    flags = g.withColumn("ok", set_exact(F.col("l_suppkey"),
-                                         F.col("pset")))
+    # value_sets gives each key's sorted set, NULL once every row cell
+    # of the key has promoted: that key fails the check
+    rec = probe(sk, SketchMapSet.value_sets, "array<bigint>")
+    flags = g.withColumn("ok", F.coalesce(
+        rec(F.col("l_suppkey")) == F.col("pset"), F.lit(False)))
     return scope.attach(flags.agg(
         F.count("*").alias("n_keys"),
         F.sum("d").cast("long").alias("total_distinct_pairs"),
@@ -2266,15 +2225,11 @@ def q_decaying_cms(spark, sf):
     ev = _t(spark, sf, "events").withColumn(
         "sec", F.col("ts").cast("timestamp").cast("double"))
     t_max = float(ev.agg(F.max("sec")).collect()[0][0])
-    sk_bytes = sketch_global(
+    sk = sketch_global(
         ev, ["user_id", "sec", "value"],
-        lambda: DecayingCMS(eps=eps, delta=delta, half_life=half)).to_bytes()
-
-    @F.pandas_udf("double")
-    def dcms_est(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        local = from_bytes(sk_bytes)
-        for s in it:
-            yield pd.Series(local.decayed_frequencies(s.to_numpy(), t_max))
+        lambda: DecayingCMS(eps=eps, delta=delta, half_life=half))
+    dcms_est = probe(sk, lambda sk, v: sk.decayed_frequencies(v, t_max),
+                     "double")
 
     exact_df = (ev.groupBy("user_id")
                 .agg(F.sum(F.col("value")
@@ -2367,15 +2322,8 @@ def q_cms_string_keys(spark, sf):
     docs = _t(spark, sf, "documents")
     eps, delta = 0.002, 1e-4
     sk = sketch_global(docs, "text", lambda: CMS(eps=eps, delta=delta))
-    sk_bytes, total = sk.to_bytes(), sk.total
-
-    @F.pandas_udf("long")
-    def cms_est(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        local = from_bytes(sk_bytes)
-        for s in it:
-            yield pd.Series(
-                local.frequencies(s.to_numpy()).astype("int64"))
-
+    cms_est = probe(sk, CMS.frequencies, "long")
+    total = sk.total
     probed = (docs.groupBy("text").count()
               .withColumn("est", cms_est(F.col("text"))))
     return probed.agg(

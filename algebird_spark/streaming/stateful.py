@@ -24,12 +24,14 @@ from typing import Callable, Iterable, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (BinaryType, DoubleType, LongType, StringType,
+from pyspark.sql.types import (BinaryType, DoubleType, LongType,
                                StructField, StructType)
 
+from ..agg import _flatten_values
 from ..sketches import Sketch, from_bytes
 
 SketchFactory = Callable[[], Sketch]
@@ -46,14 +48,42 @@ def _estimate_of(sk: Sketch) -> float:
     return float("nan")
 
 
+def _stream_values(col: pd.Series, arrow_type: pa.DataType) -> np.ndarray:
+    """The values of one micro-batch's value column, as the batch
+    combine takes them (``agg._flatten_values``): the pandas column goes
+    back to Arrow in its declared type, so a NULL (NaN in pandas) is
+    dropped, not sketched, and an integer stays an integer. One NULL
+    makes pandas hand an integer column (or the elements of an integer
+    array column) over as float64, which holds an integer exactly only
+    below 2^53; a larger one is already lost, so it raises. A double
+    column's NaN reads as NULL, as pandas cannot tell the two apart."""
+    values, _ = _flatten_values(pa.array(col, type=arrow_type,
+                                         from_pandas=True))
+    if (values.dtype.kind in "iu" and values.size
+            and (values.max() >= 2 ** 53 or values.min() <= -2 ** 53)
+            and (col.dtype.kind == "f" or col.dtype == object and any(
+                getattr(c, "dtype", np.dtype(object)).kind == "f"
+                for c in col))):
+        raise ValueError(
+            f"integer column {col.name!r} reached the stream as float64 "
+            "with values beyond 2**53; the float round trip has already "
+            "changed them")
+    return values
+
+
 def sketch_stream_by_key(sdf: DataFrame, keys: Sequence[str], value_col: str,
                          factory: SketchFactory) -> DataFrame:
     """Streaming per-key sketch with persistent state.
 
     Output rows per micro-batch: keys..., estimate double, n_values long.
     State: one serialized sketch per key (bounded size by construction).
+    The value column (scalar or array) is read as the batch build reads
+    it (``_stream_values``): NULLs are not values, so a stream and
+    ``agg.sketch_by_key`` over the same rows build the same state.
     """
+    from pyspark.sql.pandas.types import to_arrow_type
     keys = list(keys)
+    value_type = to_arrow_type(sdf.schema[value_col].dataType)
     out_schema = StructType(
         [sdf.schema[k] for k in keys]
         + [StructField("estimate", DoubleType(), True),
@@ -69,15 +99,10 @@ def sketch_stream_by_key(sdf: DataFrame, keys: Sequence[str], value_col: str,
         else:
             sk, n = factory(), 0
         for pdf in pdfs:
-            col = pdf[value_col]
-            if len(col) == 0:
-                continue
-            if col.dtype == object and isinstance(col.iloc[0], (list, np.ndarray)):
-                vals = np.concatenate([np.asarray(v) for v in col])
-            else:
-                vals = col.to_numpy()
-            sk.update_batch(vals)
-            n += len(vals)
+            vals = _stream_values(pdf[value_col], value_type)
+            if len(vals):
+                sk.update_batch(vals)
+                n += len(vals)
         state.update((sk.to_bytes(), n))
         row = {k: v for k, v in zip(keys, key)}
         row["estimate"] = _estimate_of(sk)

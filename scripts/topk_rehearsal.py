@@ -1,4 +1,4 @@
-"""A/B rehearsal for the KLL-pruned exact top-k at window-dominated
+"""A/B rehearsal for the quantile-pruned exact top-k at window-dominated
 scale: 50M wide-ish rows, 8 groups, k=100 — the regime where the plain
 ``row_number`` window shuffles EVERY row (with its payload) to rank
 them and throws away all but 800.
@@ -66,8 +66,7 @@ def main():
         return checksum(top_k_per_group(df, ["g"], "v", K, tiebreak="rid"))
 
     def run_pruned():
-        return checksum(top_k_pruned(df, ["g"], "v", K, tiebreak="rid",
-                                     kll_k=KLL_K))
+        return checksum(top_k_pruned(df, ["g"], "v", K, tiebreak="rid"))
 
     rec = {"rows": N, "groups": GROUPS, "k": K, "kll_k": KLL_K,
            "cpus": spark.sparkContext.defaultParallelism,
@@ -107,7 +106,7 @@ def main():
         gcut[r["g"]] = r["qs"][j - 1]
     gsurv = count_survivors(gcut)
 
-    # kll cutoffs (method='kll'), for comparison
+    # cutoffs from mergeable KLL states, for comparison
     states = sketch_by_key(
         df.select("g", F.col("v").cast("double").alias("__v")),
         ["g"], "__v", lambda: KLL(k=KLL_K))

@@ -59,8 +59,7 @@ def test_bloom_prune_no_false_negatives_and_prunes(tables):
     assert n_pruned < big.count()  # actually prunes
     assert n_pruned >= matching    # superset of matches (no FNs)
     # and every individual matching row survives (null-batch regression:
-    # an int64 key column carrying NULLs arrives as float64 and must
-    # still hash as int)
+    # an int64 key column carrying NULLs must still hash as int)
     assert pruned.filter(F.col("k").isin(keys)).count() == matching
 
 

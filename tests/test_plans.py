@@ -162,6 +162,36 @@ def test_no_rdd_partition_probe_in_library():
     assert hits == []
 
 
+def test_merged_state_probes_go_through_agg_probe():
+    """No ``pandas_udf``- or ``arrow_udf``-decorated function outside
+    ``agg.py`` decodes a state (``from_bytes``): a point query of one
+    merged state is ``agg.probe``. ``features._rank_broadcast`` is the
+    one exception: it looks up a dict of per-group states, not one
+    merged state."""
+    root = pathlib.Path(__file__).resolve().parent.parent / "algebird_spark"
+
+    def name(node) -> str | None:
+        node = node.func if isinstance(node, ast.Call) else node
+        return getattr(node, "attr", getattr(node, "id", None))
+
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "agg.py":
+            continue
+        tree = ast.parse(path.read_text())
+        tops = [n for n in tree.body if isinstance(n, ast.FunctionDef)]
+        for top in tops:
+            for fn in ast.walk(top):
+                if (isinstance(fn, ast.FunctionDef) and any(
+                        name(d) in ("pandas_udf", "arrow_udf")
+                        for d in fn.decorator_list)
+                        and any(isinstance(c, ast.Call)
+                                and name(c) == "from_bytes"
+                                for c in ast.walk(fn))):
+                    hits.append((str(path.relative_to(root)), top.name))
+    assert set(hits) == {("operators/features.py", "_rank_broadcast")}
+
+
 def test_scan_pushdown_and_pruning(spark):
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     q = (li.filter(F.col("l_shipdate") > "1995-01-01")

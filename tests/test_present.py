@@ -2,20 +2,23 @@
 ``present_explode`` on a frame fresh from ``merge_sketches`` (or the
 rollups) run inside the merge's own fold; on any other states frame
 they run one ``mapInArrow`` pass. Both paths give the same rows and
-schema."""
+schema. ``probe`` asks one merged state a point query per row, in
+one Arrow UDF."""
 
 import io
 import math
-from contextlib import redirect_stdout
+from contextlib import contextmanager, redirect_stdout
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from algebird_spark.agg import (COUNT_COL, STATE_COL, merge_sketches,
-                                present_explode, sketch_by_key,
+                                present_explode, probe, sketch_by_key,
                                 sketch_partitions, sketch_rollup,
                                 with_presented)
-from algebird_spark.sketches import HLL, KLL, from_bytes
+from algebird_spark.sketches import (CMS, HLL, KLL, BloomFilter,
+                                     SketchMapSet, from_bytes)
 from algebird_spark.sources.datagen import token_table
 
 
@@ -195,3 +198,89 @@ def test_merge_of_a_cached_frame_fuses_only_while_uncached(spark, tokens):
     finally:
         mg.unpersist()
     assert not reads_cache()
+
+
+@contextmanager
+def _arrow_batch_rows(spark, n: int):
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_probe_keeps_int_keys_exact_beside_nulls(spark):
+    """One Arrow batch holds a NULL and keys beyond 2^53 (where a
+    float64 round trip changes them): CMS and Bloom probes equal the
+    driver-side answers on every non-null row and give NULL on the
+    NULL rows. A probe adds one ArrowEvalPython and no Exchange."""
+    keys = [1, None, 2 ** 53 + 1, 2 ** 60 + 3, 7, None, -(2 ** 62) - 9,
+            2 ** 53 + 2, 3, 2 ** 60 + 4]
+    seen = np.array([k for k in keys[::2] if k is not None] * 3,
+                    dtype=np.int64)
+    cms = CMS(eps=0.01, delta=0.01)
+    bf = BloomFilter(num_entries=64, fp_prob=0.01)
+    cms.update_batch(seen)
+    bf.update_batch(seen)
+    df = spark.createDataFrame(list(enumerate(keys)),
+                               "i int, k bigint").coalesce(1)
+    out = df.select("i", "k",
+                    probe(cms, CMS.frequencies, "long")("k").alias("f"),
+                    probe(bf, BloomFilter.contains_batch,
+                          "boolean")("k").alias("b"))
+    with _arrow_batch_rows(spark, 4):
+        rows = sorted(out.collect())
+    assert [r["k"] for r in rows] == keys
+    for r in rows:
+        if r["k"] is None:
+            assert (r["f"], r["b"]) == (None, None)
+            continue
+        k = np.array([r["k"]], dtype=np.int64)
+        assert r["f"] == int(cms.frequencies(k)[0])
+        assert r["b"] == bool(bf.contains_batch(k)[0])
+    assert [r["f"] for r in rows[:4:2]] == [3, 3]
+    tree = _tree(df.withColumn("f", probe(cms, CMS.frequencies,
+                                          "long")("k")))
+    assert _python_nodes(tree) == tree.count("ArrowEvalPython") == 1
+    assert "Exchange" not in tree
+
+
+def test_probe_string_keys_with_nulls(spark):
+    words = ["apple", None, "pear", "fig", None, "kiwi", "plum", "apple"]
+    cms = CMS(eps=0.01, delta=0.01)
+    cms.update_batch(np.array(["apple", "pear", "apple", "kiwi"],
+                              dtype=object))
+    df = spark.createDataFrame(list(enumerate(words)),
+                               "i int, w string").coalesce(1)
+    with _arrow_batch_rows(spark, 3):
+        rows = sorted(df.select(
+            "i", probe(cms, CMS.frequencies, "long")("w").alias("f"))
+            .collect())
+    want = [None if w is None
+            else int(cms.frequencies(np.array([w], dtype=object))[0])
+            for w in words]
+    assert [r["f"] for r in rows] == want
+    assert want[0] == 2
+
+
+def test_probe_array_result_round_trips(spark):
+    """``SketchMapSet.value_sets`` gives a sorted list per key, None
+    once a key's cells have all promoted: both come back as
+    ``array<bigint>`` and NULL, and a NULL key reads NULL."""
+    sm = SketchMapSet(eps=0.1, delta=0.1, max_exact=4, p=8)
+    sm.update_batch(np.array([1, 1, 2] + [9] * 50, dtype=np.int64),
+                    np.array([10, 11, 12] + list(range(50)),
+                             dtype=np.int64))
+    keys = [1, None, 2, 9, 5]
+    df = spark.createDataFrame(list(enumerate(keys)),
+                               "i int, k bigint").coalesce(1)
+    out = df.select("i", probe(sm, SketchMapSet.value_sets,
+                               "array<bigint>")("k").alias("s"))
+    assert out.schema["s"].dataType.simpleString() == "array<bigint>"
+    got = [r["s"] for r in sorted(out.collect())]
+    want = sm.value_sets(np.array([k for k in keys if k is not None]))
+    want.insert(1, None)
+    assert got == want
+    assert got[0] == [10, 11] and got[3] is None

@@ -42,6 +42,64 @@ def test_stateful_hll_stream_matches_batch(spark, events_stream):
         assert abs(est - exact[k]) / exact[k] <= 3.5 * 1.04 / np.sqrt(2**12)
 
 
+def test_stream_reads_nulls_as_the_batch_build_does(spark, tmp_path):
+    """NULL is no value in the stream either: an ``int`` column and an
+    ``array<int>`` column holding NULLs (a NULL scalar, a NULL array
+    cell, a NULL element) give the same HLL estimate and ``n_values``
+    per key as ``sketch_by_key`` + ``with_presented`` over the rows."""
+    from algebird_spark.agg import sketch_by_key, with_presented
+    rows = []
+    for i in range(600):
+        v = None if i % 7 == 0 else i * 7919 % 5_000
+        a = (None if i % 11 < 2 else
+             [i % 97, None, i * 31 % 1_000] if i % 5 == 0 else
+             [i * 13 % 2_000] * (i % 3))
+        rows.append(("ab"[i % 2], v, a))
+    d = tmp_path / "nulls_dir"
+    (spark.createDataFrame(rows, "g string, v int, a array<int>")
+     .coalesce(1).write.parquet(str(d)))
+    batch = spark.read.parquet(str(d))
+    sdf = spark.readStream.schema(batch.schema).parquet(str(d))
+    for col in ("v", "a"):
+        name = f"null_stream_{col}"
+        q = (sketch_stream_by_key(sdf, ["g"], col, lambda: HLL(p=12))
+             .writeStream.outputMode("update").format("memory")
+             .queryName(name).start())
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        got = {r["g"]: (r["estimate"], r["n_values"]) for r in spark.sql(
+            f"SELECT g, max_by(estimate, n_values) AS estimate, "
+            f"max(n_values) AS n_values FROM {name} GROUP BY g").collect()}
+        want = {r["g"]: (r["estimate"], r["n_values"])
+                for r in with_presented(
+                    sketch_by_key(batch, ["g"], col, lambda: HLL(p=12)),
+                    lambda sk: {"estimate": sk.estimate()},
+                    "estimate double").collect()}
+        assert got == want, col
+
+
+def test_stream_values_convert_as_arrow():
+    """A NULL makes pandas hand an int column over as float64; the
+    values go back to exact ints, and a value beyond 2**53, already
+    changed by that round trip, raises."""
+    import pandas as pd
+    import pyarrow as pa
+
+    from algebird_spark.streaming.stateful import _stream_values
+    got = _stream_values(pd.Series([1.0, np.nan, 2.0 ** 52]), pa.int64())
+    assert got.dtype == np.int64 and got.tolist() == [1, 2 ** 52]
+    cells = pd.Series([None, np.array([1.0, np.nan, 3.0]),
+                       np.array([4.0])], dtype=object)
+    assert _stream_values(cells, pa.list_(pa.int32())).tolist() == [1, 3, 4]
+    with pytest.raises(ValueError, match="2\\*\\*53"):
+        _stream_values(pd.Series([1.0, np.nan, 2.0 ** 60]), pa.int64())
+    # an int column without NULLs stays int64 in pandas: nothing lost
+    big = _stream_values(pd.Series([2 ** 60 + 1, 3]), pa.int64())
+    assert big.tolist() == [2 ** 60 + 1, 3]
+
+
 def test_sliding_counts_stream(spark, events_stream):
     batch, sdf = events_stream
     out = sliding_counts(sdf, "ts", "10 minutes", "5 minutes", ["event_type"],

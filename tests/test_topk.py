@@ -1,4 +1,4 @@
-"""KLL-pruned exact top-k + deterministic weighted sampling
+"""Quantile-pruned exact top-k + deterministic weighted sampling
 (operators/topk.py): row-for-row parity with the plain window under
 every routing outcome — including a FORCED sketch shortfall — and
 engine-portable A-ES keys recomputed independently in Python."""
@@ -34,13 +34,13 @@ def _key(df):
     return sorted((tuple(r) for r in df.collect()), key=repr)
 
 
-@pytest.mark.parametrize("method", ["grid", "kll"])
+@pytest.mark.parametrize("method", ["grid"])
 @pytest.mark.parametrize("ascending", [False, True])
 def test_pruned_matches_window(corpus, ascending, method):
     want = top_k_per_group(corpus, ["g"], "v", 7, ascending=ascending,
                            tiebreak="id")
     got = top_k_pruned(corpus, ["g"], "v", 7, ascending=ascending,
-                       tiebreak="id", method=method)
+                       tiebreak="id")
     assert _key(got) == _key(want)
 
 
@@ -58,14 +58,14 @@ def test_pruned_k_exceeds_group(corpus):
     assert _key(got) == _key(want)
 
 
-@pytest.mark.parametrize("method", ["grid", "kll"])
+@pytest.mark.parametrize("method", ["grid"])
 def test_forced_shortfall_falls_back_exactly(corpus, method):
     # a hugely negative margin drives the cutoff to the group max ->
     # almost nothing survives -> the verify count trips and the
     # fallback must reproduce the window answer bit for bit
     want = top_k_per_group(corpus, ["g"], "v", 9, tiebreak="id")
     got = top_k_pruned(corpus, ["g"], "v", 9, tiebreak="id",
-                       prune_margin=-1e9, method=method)
+                       prune_margin=-1e9)
     assert _key(got) == _key(want)
 
 
