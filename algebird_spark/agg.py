@@ -30,6 +30,12 @@ DataFrames + Arrow per SURVEY.md §3.2-3.3:
      a key column, in-plan: one Arrow UDF decodes the state once per
      task and answers a batch per call.
 
+Each of these Python passes starts with ``_drop_spark_finders``:
+PySpark begins every task with ``importlib.invalidate_caches()``, which
+on CPython 3.10-3.12 re-reads the central directory of every Spark
+archive whose import finder the worker still caches, a fixed ~0.1 s of
+CPU per task that no kernel work can win back.
+
 Requires a commutative merge, exactly like the reference
 (AlgebirdRDD.scala:17,37,47) — guaranteed by the sketch monoid laws
 (tests/test_laws via each sketch's test module).
@@ -38,6 +44,8 @@ Requires a commutative merge, exactly like the reference
 from __future__ import annotations
 
 import math
+import sys
+import zipimport
 from typing import Callable, Iterator, Sequence
 
 import numpy as np
@@ -60,6 +68,32 @@ COUNT_COL = "n_values"
 _COALESCE_ELEMS = 65_536
 
 SketchFactory = Callable[[], Sketch]
+
+
+def _drop_spark_finders() -> None:
+    """Drop from ``sys.path_importer_cache`` every ``zipimporter`` whose
+    archive Spark put on the Python worker's path: the zips the
+    worker's ``pyspark`` and ``py4j`` packages load from, and any
+    ``.jar`` (spark-core's, added by ``PythonUtils.sparkPythonPath``).
+
+    PySpark starts each task with ``importlib.invalidate_caches()``
+    (``worker_util.setup_spark_files``); on CPython 3.10-3.12 that makes
+    every cached ``zipimporter`` re-read its archive's central
+    directory, 0.11-0.13 s of CPU per task for pyspark.zip (1,328
+    entries), py4j's zip and spark-core's jar (5,359 entries). The
+    cache is only a cache: an import that needs a dropped finder gets a
+    new one from ``zipimport._zip_directory_cache`` without reading the
+    archive, and Spark's archives do not change while a worker lives,
+    so the next task's ``invalidate_caches()`` has nothing to re-read.
+    A user's ``--py-files`` archive keeps its finder."""
+    loaders = [getattr(sys.modules.get(m), "__loader__", None)
+               for m in ("pyspark", "py4j")]
+    spark = {ld.archive for ld in loaders
+             if isinstance(ld, zipimport.zipimporter)}
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter) and (
+                finder.archive in spark or finder.archive.endswith(".jar")):
+            del sys.path_importer_cache[path]
 
 
 # ---------------------------------------------------------------------------
@@ -99,6 +133,24 @@ def _flatten_values(col: pa.Array) -> tuple[np.ndarray, np.ndarray | None]:
         return (col.drop_null().to_numpy(zero_copy_only=False),
                 valid.astype(np.int64))
     return col.to_numpy(zero_copy_only=False), None
+
+
+def _update_columns(cols: Sequence[pa.Array]
+                    ) -> tuple[list[np.ndarray], np.ndarray | None]:
+    """Aligned scalar update columns as (per-column values, per-row
+    lengths|None), each converted in its own Arrow type. A row with a
+    NULL in any column is skipped, as SQL aggregates skip NULL inputs:
+    its lengths entry is 0, every other row's 1, as ``_flatten_values``
+    reports one scalar column with NULLs. A NULL would otherwise turn
+    an integer column into float64 and be sketched as NaN."""
+    if not any(c.null_count for c in cols):
+        return [c.to_numpy(zero_copy_only=False) for c in cols], None
+    import pyarrow.compute as pc
+    keep = pc.is_valid(cols[0])
+    for c in cols[1:]:
+        keep = pc.and_(keep, pc.is_valid(c))
+    return ([c.filter(keep).to_numpy(zero_copy_only=False) for c in cols],
+            keep.to_numpy(zero_copy_only=False).astype(np.int64))
 
 
 # Stands in for NaN inside a group-key tuple: NaN != NaN would split
@@ -220,10 +272,12 @@ def _combine(df: DataFrame, keys: Sequence[str], value_cols: Sequence[str],
 
     One value column goes through ``_flatten_values`` (scalar or
     array, nulls dropped); several must be aligned scalar columns and
-    reach ``update_batch(col0, col1, ...)`` by position. Each batch is
-    factorized and gathered once by a stable argsort of its group codes
-    (``np.repeat`` over array lengths), then sliced per group; zero keys
-    make the whole batch one group with no factorize or sort.
+    reach ``update_batch(col0, col1, ...)`` by position, without the
+    rows that hold a NULL in any of them (``_update_columns``). Each
+    batch is factorized and gathered once by a stable argsort of its
+    group codes (``np.repeat`` over array lengths), then sliced per
+    group; zero keys make the whole batch one group with no factorize
+    or sort.
 
     Spark hands mapInArrow ~maxRecordsPerBatch-row batches, so a
     G-group partition would otherwise call ``update_batch`` with
@@ -258,8 +312,7 @@ def _combine(df: DataFrame, keys: Sequence[str], value_cols: Sequence[str],
         if len(value_cols) == 1:
             values, lengths = _flatten_values(batch.column(value_cols[0]))
             return [values], lengths
-        return [batch.column(c).to_numpy(zero_copy_only=False)
-                for c in value_cols], None
+        return _update_columns([batch.column(c) for c in value_cols])
 
     def groups(batch: pa.RecordBatch, cols: list, lengths):
         """(key tuple, aligned value slices) per group in the batch."""
@@ -275,6 +328,7 @@ def _combine(df: DataFrame, keys: Sequence[str], value_cols: Sequence[str],
                 for g in range(len(uniques))]
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _drop_spark_finders()
         acc: dict[tuple, list] = {}   # key -> [sketch, n_values]
         pend: dict[tuple, list[list[np.ndarray]]] = {}
         pend_n: dict[tuple, int] = {}
@@ -392,6 +446,7 @@ def _fold_sorted(placed: DataFrame, keys: list[str],
     finish = finish or _States(_state_schema(placed, keys))
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _drop_spark_finders()
         done: list[tuple] = []
         size = 0
         key, acc, n = None, None, 0
@@ -500,7 +555,8 @@ def sketch_by_key(df: DataFrame, keys: Sequence[str],
     companion arrays — SketchMap(keys, weights), DecayingCMS(keys,
     timestamps, weights), HLLSeries(values, timestamps),
     ScopedTopN(items, scopes); they must be scalar columns, and each
-    batch calls ``update_batch(col0, col1, ...)`` positionally.
+    batch calls ``update_batch(col0, col1, ...)`` positionally over its
+    rows with no NULL in any of them.
     ``premerge``: shuffle-free coalesce-level combine before the keyed
     merge — set to ~cluster cores when the scan has far more
     partitions than executors (see premerge_local)."""
@@ -738,6 +794,7 @@ def _present(states_df: DataFrame, presenter: Callable, out_fields: str,
     names = [f.name for f in carry.fields]
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _drop_spark_finders()
         for batch in batches:
             if batch.num_rows:
                 yield present.table(batch.select(names), [
@@ -798,6 +855,7 @@ def probe(sk: Sketch, fn: Callable[[Sketch, np.ndarray], Sequence],
     out_type = to_arrow_type(_parse_datatype_string(return_type))
 
     def run(cols: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        _drop_spark_finders()
         local = from_bytes(blob)
         for col in cols:
             values, valid = _flatten_values(col)

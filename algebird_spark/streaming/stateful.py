@@ -31,7 +31,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (BinaryType, DoubleType, LongType,
                                StructField, StructType)
 
-from ..agg import _flatten_values
+from ..agg import _flatten_values, _update_columns
 from ..sketches import Sketch, from_bytes
 
 SketchFactory = Callable[[], Sketch]
@@ -48,17 +48,17 @@ def _estimate_of(sk: Sketch) -> float:
     return float("nan")
 
 
-def _stream_values(col: pd.Series, arrow_type: pa.DataType) -> np.ndarray:
-    """The values of one micro-batch's value column, as the batch
-    combine takes them (``agg._flatten_values``): the pandas column goes
-    back to Arrow in its declared type, so a NULL (NaN in pandas) is
-    dropped, not sketched, and an integer stays an integer. One NULL
-    makes pandas hand an integer column (or the elements of an integer
-    array column) over as float64, which holds an integer exactly only
-    below 2^53; a larger one is already lost, so it raises. A double
-    column's NaN reads as NULL, as pandas cannot tell the two apart."""
-    values, _ = _flatten_values(pa.array(col, type=arrow_type,
-                                         from_pandas=True))
+def _stream_array(col: pd.Series, arrow_type: pa.DataType) -> pa.Array:
+    """One micro-batch's pandas column back in Arrow, in its declared
+    type, so the stream reads it as the batch combine reads its Arrow
+    column: a NULL (NaN in pandas) is a NULL, not a value, and an
+    integer stays an integer. One NULL makes pandas hand an integer
+    column (or the elements of an integer array column) over as
+    float64, which holds an integer exactly only below 2^53; a larger
+    one is already lost, so it raises. A double column's NaN reads as
+    NULL, as pandas cannot tell the two apart."""
+    arr = pa.array(col, type=arrow_type, from_pandas=True)
+    values, _ = _flatten_values(arr)
     if (values.dtype.kind in "iu" and values.size
             and (values.max() >= 2 ** 53 or values.min() <= -2 ** 53)
             and (col.dtype.kind == "f" or col.dtype == object and any(
@@ -68,7 +68,7 @@ def _stream_values(col: pd.Series, arrow_type: pa.DataType) -> np.ndarray:
             f"integer column {col.name!r} reached the stream as float64 "
             "with values beyond 2**53; the float round trip has already "
             "changed them")
-    return values
+    return arr
 
 
 def sketch_stream_by_key(sdf: DataFrame, keys: Sequence[str], value_col: str,
@@ -78,7 +78,7 @@ def sketch_stream_by_key(sdf: DataFrame, keys: Sequence[str], value_col: str,
     Output rows per micro-batch: keys..., estimate double, n_values long.
     State: one serialized sketch per key (bounded size by construction).
     The value column (scalar or array) is read as the batch build reads
-    it (``_stream_values``): NULLs are not values, so a stream and
+    it (``_stream_array``): NULLs are not values, so a stream and
     ``agg.sketch_by_key`` over the same rows build the same state.
     """
     from pyspark.sql.pandas.types import to_arrow_type
@@ -99,7 +99,8 @@ def sketch_stream_by_key(sdf: DataFrame, keys: Sequence[str], value_col: str,
         else:
             sk, n = factory(), 0
         for pdf in pdfs:
-            vals = _stream_values(pdf[value_col], value_type)
+            vals, _ = _flatten_values(_stream_array(pdf[value_col],
+                                                    value_type))
             if len(vals):
                 sk.update_batch(vals)
                 n += len(vals)
@@ -161,9 +162,16 @@ def sketch_state_stream_by_key(sdf: DataFrame, keys: Sequence[str],
     into a nightly batch build — the same monoid that makes partition
     states combinable makes stream and batch states combinable.
 
+    The update columns are read as the batch build reads them
+    (``_stream_array``, then ``agg._update_columns``): a row with a
+    NULL in any of them is skipped and not counted, and an integer
+    column stays an integer.
+
     Output per micro-batch: keys..., state binary, n_values long."""
+    from pyspark.sql.pandas.types import to_arrow_type
     keys = list(keys)
     update_cols = list(update_cols)
+    types = [to_arrow_type(sdf.schema[c].dataType) for c in update_cols]
     out_schema = StructType(
         [sdf.schema[k] for k in keys]
         + [StructField("state", BinaryType(), False),
@@ -179,11 +187,11 @@ def sketch_state_stream_by_key(sdf: DataFrame, keys: Sequence[str],
         else:
             sk, n = factory(), 0
         for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            args = [pdf[c].to_numpy() for c in update_cols]
-            sk.update_batch(*args)
-            n += len(pdf)
+            args, _ = _update_columns([_stream_array(pdf[c], t)
+                                       for c, t in zip(update_cols, types)])
+            if len(args[0]):
+                sk.update_batch(*args)
+                n += len(args[0])
         state.update((sk.to_bytes(), n))
         row = {k: v for k, v in zip(keys, key)}
         row["state"] = sk.to_bytes()

@@ -184,6 +184,113 @@ def test_nan_and_null_keys_group_like_spark(spark):
     assert dict(got) == dict(exact) == {"NaN": 12, 0.0: 9, None: 6}
 
 
+def test_drop_spark_finders_keeps_user_zips_and_imports(tmp_path,
+                                                       monkeypatch):
+    """``agg._drop_spark_finders`` drops every cached finder of the zip
+    ``pyspark`` loads from and of a ``.jar``, and keeps a user zip's.
+    ``importlib.invalidate_caches()`` then re-reads only the user's
+    archive, and a later import from a dropped archive still resolves
+    without re-reading it."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    from algebird_spark import agg
+
+    def archive(path, pkg):
+        path.parent.mkdir(parents=True, exist_ok=True)
+        with zipfile.ZipFile(path, "w") as z:
+            z.writestr(f"{pkg}/__init__.py", "")
+            z.writestr(f"{pkg}/sub/__init__.py", "")
+            z.writestr(f"{pkg}/sub/later.py", "X = 1\n")
+        return str(path)
+
+    spark_zip = archive(tmp_path / "spark/python/lib/pyspark.zip",
+                        "fake_spark_pkg")
+    jar = archive(tmp_path / "spark/jars/spark-core.jar", "fake_jar_pkg")
+    user_zip = archive(tmp_path / "userFiles/deps.zip", "fake_user_pkg")
+    fakes = ["fake_spark_pkg", "fake_jar_pkg", "fake_user_pkg"]
+    monkeypatch.setattr(sys, "path", [spark_zip, jar, user_zip] + sys.path)
+    monkeypatch.setattr(sys, "path_importer_cache",
+                        dict(sys.path_importer_cache))
+    monkeypatch.setattr(zipimport, "_zip_directory_cache",
+                        dict(zipimport._zip_directory_cache))
+    try:
+        for pkg in fakes:
+            importlib.import_module(f"{pkg}.sub")
+        monkeypatch.setitem(sys.modules, "pyspark",
+                            sys.modules["fake_spark_pkg"])
+
+        def cached() -> set:
+            return {f.archive for f in sys.path_importer_cache.values()
+                    if isinstance(f, zipimport.zipimporter)}
+
+        assert {spark_zip, jar, user_zip} <= cached()
+        agg._drop_spark_finders()
+        assert spark_zip not in cached() and jar not in cached()
+        assert user_zip in cached()
+
+        reads = []
+        read = zipimport._read_directory
+
+        def counted(path):
+            reads.append(path)
+            return read(path)
+
+        monkeypatch.setattr(zipimport, "_read_directory", counted)
+        importlib.invalidate_caches()
+        for pkg in fakes:
+            assert importlib.import_module(f"{pkg}.sub.later").X == 1
+        assert spark_zip not in reads and jar not in reads
+        if sys.version_info < (3, 13):  # 3.13 no longer re-reads
+            assert user_zip in reads
+    finally:
+        for name in [m for m in sys.modules
+                     if m.split(".")[0] in fakes]:
+            del sys.modules[name]
+
+
+def test_multi_column_nulls_skip_the_row_and_keep_ints_exact(spark):
+    """Several update columns are read in their Arrow types, and a row
+    with a NULL in any of them is skipped, as SQL aggregates skip NULL
+    inputs. At 4 rows per Arrow batch most batches hold a NULL next to
+    int64 keys beyond 2^53, which a float64 conversion would change:
+    the states must be byte-equal to the build over the rows without
+    NULLs, ``n_values`` must count only the kept rows, and a group
+    whose every row holds a NULL keeps its monoid-zero state (no value,
+    as ``count(k)`` of such a group is 0)."""
+    from algebird_spark.sketches import SketchMap
+    keys = [1, 2 ** 53 + 1, 2 ** 60 + 3, -(2 ** 55) - 7, 5, 2 ** 62 + 11]
+    rows = []
+    for i in range(240):
+        k = None if i % 5 == 2 else keys[i // 3 % len(keys)]
+        w = None if i % 9 == 4 else i % 13 + 1
+        rows.append(("abc"[i % 3], k, w))
+    rows += [("z", None, 3), ("z", 4, None)]
+    df = spark.createDataFrame(rows, "g string, k bigint, w bigint")
+    factory = lambda: SketchMap(eps=0.01, delta=1e-3,  # noqa: E731
+                                heavy_hitters_count=8)
+
+    def states(frame):
+        return {r["g"]: (bytes(r[STATE_COL]), r["n_values"]) for r in
+                sketch_by_key(frame, ["g"], ["k", "w"], factory).collect()}
+
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    try:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "4")
+        got = states(df)
+        want = states(df.where("k IS NOT NULL AND w IS NOT NULL"))
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+    kept = {g: sum(1 for r in rows if r[0] == g and None not in r)
+            for g in "abc"}
+    assert {g: n for g, (_, n) in want.items()} == kept
+    assert got == {**want, "z": (factory().to_bytes(), 0)}
+    hitters = from_bytes(got["a"][0]).heavy_hitters()
+    assert {k for k, _ in hitters} == set(keys)
+
+
 def test_multi_column_harness_sketchmap_and_hllseries(spark):
     from algebird_spark.sketches import SketchMap
     from algebird_spark.sketches.timeseries import HLLSeries

@@ -192,6 +192,35 @@ def test_merged_state_probes_go_through_agg_probe():
     assert set(hits) == {("operators/features.py", "_rank_broadcast")}
 
 
+def test_agg_worker_functions_drop_spark_finders_first():
+    """Every Python worker function of ``agg.py`` (each function handed
+    to ``mapInArrow`` or ``arrow_udf``) first calls
+    ``_drop_spark_finders``, so no pass leaves Spark's archive finders
+    for the next task's ``importlib.invalidate_caches()`` to re-read."""
+    path = (pathlib.Path(__file__).resolve().parent.parent
+            / "algebird_spark" / "agg.py")
+    tree = ast.parse(path.read_text())
+    workers = {}
+    for outer in tree.body:
+        if not isinstance(outer, ast.FunctionDef):
+            continue
+        handed = {c.args[0].id for c in ast.walk(outer)
+                  if isinstance(c, ast.Call) and c.args
+                  and isinstance(c.args[0], ast.Name)
+                  and getattr(c.func, "attr", None) in ("mapInArrow",
+                                                        "arrow_udf")}
+        for fn in ast.walk(outer):
+            if isinstance(fn, ast.FunctionDef) and fn.name in handed:
+                first = fn.body[0].value if isinstance(
+                    fn.body[0], ast.Expr) else None
+                workers[outer.name] = (
+                    isinstance(first, ast.Call)
+                    and getattr(first.func, "id", None)
+                    == "_drop_spark_finders")
+    assert workers == {"_combine": True, "_fold_sorted": True,
+                       "_present": True, "probe": True}
+
+
 def test_scan_pushdown_and_pruning(spark):
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     q = (li.filter(F.col("l_shipdate") > "1995-01-01")

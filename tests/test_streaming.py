@@ -80,6 +80,43 @@ def test_stream_reads_nulls_as_the_batch_build_does(spark, tmp_path):
         assert got == want, col
 
 
+def test_state_stream_reads_nulls_as_the_batch_build_does(spark, tmp_path):
+    """The several-column stream reads its update columns as the batch
+    combine does: an ``int`` key and an ``int`` weight holding NULLs
+    give a SketchMap state byte-equal to ``sketch_by_key``'s over the
+    same rows, and ``n_values`` counts only the rows with no NULL."""
+    from algebird_spark.agg import STATE_COL, sketch_by_key
+    from algebird_spark.sketches import SketchMap
+    from algebird_spark.streaming.stateful import sketch_state_stream_by_key
+    rows = []
+    for i in range(600):
+        k = None if i % 7 == 0 else (i // 2) % 6 * 1_000_003
+        w = None if i % 11 == 3 else i % 17 + 1
+        rows.append(("ab"[i % 2], k, w))
+    d = tmp_path / "nulls_dir"
+    (spark.createDataFrame(rows, "g string, k int, w int")
+     .coalesce(1).write.parquet(str(d)))
+    batch = spark.read.parquet(str(d))
+    sdf = spark.readStream.schema(batch.schema).parquet(str(d))
+    factory = lambda: SketchMap(eps=0.01, delta=1e-3,  # noqa: E731
+                                heavy_hitters_count=8)
+    q = (sketch_state_stream_by_key(sdf, ["g"], ["k", "w"], factory)
+         .writeStream.outputMode("update").format("memory")
+         .queryName("null_state_stream").start())
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    got = {r["g"]: (bytes(r["state"]), r["n_values"]) for r in spark.sql(
+        "SELECT g, max_by(state, n_values) AS state, max(n_values) AS "
+        "n_values FROM null_state_stream GROUP BY g").collect()}
+    want = {r["g"]: (bytes(r[STATE_COL]), r["n_values"]) for r in
+            sketch_by_key(batch, ["g"], ["k", "w"], factory).collect()}
+    assert got == want
+    assert {g: n for g, (_, n) in got.items()} == {
+        g: sum(1 for r in rows if r[0] == g and None not in r) for g in "ab"}
+
+
 def test_stream_values_convert_as_arrow():
     """A NULL makes pandas hand an int column over as float64; the
     values go back to exact ints, and a value beyond 2**53, already
@@ -87,16 +124,21 @@ def test_stream_values_convert_as_arrow():
     import pandas as pd
     import pyarrow as pa
 
-    from algebird_spark.streaming.stateful import _stream_values
-    got = _stream_values(pd.Series([1.0, np.nan, 2.0 ** 52]), pa.int64())
+    from algebird_spark.agg import _flatten_values
+    from algebird_spark.streaming.stateful import _stream_array
+
+    def stream_values(col, arrow_type):
+        return _flatten_values(_stream_array(col, arrow_type))[0]
+
+    got = stream_values(pd.Series([1.0, np.nan, 2.0 ** 52]), pa.int64())
     assert got.dtype == np.int64 and got.tolist() == [1, 2 ** 52]
     cells = pd.Series([None, np.array([1.0, np.nan, 3.0]),
                        np.array([4.0])], dtype=object)
-    assert _stream_values(cells, pa.list_(pa.int32())).tolist() == [1, 3, 4]
+    assert stream_values(cells, pa.list_(pa.int32())).tolist() == [1, 3, 4]
     with pytest.raises(ValueError, match="2\\*\\*53"):
-        _stream_values(pd.Series([1.0, np.nan, 2.0 ** 60]), pa.int64())
+        stream_values(pd.Series([1.0, np.nan, 2.0 ** 60]), pa.int64())
     # an int column without NULLs stays int64 in pandas: nothing lost
-    big = _stream_values(pd.Series([2 ** 60 + 1, 3]), pa.int64())
+    big = stream_values(pd.Series([2 ** 60 + 1, 3]), pa.int64())
     assert big.tolist() == [2 ** 60 + 1, 3]
 
 
