@@ -6,9 +6,9 @@ Layers:
   * ``sketches`` — pure numpy mergeable sketch states (HLL, CMS+HH,
     Bloom, KLL, t-digest, MinHash) with versioned binary envelopes.
   * ``agg`` — the distributed harness: map-side partition combine via
-    ``mapInArrow`` (only (key, state) rows cross the merge shuffle;
-    raw rows move only under ``agg.spread``), one sorted streaming
-    merge, present() into estimate columns.
+    ``mapInArrow`` over the input partitions as given (a build never
+    moves raw rows; only (key, state) rows cross the merge shuffle),
+    one sorted streaming merge, present() into estimate columns.
   * ``operators`` — exact-parity layer (algebird ops that map 1:1 to
     Spark built-ins) + training-data pipeline ops (dedup, similarity,
     text analysis, multimodal plumbing).

@@ -7,7 +7,8 @@ DataFrames + Arrow per SURVEY.md §3.2-3.3:
      partition folds its Arrow batches into one sketch state per group
      key — the analog of Spark's partial HashAggregate, which Catalyst
      cannot do for Python UDAFs. Only ``(key, state)`` rows cross the
-     merge shuffle; raw rows move only under ``spread``'s one rule.
+     merge shuffle; a build never moves raw rows (a CPU-heavy per-row
+     kernel over an under-split input calls ``spread`` itself).
   2. **Merge**: one hash Exchange on the keys (keyless: onto one
      partition) co-locates each key's states, a per-partition sort
      makes them adjacent, and one ``mapInArrow`` fold streams the
@@ -246,26 +247,24 @@ def _plan_partitions(df: DataFrame) -> int | None:
     return len(plan.execute().partitions())
 
 
-def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    """The only repartition of raw rows made for parallelism, decided
-    with no Spark job: a plan with no shuffle and fewer than
-    ``min_partitions`` (default: cluster parallelism) partitions is
-    repartitioned to it; anything else, e.g. an input that already
-    went through a shuffle, is returned as is. A small scan arrives
-    as 1-3 partitions, which would serialize a CPU-bound kernel on
-    1-3 cores; on real at-scale inputs (thousands of partitions) this
-    is a no-op."""
-    if min_partitions is None:
-        min_partitions = df.sparkSession.sparkContext.defaultParallelism
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` onto cluster parallelism when its plan has no
+    shuffle and fewer partitions than that, decided with no Spark job;
+    anything else, e.g. an input that already went through a shuffle,
+    is returned as is. No build calls it: a build never moves raw rows.
+    A caller whose per-row kernel is CPU-heavy calls it on an
+    under-split input (a small scan arrives as 1-3 partitions, which
+    would serialize that kernel on 1-3 cores); on real at-scale inputs
+    (thousands of partitions) it is a no-op."""
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
     n = _plan_partitions(df)
-    if n is not None and n < min_partitions:
-        return df.repartition(min_partitions)
+    if n is not None and n < parallelism:
+        return df.repartition(parallelism)
     return df
 
 
 def _combine(df: DataFrame, keys: Sequence[str], value_cols: Sequence[str],
-             factory: SketchFactory,
-             min_partitions: int | None) -> DataFrame:
+             factory: SketchFactory) -> DataFrame:
     """The map-side combine behind every build: one sketch state per
     (input partition x group key), schema ``keys..., sketch_state,
     n_values``.
@@ -299,9 +298,9 @@ def _combine(df: DataFrame, keys: Sequence[str], value_cols: Sequence[str],
     its coalescing: KLL, for one, compacts on every call, so moving the
     flush boundaries would change its bytes.
 
-    The input first goes through ``spread(df, min_partitions)``."""
+    The combine runs over ``df``'s partitions as given, as algebird's
+    ``mapPartitions`` does: raw rows never move (see ``spread``)."""
     keys, value_cols = list(keys), list(value_cols)
-    df = spread(df, min_partitions)
     out_schema = _state_schema(df, keys)
     cap = 8 * _COALESCE_ELEMS
     grouped = (getattr(factory(), "update_grouped", None)
@@ -392,12 +391,11 @@ def _combine(df: DataFrame, keys: Sequence[str], value_cols: Sequence[str],
 
 
 def sketch_partitions(df: DataFrame, value_col: str, factory: SketchFactory,
-                      keys: Sequence[str] = (),
-                      min_partitions: int | None = None) -> DataFrame:
+                      keys: Sequence[str] = ()) -> DataFrame:
     """One sketch state per (input partition x group key) over one
     scalar or array column; output schema ``keys..., sketch_state
     binary, n_values long`` (see ``_combine``)."""
-    return _combine(df, keys, [value_col], factory, min_partitions)
+    return _combine(df, keys, [value_col], factory)
 
 
 # ---------------------------------------------------------------------------
@@ -544,7 +542,6 @@ def _tag(merged: DataFrame, placed: DataFrame, keys: list[str],
 
 def sketch_by_key(df: DataFrame, keys: Sequence[str],
                   value_cols: str | Sequence[str], factory: SketchFactory,
-                  min_partitions: int | None = None,
                   premerge: int | None = None) -> DataFrame:
     """``rdd.algebird.aggregateByKey`` analog: DataFrame of
     ``keys..., sketch_state, n_values`` with one row per key (no keys:
@@ -561,7 +558,7 @@ def sketch_by_key(df: DataFrame, keys: Sequence[str],
     merge — set to ~cluster cores when the scan has far more
     partitions than executors (see premerge_local)."""
     value_cols = [value_cols] if isinstance(value_cols, str) else value_cols
-    states = _combine(df, keys, value_cols, factory, min_partitions)
+    states = _combine(df, keys, value_cols, factory)
     return merge_sketches(states, keys, premerge=premerge)
 
 
@@ -623,15 +620,17 @@ def sketch_rollup(df: DataFrame, keys: Sequence[str], value_col: str,
     # the same partition states, just in one round. At warehouse
     # scale (many scan partitions) the explode would multiply the
     # state shuffle by the level count, so the two-stage plan stays
-    # the default there. A shuffled input counts as parallelism.
+    # the default there. The estimate counts the partition states the
+    # explode will see: the input's own plan partitions (the combine
+    # never repartitions), or parallelism for a shuffled input.
     if sets is not None:
         sets = [list(s) for s in sets]
         n_levels = len(sets)
     else:
         n_levels = (len(keys) + 1 if grouping == "rollup"
                     else 2 ** len(keys))
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    n_parts = max(_plan_partitions(df) or 0, parallelism)
+    n_parts = (_plan_partitions(df)
+               or df.sparkSession.sparkContext.defaultParallelism)
     if n_parts * n_levels <= _ROLLUP_FUSE_MAX_ROWS:
         states = sketch_partitions(df, value_col, factory, keys)
     else:

@@ -1668,19 +1668,11 @@ def q_sketchmap_hll_distinct(spark, sf):
         # per-partition serialize-time HH estimate flushes (a 5-row x
         # 1024-register gather per pending key per partition state)
         # would be pure waste — measured as the dominant build cost
-        # min_partitions=8: the update kernel clears ~3M pairs/s/core,
-        # so at sf-bench scale the build cost is SHIPPING the 1.4 MB
-        # partition states, not updating them — 8 states instead of 32
-        # quarters the merge traffic while the kernel stays unbound.
-        # sketch_global has no min_partitions, so this is its keyless
-        # sketch_by_key with the bound kept
         def factory():
             return SketchMapHLL(eps=0.01, delta=0.01, p=10,
                                 heavy_hitters_count=0)
 
-        rows = sketch_by_key(li, [], ["l_suppkey", "l_partkey"], factory,
-                             min_partitions=8).select(STATE_COL).collect()
-        return from_bytes(bytes(rows[0][0])) if rows else factory()
+        return sketch_global(li, ["l_suppkey", "l_partkey"], factory)
 
     def exact_counts():
         # invocation-scoped persist (newest 2 kept): a bare persist

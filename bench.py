@@ -208,8 +208,7 @@ def main():
     n_groups = 0
     for _ in range(3):  # best-of-3: noisy-neighbor VM
         t0 = time.time()
-        states = sketch_by_key(tok, ["source"], "tokens", factory,
-                               min_partitions=1)
+        states = sketch_by_key(tok, ["source"], "tokens", factory)
         n_groups = states.count()
         sketch_sec = min(sketch_sec, time.time() - t0)
     tokens_per_sec = int(n_tokens / sketch_sec)

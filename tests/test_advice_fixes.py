@@ -91,8 +91,7 @@ def test_null_key_forms_group(spark):
     df = spark.createDataFrame(
         [Row(k=None, v=1), Row(k=None, v=2), Row(k="a", v=3)],
         "k string, v long")
-    states = sketch_by_key(df, ["k"], "v", lambda: HLL(p=10),
-                           min_partitions=2)
+    states = sketch_by_key(df, ["k"], "v", lambda: HLL(p=10))
     rows = {r["k"]: r for r in states.collect()}
     assert set(rows) == {None, "a"}
     assert rows[None][COUNT_COL] == 2
@@ -104,8 +103,7 @@ def test_null_int_key_multi_column(spark):
         [Row(k1=1, k2=None, v=10), Row(k1=1, k2=None, v=11),
          Row(k1=1, k2=2, v=12), Row(k1=None, k2=None, v=13)],
         "k1 long, k2 long, v long")
-    states = sketch_by_key(df, ["k1", "k2"], "v", lambda: HLL(p=10),
-                           min_partitions=2)
+    states = sketch_by_key(df, ["k1", "k2"], "v", lambda: HLL(p=10))
     rows = {(r["k1"], r["k2"]): r[COUNT_COL] for r in states.collect()}
     assert rows == {(1, None): 2, (1, 2): 1, (None, None): 1}
 

@@ -387,20 +387,17 @@ def test_all_empty_arrays_emit_zero_count_states(spark):
     from algebird_spark.agg import sketch_partitions
     df = spark.createDataFrame([("a", []), ("a", []), ("b", [])],
                                "k string, v array<int>")
-    parts = df.rdd.getNumPartitions()
     nonempty = df.rdd.mapPartitions(lambda it: [sum(1 for _ in it)]) \
                  .filter(lambda n: n > 0).count()
     per_part_keys = df.rdd.mapPartitions(
         lambda it: [len({r["k"] for r in it})]).sum()
 
-    keyed = sketch_partitions(df, "v", lambda: HLL(p=10), ["k"],
-                              min_partitions=parts).collect()
+    keyed = sketch_partitions(df, "v", lambda: HLL(p=10), ["k"]).collect()
     assert len(keyed) == per_part_keys
     assert {r["k"] for r in keyed} == {"a", "b"}
     assert all(r["n_values"] == 0 for r in keyed)
 
-    glob = sketch_partitions(df, "v", lambda: HLL(p=10),
-                             min_partitions=parts).collect()
+    glob = sketch_partitions(df, "v", lambda: HLL(p=10)).collect()
     assert len(glob) == nonempty
     assert all(r["n_values"] == 0 for r in glob)
 

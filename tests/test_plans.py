@@ -3,8 +3,10 @@ engine is designed around, so a regression that silently degrades the
 plan (raw-row shuffle, lost pushdown, lost broadcast) fails CI:
 
 1. sketch harness: partition combine (MapInArrow) happens BEFORE any
-   Exchange — only (key, state) rows shuffle; raw rows repartition
-   only under ``agg.spread``'s one rule, decided with no Spark job.
+   Exchange — only (key, state) rows shuffle. A build never moves raw
+   rows, however few partitions its input has; ``agg.spread`` is the
+   explicit repartition a CPU-heavy per-row kernel asks for, decided
+   with no Spark job.
 2. parquet scans: filters push down and the read schema is pruned to
    the referenced columns.
 3. small-side joins broadcast (merge_lookup, cosine_topk query set).
@@ -20,7 +22,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from algebird_spark.agg import (sketch_by_key, sketch_partitions,
-                                sketch_rollup)
+                                sketch_rollup, spread)
 from algebird_spark.operators.mapalgebra import merge_lookup
 from algebird_spark.operators.similarity import cosine_topk
 from algebird_spark.sketches import HLL
@@ -34,8 +36,7 @@ def plan_of(df) -> str:
 
 
 def test_partition_combine_before_shuffle(spark):
-    # well-split input (at scale: thousands of partitions) so the
-    # under-split min_partitions fan-out branch doesn't fire
+    # a cached, well-split input (at scale: thousands of partitions)
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet") \
         .repartition(8).cache()
     li.count()
@@ -104,21 +105,32 @@ def _one_file_table(spark, path):
     return spark.read.parquet(str(path))
 
 
-@pytest.mark.parametrize("min_partitions,spread", [(1, False), (2, True)])
-def test_spread_round_robins_only_an_under_split_scan(
-        spark, tmp_path, min_partitions, spread):
-    """The one-file scan is one partition: below ``min_partitions`` it
-    gets exactly one RoundRobinPartitioning Exchange, under the
-    combine's MapInArrow; at ``min_partitions`` it gets no Exchange."""
+@pytest.mark.parametrize("build", ["sketch_partitions", "sketch_by_key"])
+def test_build_combines_an_under_split_scan_in_place(spark, tmp_path, build):
+    """The one-file scan is one partition, fewer than the session's
+    cores: a build still gets no RoundRobinPartitioning, and its
+    combine's MapInArrow reads the scan with no Exchange between."""
     scan = _one_file_table(spark, tmp_path / "t")
-    states = sketch_partitions(scan, "v", lambda: HLL(p=10),
-                               min_partitions=min_partitions)
+    if build == "sketch_partitions":
+        states = sketch_partitions(scan, "v", lambda: HLL(p=10), ["k"])
+    else:
+        states = sketch_by_key(scan, ["k"], "v", lambda: HLL(p=10))
     plan = plan_of(states)
     tree = plan.split("\n\n")[0]
-    exchanges = re.findall(r"Exchange \(\d+\)", tree)
-    assert len(exchanges) == plan.count("RoundRobinPartitioning") == spread
-    if spread:
-        assert tree.index("MapInArrow") < tree.index("Exchange")
+    combine = tree.rindex("MapInArrow")
+    assert "RoundRobinPartitioning" not in plan
+    assert "Scan parquet" in tree[combine:]
+    assert "Exchange" not in tree[combine:]
+
+
+def test_spread_round_robins_an_under_split_scan(spark, tmp_path):
+    """``spread`` over the one-file scan adds exactly one
+    RoundRobinPartitioning Exchange, onto the session's cores."""
+    scan = _one_file_table(spark, tmp_path / "t")
+    plan = plan_of(spread(scan))
+    assert plan.count("RoundRobinPartitioning") == 1
+    assert f"RoundRobinPartitioning({spark.sparkContext.defaultParallelism})" \
+        in plan
 
 
 def test_spread_keeps_shuffled_input_and_runs_no_job(spark, tmp_path):
