@@ -17,10 +17,12 @@ from __future__ import annotations
 from typing import Iterator, Tuple
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..agg import (_drop_spark_finders, _factorize_rows, _flatten_values,
+                   _group_key, _to_arrow)
 from ..cache import Scope
 
 # reference default: HashingTrickMonoid(bits, seed = 123456)
@@ -42,17 +44,26 @@ def with_feature_hash(df: DataFrame, key_col: str, bits: int = 12,
                       seed: int = DEFAULT_SEED,
                       index_col: str = "f_index",
                       sign_col: str = "f_sign") -> DataFrame:
-    """Adds (index, sign) columns for ``key_col`` (string/bytes/int)."""
+    """Adds (index, sign) columns for ``key_col`` (string/bytes/int).
+    Each key hashes in its column's own Arrow type (``_flatten_values``,
+    the combine's conversion), so an integer key hashes alike whatever
+    NULLs share its batch; a NULL key gets a NULL index and sign, which
+    ``feature_hash_vector``'s sum then skips."""
 
-    @F.pandas_udf("struct<i: long, s: int>")
-    def fh(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for s in it:
-            if len(s) == 0:
-                yield pd.DataFrame({"i": pd.Series([], dtype="int64"),
-                                    "s": pd.Series([], dtype="int32")})
-                continue
-            idx, sign = feature_hash_kernel(s.to_numpy(), bits, seed)
-            yield pd.DataFrame({"i": idx, "s": sign.astype(np.int32)})
+    @F.arrow_udf("struct<i: long, s: int>")
+    def fh(cols: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        _drop_spark_finders()
+        for col in cols:
+            keys, valid = _flatten_values(col)
+            idx, sign = feature_hash_kernel(keys, bits, seed)
+            out = pa.StructArray.from_arrays(
+                [pa.array(idx), pa.array(sign.astype(np.int32))],
+                names=["i", "s"])
+            if valid is not None:
+                # a NULL row takes a NULL index, and take() gives NULL
+                out = out.take(pa.array(np.cumsum(valid) - 1,
+                                        mask=valid == 0))
+            yield out
 
     out = df.withColumn("__fh", fh(F.col(key_col)))
     return (out.withColumn(index_col, F.col("__fh.i"))
@@ -112,36 +123,42 @@ def tdigest_rank_batch(sk, vals: np.ndarray) -> np.ndarray:
 
 def _rank_broadcast(df: DataFrame, col: str, by: list[str], states: dict,
                     out_col: str) -> DataFrame:
-    """Map-only ranking: the state dict broadcasts once per executor
-    and every row ranks in place — zero data shuffle. Right when the
-    group count is modest (states fit the driver/broadcast)."""
+    """Map-only ranking: the state dict (key tuple -> state bytes)
+    broadcasts once per executor and every row ranks in place — zero
+    data shuffle. Right when the group count is modest (states fit the
+    driver/broadcast). A batch's rows group by ``agg._factorize_rows``,
+    the combine's grouping, and look their state up by
+    ``agg._group_key``, so a NULL or NaN key finds its own group's
+    state. A NULL or NaN value ranks NULL."""
     from ..sketches import from_bytes
 
     bc = df.sparkSession.sparkContext.broadcast(states)
+    names = [f"k{i}" for i in range(len(by))]
 
-    @F.pandas_udf("double")
-    def rank_udf(it: Iterator[Tuple[pd.Series, ...]]) -> Iterator[pd.Series]:
+    @F.arrow_udf("double")
+    def rank_udf(it: Iterator[Tuple[pa.Array, ...]]) -> Iterator[pa.Array]:
+        _drop_spark_finders()
+        blobs = {_group_key(k): b for k, b in bc.value.items()}
         local: dict = {}
         for cols in it:
             *keys, vals = (cols if isinstance(cols, tuple) else (cols,))
-            v = vals.to_numpy(dtype=np.float64, na_value=np.nan)
+            v = vals.to_numpy(zero_copy_only=False).astype(np.float64)
+            codes, uniques = (
+                _factorize_rows(pa.RecordBatch.from_arrays(keys, names),
+                                names)
+                if keys else (np.zeros(len(v), dtype=np.int64), [()]))
+            order = np.argsort(codes, kind="stable")
+            bounds = np.searchsorted(codes[order],
+                                     np.arange(len(uniques) + 1))
             out = np.full(len(v), np.nan)
-            if keys:
-                kf = pd.DataFrame({i: s for i, s in enumerate(keys)})
-                for key, idx in kf.groupby(list(kf.columns),
-                                           dropna=False).indices.items():
-                    key = key if isinstance(key, tuple) else (key,)
-                    if key not in local:
-                        blob = bc.value.get(key)
-                        local[key] = from_bytes(blob) if blob else None
-                    sk = local[key]
-                    if sk is not None:
-                        out[idx] = tdigest_rank_batch(sk, v[idx])
-            else:
-                if () not in local:
-                    local[()] = from_bytes(bc.value[()])
-                out = tdigest_rank_batch(local[()], v)
-            yield pd.Series(out)
+            for g, key in enumerate(uniques):
+                if key not in local:
+                    blob = blobs.get(key)
+                    local[key] = from_bytes(blob) if blob else None
+                if local[key] is not None:
+                    idx = order[bounds[g]:bounds[g + 1]]
+                    out[idx] = tdigest_rank_batch(local[key], v[idx])
+            yield _to_arrow(out, pa.float64())
 
     return df.withColumn(out_col, rank_udf(*[F.col(c) for c in by],
                                            F.col(col)))
@@ -150,11 +167,13 @@ def _rank_broadcast(df: DataFrame, col: str, by: list[str], states: dict,
 def _rank_cogroup(df: DataFrame, col: str, by: list[str],
                   states_df: DataFrame, out_col: str) -> DataFrame:
     """Shuffle-and-cogroup ranking: rows and their group's state meet
-    in one ``applyInPandas`` co-group — NO driver collect of the
+    in one co-grouped ``applyInArrow`` — NO driver collect of the
     states, so group cardinality is unbounded (r5 VERDICT wrong #2:
     at ~10^5+ groups x KB states the collect+broadcast dict is a
     driver bottleneck). Costs one shuffle of the rows on ``by``;
-    the state side shuffles only one tiny row per group."""
+    the state side shuffles only one tiny row per group. The rows
+    pass through in their Arrow types; a NULL or NaN value ranks
+    NULL, as on the broadcast path."""
     from ..agg import STATE_COL
     from ..sketches import from_bytes
 
@@ -162,20 +181,19 @@ def _rank_cogroup(df: DataFrame, col: str, by: list[str],
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     ) + f", {out_col} double"
 
-    def cg(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-        out = left
-        if len(right):
-            sk = from_bytes(bytes(right[STATE_COL].iloc[0]))
-            vals = left[col].to_numpy(dtype=np.float64, na_value=np.nan)
-            out[out_col] = tdigest_rank_batch(sk, vals)
-        else:
-            out[out_col] = np.nan
-        return out
+    def cg(left: pa.Table, right: pa.Table) -> pa.Table:
+        _drop_spark_finders()
+        if not (left.num_rows and right.num_rows):
+            return left.append_column(out_col,
+                                      pa.nulls(left.num_rows, pa.float64()))
+        sk = from_bytes(right.column(STATE_COL)[0].as_py())
+        vals = left.column(col).to_numpy().astype(np.float64)
+        return left.append_column(
+            out_col, _to_arrow(tdigest_rank_batch(sk, vals), pa.float64()))
 
     return (df.groupBy(*by)
             .cogroup(states_df.groupBy(*by))
-            .applyInPandas(cg, out_schema))
+            .applyInArrow(cg, out_schema))
 
 
 def cdf_normalize(df: DataFrame, col: str, by=(), k: int = 200,

@@ -57,6 +57,31 @@ def test_grouped_vectors_disjoint(spark):
     assert abs(by_g["a"].get(int(xi), 0.0)) == 1.0
 
 
+def test_feature_hash_keeps_integer_keys_exact_beside_a_null(spark):
+    """A bigint key hashes as its integer whatever shares its Arrow
+    batch: with and without a NULL in one batch every key gets the
+    same (index, sign), the kernel's over the int64 values. The NULL
+    key gets a NULL index and sign, and the vector skips it."""
+    from algebird_spark.operators.features import with_feature_hash
+    keys = [1, 2, 3, 2 ** 53 + 1, -7]
+    plain = spark.createDataFrame([(k,) for k in keys], "k bigint") \
+        .coalesce(1)
+    nulled = spark.createDataFrame([(k,) for k in keys] + [(None,)],
+                                   "k bigint").coalesce(1)
+
+    def hashed(df):
+        return {r["k"]: (r["f_index"], r["f_sign"])
+                for r in with_feature_hash(df, "k").collect()}
+
+    a, b = hashed(plain), hashed(nulled)
+    assert b.pop(None) == (None, None)
+    assert a == b
+    idx, sign = feature_hash_kernel(np.array(keys, dtype=np.int64), 12)
+    assert a == {k: (int(i), int(s)) for k, i, s in zip(keys, idx, sign)}
+    assert sorted(feature_hash_vector(nulled, [], "k").collect()) == \
+        sorted(feature_hash_vector(plain, [], "k").collect())
+
+
 def test_detect_language_on_real_sentences(spark):
     """The stopword-vote heuristic must identify clear-cut real
     sentences and fall back to 'und' when nothing matches."""
@@ -174,7 +199,7 @@ def test_cdf_normalize_cogroup_equals_broadcast(spark):
                                                    _rank_cogroup)
     from algebird_spark.sketches import TDigest
     rng = np.random.default_rng(7)
-    rows = [Row(i=i, g=int(i % 97), x=float(v))
+    rows = [Row(i=i, g=None if i % 101 == 0 else int(i % 97), x=float(v))
             for i, v in enumerate(rng.normal(0, 1, 6000))]
     df = spark.createDataFrame(rows)
     states_df = sketch_by_key(df, ["g"], "x", lambda: TDigest(100))
@@ -187,6 +212,7 @@ def test_cdf_normalize_cogroup_equals_broadcast(spark):
          _rank_cogroup(df, "x", ["g"], states_df, "cdf").collect()}
     states_df.unpersist()
     assert a == b  # exact float equality: identical states + kernel
+    assert all(a[(i,)] is not None for i in range(0, 6000, 101))
 
 
 def test_cdf_normalize_forced_cogroup_rank_error(spark):
