@@ -4,8 +4,8 @@ n-gram Jaccard verification. Scale design:
 
 * exact: hash-groupBy on a 128-bit fingerprint — one shuffle on an
   evenly distributed key; at 100 TB use the fingerprint, never the text.
-* MinHash LSH: signature per doc (vectorized pandas UDF over Arrow
-  batches), explode band buckets, self-join on (band, bucket) — the
+* MinHash LSH: signature per doc (vectorized Arrow UDF, one kernel
+  call per Arrow batch), explode band buckets, self-join on (band, bucket) — the
   join key space is uniform, so no skew; candidate pairs then verified
   with exact shingle Jaccard only on the (tiny) candidate set.
 * SimHash: 64-bit fingerprint via one explode+groupBy (text.py), then
@@ -18,11 +18,11 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..agg import spread
+from ..agg import _drop_spark_finders, _list_array, spread
 from ..cache import Scope
 from ..functions.hashing import affine_mod_p61
 from .text import fingerprint, simhash64_df
@@ -77,7 +77,7 @@ def has_tokens(text_col) -> "F.Column":
 
 
 # ---------------------------------------------------------------------------
-# shingling + MinHash signatures (vectorized pandas UDF)
+# shingling + MinHash signatures (vectorized Arrow UDFs)
 # ---------------------------------------------------------------------------
 
 def _shingle_hashes_batch(texts, shingle_n: int, seed: int):
@@ -88,8 +88,6 @@ def _shingle_hashes_batch(texts, shingle_n: int, seed: int):
     hashes mix the n shifted token-hash arrays — no per-shingle Python,
     no string concatenation. Docs shorter than n contribute one shingle
     (their full token sequence), empty docs contribute a sentinel."""
-    import pyarrow as pa
-
     from ..functions.hashing import _vfmix64, murmur128_any
 
     tok_lists = [(t or "").lower().split() for t in texts]
@@ -137,10 +135,10 @@ def _shingle_hashes_batch(texts, shingle_n: int, seed: int):
 
 def shingle_hashes_udf(shingle_n: int, seed: int = 12345678,
                        full_only: bool = False):
-    """pandas UDF: array<long> of DISTINCT word n-gram shingle hashes
-    per doc, via the same batch-vectorized kernel the MinHash
-    signatures use (ONE murmur call per Arrow batch for every token of
-    every doc). Replaces the interpreted higher-order-function
+    """Arrow UDF: array<long> of DISTINCT word n-gram shingle hashes
+    per doc, ascending, via the same batch-vectorized kernel the
+    MinHash signatures use (ONE murmur call per Arrow batch for every
+    token of every doc; one lexsort dedups every doc's shingles). Replaces the interpreted higher-order-function
     expression, which evaluated a lambda + array slice per shingle —
     measured ~90k shingles/s/core vs effectively hash-bound here; at
     100 TB each input byte must hash once, not per-shingle.
@@ -151,33 +149,35 @@ def shingle_hashes_udf(shingle_n: int, seed: int = 12345678,
     full token sequence as one shingle (near-dup Jaccard semantics,
     same as the signature kernel)."""
 
-    @F.pandas_udf("array<long>")
-    def sh(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in texts:
-            if len(s) == 0:
-                yield pd.Series([], dtype=object)
-                continue
-            hv, starts, lens = _shingle_hashes_batch(s.tolist(),
+    @F.arrow_udf("array<long>")
+    def sh(texts: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        _drop_spark_finders()
+        for col in texts:
+            hv, starts, lens = _shingle_hashes_batch(col.to_pylist(),
                                                      shingle_n, seed)
-            hv_i = hv.view(np.int64)
-            out = []
-            for i in range(len(starts) - 1):
-                if full_only and lens[i] < shingle_n:
-                    out.append([])
-                    continue
-                seg = hv_i[starts[i]:starts[i + 1]]
-                out.append(np.unique(seg).tolist())
-            yield pd.Series(out)
+            hv = hv.view(np.int64)
+            doc = np.repeat(np.arange(len(lens)), np.diff(starts))
+            if full_only:
+                keep = lens[doc] >= shingle_n
+                doc, hv = doc[keep], hv[keep]
+            o = np.lexsort((hv, doc))
+            doc, hv = doc[o], hv[o]
+            first = np.ones(len(doc), dtype=bool)
+            first[1:] = (doc[1:] != doc[:-1]) | (hv[1:] != hv[:-1])
+            doc, hv = doc[first], hv[first]
+            # one slice per doc ([:n]: a 0-doc batch splits into 0 rows)
+            rows = np.split(hv, np.searchsorted(doc, np.arange(1, len(lens))))
+            yield _list_array(rows[:len(lens)], None, pa.list_(pa.int64()))
 
     return sh
 
 
 def _minhash_matrix(texts: list, num_perm: int, shingle_n: int, seed: int,
                     a: np.ndarray, b: np.ndarray, p61: np.uint64):
-    """(sigs int64 (n_docs, num_perm), nonempty doc indices) for a
-    batch of texts — the shared core of the signature and band-bucket
-    kernels. Zero-shingle docs keep all-zero rows and are reported via
-    ``nonempty`` so callers can NULL them out."""
+    """(sigs int64 (n_docs, num_perm), per-doc validity) for a batch of
+    texts — the shared core of the signature and band-bucket kernels.
+    Zero-shingle docs keep all-zero rows and are False in the validity
+    mask, so callers can NULL them out."""
     hv, sh_starts, _ = _shingle_hashes_batch(texts, shingle_n, seed)
     hv &= p61
     n_docs = len(sh_starts) - 1
@@ -189,7 +189,7 @@ def _minhash_matrix(texts: list, num_perm: int, shingle_n: int, seed: int,
         if len(starts_ne):
             mins = np.minimum.reduceat(lane, starts_ne)
             sigs[nonempty, i] = mins.astype(np.int64)
-    return sigs, nonempty
+    return sigs, np.diff(sh_starts) > 0
 
 
 def _minhash_params(num_perm: int, seed: int):
@@ -209,29 +209,25 @@ def add_minhash_signature(df: DataFrame, text_col: str = "text",
     """array<bigint> MinHash signature per doc over word n-gram shingles.
 
     Arrow-batched AND batch-vectorized: token hashing is one
-    murmur128_bytes call per pandas batch, shingle hashes mix shifted
+    murmur128_bytes call per Arrow batch, shingle hashes mix shifted
     token-hash arrays, and per-doc lane minima come from
     ``np.minimum.reduceat`` over doc boundaries — the only per-doc
     Python is ``str.split``. Duplicate shingles need no dedup (they
     cannot change a minimum)."""
     p61, a, b = _minhash_params(num_perm, seed)
 
-    @F.pandas_udf("array<long>")
-    def sig(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in texts:
-            if len(s) == 0:
-                yield pd.Series([], dtype=object)
-                continue
-            sigs, nonempty = _minhash_matrix(s.tolist(), num_perm,
-                                             shingle_n, seed, a, b, p61)
+    @F.arrow_udf("array<long>")
+    def sig(texts: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        _drop_spark_finders()
+        for col in texts:
+            sigs, valid = _minhash_matrix(col.to_pylist(), num_perm,
+                                          shingle_n, seed, a, b, p61)
             # zero-shingle docs (empty/whitespace-only under the
             # PYTHON tokenizer, which splits more whitespace than
             # Spark's trim sees) get NULL, not a shared zero signature
             # — the banding filter drops them, so they can never form
             # a quadratic sentinel bucket
-            ne_set = set(nonempty.tolist())
-            yield pd.Series([row.tolist() if i in ne_set else None
-                             for i, row in enumerate(sigs)])
+            yield _list_array(sigs[valid], valid, pa.list_(pa.int64()))
 
     return df.withColumn(alias, sig(F.col(text_col)))
 
@@ -273,18 +269,14 @@ def add_minhash_bands(df: DataFrame, text_col: str = "text",
         raise ValueError("bands must divide num_perm")
     p61, a, b = _minhash_params(num_perm, seed)
 
-    @F.pandas_udf("array<long>")
-    def bk(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in texts:
-            if len(s) == 0:
-                yield pd.Series([], dtype=object)
-                continue
-            sigs, nonempty = _minhash_matrix(s.tolist(), num_perm,
-                                             shingle_n, seed, a, b, p61)
-            buckets = band_buckets_of_signature(sigs, bands)
-            ne_set = set(nonempty.tolist())
-            yield pd.Series([row.tolist() if i in ne_set else None
-                             for i, row in enumerate(buckets)])
+    @F.arrow_udf("array<long>")
+    def bk(texts: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        _drop_spark_finders()
+        for col in texts:
+            sigs, valid = _minhash_matrix(col.to_pylist(), num_perm,
+                                          shingle_n, seed, a, b, p61)
+            yield _list_array(band_buckets_of_signature(sigs[valid], bands),
+                              valid, pa.list_(pa.int64()))
 
     return df.withColumn(alias, bk(F.col(text_col)))
 
@@ -430,9 +422,9 @@ def _collect_shingle_index(src: DataFrame, id_col: str, text_col: str,
     lists (the Series-of-lists round trip cost ~1.5 s of the collect
     at sf1.0). Per-batch dedup is one lexsort; driver re-sorts by id.
     Returns (ids int64 ascending, lens int64, flat int64 doc-major)."""
-    import pyarrow as pa
 
     def kern(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _drop_spark_finders()
         for batch in batches:
             texts = batch.column(
                 batch.schema.get_field_index(text_col)).to_pylist()
@@ -452,14 +444,14 @@ def _collect_shingle_index(src: DataFrame, id_col: str, text_col: str,
                 [pa.array(bids[d_s[keep]]), pa.array(h_s[keep])],
                 names=["doc_id", "shingle"])
 
-    pdf = (src.select(F.col(id_col).alias(id_col), text_col)
+    tbl = (src.select(F.col(id_col).alias(id_col), text_col)
            .filter(has_tokens(text_col))
-           .mapInArrow(kern, "doc_id long, shingle long").toPandas())
-    if len(pdf) == 0:
+           .mapInArrow(kern, "doc_id long, shingle long").toArrow())
+    if tbl.num_rows == 0:
         return (np.empty(0, np.int64), np.empty(0, np.int64),
                 np.empty(0, np.int64))
-    rid = pdf["doc_id"].to_numpy()
-    rsh = pdf["shingle"].to_numpy()
+    rid = tbl.column("doc_id").to_numpy()
+    rsh = tbl.column("shingle").to_numpy()
     o = np.argsort(rid, kind="stable")
     rid, flat = rid[o], rsh[o]
     bump = np.concatenate(([True], rid[1:] != rid[:-1]))
@@ -544,16 +536,17 @@ def _ngram_pairs_broadcast(spark, index, threshold: float,
         ([0], np.searchsorted(cum_cost, targets) + 1, [n_docs])))
     n_chunks = len(bounds) - 1
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         # per-DOC bincount loop: measured 15.2 s single-core for the
         # whole sf1.0 fixture vs 21.0 s for a 64-doc-block bincount
         # matrix variant (np.nonzero over the mostly-dense block
         # matrices costs more than the per-doc call overhead saves)
+        _drop_spark_finders()
         (ids_, lens_, f_codes_, f_starts_, postings_, pstarts_,
          thr) = bc.value
         plen = (pstarts_[1:] - pstarts_[:-1])
-        for pdf_ in it:
-            for c in pdf_["c"].tolist():
+        for batch in batches:
+            for c in batch.column("c").to_pylist():
                 lo_d, hi_d = int(bounds[c]), int(bounds[c + 1])
                 out_a, out_b, out_j = [], [], []
                 for i in range(lo_d, hi_d):
@@ -586,7 +579,7 @@ def _ngram_pairs_broadcast(spark, index, threshold: float,
                         out_b.append(ids_[nzk])
                         out_j.append(jac[keep])
                 if out_a:
-                    yield pd.DataFrame({
+                    yield pa.RecordBatch.from_pydict({
                         "id_a": np.concatenate(out_a),
                         "id_b": np.concatenate(out_b),
                         "jaccard": np.concatenate(out_j)})
@@ -595,7 +588,7 @@ def _ngram_pairs_broadcast(spark, index, threshold: float,
     # Exchange at all ahead of the kernel
     chunks = spark.range(0, n_chunks, numPartitions=n_chunks) \
         .select(F.col("id").alias("c"))
-    return chunks.mapInPandas(run, out_schema)
+    return chunks.mapInArrow(run, out_schema)
 
 
 # Inputs larger than this many docs keep the explode+groupBy inverted
@@ -789,13 +782,14 @@ def _simhash_pairs_broadcast(fp: DataFrame, id_col: str,
 
     spark = fp.sparkSession
     out_schema = "id_a long, id_b long, hamming integer"
-    pdf = fp.toPandas()
-    n_docs = len(pdf)
+    tbl = fp.toArrow()
+    n_docs = tbl.num_rows
     if n_docs < 2:
         return spark.createDataFrame([], out_schema)
-    order = np.argsort(pdf[id_col].to_numpy(), kind="stable")
-    ids = pdf[id_col].to_numpy()[order].astype(np.int64)
-    sh = pdf["simhash"].to_numpy()[order].astype(np.int64).view(np.uint64)
+    order = np.argsort(tbl.column(id_col).to_numpy(), kind="stable")
+    ids = tbl.column(id_col).to_numpy()[order].astype(np.int64)
+    sh = tbl.column("simhash").to_numpy()[order].astype(np.int64) \
+        .view(np.uint64)
     chunks = 8
     w = 64 // chunks
     combos = list(_combinations(range(chunks), chunks - max_hamming))
@@ -803,12 +797,13 @@ def _simhash_pairs_broadcast(fp: DataFrame, id_col: str,
     h = int(max_hamming)
     n_tasks = min(len(combos), spark.sparkContext.defaultParallelism)
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _drop_spark_finders()
         ids_, sh_ = bc.value
         n = len(ids_)
         mask = np.uint64((1 << w) - 1)
-        for pdf_ in it:
-            for task in pdf_["c"].tolist():
+        for batch in batches:
+            for task in batch.column("c").to_pylist():
               for ci in range(task, len(combos), n_tasks):
                 key = np.zeros(n, dtype=np.uint64)
                 for j in combos[ci]:
@@ -838,7 +833,7 @@ def _simhash_pairs_broadcast(fp: DataFrame, id_col: str,
                 ham = _popcount64(sh_[a] ^ sh_[b])
                 keep = ham <= h
                 if keep.any():
-                    yield pd.DataFrame({
+                    yield pa.RecordBatch.from_pydict({
                         "id_a": ids_[a[keep]], "id_b": ids_[b[keep]],
                         "hamming": ham[keep].astype(np.int32)})
 
@@ -846,7 +841,7 @@ def _simhash_pairs_broadcast(fp: DataFrame, id_col: str,
         .select(F.col("id").alias("c"))
     # cross-combo duplicates remain (one pair can match several
     # combos): the same final distinct the explode plan runs
-    return chunked.mapInPandas(run, out_schema).distinct()
+    return chunked.mapInArrow(run, out_schema).distinct()
 
 
 def near_dup_pairs_simhash(df: DataFrame, id_col: str = "doc_id",
