@@ -32,11 +32,13 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..agg import _drop_spark_finders, _list_array, _matrix
 from ..cache import Scope
 
 
@@ -73,6 +75,22 @@ def _assign_codes(mat: np.ndarray, cb: np.ndarray) -> np.ndarray:
     return codes
 
 
+def _code_column(codes: np.ndarray) -> pa.Array:
+    """(n, m) uint8 codes as a ``binary`` column of m-byte values."""
+    n, m = codes.shape
+    return pa.FixedSizeBinaryArray.from_buffers(
+        pa.binary(m), n, [None, pa.py_buffer(np.ascontiguousarray(codes))]
+    ).cast(pa.binary())
+
+
+def _code_matrix(col: pa.Array, m: int) -> np.ndarray:
+    """A NULL-free ``binary`` column of m-byte codes as an (n, m) uint8
+    matrix; a code of another length raises."""
+    fixed = col.cast(pa.binary(m))
+    return np.frombuffer(fixed.buffers()[1], dtype=np.uint8)[
+        fixed.offset * m:(fixed.offset + len(fixed)) * m].reshape(-1, m)
+
+
 def train_pq_codebook(vectors: DataFrame, m: int, k_sub: int = 256,
                       n_iter: int = 8, vec_col: str = "embedding",
                       id_col: str = "vec_id") -> np.ndarray:
@@ -84,8 +102,6 @@ def train_pq_codebook(vectors: DataFrame, m: int, k_sub: int = 256,
     sums, merged driver-side — KB-scale partials, no per-vector
     shuffle. At warehouse scale train on a sample (a few hundred
     vectors per code word suffice) and persist the codebook."""
-    import pyarrow as pa
-
     if m < 1 or k_sub < 1:
         raise ValueError(f"m={m} and k_sub={k_sub} must be >= 1")
     if k_sub > 256:
@@ -108,15 +124,14 @@ def train_pq_codebook(vectors: DataFrame, m: int, k_sub: int = 256,
             sample.reshape(k_eff, m, sub_dim).transpose(1, 0, 2))
 
         def partials(batches):
+            _drop_spark_finders()
             counts = np.zeros((m, k_eff), dtype=np.int64)
             sums = np.zeros((m, k_eff, sub_dim), dtype=np.float64)
             c_sq = (cb * cb).sum(axis=2)
             for batch in batches:
-                tbl = pa.Table.from_batches([batch])
-                col = tbl.column(vec_col).to_numpy(zero_copy_only=False)
-                if len(col) == 0:
+                mat, _ = _matrix(batch.column(vec_col))
+                if len(mat) == 0:
                     continue
-                mat = np.vstack(col).astype(np.float64)
                 subs = _subspace_views(mat, m, sub_dim)
                 for j in range(m):
                     scores = subs[j] @ cb[j].T * 2.0 - c_sq[j]
@@ -160,20 +175,17 @@ def encode_pq(vectors: DataFrame, codebook: np.ndarray,
     cb = np.asarray(codebook, dtype=np.float64)
     _check_codebook(cb)
 
-    @F.pandas_udf("binary")
-    def enc(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in it:
-            if len(s) == 0:
-                yield pd.Series([], dtype=object)
-                continue
-            nulls = s.isna().to_numpy()
-            out = np.empty(len(s), dtype=object)
-            if (~nulls).any():
-                mat = np.vstack(s[~nulls].to_numpy()).astype(np.float64)
-                codes = _assign_codes(mat, cb)
-                out[~nulls] = [row.tobytes() for row in codes]
-            out[nulls] = None
-            yield pd.Series(out)
+    @F.arrow_udf("binary")
+    def enc(cols: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        _drop_spark_finders()
+        for col in cols:
+            mat, valid = _matrix(col)
+            out = _code_column(_assign_codes(mat, cb) if len(mat) else
+                               np.empty((0, cb.shape[0]), dtype=np.uint8))
+            if valid is not None:
+                # a NULL row takes a NULL index, and take() gives NULL
+                out = out.take(pa.array(np.cumsum(valid) - 1, mask=~valid))
+            yield out
 
     return vectors.withColumn(out_col, enc(F.col(vec_col)))
 
@@ -193,22 +205,13 @@ def fd_project(vectors: DataFrame, directions: np.ndarray,
         raise ValueError(f"directions must be (r, d), got {V.shape}")
     out_col = out_col or vec_col
 
-    @F.pandas_udf("array<double>")
-    def proj(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in it:
-            if len(s) == 0:
-                yield pd.Series([], dtype=object)
-                continue
-            nulls = s.isna().to_numpy()
-            out = np.empty(len(s), dtype=object)
-            if (~nulls).any():
-                mat = np.vstack(s[~nulls].to_numpy()).astype(np.float64)
-                rows = mat @ V.T
-                vals = np.empty(rows.shape[0], dtype=object)
-                vals[:] = [r for r in rows]  # keep rows as objects
-                out[~nulls] = vals
-            out[nulls] = None
-            yield pd.Series(out)
+    @F.arrow_udf("array<double>")
+    def proj(cols: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        _drop_spark_finders()
+        for col in cols:
+            mat, valid = _matrix(col)
+            yield _list_array(mat @ V.T if len(mat) else [], valid,
+                              pa.list_(pa.float64()))
 
     return vectors.withColumn(out_col, proj(F.col(vec_col)))
 
@@ -238,18 +241,20 @@ def residual_vectors(vectors: DataFrame, coarse: np.ndarray,
     cn = np.asarray(coarse, dtype=np.float64)
     c_sq = (cn * cn).sum(axis=1)
 
-    def res(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pdf = pdf[pdf[vec_col].notna()]
-            if len(pdf) == 0:
+    def res(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _drop_spark_finders()
+        for batch in batches:
+            mat, valid = _matrix(batch.column(vec_col))
+            if len(mat) == 0:
                 continue
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
             lists = (mat @ cn.T * 2.0 - c_sq).argmax(axis=1)
-            yield pd.DataFrame({
-                id_col: pdf[id_col].to_numpy(),
-                vec_col: list(mat - cn[lists])})
+            ids = batch.column(id_col)
+            yield pa.RecordBatch.from_pydict({
+                id_col: ids if valid is None else ids.filter(valid),
+                vec_col: _list_array(mat - cn[lists], None,
+                                     pa.list_(pa.float64()))})
 
-    return vectors.select(id_col, vec_col).mapInPandas(
+    return vectors.select(id_col, vec_col).mapInArrow(
         res, f"{id_col} long, {vec_col} array<double>")
 
 
@@ -269,20 +274,20 @@ def encode_ivf_pq(vectors: DataFrame, coarse: np.ndarray,
     _check_codebook(cb)
     c_sq = (cn * cn).sum(axis=1)
 
-    def enc(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pdf = pdf[pdf[vec_col].notna()]
-            if len(pdf) == 0:
+    def enc(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _drop_spark_finders()
+        for batch in batches:
+            mat, valid = _matrix(batch.column(vec_col))
+            if len(mat) == 0:
                 continue
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
             lists = (mat @ cn.T * 2.0 - c_sq).argmax(axis=1)
-            codes = _assign_codes(mat - cn[lists], cb)
-            yield pd.DataFrame({
-                id_col: pdf[id_col].to_numpy(),
+            ids = batch.column(id_col)
+            yield pa.RecordBatch.from_pydict({
+                id_col: ids if valid is None else ids.filter(valid),
                 "__list": lists.astype(np.int32),
-                "pq_code": [row.tobytes() for row in codes]})
+                "pq_code": _code_column(_assign_codes(mat - cn[lists], cb))})
 
-    return vectors.select(id_col, vec_col).mapInPandas(
+    return vectors.select(id_col, vec_col).mapInArrow(
         enc, f"{id_col} long, __list int, pq_code binary")
 
 
@@ -327,16 +332,15 @@ def ivf_pq_topk(encoded: DataFrame, queries: DataFrame, k: int,
     keep = max(k, rerank)
     gather_cols = np.arange(m)
 
-    def scan(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pdf = pdf[pdf["pq_code"].notna()]
-            if len(pdf) == 0:
+    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _drop_spark_finders()
+        for batch in batches:
+            batch = batch.filter(pc.is_valid(batch.column("pq_code")))
+            if batch.num_rows == 0:
                 continue
-            codes = np.frombuffer(
-                b"".join(pdf["pq_code"].tolist()),
-                dtype=np.uint8).reshape(len(pdf), m)
-            lists = pdf["__list"].to_numpy()
-            ids = pdf[id_col].to_numpy()
+            codes = _code_matrix(batch.column("pq_code"), m)
+            lists = batch.column("__list").to_numpy(zero_copy_only=False)
+            ids = batch.column(id_col).to_numpy(zero_copy_only=False)
             out_q, out_id, out_d = [], [], []
             for qi in range(nq):
                 for li in probed[qi]:
@@ -358,42 +362,15 @@ def ivf_pq_topk(encoded: DataFrame, queries: DataFrame, k: int,
                     out_d.append(d[cand])
             if not out_q:
                 continue
-            yield pd.DataFrame({q_id_col: np.concatenate(out_q),
-                                id_col: np.concatenate(out_id),
-                                "dist": np.concatenate(out_d)})
+            yield pa.RecordBatch.from_pydict({
+                q_id_col: np.concatenate(out_q),
+                id_col: np.concatenate(out_id),
+                "dist": np.concatenate(out_d)})
 
-    cand = encoded.select(id_col, "__list", "pq_code").mapInPandas(
+    cand = encoded.select(id_col, "__list", "pq_code").mapInArrow(
         scan, f"{q_id_col} long, {id_col} long, dist double")
-    from pyspark.sql import Window
-    w = (Window.partitionBy(q_id_col)
-         .orderBy(F.col("dist").asc(), F.col(id_col).asc()))
-    top = (cand.withColumn("rank", F.row_number().over(w))
-           .filter(F.col("rank") <= keep))
-    if not rerank:
-        return top.filter(F.col("rank") <= k)
-    cand_ids = top.select(id_col).distinct()
-    exact_side = vectors.join(F.broadcast(cand_ids), id_col, "left_semi") \
-        .select(id_col, vec_col)
-
-    def rescore(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            ids = pdf[id_col].to_numpy()
-            for qi in range(nq):
-                d = ((mat - q_mat[qi]) ** 2).sum(axis=1)
-                yield pd.DataFrame({q_id_col: np.full(len(ids), q_ids[qi]),
-                                    id_col: ids, "exact_dist": d})
-
-    scored = exact_side.mapInPandas(
-        rescore, f"{q_id_col} long, {id_col} long, exact_dist double")
-    pairs = top.select(q_id_col, id_col).join(scored, [q_id_col, id_col])
-    w2 = (Window.partitionBy(q_id_col)
-          .orderBy(F.col("exact_dist").asc(), F.col(id_col).asc()))
-    return (pairs.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k)
-            .withColumnRenamed("exact_dist", "dist"))
+    return _top_k(cand, k, keep, rerank, vectors, q_ids, q_mat,
+                  id_col, vec_col, q_id_col)
 
 
 def write_ivf_pq_index(vectors: DataFrame, coarse: np.ndarray,
@@ -489,15 +466,14 @@ def pq_topk(encoded: DataFrame, queries: DataFrame, k: int,
     keep = max(k, rerank)
     nq = len(q_ids)
 
-    def scan(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pdf = pdf[pdf[code_col].notna()]
-            if len(pdf) == 0:
+    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _drop_spark_finders()
+        for batch in batches:
+            batch = batch.filter(pc.is_valid(batch.column(code_col)))
+            if batch.num_rows == 0:
                 continue
-            codes = np.frombuffer(
-                b"".join(pdf[code_col].tolist()),
-                dtype=np.uint8).reshape(len(pdf), m)
-            ids = pdf[id_col].to_numpy()
+            codes = _code_matrix(batch.column(code_col), m)
+            ids = batch.column(id_col).to_numpy(zero_copy_only=False)
             out_q, out_id, out_d = [], [], []
             gather_cols = np.arange(m)
             for qi in range(nq):
@@ -513,37 +489,50 @@ def pq_topk(encoded: DataFrame, queries: DataFrame, k: int,
                 out_q.append(np.full(len(cand), q_ids[qi]))
                 out_id.append(ids[cand])
                 out_d.append(d[cand])
-            yield pd.DataFrame({q_id_col: np.concatenate(out_q),
-                                id_col: np.concatenate(out_id),
-                                "dist": np.concatenate(out_d)})
+            yield pa.RecordBatch.from_pydict({
+                q_id_col: np.concatenate(out_q),
+                id_col: np.concatenate(out_id),
+                "dist": np.concatenate(out_d)})
 
-    cand = encoded.select(id_col, code_col).mapInPandas(
+    cand = encoded.select(id_col, code_col).mapInArrow(
         scan, f"{q_id_col} long, {id_col} long, dist double")
-    from pyspark.sql import Window
+    return _top_k(cand, k, keep, rerank, vectors, q_ids, q_mat,
+                  id_col, vec_col, q_id_col)
+
+
+def _top_k(cand: DataFrame, k: int, keep: int, rerank: int,
+           vectors: DataFrame | None, q_ids: np.ndarray, q_mat: np.ndarray,
+           id_col: str, vec_col: str, q_id_col: str) -> DataFrame:
+    """The per-query top-k of ADC candidates ``(q_id, id, dist)``: the
+    best ``keep`` by (dist, id), then either the top ``k`` of those or,
+    with ``rerank``, the top ``k`` by exact squared L2 over them — the
+    candidate ids broadcast into a semi-join with ``vectors`` and one
+    scan-side pass scores every query."""
     w = (Window.partitionBy(q_id_col)
          .orderBy(F.col("dist").asc(), F.col(id_col).asc()))
     top = (cand.withColumn("rank", F.row_number().over(w))
            .filter(F.col("rank") <= keep))
     if not rerank:
         return top.filter(F.col("rank") <= k)
-
-    # exact re-rank: broadcast the candidate ids, one scan-side pass
     cand_ids = top.select(id_col).distinct()
     exact_side = vectors.join(F.broadcast(cand_ids), id_col, "left_semi") \
         .select(id_col, vec_col)
 
-    def rescore(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
+    def rescore(batches: Iterator[pa.RecordBatch]
+                ) -> Iterator[pa.RecordBatch]:
+        _drop_spark_finders()
+        for batch in batches:
+            mat, valid = _matrix(batch.column(vec_col))
+            if len(mat) == 0:
                 continue
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            ids = pdf[id_col].to_numpy()
-            for qi in range(nq):
-                d = ((mat - q_mat[qi]) ** 2).sum(axis=1)
-                yield pd.DataFrame({q_id_col: np.full(len(ids), q_ids[qi]),
-                                    id_col: ids, "exact_dist": d})
+            ids = batch.column(id_col)
+            ids = ids if valid is None else ids.filter(valid)
+            for qi in range(len(q_ids)):
+                yield pa.RecordBatch.from_pydict({
+                    q_id_col: np.full(len(ids), q_ids[qi]), id_col: ids,
+                    "exact_dist": ((mat - q_mat[qi]) ** 2).sum(axis=1)})
 
-    scored = exact_side.mapInPandas(
+    scored = exact_side.mapInArrow(
         rescore, f"{q_id_col} long, {id_col} long, exact_dist double")
     pairs = top.select(q_id_col, id_col).join(scored, [q_id_col, id_col])
     w2 = (Window.partitionBy(q_id_col)

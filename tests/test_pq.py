@@ -60,14 +60,30 @@ def test_train_ignores_null_vectors(spark):
 
 
 def test_null_vectors_get_null_codes(spark):
+    """A NULL vector gets a NULL code and a NULL projection, beside
+    valid rows and in a batch of NULLs only (maxRecordsPerBatch 2 cuts
+    the one partition into [0, 1], [2, 3], [4])."""
     df = spark.createDataFrame(
-        [(0, [1.0, 2.0, 3.0, 4.0]), (1, None), (2, [0.0, 0.0, 1.0, 1.0])],
-        "vec_id long, embedding array<float>")
+        [(0, [1.0, 2.0, 3.0, 4.0]), (1, None), (2, [0.0, 0.0, 1.0, 1.0]),
+         (3, None), (4, None)],
+        "vec_id long, embedding array<float>").coalesce(1)
     cb = rng.standard_normal((2, 4, 2))
-    rows = {r["vec_id"]: r["pq_code"]
-            for r in pq.encode_pq(df, cb).collect()}
-    assert rows[1] is None
-    assert rows[0] is not None and len(bytes(rows[0])) == 2
+    V = rng.standard_normal((3, 4))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = spark.conf.get(key)
+    for batch in ("2", default):
+        spark.conf.set(key, batch)
+        try:
+            codes = {r["vec_id"]: r["pq_code"]
+                     for r in pq.encode_pq(df, cb).collect()}
+            proj = {r["vec_id"]: r["p"]
+                    for r in pq.fd_project(df, V, out_col="p").collect()}
+        finally:
+            spark.conf.set(key, default)
+        assert [i for i in range(5) if codes[i] is None] == [1, 3, 4]
+        assert [i for i in range(5) if proj[i] is None] == [1, 3, 4]
+        assert len(bytes(codes[0])) == 2
+        assert np.allclose(proj[2], V @ [0.0, 0.0, 1.0, 1.0])
 
 
 def test_planted_copy_is_top1(clustered, spark):
