@@ -154,45 +154,47 @@ def _update_columns(cols: Sequence[pa.Array]
             keep.to_numpy(zero_copy_only=False).astype(np.int64))
 
 
-def _matrix(col: pa.Array) -> tuple[np.ndarray, np.ndarray | None]:
+def _matrix(col: pa.Array, dim: int | None = None
+            ) -> tuple[np.ndarray, np.ndarray | None]:
     """A column of equal-length numeric arrays (an embedding) as (a
     float64 ``(rows, dim)`` matrix of its non-null rows, per-row
     validity|None). The matrix is ``col.flatten()`` reshaped, with no
     copy for a ``double`` element type. A NULL row is left out of the
     matrix and is False in the validity mask, which is None when the
-    column holds no NULL. Rows of different lengths raise
-    ``ValueError``."""
+    column holds no NULL. Rows of different lengths, or of another
+    length than ``dim`` when it is given, raise ``ValueError``; with
+    ``dim``, a batch of NULLs only gives a ``(0, dim)`` matrix."""
     import pyarrow.compute as pc
     valid = (pc.is_valid(col).to_numpy(zero_copy_only=False)
              if col.null_count else None)
     span = pc.min_max(col.value_lengths()).as_py()
-    if span["min"] != span["max"]:
-        raise ValueError(f"rows of {span['min']} to {span['max']} "
-                         "elements do not form a matrix")
+    dims = {span["min"], span["max"], dim} - {None}
+    if len(dims) > 1:
+        raise ValueError(f"rows of lengths {sorted(dims)} do not form "
+                         "one matrix")
     flat = col.flatten().to_numpy(zero_copy_only=False)
     return (flat.astype(np.float64, copy=False)
-            .reshape(len(col) - col.null_count, span["max"] or 0), valid)
+            .reshape(len(col) - col.null_count, dims.pop() if dims else 0),
+            valid)
 
 
-def _list_array(rows, valid: np.ndarray | None,
-                list_type: pa.DataType) -> pa.Array:
+def _list_array(values: np.ndarray, valid: np.ndarray | None,
+                list_type: pa.DataType,
+                lengths: np.ndarray | None = None) -> pa.Array:
     """The list column of ``list_type`` whose valid rows (every row when
-    ``valid`` is None) hold, in order, the rows of ``rows``, a 2-D
-    array or a sequence of 1-D arrays; a row that is not valid is NULL.
-    The inverse of ``_matrix``."""
-    if isinstance(rows, np.ndarray) and rows.ndim == 2:
-        lengths = np.full(len(rows), rows.shape[1], dtype=np.int64)
-        values = rows.ravel()
-    else:
-        lengths = np.fromiter(map(len, rows), np.int64, len(rows))
-        values = np.concatenate(rows) if len(rows) else np.empty(0)
+    ``valid`` is None) hold, in order, the rows of ``values``: a 2-D
+    array, or with ``lengths`` a 1-D array of all their elements end to
+    end, ``lengths[i]`` of them in row i. A row that is not valid is
+    NULL. The inverse of ``_matrix``."""
+    if lengths is None:
+        lengths = np.full(len(values), values.shape[1], dtype=np.int64)
     if valid is not None:
         lengths, full = np.zeros(len(valid), dtype=np.int64), lengths
         lengths[valid] = full
     offsets = np.zeros(len(lengths) + 1, dtype=np.int32)
     np.cumsum(lengths, out=offsets[1:])
     return pa.ListArray.from_arrays(
-        pa.array(offsets), pa.array(values).cast(list_type.value_type),
+        pa.array(offsets), pa.array(values.ravel()).cast(list_type.value_type),
         type=list_type, mask=None if valid is None else pa.array(~valid))
 
 

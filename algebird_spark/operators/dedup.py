@@ -164,10 +164,8 @@ def shingle_hashes_udf(shingle_n: int, seed: int = 12345678,
             doc, hv = doc[o], hv[o]
             first = np.ones(len(doc), dtype=bool)
             first[1:] = (doc[1:] != doc[:-1]) | (hv[1:] != hv[:-1])
-            doc, hv = doc[first], hv[first]
-            # one slice per doc ([:n]: a 0-doc batch splits into 0 rows)
-            rows = np.split(hv, np.searchsorted(doc, np.arange(1, len(lens))))
-            yield _list_array(rows[:len(lens)], None, pa.list_(pa.int64()))
+            yield _list_array(hv[first], None, pa.list_(pa.int64()),
+                              np.bincount(doc[first], minlength=len(lens)))
 
     return sh
 

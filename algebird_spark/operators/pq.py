@@ -179,9 +179,8 @@ def encode_pq(vectors: DataFrame, codebook: np.ndarray,
     def enc(cols: Iterator[pa.Array]) -> Iterator[pa.Array]:
         _drop_spark_finders()
         for col in cols:
-            mat, valid = _matrix(col)
-            out = _code_column(_assign_codes(mat, cb) if len(mat) else
-                               np.empty((0, cb.shape[0]), dtype=np.uint8))
+            mat, valid = _matrix(col, cb.shape[0] * cb.shape[2])
+            out = _code_column(_assign_codes(mat, cb))
             if valid is not None:
                 # a NULL row takes a NULL index, and take() gives NULL
                 out = out.take(pa.array(np.cumsum(valid) - 1, mask=~valid))
@@ -209,9 +208,8 @@ def fd_project(vectors: DataFrame, directions: np.ndarray,
     def proj(cols: Iterator[pa.Array]) -> Iterator[pa.Array]:
         _drop_spark_finders()
         for col in cols:
-            mat, valid = _matrix(col)
-            yield _list_array(mat @ V.T if len(mat) else [], valid,
-                              pa.list_(pa.float64()))
+            mat, valid = _matrix(col, V.shape[1])
+            yield _list_array(mat @ V.T, valid, pa.list_(pa.float64()))
 
     return vectors.withColumn(out_col, proj(F.col(vec_col)))
 
