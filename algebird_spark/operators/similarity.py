@@ -17,11 +17,12 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..agg import _drop_spark_finders, _list_array, _matrix
 from ..cache import Scope
 
 
@@ -95,8 +96,6 @@ def cosine_topk_kernel(vectors: DataFrame, queries: DataFrame, k: int,
     rounding of near-tied scores (ADVICE r3). The expression path
     remains the oracle (both sides of every gated comparison use ONE
     scorer). Returns (q_id, vec_id, cos, rank)."""
-    import pyarrow as pa
-
     q_rows = queries.select(q_id_col, q_vec_col).collect()
     if not q_rows:
         return cosine_topk(vectors, queries, k, id_col, vec_col,
@@ -106,14 +105,15 @@ def cosine_topk_kernel(vectors: DataFrame, queries: DataFrame, k: int,
     qm = qm / np.linalg.norm(qm, axis=1, keepdims=True)
 
     def score(batches):
+        _drop_spark_finders()
         # per-partition running top-k per query
         best = np.full((len(q_ids), k), -np.inf)
         best_id = np.zeros((len(q_ids), k), dtype=np.int64)
         for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            ids = tbl.column(id_col).to_numpy(zero_copy_only=False)
-            m = np.vstack(tbl.column(vec_col).to_numpy(
-                zero_copy_only=False)).astype(np.float64)
+            m, valid = _matrix(batch.column(vec_col), qm.shape[1])
+            ids = batch.column(id_col).to_numpy(zero_copy_only=False)
+            if valid is not None:
+                ids = ids[valid]
             m = m / np.linalg.norm(m, axis=1, keepdims=True)
             scores = qm @ m.T                      # (nq, batch)
             scores[ids[None, :] == q_ids[:, None]] = -np.inf  # self
@@ -198,7 +198,7 @@ def lsh_bucketed_topk(vectors: DataFrame, queries: DataFrame, k: int,
 
 
 def _multitable_buckets_udf(planes_per_table: list[np.ndarray]):
-    """pandas UDF: array<long> of one bucket id per table, computed as
+    """Arrow UDF: array<long> of one bucket id per table, computed as
     ONE BLAS matmul per Arrow batch — (batch, dim) @ (dim, tables*planes)
     — then sign-bit packing. The expression-tree formulation
     (hyperplane_bucket) evaluates interpreted higher-order lambdas per
@@ -208,17 +208,15 @@ def _multitable_buckets_udf(planes_per_table: list[np.ndarray]):
     n_tables = len(planes_per_table)
     weights = (np.int64(1) << np.arange(n_planes, dtype=np.int64))
 
-    @F.pandas_udf("array<long>")
-    def buckets(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in it:
-            if len(s) == 0:
-                yield pd.Series([], dtype=object)
-                continue
-            m = np.vstack(s.to_numpy())            # (batch, dim)
+    @F.arrow_udf("array<long>")
+    def buckets(cols: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        _drop_spark_finders()
+        for col in cols:
+            m, valid = _matrix(col, all_planes.shape[1])  # (batch, dim)
             signs = (m @ all_planes.T) >= 0        # (batch, T*P)
             bits = signs.reshape(len(m), n_tables, n_planes)
             ids = (bits * weights).sum(axis=2)     # (batch, T)
-            yield pd.Series([row.tolist() for row in ids])
+            yield _list_array(ids, valid, pa.list_(pa.int64()))
 
     return buckets
 
@@ -311,8 +309,8 @@ def embedding_cosine_dups(vectors: DataFrame, threshold: float,
 
 def _probe_udf(centroids: np.ndarray, nprobe: int,
                residual_order: bool = False):
-    """pandas UDF: nprobe centroid ids per vector, one BLAS matmul per
-    Arrow batch. Cosine assignment == argmax of dot against
+    """Arrow UDF: nprobe centroid ids per vector, one BLAS matmul per
+    Arrow batch; a NULL vector gets NULL. Cosine assignment == argmax of dot against
     L2-normalized centroids (the vector's own norm is a positive
     scalar, so it cannot change the argmax order).
 
@@ -339,13 +337,11 @@ def _probe_udf(centroids: np.ndarray, nprobe: int,
     nprobe = min(nprobe, cn.shape[0])
     cn = cn / np.linalg.norm(cn, axis=1, keepdims=True)
 
-    @F.pandas_udf("array<int>")
-    def probes(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in it:
-            if len(s) == 0:
-                yield pd.Series([], dtype=object)
-                continue
-            m = np.vstack(s.to_numpy()).astype(np.float64)
+    @F.arrow_udf("array<int>")
+    def probes(cols: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        _drop_spark_finders()
+        for col in cols:
+            m, valid = _matrix(col, cn.shape[1])
             if residual_order and nprobe > 1:
                 r = m.copy()
                 cols = []
@@ -369,7 +365,7 @@ def _probe_udf(centroids: np.ndarray, nprobe: int,
                                        axis=1)[:, :nprobe]
                 order = np.take_along_axis(scores, part, 1).argsort(axis=1)
                 top = np.take_along_axis(part, order[:, ::-1], 1)
-            yield pd.Series([row.astype(np.int32).tolist() for row in top])
+            yield _list_array(top, valid, pa.list_(pa.int32()))
 
     return probes
 
@@ -383,21 +379,18 @@ def _lloyd_partials_df(vectors: DataFrame, centroids: np.ndarray,
     mapInArrow pass, so nothing per-vector ever shuffles (the round-3
     posexplode formulation moved N x dim rows per iteration; this
     moves n_lists x (dim + 1) doubles per partition)."""
-    import pyarrow as pa
-
     cn = np.atleast_2d(np.asarray(centroids, dtype=np.float64))
     cn = cn / np.linalg.norm(cn, axis=1, keepdims=True)
     n_lists, dim = cn.shape
 
     def partials(batches):
+        _drop_spark_finders()
         sums = np.zeros((n_lists, dim), dtype=np.float64)
         counts = np.zeros(n_lists, dtype=np.int64)
         for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            col = tbl.column(vec_col).to_numpy(zero_copy_only=False)
-            if len(col) == 0:
+            m, _ = _matrix(batch.column(vec_col), dim)
+            if len(m) == 0:
                 continue
-            m = np.vstack(col).astype(np.float64)
             assign = (m @ cn.T).argmax(axis=1)
             # segment-sum via stable sort + reduceat (np.add.at is a
             # scalar scatter loop; this is one vectorized pass)
@@ -515,23 +508,23 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int,
 
 
 def _spill_assign_udf(centroids: np.ndarray, spill_margin: float):
-    """pandas UDF: 1 or 2 inverted-list ids per vector — the nearest
+    """Arrow UDF: 1 or 2 inverted-list ids per vector — the nearest
     centroid always, plus the second-nearest when the score gap is
-    below ``spill_margin * ||v||`` (a boundary vector)."""
+    below ``spill_margin * ||v||`` (a boundary vector); a NULL vector
+    gets NULL."""
     cn = np.atleast_2d(np.asarray(centroids, dtype=np.float64))
     cn = cn / np.linalg.norm(cn, axis=1, keepdims=True)
 
-    @F.pandas_udf("array<int>")
-    def assign(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in it:
-            if len(s) == 0:
-                yield pd.Series([], dtype=object)
-                continue
-            m = np.vstack(s.to_numpy()).astype(np.float64)
-            scores = m @ cn.T
+    @F.arrow_udf("array<int>")
+    def assign(cols: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        _drop_spark_finders()
+        for col in cols:
+            m, valid = _matrix(col, cn.shape[1])
             if cn.shape[0] == 1:
-                yield pd.Series([[0]] * len(m))
+                yield _list_array(np.zeros((len(m), 1)), valid,
+                                  pa.list_(pa.int32()))
                 continue
+            scores = m @ cn.T
             top2 = np.argpartition(-scores, 1, axis=1)[:, :2]
             vals = np.take_along_axis(scores, top2, 1)
             swap = vals[:, 0] < vals[:, 1]
@@ -539,10 +532,9 @@ def _spill_assign_udf(centroids: np.ndarray, spill_margin: float):
             vals[swap] = vals[swap][:, ::-1]
             margin = spill_margin * np.linalg.norm(m, axis=1)
             both = (vals[:, 0] - vals[:, 1]) < margin
-            out = [row[:2].astype(np.int32).tolist() if b
-                   else [int(row[0])]
-                   for row, b in zip(top2, both)]
-            yield pd.Series(out)
+            # row-major: each row's nearest list, then its second if both
+            yield _list_array(top2[np.c_[np.ones(len(m), bool), both]],
+                              valid, pa.list_(pa.int32()), 1 + both)
 
     return assign
 
