@@ -26,10 +26,11 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..agg import _drop_spark_finders, _list_array
 from ..cache import Scope
 from ..functions.hashing import _vfmix64, affine_mod_p61
 
@@ -124,19 +125,16 @@ def add_weighted_minhash_signature(df: DataFrame, text_col: str = "text",
                                    alias: str = "wminhash") -> DataFrame:
     """array<long> ICWS signature per doc over word-frequency weights."""
 
-    @F.pandas_udf("array<long>")
-    def sig(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in it:
-            if len(s) == 0:
-                yield pd.Series([], dtype=object)
-                continue
-            uh, w, starts = _doc_token_weights(s.tolist(), seed)
+    @F.arrow_udf("array<long>")
+    def sig(texts: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        _drop_spark_finders()
+        for col in texts:
+            uh, w, starts = _doc_token_weights(col.to_pylist(), seed)
             sigs = icws_signatures(uh, w, starts, num_perm, seed)
             # zero-token docs -> NULL signature (see dedup.py: the
             # banding filter drops them; no shared sentinel bucket)
-            n_tok = np.diff(starts)
-            yield pd.Series([row.tolist() if n_tok[i] > 0 else None
-                             for i, row in enumerate(sigs)])
+            valid = np.diff(starts) > 0
+            yield _list_array(sigs[valid], valid, pa.list_(pa.int64()))
 
     return df.withColumn(alias, sig(F.col(text_col)))
 
@@ -156,18 +154,15 @@ def add_weighted_minhash_bands(df: DataFrame, text_col: str = "text",
     if num_perm % bands:
         raise ValueError("bands must divide num_perm")
 
-    @F.pandas_udf("array<long>")
-    def bk(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in it:
-            if len(s) == 0:
-                yield pd.Series([], dtype=object)
-                continue
-            uh, w, starts = _doc_token_weights(s.tolist(), seed)
+    @F.arrow_udf("array<long>")
+    def bk(texts: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        _drop_spark_finders()
+        for col in texts:
+            uh, w, starts = _doc_token_weights(col.to_pylist(), seed)
             sigs = icws_signatures(uh, w, starts, num_perm, seed)
-            buckets = band_buckets_of_signature(sigs, bands)
-            n_tok = np.diff(starts)
-            yield pd.Series([row.tolist() if n_tok[i] > 0 else None
-                             for i, row in enumerate(buckets)])
+            valid = np.diff(starts) > 0
+            yield _list_array(band_buckets_of_signature(sigs[valid], bands),
+                              valid, pa.list_(pa.int64()))
 
     return df.withColumn(alias, bk(F.col(text_col)))
 
@@ -176,19 +171,20 @@ def weighted_jaccard_exact(pairs: DataFrame, docs: DataFrame,
                            id_col: str = "doc_id",
                            text_col: str = "text") -> DataFrame:
     """Exact J_w = sum(min)/sum(max) over token-frequency maps, on
-    candidate pairs only (pandas UDF; the candidate set is small)."""
+    candidate pairs only (Arrow UDF; the candidate set is small)."""
     from collections import Counter
 
-    @F.pandas_udf("double")
-    def wj(a: pd.Series, b: pd.Series) -> pd.Series:
+    @F.arrow_udf("double")
+    def wj(a: pa.Array, b: pa.Array) -> pa.Array:
+        _drop_spark_finders()
         vals = []
-        for ta, tb in zip(a, b):
+        for ta, tb in zip(a.to_pylist(), b.to_pylist()):
             ca = Counter((ta or "").lower().split())
             cb = Counter((tb or "").lower().split())
             num = sum(min(ca[k], cb[k]) for k in ca.keys() & cb.keys())
             den = sum((ca | cb).values())  # elementwise max union
             vals.append(num / den if den else 1.0)
-        return pd.Series(vals, dtype="float64")
+        return pa.array(vals, type=pa.float64())
 
     a = docs.select(F.col(id_col).alias("id_a"),
                     F.col(text_col).alias("__ta"))
