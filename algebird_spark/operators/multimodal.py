@@ -5,7 +5,7 @@ the codec kernels are STUBBED (image/audio libraries are not in this
 container) behind ``DeterministicFakeCodec`` so pipelines exercise the
 exact dataflow a real decoder would see.
 
-Pattern: ``mapInPandas`` with a bounded batch size so a partition of
+Pattern: ``mapInArrow`` with a bounded batch size so a partition of
 large blobs never materializes at once; metadata stays in columns so
 filters prune *before* any decode.
 """
@@ -16,11 +16,13 @@ import hashlib
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (ArrayType, BinaryType, FloatType, IntegerType,
                                StringType, StructField, StructType)
+
+from ..agg import _drop_spark_finders, _list_array
 
 MEDIA_SCHEMA = StructType([
     StructField("media_id", StringType(), False),
@@ -276,7 +278,7 @@ def check_codec_contract(spark, codec, feat_dim: int = 16,
     ``multimodal_features`` driver-query invariants): ANY codec whose
     ``decode_features`` returns a ``feat_dim``-length float vector with
     components in [0, 1) must pass — declared dimension, declared
-    range, and Arrow-batch-size invariance of the mapInPandas plumbing.
+    range, and Arrow-batch-size invariance of the mapInArrow plumbing.
     Returns the three verdict booleans keyed like the catalog query."""
     media = synthetic_media(spark, n=n)
     feats = extract_features(media, codec).toPandas() \
@@ -297,23 +299,28 @@ def check_codec_contract(spark, codec, feat_dim: int = 16,
 def extract_features(df: DataFrame, codec: DeterministicFakeCodec | None = None,
                      batch_rows: int = 64) -> DataFrame:
     """payload -> feature vector, Arrow-batched with a small batch size
-    so big blobs never pile up in one pandas frame."""
+    so big blobs never pile up in one output batch."""
     codec = codec or DeterministicFakeCodec()
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for lo in range(0, len(pdf), batch_rows):
-                chunk = pdf.iloc[lo:lo + batch_rows]
-                feats = [codec.decode_features(bytes(p)).tolist()
-                         for p in chunk["payload"]]
-                yield pd.DataFrame({
-                    "media_id": chunk["media_id"].values,
-                    "kind": chunk["kind"].values,
-                    "n_bytes": [len(bytes(p)) for p in chunk["payload"]],
-                    "feature": feats,
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _drop_spark_finders()
+        for batch in batches:
+            for lo in range(0, batch.num_rows, batch_rows):
+                chunk = batch.slice(lo, batch_rows)
+                payloads = chunk.column("payload").to_pylist()
+                feats = [np.asarray(codec.decode_features(p), np.float32)
+                         for p in payloads]
+                yield pa.RecordBatch.from_pydict({
+                    "media_id": chunk.column("media_id"),
+                    "kind": chunk.column("kind"),
+                    "n_bytes": pa.array([len(p) for p in payloads],
+                                        pa.int32()),
+                    "feature": _list_array(
+                        np.concatenate(feats), None, pa.list_(pa.float32()),
+                        [len(f) for f in feats]),
                 })
 
-    return df.mapInPandas(run, FEATURE_SCHEMA)
+    return df.mapInArrow(run, FEATURE_SCHEMA)
 
 
 def sample_frames(df: DataFrame, every_ms: int = 1000,
