@@ -33,10 +33,12 @@ from __future__ import annotations
 
 from typing import Any, Callable, Sequence
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.types import StructField, StructType, _parse_datatype_string
+
+from ..agg import STATE_COL, _drop_spark_finders, _to_arrow
 
 
 class Scan:
@@ -188,7 +190,13 @@ class GeneralScan:
     OUTPUT column is added, so the shuffle carries input rows only;
     each group must fit in one task's memory (the same contract as
     ``applyInPandasWithState`` batches — at 100 TB the keys are things
-    like user/session ids, not globals)."""
+    like user/session ids, not globals).
+
+    ``apply``, ``apply_batch`` and ``apply_stream`` hand the caller's
+    step or kernel a pandas frame, so they are the package's Python
+    passes that stay on PySpark's pandas APIs (with the streaming
+    ``applyInPandasWithState`` functions); like every pass, each
+    worker function first drops Spark's archive finders."""
 
     def __init__(self, step, init):
         self._step = step
@@ -211,6 +219,7 @@ class GeneralScan:
         step, init = self._step, self._init
 
         def fold(pdf):
+            _drop_spark_finders()
             pdf = pdf.sort_values(order_cols, kind="mergesort") \
                 .reset_index(drop=True)
             state = init() if callable(init) else init
@@ -236,6 +245,7 @@ class GeneralScan:
         order_cols = [order] if isinstance(order, str) else list(order)
 
         def fold(pdf):
+            _drop_spark_finders()
             pdf = pdf.sort_values(order_cols, kind="mergesort") \
                 .reset_index(drop=True)
             pdf[output_col] = kernel(pdf)
@@ -272,6 +282,7 @@ class GeneralScan:
                                            _parse_datatype_string(output_type))])
 
         def run(batches):
+            _drop_spark_finders()
             carry = None
             for pdf in batches:
                 if len(pdf) == 0:
@@ -297,38 +308,41 @@ def sketch_scan(states: DataFrame, keys: Sequence[str], step_col: str,
     output has one row per (keys, step) carrying the running
     ``present()`` over all steps <= step.
 
-    Scale shape: the group fed to applyInPandas is one key's STEP
+    Scale shape: the group fed to ``applyInArrow`` is one key's STEP
     rows (a bounded time dimension — days/weeks), never raw data
     rows, and each group folds sketch states sequentially — the same
-    O(steps x state) work any engine must do. ``presenter`` maps the
+    O(steps x state) work any engine must do. Key and step columns
+    pass through in their Arrow types. ``presenter`` maps the
     running sketch to the output value (default ``present()`` as
     float). Works for any Sketch: the fold is the monoid plus, so
     cumulative values equal a fresh build over the prefix (law-tested
     with HLL against exact first-occurrence counting)."""
-    from ..agg import STATE_COL
+    from pyspark.sql.pandas.types import to_arrow_type
+
     from ..sketches import from_bytes
 
     keys = list(keys)
     present_fn = presenter or (lambda sk: float(sk.present()))
+    carried = [f.name for f in states.schema.fields
+               if f.name in keys or f.name == step_col]
     key_ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                        for f in states.schema.fields
-                        if f.name in keys or f.name == step_col)
+                        for f in states.schema.fields if f.name in carried)
     schema = f"{key_ddl}, {out_col} {out_type}"
+    arrow_type = to_arrow_type(_parse_datatype_string(out_type))
 
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(step_col, kind="mergesort") \
-                 .reset_index(drop=True)
+    def fold(table: pa.Table) -> pa.Table:
+        _drop_spark_finders()
+        table = table.sort_by(step_col)
         acc = None
         out = []
-        for raw in pdf[STATE_COL]:
-            sk = from_bytes(bytes(raw))
+        for raw in table.column(STATE_COL).to_pylist():
+            sk = from_bytes(raw)
             acc = sk if acc is None else acc.merge_in_place(sk)
             out.append(present_fn(acc))
-        res = pdf[keys + [step_col]].copy()
-        res[out_col] = out
-        return res
+        return table.select(carried).append_column(
+            out_col, _to_arrow(out, arrow_type))
 
-    return states.groupBy(*keys).applyInPandas(fold, schema)
+    return states.groupBy(*keys).applyInArrow(fold, schema)
 
 
 def session_numbers_kernel(user_col: str, ts_col: str, gap: float):
