@@ -6,10 +6,17 @@ The reference's streaming pattern is Summingbird-style: per-event
 
 * ``sketch_stream_by_key`` — ``applyInPandasWithState``: group state is
   the serialized sketch; each micro-batch folds its Arrow rows in and
-  emits the refreshed estimate. Commutative merges mean late/reordered
-  events are folded losslessly — the property the reference gets from
-  monoid commutativity (no watermark needed for correctness, only for
-  state bounding).
+  emits the refreshed estimate (``sketch_state_stream_by_key`` emits
+  the state itself; both run one update, ``_keyed_stream``).
+  Commutative merges mean late/reordered events are folded losslessly
+  — the property the reference gets from monoid commutativity (no
+  watermark needed for correctness, only for state bounding).
+
+The ``applyInPandasWithState`` functions are, with ``GeneralScan``'s,
+the package's Python passes that stay on pandas: their contract is a
+pandas frame (``scan_stream_fold`` hands its kernel the frame
+``GeneralScan.apply_stream`` does). Each starts by dropping Spark's
+archive finders, as every pass does.
 * ``windowed_sketch_stream`` — event-time tumbling windows: group by
   (window(ts), keys) and keep one sketch state per window; the
   watermark expires state like ExpHist ``step`` eviction
@@ -31,7 +38,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (BinaryType, DoubleType, LongType,
                                StructField, StructType)
 
-from ..agg import _flatten_values, _update_columns
+from ..agg import _drop_spark_finders, _flatten_values, _update_columns
 from ..sketches import Sketch, from_bytes
 
 SketchFactory = Callable[[], Sketch]
@@ -71,6 +78,52 @@ def _stream_array(col: pd.Series, arrow_type: pa.DataType) -> pa.Array:
     return arr
 
 
+def _keyed_stream(sdf: DataFrame, keys: Sequence[str],
+                  value_cols: str | Sequence[str], factory: SketchFactory,
+                  out_fields: list[StructField],
+                  emit: Callable[[Sketch, int], tuple]) -> DataFrame:
+    """The one per-key stream update: a key's sketch and value count
+    live in its ``GroupState``, each micro-batch's values fold in, and
+    one row ``keys..., *emit(sketch, n_values)`` of ``out_fields`` is
+    emitted. Values are read in their Arrow types (``_stream_array``)
+    as the batch build reads them: one column name (scalar or array)
+    is flattened by ``_flatten_values``, each element a value; a list
+    of columns reaches ``update_batch`` positionally through
+    ``agg._update_columns``, each row a value. NULLs are not values,
+    and a row with a NULL in any listed column is skipped."""
+    from pyspark.sql.pandas.types import to_arrow_type
+    keys = list(keys)
+    flat = isinstance(value_cols, str)
+    cols = [value_cols] if flat else list(value_cols)
+    types = [to_arrow_type(sdf.schema[c].dataType) for c in cols]
+    out_schema = StructType([sdf.schema[k] for k in keys] + out_fields)
+    names = [f.name for f in out_schema.fields]
+    state_schema = StructType([
+        StructField("blob", BinaryType(), True),
+        StructField("n", LongType(), True)])
+
+    def update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
+        _drop_spark_finders()
+        if state.exists:
+            blob, n = state.get
+            sk = from_bytes(bytes(blob))
+        else:
+            sk, n = factory(), 0
+        for pdf in pdfs:
+            arrays = [_stream_array(pdf[c], t) for c, t in zip(cols, types)]
+            args = ([_flatten_values(arrays[0])[0]] if flat
+                    else _update_columns(arrays)[0])
+            if len(args[0]):
+                sk.update_batch(*args)
+                n += len(args[0])
+        state.update((sk.to_bytes(), n))
+        yield pd.DataFrame([dict(zip(names, (*key, *emit(sk, n))))])
+
+    return sdf.groupBy(*keys).applyInPandasWithState(
+        update, out_schema, state_schema, "update",
+        GroupStateTimeout.NoTimeout)
+
+
 def sketch_stream_by_key(sdf: DataFrame, keys: Sequence[str], value_col: str,
                          factory: SketchFactory) -> DataFrame:
     """Streaming per-key sketch with persistent state.
@@ -81,38 +134,11 @@ def sketch_stream_by_key(sdf: DataFrame, keys: Sequence[str], value_col: str,
     it (``_stream_array``): NULLs are not values, so a stream and
     ``agg.sketch_by_key`` over the same rows build the same state.
     """
-    from pyspark.sql.pandas.types import to_arrow_type
-    keys = list(keys)
-    value_type = to_arrow_type(sdf.schema[value_col].dataType)
-    out_schema = StructType(
-        [sdf.schema[k] for k in keys]
-        + [StructField("estimate", DoubleType(), True),
-           StructField("n_values", LongType(), False)])
-    state_schema = StructType([
-        StructField("blob", BinaryType(), True),
-        StructField("n", LongType(), True)])
-
-    def update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if state.exists:
-            blob, n = state.get
-            sk = from_bytes(bytes(blob))
-        else:
-            sk, n = factory(), 0
-        for pdf in pdfs:
-            vals, _ = _flatten_values(_stream_array(pdf[value_col],
-                                                    value_type))
-            if len(vals):
-                sk.update_batch(vals)
-                n += len(vals)
-        state.update((sk.to_bytes(), n))
-        row = {k: v for k, v in zip(keys, key)}
-        row["estimate"] = _estimate_of(sk)
-        row["n_values"] = n
-        yield pd.DataFrame([row])
-
-    return sdf.groupBy(*keys).applyInPandasWithState(
-        update, out_schema, state_schema, "update",
-        GroupStateTimeout.NoTimeout)
+    return _keyed_stream(
+        sdf, keys, value_col, factory,
+        [StructField("estimate", DoubleType(), True),
+         StructField("n_values", LongType(), False)],
+        lambda sk, n: (_estimate_of(sk), n))
 
 
 def windowed_sketch_stream(sdf: DataFrame, ts_col: str, window: str,
@@ -168,39 +194,11 @@ def sketch_state_stream_by_key(sdf: DataFrame, keys: Sequence[str],
     column stays an integer.
 
     Output per micro-batch: keys..., state binary, n_values long."""
-    from pyspark.sql.pandas.types import to_arrow_type
-    keys = list(keys)
-    update_cols = list(update_cols)
-    types = [to_arrow_type(sdf.schema[c].dataType) for c in update_cols]
-    out_schema = StructType(
-        [sdf.schema[k] for k in keys]
-        + [StructField("state", BinaryType(), False),
-           StructField("n_values", LongType(), False)])
-    state_schema = StructType([
-        StructField("blob", BinaryType(), True),
-        StructField("n", LongType(), True)])
-
-    def update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if state.exists:
-            blob, n = state.get
-            sk = from_bytes(bytes(blob))
-        else:
-            sk, n = factory(), 0
-        for pdf in pdfs:
-            args, _ = _update_columns([_stream_array(pdf[c], t)
-                                       for c, t in zip(update_cols, types)])
-            if len(args[0]):
-                sk.update_batch(*args)
-                n += len(args[0])
-        state.update((sk.to_bytes(), n))
-        row = {k: v for k, v in zip(keys, key)}
-        row["state"] = sk.to_bytes()
-        row["n_values"] = n
-        yield pd.DataFrame([row])
-
-    return sdf.groupBy(*keys).applyInPandasWithState(
-        update, out_schema, state_schema, "update",
-        GroupStateTimeout.NoTimeout)
+    return _keyed_stream(
+        sdf, keys, update_cols, factory,
+        [StructField("state", BinaryType(), False),
+         StructField("n_values", LongType(), False)],
+        lambda sk, n: (sk.to_bytes(), n))
 
 
 def scan_stream_fold(sdf: DataFrame, keys: Sequence[str],
@@ -250,6 +248,7 @@ def scan_stream_fold(sdf: DataFrame, keys: Sequence[str],
     state_schema = StructType([StructField("carry", BinaryType(), True)])
 
     def update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
+        _drop_spark_finders()
         carry = (pickle.loads(bytes(state.get[0]))
                  if state.exists else None)
         # the group's micro-batch rows arrive as an ITERATOR of
@@ -270,6 +269,7 @@ def scan_stream_fold(sdf: DataFrame, keys: Sequence[str],
 
     def update_reorder(key, pdfs: Iterable[pd.DataFrame],
                        state: GroupState):
+        _drop_spark_finders()
         carry, buf = (pickle.loads(bytes(state.get[0]))
                       if state.exists else (None, None))
         parts = [p for p in pdfs if len(p)]
