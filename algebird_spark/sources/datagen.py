@@ -27,6 +27,7 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..agg import _drop_spark_finders
 from ..functions.hashing import murmur64_int64
 
 TOKEN_SCHEMA = pa.schema([
@@ -113,6 +114,7 @@ def token_table(spark: SparkSession, rows: int, n_sources: int = 8,
     base = spark.range(0, rows, numPartitions=partitions)
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _drop_spark_finders()
         for batch in batches:
             ids = batch.column(0).to_numpy()
             # cap token blowup per output batch: split into ~64k-row chunks
