@@ -175,11 +175,11 @@ def test_no_rdd_partition_probe_in_library():
 
 
 def test_merged_state_probes_go_through_agg_probe():
-    """No ``pandas_udf``- or ``arrow_udf``-decorated function outside
-    ``agg.py`` decodes a state (``from_bytes``): a point query of one
-    merged state is ``agg.probe``. ``features._rank_broadcast`` is the
-    one exception: it looks up a dict of per-group states, not one
-    merged state."""
+    """No column UDF (an ``arrow_udf``-decorated function; the pandas
+    UDF API is refused package-wide) outside ``agg.py`` decodes a state
+    (``from_bytes``): a point query of one merged state is
+    ``agg.probe``. ``features._rank_broadcast`` is the one exception:
+    it looks up a dict of per-group states, not one merged state."""
     root = pathlib.Path(__file__).resolve().parent.parent / "algebird_spark"
 
     def name(node) -> str | None:
@@ -204,33 +204,125 @@ def test_merged_state_probes_go_through_agg_probe():
     assert set(hits) == {("operators/features.py", "_rank_broadcast")}
 
 
-def test_agg_worker_functions_drop_spark_finders_first():
-    """Every Python worker function of ``agg.py`` (each function handed
-    to ``mapInArrow`` or ``arrow_udf``) first calls
-    ``_drop_spark_finders``, so no pass leaves Spark's archive finders
-    for the next task's ``importlib.invalidate_caches()`` to re-read."""
-    path = (pathlib.Path(__file__).resolve().parent.parent
-            / "algebird_spark" / "agg.py")
-    tree = ast.parse(path.read_text())
-    workers = {}
-    for outer in tree.body:
-        if not isinstance(outer, ast.FunctionDef):
-            continue
-        handed = {c.args[0].id for c in ast.walk(outer)
-                  if isinstance(c, ast.Call) and c.args
-                  and isinstance(c.args[0], ast.Name)
-                  and getattr(c.func, "attr", None) in ("mapInArrow",
-                                                        "arrow_udf")}
-        for fn in ast.walk(outer):
-            if isinstance(fn, ast.FunctionDef) and fn.name in handed:
-                first = fn.body[0].value if isinstance(
-                    fn.body[0], ast.Expr) else None
-                workers[outer.name] = (
-                    isinstance(first, ast.Call)
-                    and getattr(first.func, "id", None)
-                    == "_drop_spark_finders")
-    assert workers == {"_combine": True, "_fold_sorted": True,
-                       "_present": True, "probe": True}
+# Every Python pass of the package is handed one of these; a pandas one
+# only where its contract hands the caller's kernel a pandas frame.
+_PASS_APIS = {"mapInArrow", "arrow_udf", "applyInArrow", "mapInPandas",
+              "pandas_udf", "applyInPandas", "applyInPandasWithState"}
+_PANDAS_APIS = {"mapInPandas", "pandas_udf", "applyInPandas",
+                "applyInPandasWithState"}
+_PANDAS_PASSES = {("operators/scan.py", "GeneralScan.apply"),
+                  ("operators/scan.py", "GeneralScan.apply_batch"),
+                  ("operators/scan.py", "GeneralScan.apply_stream"),
+                  ("streaming/stateful.py", "_keyed_stream"),
+                  ("streaming/stateful.py", "scan_stream_fold")}
+
+
+def _python_passes(root: pathlib.Path) -> list[tuple]:
+    """(module, enclosing qualname, API, worker) for every function the
+    package hands to a Python-pass API, as a call's first argument or
+    as a decorator. The worker is the named function's ``FunctionDef``
+    (looked up from the innermost enclosing scope out), else the
+    argument node itself (a lambda, a call, ...)."""
+    found = []
+
+    def api(call: ast.Call) -> str | None:
+        return getattr(call.func, "attr", getattr(call.func, "id", None))
+
+    def worker(arg, scope: list):
+        for outer in reversed(scope if isinstance(arg, ast.Name) else []):
+            for fn in ast.walk(outer):
+                if (isinstance(fn, ast.FunctionDef) and fn is not outer
+                        and fn.name == arg.id):
+                    return fn
+        return arg
+
+    def visit(node, scope: list, rel: str) -> None:
+        where = ".".join(n.name for n in scope[1:])
+        children = list(ast.iter_child_nodes(node))
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            # a decorator call (``@F.arrow_udf("long")``) is the factory;
+            # the decorated function is the worker
+            found.extend((rel, where, api(d), node)
+                         for d in node.decorator_list
+                         if isinstance(d, ast.Call) and api(d) in _PASS_APIS)
+            children, scope = node.body, scope + [node]
+        elif isinstance(node, ast.Call) and api(node) in _PASS_APIS:
+            found.append((rel, where, api(node),
+                          worker(node.args[0], scope) if node.args
+                          else node))
+        for child in children:
+            visit(child, scope, rel)
+
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        visit(tree, [tree], str(path.relative_to(root)))
+    return found
+
+
+def test_every_python_pass_drops_spark_finders_first():
+    """Every function the package hands to ``mapInArrow``,
+    ``arrow_udf``, ``applyInArrow`` or a pandas Python-pass API, as an
+    argument or a decorator, is a named function whose first statement
+    is ``_drop_spark_finders()``, so no pass leaves Spark's archive
+    finders for the next task's ``importlib.invalidate_caches()`` to
+    re-read. A lambda or any other expression is refused. The pandas
+    APIs appear only in the passes whose contract hands the caller's
+    kernel a pandas frame: ``GeneralScan.apply``, ``apply_batch`` and
+    ``apply_stream`` and the streaming state functions."""
+    root = pathlib.Path(__file__).resolve().parent.parent / "algebird_spark"
+    passes = _python_passes(root)
+    late, pandas = [], set()
+    for rel, where, api, fn in passes:
+        first = (fn.body[0].value if isinstance(fn, ast.FunctionDef)
+                 and isinstance(fn.body[0], ast.Expr) else None)
+        if not (isinstance(first, ast.Call)
+                and getattr(first.func, "id", None) == "_drop_spark_finders"):
+            late.append((rel, where, api, getattr(fn, "name", None)
+                         or ast.unparse(fn)))
+        if api in _PANDAS_APIS:
+            pandas.add((rel, where))
+    assert late == []
+    assert pandas == _PANDAS_PASSES
+    # the guard sees the passes of every module that has them
+    assert {rel for rel, *_ in passes} == {
+        "agg.py", "queries.py", "operators/dedup.py",
+        "operators/features.py", "operators/multimodal.py",
+        "operators/pq.py", "operators/scan.py", "operators/similarity.py",
+        "operators/text.py", "operators/weighted_minhash.py",
+        "sources/datagen.py", "streaming/stateful.py"}
+
+
+def test_python_pass_queries_plan_no_pandas_node(spark):
+    """The catalog queries whose Python passes moved to Arrow run no
+    pandas plan node in any of their jobs: every SQL execution a query
+    starts (read from Spark's SQL status store, so the driver-side
+    jobs of ``cdf_normalize`` and ``fd_covariance`` count too) holds a
+    ``MapInArrow`` or ``ArrowEvalPython`` node and no ``MapInPandas``,
+    ``FlatMapGroupsInPandas`` or ``FlatMapCoGroupsInPandas``."""
+    import __spark_entry__ as entry
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def execution_plans() -> dict:
+        bus.waitUntilEmpty()
+        execs = store.executionsList()
+        return {execs.apply(i).executionId():
+                execs.apply(i).physicalPlanDescription()
+                for i in range(execs.size())}
+
+    queries = entry.queries()
+    for name in ("ngram_jaccard_dedup", "simhash_near_dup",
+                 "text_repetition", "minhash_lsh_recall", "cdf_normalize",
+                 "fd_covariance"):
+        before = execution_plans()
+        queries[name](spark, "/root/testdata/sf0.001").collect()
+        plans = [p for i, p in execution_plans().items() if i not in before]
+        nodes = {n for p in plans for n in re.findall(
+            r"\b(MapInArrow|ArrowEvalPython|MapInPandas"
+            r"|FlatMapGroupsInPandas|FlatMapCoGroupsInPandas)\b", p)}
+        assert nodes and nodes <= {"MapInArrow", "ArrowEvalPython"}, \
+            (name, nodes)
 
 
 def test_scan_pushdown_and_pruning(spark):
