@@ -4,8 +4,8 @@ n-gram Jaccard verification. Scale design:
 
 * exact: hash-groupBy on a 128-bit fingerprint — one shuffle on an
   evenly distributed key; at 100 TB use the fingerprint, never the text.
-* MinHash LSH: signature per doc (vectorized Arrow UDF, one kernel
-  call per Arrow batch), explode band buckets, self-join on (band, bucket) — the
+* MinHash LSH: signature per doc (vectorized Arrow UDF), explode
+  band buckets, self-join on (band, bucket) — the
   join key space is uniform, so no skew; candidate pairs then verified
   with exact shingle Jaccard only on the (tiny) candidate set.
 * SimHash: 64-bit fingerprint via one explode+groupBy (text.py), then
@@ -136,9 +136,10 @@ def _shingle_hashes_batch(texts, shingle_n: int, seed: int):
 def shingle_hashes_udf(shingle_n: int, seed: int = 12345678,
                        full_only: bool = False):
     """Arrow UDF: array<long> of DISTINCT word n-gram shingle hashes
-    per doc, ascending, via the same batch-vectorized kernel the
-    MinHash signatures use (ONE murmur call per Arrow batch for every
-    token of every doc; one lexsort dedups every doc's shingles). Replaces the interpreted higher-order-function
+    per doc, ascending (``_distinct_shingles``: the same
+    batch-vectorized kernel the MinHash signatures use, ONE murmur call
+    per Arrow batch for every token of every doc, deduped by one
+    lexsort). Replaces the interpreted higher-order-function
     expression, which evaluated a lambda + array slice per shingle —
     measured ~90k shingles/s/core vs effectively hash-bound here; at
     100 TB each input byte must hash once, not per-shingle.
@@ -153,21 +154,31 @@ def shingle_hashes_udf(shingle_n: int, seed: int = 12345678,
     def sh(texts: Iterator[pa.Array]) -> Iterator[pa.Array]:
         _drop_spark_finders()
         for col in texts:
-            hv, starts, lens = _shingle_hashes_batch(col.to_pylist(),
-                                                     shingle_n, seed)
-            hv = hv.view(np.int64)
-            doc = np.repeat(np.arange(len(lens)), np.diff(starts))
-            if full_only:
-                keep = lens[doc] >= shingle_n
-                doc, hv = doc[keep], hv[keep]
-            o = np.lexsort((hv, doc))
-            doc, hv = doc[o], hv[o]
-            first = np.ones(len(doc), dtype=bool)
-            first[1:] = (doc[1:] != doc[:-1]) | (hv[1:] != hv[:-1])
-            yield _list_array(hv[first], None, pa.list_(pa.int64()),
-                              np.bincount(doc[first], minlength=len(lens)))
+            doc, hv, lens = _distinct_shingles(col.to_pylist(), shingle_n,
+                                               seed, full_only)
+            yield _list_array(hv, None, pa.list_(pa.int64()),
+                              np.bincount(doc, minlength=len(lens)))
 
     return sh
+
+
+def _distinct_shingles(texts, shingle_n: int, seed: int,
+                       full_only: bool = False):
+    """(doc index, shingle hash int64, per-doc token counts) of every
+    DISTINCT (doc, shingle) pair of a batch of texts, doc-major with
+    ascending hashes: ``_shingle_hashes_batch`` deduped by one lexsort.
+    ``full_only`` drops docs shorter than ``shingle_n`` tokens."""
+    hv, starts, lens = _shingle_hashes_batch(texts, shingle_n, seed)
+    hv = hv.view(np.int64)
+    doc = np.repeat(np.arange(len(lens)), np.diff(starts))
+    if full_only:
+        keep = lens[doc] >= shingle_n
+        doc, hv = doc[keep], hv[keep]
+    o = np.lexsort((hv, doc))
+    doc, hv = doc[o], hv[o]
+    first = np.ones(len(doc), dtype=bool)
+    first[1:] = (doc[1:] != doc[:-1]) | (hv[1:] != hv[:-1])
+    return doc[first], hv[first], lens
 
 
 def _minhash_matrix(texts: list, num_perm: int, shingle_n: int, seed: int,
@@ -200,6 +211,27 @@ def _minhash_params(num_perm: int, seed: int):
     return p61, a, b
 
 
+def _signature_udf(signatures, bands: int | None = None):
+    """Arrow UDF: array<long> per doc from ``signatures(texts) -> (sigs
+    int64 (n_docs, num_perm), per-doc validity)``: each doc's signature,
+    or with ``bands`` its band buckets (``band_buckets_of_signature``).
+    A doc with no shingles (empty/whitespace-only under the PYTHON
+    tokenizer, which splits more whitespace than Spark's trim sees)
+    gets NULL, not a shared zero signature — the banding filter drops
+    it, so it can never form a quadratic sentinel bucket."""
+
+    @F.arrow_udf("array<long>")
+    def sig(texts: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        _drop_spark_finders()
+        for col in texts:
+            sigs, valid = signatures(col.to_pylist())
+            rows = (sigs[valid] if bands is None
+                    else band_buckets_of_signature(sigs[valid], bands))
+            yield _list_array(rows, valid, pa.list_(pa.int64()))
+
+    return sig
+
+
 def add_minhash_signature(df: DataFrame, text_col: str = "text",
                           num_perm: int = 64, shingle_n: int = 3,
                           seed: int = 12345678,
@@ -213,20 +245,8 @@ def add_minhash_signature(df: DataFrame, text_col: str = "text",
     Python is ``str.split``. Duplicate shingles need no dedup (they
     cannot change a minimum)."""
     p61, a, b = _minhash_params(num_perm, seed)
-
-    @F.arrow_udf("array<long>")
-    def sig(texts: Iterator[pa.Array]) -> Iterator[pa.Array]:
-        _drop_spark_finders()
-        for col in texts:
-            sigs, valid = _minhash_matrix(col.to_pylist(), num_perm,
-                                          shingle_n, seed, a, b, p61)
-            # zero-shingle docs (empty/whitespace-only under the
-            # PYTHON tokenizer, which splits more whitespace than
-            # Spark's trim sees) get NULL, not a shared zero signature
-            # — the banding filter drops them, so they can never form
-            # a quadratic sentinel bucket
-            yield _list_array(sigs[valid], valid, pa.list_(pa.int64()))
-
+    sig = _signature_udf(lambda texts: _minhash_matrix(
+        texts, num_perm, shingle_n, seed, a, b, p61))
     return df.withColumn(alias, sig(F.col(text_col)))
 
 
@@ -266,16 +286,8 @@ def add_minhash_bands(df: DataFrame, text_col: str = "text",
     if num_perm % bands:
         raise ValueError("bands must divide num_perm")
     p61, a, b = _minhash_params(num_perm, seed)
-
-    @F.arrow_udf("array<long>")
-    def bk(texts: Iterator[pa.Array]) -> Iterator[pa.Array]:
-        _drop_spark_finders()
-        for col in texts:
-            sigs, valid = _minhash_matrix(col.to_pylist(), num_perm,
-                                          shingle_n, seed, a, b, p61)
-            yield _list_array(band_buckets_of_signature(sigs[valid], bands),
-                              valid, pa.list_(pa.int64()))
-
+    bk = _signature_udf(lambda texts: _minhash_matrix(
+        texts, num_perm, shingle_n, seed, a, b, p61), bands)
     return df.withColumn(alias, bk(F.col(text_col)))
 
 
@@ -424,23 +436,11 @@ def _collect_shingle_index(src: DataFrame, id_col: str, text_col: str,
     def kern(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         _drop_spark_finders()
         for batch in batches:
-            texts = batch.column(
-                batch.schema.get_field_index(text_col)).to_pylist()
-            bids = batch.column(batch.schema.get_field_index(id_col)) \
-                .to_numpy(zero_copy_only=False).astype(np.int64)
-            if len(bids) == 0:
-                continue
-            hv, starts, _ = _shingle_hashes_batch(texts, shingle_n, seed)
-            hv = hv.view(np.int64)
-            doc_rep = np.repeat(np.arange(len(bids), dtype=np.int64),
-                                np.diff(starts))
-            o = np.lexsort((hv, doc_rep))
-            d_s, h_s = doc_rep[o], hv[o]
-            keep = np.concatenate(
-                ([True], (d_s[1:] != d_s[:-1]) | (h_s[1:] != h_s[:-1])))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(bids[d_s[keep]]), pa.array(h_s[keep])],
-                names=["doc_id", "shingle"])
+            bids = batch.column(id_col).to_numpy(zero_copy_only=False)
+            doc, hv, _ = _distinct_shingles(
+                batch.column(text_col).to_pylist(), shingle_n, seed)
+            yield pa.RecordBatch.from_pydict(
+                {"doc_id": bids[doc].astype(np.int64), "shingle": hv})
 
     tbl = (src.select(F.col(id_col).alias(id_col), text_col)
            .filter(has_tokens(text_col))

@@ -23,14 +23,12 @@ relative — far below the 1/sqrt(num_perm) estimator noise.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..agg import _drop_spark_finders, _list_array
+from ..agg import _drop_spark_finders
 from ..cache import Scope
 from ..functions.hashing import _vfmix64, affine_mod_p61
 
@@ -40,8 +38,6 @@ _P61 = np.uint64((1 << 61) - 1)
 def _doc_token_weights(texts, seed: int):
     """(token_hash uint64, count float64, doc_starts int64) — distinct
     tokens per doc with their in-doc frequencies, batch-vectorized."""
-    import pyarrow as pa
-
     from ..functions.hashing import murmur128_any
 
     tok_lists = [(t or "").lower().split() for t in texts]
@@ -119,23 +115,23 @@ def icws_signatures(uh: np.ndarray, w: np.ndarray, doc_starts: np.ndarray,
     return out
 
 
+def _icws_matrix(texts, num_perm: int, seed: int):
+    """(ICWS signatures int64 (n_docs, num_perm), per-doc validity: the
+    doc has a token) for a batch of texts."""
+    uh, w, starts = _doc_token_weights(texts, seed)
+    return (icws_signatures(uh, w, starts, num_perm, seed),
+            np.diff(starts) > 0)
+
+
 def add_weighted_minhash_signature(df: DataFrame, text_col: str = "text",
                                    num_perm: int = 64,
                                    seed: int = 87654321,
                                    alias: str = "wminhash") -> DataFrame:
-    """array<long> ICWS signature per doc over word-frequency weights."""
+    """array<long> ICWS signature per doc over word-frequency weights;
+    a zero-token doc gets NULL (see ``dedup._signature_udf``)."""
+    from .dedup import _signature_udf
 
-    @F.arrow_udf("array<long>")
-    def sig(texts: Iterator[pa.Array]) -> Iterator[pa.Array]:
-        _drop_spark_finders()
-        for col in texts:
-            uh, w, starts = _doc_token_weights(col.to_pylist(), seed)
-            sigs = icws_signatures(uh, w, starts, num_perm, seed)
-            # zero-token docs -> NULL signature (see dedup.py: the
-            # banding filter drops them; no shared sentinel bucket)
-            valid = np.diff(starts) > 0
-            yield _list_array(sigs[valid], valid, pa.list_(pa.int64()))
-
+    sig = _signature_udf(lambda texts: _icws_matrix(texts, num_perm, seed))
     return df.withColumn(alias, sig(F.col(text_col)))
 
 
@@ -149,21 +145,12 @@ def add_weighted_minhash_bands(df: DataFrame, text_col: str = "text",
     the JVM instead of ``num_perm`` and skip the expression-tree
     banding). Bucket values are shared with the set-MinHash banding
     code path (band_buckets_of_signature)."""
-    from .dedup import band_buckets_of_signature
+    from .dedup import _signature_udf
 
     if num_perm % bands:
         raise ValueError("bands must divide num_perm")
-
-    @F.arrow_udf("array<long>")
-    def bk(texts: Iterator[pa.Array]) -> Iterator[pa.Array]:
-        _drop_spark_finders()
-        for col in texts:
-            uh, w, starts = _doc_token_weights(col.to_pylist(), seed)
-            sigs = icws_signatures(uh, w, starts, num_perm, seed)
-            valid = np.diff(starts) > 0
-            yield _list_array(band_buckets_of_signature(sigs[valid], bands),
-                              valid, pa.list_(pa.int64()))
-
+    bk = _signature_udf(lambda texts: _icws_matrix(texts, num_perm, seed),
+                        bands)
     return df.withColumn(alias, bk(F.col(text_col)))
 
 
