@@ -142,12 +142,11 @@ def train_pq_codebook(vectors: DataFrame, m: int, k_sub: int = 256,
                     sums[j, sa[starts]] += np.add.reduceat(
                         subs[j][order], starts, axis=0)
                     counts[j] += np.bincount(assign, minlength=k_eff)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([counts.ravel().tolist()],
-                          type=pa.list_(pa.int64())),
-                 pa.array([sums.ravel().tolist()],
-                          type=pa.list_(pa.float64()))],
-                names=["counts", "sums"])
+            yield pa.RecordBatch.from_pydict({
+                "counts": _list_array(counts.reshape(1, -1), None,
+                                      pa.list_(pa.int64())),
+                "sums": _list_array(sums.reshape(1, -1), None,
+                                    pa.list_(pa.float64()))})
 
         for _ in range(n_iter):
             counts = np.zeros((m, k_eff), dtype=np.int64)
@@ -339,31 +338,16 @@ def ivf_pq_topk(encoded: DataFrame, queries: DataFrame, k: int,
             codes = _code_matrix(batch.column("pq_code"), m)
             lists = batch.column("__list").to_numpy(zero_copy_only=False)
             ids = batch.column(id_col).to_numpy(zero_copy_only=False)
-            out_q, out_id, out_d = [], [], []
+            best = []
             for qi in range(nq):
                 for li in probed[qi]:
                     sel = lists == li
-                    if not sel.any():
-                        continue
-                    d = tables[(qi, int(li))][gather_cols,
-                                              codes[sel]].sum(axis=1)
-                    if len(d) > keep:
-                        # (dist, id) lexsort, NOT argpartition: ADC
-                        # ties are common (cluster-mates share codes),
-                        # and an arbitrary tied survivor set would make
-                        # results depend on physical partitioning
-                        cand = np.lexsort((ids[sel], d))[:keep]
-                    else:
-                        cand = np.arange(len(d))
-                    out_q.append(np.full(len(cand), q_ids[qi]))
-                    out_id.append(ids[sel][cand])
-                    out_d.append(d[cand])
-            if not out_q:
-                continue
-            yield pa.RecordBatch.from_pydict({
-                q_id_col: np.concatenate(out_q),
-                id_col: np.concatenate(out_id),
-                "dist": np.concatenate(out_d)})
+                    if sel.any():
+                        best.append(_best(q_ids[qi], ids[sel], tables[
+                            (qi, int(li))][gather_cols, codes[sel]]
+                            .sum(axis=1), keep))
+            if best:
+                yield _candidates(best, q_id_col, id_col)
 
     cand = encoded.select(id_col, "__list", "pq_code").mapInArrow(
         scan, f"{q_id_col} long, {id_col} long, dist double")
@@ -472,30 +456,31 @@ def pq_topk(encoded: DataFrame, queries: DataFrame, k: int,
                 continue
             codes = _code_matrix(batch.column(code_col), m)
             ids = batch.column(id_col).to_numpy(zero_copy_only=False)
-            out_q, out_id, out_d = [], [], []
             gather_cols = np.arange(m)
-            for qi in range(nq):
-                d = tables[qi][gather_cols, codes].sum(axis=1)
-                if len(d) > keep:
-                    # (dist, id) lexsort, NOT argpartition: ADC ties
-                    # are common (duplicate codes), and an arbitrary
-                    # tied survivor set would make results depend on
-                    # physical partitioning
-                    cand = np.lexsort((ids, d))[:keep]
-                else:
-                    cand = np.arange(len(d))
-                out_q.append(np.full(len(cand), q_ids[qi]))
-                out_id.append(ids[cand])
-                out_d.append(d[cand])
-            yield pa.RecordBatch.from_pydict({
-                q_id_col: np.concatenate(out_q),
-                id_col: np.concatenate(out_id),
-                "dist": np.concatenate(out_d)})
+            yield _candidates([_best(q_ids[qi], ids, tables[qi][
+                gather_cols, codes].sum(axis=1), keep) for qi in range(nq)],
+                q_id_col, id_col)
 
     cand = encoded.select(id_col, code_col).mapInArrow(
         scan, f"{q_id_col} long, {id_col} long, dist double")
     return _top_k(cand, k, keep, rerank, vectors, q_ids, q_mat,
                   id_col, vec_col, q_id_col)
+
+
+def _best(q_id, ids: np.ndarray, d: np.ndarray, keep: int) -> list:
+    """One query's ``keep`` best ADC candidates in a batch as [q_ids,
+    ids, dists], by (dist, id): a lexsort, NOT argpartition — ADC ties
+    are common (cluster-mates share codes), and an arbitrary tied
+    survivor set would make results depend on physical partitioning."""
+    cand = np.lexsort((ids, d))[:keep]
+    return [np.full(len(cand), q_id), ids[cand], d[cand]]
+
+
+def _candidates(best: list, q_id_col: str, id_col: str) -> pa.RecordBatch:
+    """The ``q_id, id, dist`` batch of several ``_best`` results."""
+    return pa.RecordBatch.from_pydict({
+        name: np.concatenate(cols)
+        for name, cols in zip([q_id_col, id_col, "dist"], zip(*best))})
 
 
 def _top_k(cand: DataFrame, k: int, keep: int, rerank: int,
