@@ -133,19 +133,10 @@ def cosine_topk_kernel(vectors: DataFrame, queries: DataFrame, k: int,
             top = np.take_along_axis(by_id, by_score, 1)[:, :k]
             best = np.take_along_axis(cand, top, 1)
             best_id = np.take_along_axis(cand_id, top, 1)
-        rows = []
-        for qi in range(len(q_ids)):
-            keep = np.isfinite(best[qi])
-            for c, i in zip(best[qi][keep], best_id[qi][keep]):
-                rows.append((int(q_ids[qi]), int(i), float(c)))
-        if rows:
-            qs, vs, cs = zip(*rows)
-        else:
-            qs, vs, cs = (), (), ()
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(qs, type=pa.int64()), pa.array(vs, type=pa.int64()),
-             pa.array(cs, type=pa.float64())],
-            names=[q_id_col, id_col, "cos"])
+        keep = np.isfinite(best)
+        yield pa.RecordBatch.from_pydict({
+            q_id_col: np.repeat(q_ids, keep.sum(axis=1)),
+            id_col: best_id[keep], "cos": best[keep]})
 
     cands = vectors.select(id_col, vec_col).mapInArrow(
         score, f"{q_id_col} long, {id_col} long, cos double")
@@ -399,10 +390,10 @@ def _lloyd_partials_df(vectors: DataFrame, centroids: np.ndarray,
             starts = np.flatnonzero(np.r_[True, sa[1:] != sa[:-1]])
             sums[sa[starts]] += np.add.reduceat(m[order], starts, axis=0)
             counts += np.bincount(assign, minlength=n_lists)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([counts.tolist()], type=pa.list_(pa.int64())),
-             pa.array([sums.ravel().tolist()], type=pa.list_(pa.float64()))],
-            names=["counts", "sums"])
+        yield pa.RecordBatch.from_pydict({
+            "counts": _list_array(counts[None], None, pa.list_(pa.int64())),
+            "sums": _list_array(sums.reshape(1, -1), None,
+                                pa.list_(pa.float64()))})
 
     return vectors.select(vec_col).mapInArrow(
         partials, "counts array<long>, sums array<double>")
