@@ -192,17 +192,16 @@ class GeneralScan:
     ``applyInPandasWithState`` batches — at 100 TB the keys are things
     like user/session ids, not globals).
 
-    ``apply``, ``apply_batch`` and ``apply_stream`` hand the caller's
-    step or kernel a pandas frame, so they are the package's Python
-    passes that stay on PySpark's pandas APIs (with the streaming
-    ``applyInPandasWithState`` functions); like every pass, each
-    worker function first drops Spark's archive finders."""
+    ``apply_batch`` and ``apply_stream`` (and so ``apply``) hand the
+    caller's kernel a pandas frame, so they stay on PySpark's pandas
+    APIs, as the streaming state functions do."""
 
     def __init__(self, step, init):
         self._step = step
         self._init = init
 
-    def _out_schema(self, df: DataFrame, output_col: str,
+    @staticmethod
+    def _out_schema(df: DataFrame, output_col: str,
                     output_type: str) -> StructType:
         return StructType(list(df.schema.fields)
                           + [StructField(output_col,
@@ -214,24 +213,20 @@ class GeneralScan:
         """Row-at-a-time ``step(state, row) -> (state, out)`` fold;
         ``row`` is a namedtuple of the group's columns. Fully general,
         NOT vectorized — prefer :meth:`apply_batch` or the window
-        Scans when the transition allows."""
-        order_cols = [order] if isinstance(order, str) else list(order)
+        Scans when the transition allows. Runs as :meth:`apply_batch`
+        with the row loop as its kernel."""
         step, init = self._step, self._init
 
-        def fold(pdf):
-            _drop_spark_finders()
-            pdf = pdf.sort_values(order_cols, kind="mergesort") \
-                .reset_index(drop=True)
+        def kernel(pdf):
             state = init() if callable(init) else init
             outs = []
             for row in pdf.itertuples(index=False):
                 state, o = step(state, row)
                 outs.append(o)
-            pdf[output_col] = outs
-            return pdf
+            return outs
 
-        return df.groupBy(*keys).applyInPandas(
-            fold, self._out_schema(df, output_col, output_type))
+        return GeneralScan.apply_batch(df, keys, order, kernel, output_col,
+                                       output_type)
 
     @staticmethod
     def apply_batch(df: DataFrame, keys: Sequence[str],
@@ -251,10 +246,8 @@ class GeneralScan:
             pdf[output_col] = kernel(pdf)
             return pdf
 
-        schema = StructType(list(df.schema.fields)
-                            + [StructField(output_col,
-                                           _parse_datatype_string(output_type))])
-        return df.groupBy(*keys).applyInPandas(fold, schema)
+        return df.groupBy(*keys).applyInPandas(
+            fold, GeneralScan._out_schema(df, output_col, output_type))
 
     @staticmethod
     def apply_stream(df: DataFrame, keys: Sequence[str],
@@ -277,9 +270,7 @@ class GeneralScan:
         state is O(1), and groups may span Arrow batches freely."""
         order_cols = [order] if isinstance(order, str) else list(order)
         key_cols = list(keys)
-        schema = StructType(list(df.schema.fields)
-                            + [StructField(output_col,
-                                           _parse_datatype_string(output_type))])
+        schema = GeneralScan._out_schema(df, output_col, output_type)
 
         def run(batches):
             _drop_spark_finders()
@@ -311,8 +302,7 @@ def sketch_scan(states: DataFrame, keys: Sequence[str], step_col: str,
     Scale shape: the group fed to ``applyInArrow`` is one key's STEP
     rows (a bounded time dimension — days/weeks), never raw data
     rows, and each group folds sketch states sequentially — the same
-    O(steps x state) work any engine must do. Key and step columns
-    pass through in their Arrow types. ``presenter`` maps the
+    O(steps x state) work any engine must do. ``presenter`` maps the
     running sketch to the output value (default ``present()`` as
     float). Works for any Sketch: the fold is the monoid plus, so
     cumulative values equal a fresh build over the prefix (law-tested

@@ -210,8 +210,7 @@ _PASS_APIS = {"mapInArrow", "arrow_udf", "applyInArrow", "mapInPandas",
               "pandas_udf", "applyInPandas", "applyInPandasWithState"}
 _PANDAS_APIS = {"mapInPandas", "pandas_udf", "applyInPandas",
                 "applyInPandasWithState"}
-_PANDAS_PASSES = {("operators/scan.py", "GeneralScan.apply"),
-                  ("operators/scan.py", "GeneralScan.apply_batch"),
+_PANDAS_PASSES = {("operators/scan.py", "GeneralScan.apply_batch"),
                   ("operators/scan.py", "GeneralScan.apply_stream"),
                   ("streaming/stateful.py", "_keyed_stream"),
                   ("streaming/stateful.py", "scan_stream_fold")}
@@ -267,8 +266,9 @@ def test_every_python_pass_drops_spark_finders_first():
     finders for the next task's ``importlib.invalidate_caches()`` to
     re-read. A lambda or any other expression is refused. The pandas
     APIs appear only in the passes whose contract hands the caller's
-    kernel a pandas frame: ``GeneralScan.apply``, ``apply_batch`` and
-    ``apply_stream`` and the streaming state functions."""
+    kernel a pandas frame: ``GeneralScan.apply_batch`` (which
+    ``apply`` runs through) and ``apply_stream`` and the streaming
+    state functions."""
     root = pathlib.Path(__file__).resolve().parent.parent / "algebird_spark"
     passes = _python_passes(root)
     late, pandas = [], set()
