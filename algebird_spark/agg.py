@@ -35,7 +35,8 @@ Each of these Python passes starts with ``_drop_spark_finders``:
 PySpark begins every task with ``importlib.invalidate_caches()``, which
 on CPython 3.10-3.12 re-reads the central directory of every Spark
 archive whose import finder the worker still caches, a fixed ~0.1 s of
-CPU per task that no kernel work can win back.
+CPU per task that no kernel work can win back. Every Python pass of
+the package does the same and converts its Arrow through this module.
 
 Requires a commutative merge, exactly like the reference
 (AlgebirdRDD.scala:17,37,47) — guaranteed by the sketch monoid laws
@@ -156,26 +157,21 @@ def _update_columns(cols: Sequence[pa.Array]
 
 def _matrix(col: pa.Array, dim: int | None = None
             ) -> tuple[np.ndarray, np.ndarray | None]:
-    """A column of equal-length numeric arrays (an embedding) as (a
-    float64 ``(rows, dim)`` matrix of its non-null rows, per-row
-    validity|None). The matrix is ``col.flatten()`` reshaped, with no
-    copy for a ``double`` element type. A NULL row is left out of the
-    matrix and is False in the validity mask, which is None when the
-    column holds no NULL. Rows of different lengths, or of another
-    length than ``dim`` when it is given, raise ``ValueError``; with
-    ``dim``, a batch of NULLs only gives a ``(0, dim)`` matrix."""
+    """A column of equal-length numeric arrays (vectors) as (a float64
+    ``(rows, dim)`` matrix of its non-NULL rows, per-row validity|None):
+    ``col.flatten()`` reshaped, with no copy for ``double`` elements.
+    Rows of unequal lengths, or not ``dim`` long, raise ``ValueError``;
+    with ``dim``, a batch of NULLs only is a ``(0, dim)`` matrix."""
     import pyarrow.compute as pc
-    valid = (pc.is_valid(col).to_numpy(zero_copy_only=False)
-             if col.null_count else None)
     span = pc.min_max(col.value_lengths()).as_py()
     dims = {span["min"], span["max"], dim} - {None}
     if len(dims) > 1:
-        raise ValueError(f"rows of lengths {sorted(dims)} do not form "
-                         "one matrix")
+        raise ValueError(f"rows of lengths {sorted(dims)} are no matrix")
     flat = col.flatten().to_numpy(zero_copy_only=False)
-    return (flat.astype(np.float64, copy=False)
-            .reshape(len(col) - col.null_count, dims.pop() if dims else 0),
-            valid)
+    return (flat.astype(np.float64, copy=False).reshape(
+                len(col) - col.null_count, dims.pop() if dims else 0),
+            pc.is_valid(col).to_numpy(zero_copy_only=False)
+            if col.null_count else None)
 
 
 def _list_array(values: np.ndarray, valid: np.ndarray | None,

@@ -44,11 +44,9 @@ def with_feature_hash(df: DataFrame, key_col: str, bits: int = 12,
                       seed: int = DEFAULT_SEED,
                       index_col: str = "f_index",
                       sign_col: str = "f_sign") -> DataFrame:
-    """Adds (index, sign) columns for ``key_col`` (string/bytes/int).
-    Each key hashes in its column's own Arrow type (``_flatten_values``,
-    the combine's conversion), so an integer key hashes alike whatever
-    NULLs share its batch; a NULL key gets a NULL index and sign, which
-    ``feature_hash_vector``'s sum then skips."""
+    """Adds (index, sign) columns for ``key_col`` (string/bytes/int),
+    each key hashed in its column's Arrow type (``_flatten_values``); a
+    NULL key gets NULLs, which ``feature_hash_vector``'s sum skips."""
 
     @F.arrow_udf("struct<i: long, s: int>")
     def fh(cols: Iterator[pa.Array]) -> Iterator[pa.Array]:
@@ -123,13 +121,11 @@ def tdigest_rank_batch(sk, vals: np.ndarray) -> np.ndarray:
 
 def _rank_broadcast(df: DataFrame, col: str, by: list[str], states: dict,
                     out_col: str) -> DataFrame:
-    """Map-only ranking: the state dict (key tuple -> state bytes)
-    broadcasts once per executor and every row ranks in place — zero
-    data shuffle. Right when the group count is modest (states fit the
-    driver/broadcast). A batch's rows group by ``agg._factorize_rows``,
-    the combine's grouping, and look their state up by
-    ``agg._group_key``, so a NULL or NaN key finds its own group's
-    state. A NULL or NaN value ranks NULL."""
+    """Map-only ranking: the state dict broadcasts once per executor
+    and every row ranks in place — zero data shuffle. Right when the
+    group count is modest (states fit the driver/broadcast). Rows group
+    as the combine groups them (``_factorize_rows``, ``_group_key``), so
+    a NULL or NaN key finds its state; a NULL or NaN value ranks NULL."""
     from ..sketches import from_bytes
 
     bc = df.sparkSession.sparkContext.broadcast(states)
@@ -171,9 +167,8 @@ def _rank_cogroup(df: DataFrame, col: str, by: list[str],
     states, so group cardinality is unbounded (r5 VERDICT wrong #2:
     at ~10^5+ groups x KB states the collect+broadcast dict is a
     driver bottleneck). Costs one shuffle of the rows on ``by``;
-    the state side shuffles only one tiny row per group. The rows
-    pass through in their Arrow types; a NULL or NaN value ranks
-    NULL, as on the broadcast path."""
+    the state side shuffles only one tiny row per group. A NULL or NaN
+    value ranks NULL, as on the broadcast path."""
     from ..agg import STATE_COL
     from ..sketches import from_bytes
 

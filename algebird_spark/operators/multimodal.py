@@ -17,6 +17,7 @@ from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (ArrayType, BinaryType, FloatType, IntegerType,
@@ -313,8 +314,7 @@ def extract_features(df: DataFrame, codec: DeterministicFakeCodec | None = None,
                 yield pa.RecordBatch.from_pydict({
                     "media_id": chunk.column("media_id"),
                     "kind": chunk.column("kind"),
-                    "n_bytes": pa.array([len(p) for p in payloads],
-                                        pa.int32()),
+                    "n_bytes": pc.binary_length(chunk.column("payload")),
                     "feature": _list_array(
                         np.concatenate(feats), None, pa.list_(pa.float32()),
                         [len(f) for f in feats]),

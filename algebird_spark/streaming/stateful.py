@@ -12,11 +12,9 @@ The reference's streaming pattern is Summingbird-style: per-event
   — the property the reference gets from monoid commutativity (no
   watermark needed for correctness, only for state bounding).
 
-The ``applyInPandasWithState`` functions are, with ``GeneralScan``'s,
-the package's Python passes that stay on pandas: their contract is a
-pandas frame (``scan_stream_fold`` hands its kernel the frame
-``GeneralScan.apply_stream`` does). Each starts by dropping Spark's
-archive finders, as every pass does.
+The ``applyInPandasWithState`` functions stay on pandas, as
+``GeneralScan``'s passes do: ``scan_stream_fold`` hands its kernel the
+pandas frame ``GeneralScan.apply_stream`` does.
 * ``windowed_sketch_stream`` — event-time tumbling windows: group by
   (window(ts), keys) and keep one sketch state per window; the
   watermark expires state like ExpHist ``step`` eviction
@@ -85,12 +83,10 @@ def _keyed_stream(sdf: DataFrame, keys: Sequence[str],
     """The one per-key stream update: a key's sketch and value count
     live in its ``GroupState``, each micro-batch's values fold in, and
     one row ``keys..., *emit(sketch, n_values)`` of ``out_fields`` is
-    emitted. Values are read in their Arrow types (``_stream_array``)
-    as the batch build reads them: one column name (scalar or array)
-    is flattened by ``_flatten_values``, each element a value; a list
-    of columns reaches ``update_batch`` positionally through
-    ``agg._update_columns``, each row a value. NULLs are not values,
-    and a row with a NULL in any listed column is skipped."""
+    emitted. Values are read as the batch build reads them: one column
+    (scalar or array) through ``_flatten_values``, each element a
+    value; a list of columns positionally through ``_update_columns``,
+    each row without a NULL a value."""
     from pyspark.sql.pandas.types import to_arrow_type
     keys = list(keys)
     flat = isinstance(value_cols, str)
