@@ -401,8 +401,9 @@ def sessionize(df: DataFrame, user_col: str, ts_col: str,
     since the user's previous event exceeds ``gap`` seconds. Runs as a
     partition-ordered streaming fold (``GeneralScan.apply_stream``:
     one Exchange on ``user_col``, in-partition sort, a single
-    mapInPandas pass with carry-over state — flat cost in user
-    cardinality; measured 40x over a per-group fold at 500k users).
+    ``mapInPandas`` pass, as the kernel takes a pandas frame, with
+    carry-over state — flat cost in user cardinality; measured 40x
+    over a per-group fold at 500k users).
     ``order`` defaults to ``[ts_col]``; add tie-breaker columns for a
     total order exactly as you would for a window."""
     from .operators.scan import GeneralScan, session_numbers_kernel
