@@ -254,9 +254,8 @@ def scan_stream_fold(sdf: DataFrame, keys: Sequence[str],
         # its size is bounded by one key's one-trigger data
         chunks = [p for p in pdfs if len(p)]
         if chunks:
-            pdf = (chunks[0] if len(chunks) == 1
-                   else pd.concat(chunks, ignore_index=True))
-            pdf = pdf.sort_values(order_cols, kind="mergesort") \
+            pdf = pd.concat(chunks, ignore_index=True) \
+                .sort_values(order_cols, kind="mergesort") \
                 .reset_index(drop=True)
             vals, carry = batch_kernel(pdf, carry)
             pdf[output_col] = vals
@@ -271,8 +270,7 @@ def scan_stream_fold(sdf: DataFrame, keys: Sequence[str],
         parts = [p for p in pdfs if len(p)]
         if buf is not None and len(buf):
             parts.append(buf)
-        full = (parts[0] if len(parts) == 1
-                else pd.concat(parts, ignore_index=True)) if parts else None
+        full = pd.concat(parts, ignore_index=True) if parts else None
         rest = None
         wm_ms = state.getCurrentWatermarkMs()
         if full is not None and len(full):
