@@ -301,9 +301,9 @@ def embedding_cosine_dups(vectors: DataFrame, threshold: float,
 def _probe_udf(centroids: np.ndarray, nprobe: int,
                residual_order: bool = False):
     """Arrow UDF: nprobe centroid ids per vector, one BLAS matmul per
-    Arrow batch; a NULL vector gets NULL. Cosine assignment == argmax of dot against
-    L2-normalized centroids (the vector's own norm is a positive
-    scalar, so it cannot change the argmax order).
+    Arrow batch; a NULL vector gets NULL. Cosine assignment == argmax
+    of dot against L2-normalized centroids (the vector's own norm is a
+    positive scalar, so it cannot change the argmax order).
 
     ``residual_order=False`` (vector assignment / plain probing): the
     nprobe nearest centroids by dot product.
@@ -329,9 +329,9 @@ def _probe_udf(centroids: np.ndarray, nprobe: int,
     cn = cn / np.linalg.norm(cn, axis=1, keepdims=True)
 
     @F.arrow_udf("array<int>")
-    def probes(cols: Iterator[pa.Array]) -> Iterator[pa.Array]:
+    def probes(vecs: Iterator[pa.Array]) -> Iterator[pa.Array]:
         _drop_spark_finders()
-        for col in cols:
+        for col in vecs:
             m, valid = _matrix(col, cn.shape[1])
             if residual_order and nprobe > 1:
                 r = m.copy()
