@@ -245,7 +245,7 @@ def residual_vectors(vectors: DataFrame, coarse: np.ndarray,
             if len(mat) == 0:
                 continue
             lists = (mat @ cn.T * 2.0 - c_sq).argmax(axis=1)
-            ids = batch.column(id_col)
+            ids = batch.column(id_col).cast(pa.int64())
             yield pa.RecordBatch.from_pydict({
                 id_col: ids if valid is None else ids.filter(valid),
                 vec_col: _list_array(mat - cn[lists], None,
@@ -278,7 +278,7 @@ def encode_ivf_pq(vectors: DataFrame, coarse: np.ndarray,
             if len(mat) == 0:
                 continue
             lists = (mat @ cn.T * 2.0 - c_sq).argmax(axis=1)
-            ids = batch.column(id_col)
+            ids = batch.column(id_col).cast(pa.int64())
             yield pa.RecordBatch.from_pydict({
                 id_col: ids if valid is None else ids.filter(valid),
                 "__list": lists.astype(np.int32),
@@ -337,7 +337,8 @@ def ivf_pq_topk(encoded: DataFrame, queries: DataFrame, k: int,
                 continue
             codes = _code_matrix(batch.column("pq_code"), m)
             lists = batch.column("__list").to_numpy(zero_copy_only=False)
-            ids = batch.column(id_col).to_numpy(zero_copy_only=False)
+            ids = batch.column(id_col).cast(pa.int64()) \
+                .to_numpy(zero_copy_only=False)
             best = []
             for qi in range(nq):
                 for li in probed[qi]:
@@ -455,7 +456,8 @@ def pq_topk(encoded: DataFrame, queries: DataFrame, k: int,
             if batch.num_rows == 0:
                 continue
             codes = _code_matrix(batch.column(code_col), m)
-            ids = batch.column(id_col).to_numpy(zero_copy_only=False)
+            ids = batch.column(id_col).cast(pa.int64()) \
+                .to_numpy(zero_copy_only=False)
             gather_cols = np.arange(m)
             yield _candidates([_best(q_ids[qi], ids, tables[qi][
                 gather_cols, codes].sum(axis=1), keep) for qi in range(nq)],
@@ -508,7 +510,7 @@ def _top_k(cand: DataFrame, k: int, keep: int, rerank: int,
             mat, valid = _matrix(batch.column(vec_col))
             if len(mat) == 0:
                 continue
-            ids = batch.column(id_col)
+            ids = batch.column(id_col).cast(pa.int64())
             ids = ids if valid is None else ids.filter(valid)
             for qi in range(len(q_ids)):
                 yield pa.RecordBatch.from_pydict({

@@ -367,7 +367,8 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id",
                     mxs[n].append(mx * n / nt if nt else 0.0)
                     dups[n].append(dup * n / nt if nt else 0.0)
             yield pa.RecordBatch.from_pydict({
-                **{c: batch.column(c) for c in [id_col, *pt]},
+                id_col: batch.column(id_col).cast(pa.int64()),
+                **{c: batch.column(c).cast(pa.string()) for c in pt},
                 "n_tokens": pa.array(nts, pa.int64()),
                 **{f"top{n}_frac": pa.array(mxs[n], pa.float64())
                    for n in ns},

@@ -222,10 +222,9 @@ def test_bloom_prune_large_int64_keys(spark):
 
 def test_repetition_stats_hand_computed(spark):
     from algebird_spark.operators.text import repetition_stats
-    df = spark.createDataFrame(
-        [(1, "s", "a b a b a"), (2, "s", "x y z"), (3, "s", "w w w w"),
-         (4, "s", ""), (5, "s", "q")],
-        "doc_id long, source string, text string")
+    rows = [(1, "s", "a b a b a"), (2, "s", "x y z"), (3, "s", "w w w w"),
+            (4, "s", ""), (5, "s", "q")]
+    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
     got = {r["doc_id"]: r for r in repetition_stats(df).collect()}
     # "a b a b a": 2-grams [ab,ba,ab,ba] -> top 2*2/5, dup 4*2/5
     assert abs(got[1]["top2_frac"] - 0.8) < 1e-12
@@ -237,6 +236,11 @@ def test_repetition_stats_hand_computed(spark):
     assert got[3]["top2_frac"] == 1.5     # "w w" x3 over 4 tokens
     assert got[4]["n_tokens"] == 0 and got[4]["top2_frac"] == 0.0
     assert got[5]["n_tokens"] == 1 and got[5]["top3_frac"] == 0.0
+    # an int id comes back as the declared bigint
+    ints = repetition_stats(spark.createDataFrame(
+        rows, "doc_id int, source string, text string"))
+    assert ints.schema["doc_id"].dataType.simpleString() == "bigint"
+    assert {r["doc_id"]: r for r in ints.collect()} == got
 
 
 def test_repetition_stats_matches_exact_counter_reference(spark):
