@@ -270,8 +270,12 @@ def ann_topk(vectors: DataFrame, queries: DataFrame, k: int = 10,
     results), 'ivf'
     (spherical-k-means inverted lists; kw: n_lists=16, nprobe=4,
     n_iter=5, spill_margin=0.0 boundary-spill assignment,
-    residual_probes=False), or 'lsh' (multi-table hyperplane LSH;
-    kw: n_planes, n_tables, dim)."""
+    residual_probes=False), 'ivf_indexed' (over a written
+    ``write_ivf_index``; kw: index_path, centroids, nprobe=4), 'lsh'
+    (hyperplane LSH, ``lsh_multitable_topk``; kw: n_planes, n_tables,
+    multiprobe, dim — ``n_tables=1, multiprobe=False`` is the
+    single-table search), or 'pq' / 'ivf_pq' (squared-L2 product
+    quantization, see below)."""
     from .operators import similarity as _s
     if method == "exact":
         return _s.cosine_topk(vectors, queries, k, **kw)

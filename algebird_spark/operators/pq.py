@@ -18,7 +18,8 @@ COMPRESSED scale path:
   brute-force quality for the final k (candidates are a broadcast-
   sized set, so the re-rank is one scan-side pass, never a shuffle).
 
-Training mirrors ``similarity.train_ivf_centroids``: every Lloyd
+Training is ``similarity._lloyd``, the one Lloyd trainer the IVF
+coarse quantizers use too (L2 here, spherical for IVF-Flat): every
 round is ONE scan whose partitions emit (m, k_sub) count/sum partial
 statistics for ALL subspaces jointly — only
 ``partitions x m x k_sub x (sub_dim + 1)`` doubles leave the
@@ -39,7 +40,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..agg import _drop_spark_finders, _list_array, _matrix
-from ..cache import Scope
+from .similarity import _lloyd, _query_matrix, _subspace_views
 
 
 def _check_codebook(codebook: np.ndarray) -> tuple[int, int, int]:
@@ -51,14 +52,6 @@ def _check_codebook(codebook: np.ndarray) -> tuple[int, int, int]:
     if k_sub > 256:
         raise ValueError(f"k_sub={k_sub} > 256 does not fit uint8 codes")
     return m, k_sub, sub_dim
-
-
-def _subspace_views(mat: np.ndarray, m: int, sub_dim: int) -> np.ndarray:
-    """(n, d) -> (m, n, sub_dim) without copying rows per subspace."""
-    n, d = mat.shape
-    if d != m * sub_dim:
-        raise ValueError(f"vector dim {d} != m*sub_dim = {m * sub_dim}")
-    return np.ascontiguousarray(mat.reshape(n, m, sub_dim).transpose(1, 0, 2))
 
 
 def _assign_codes(mat: np.ndarray, cb: np.ndarray) -> np.ndarray:
@@ -94,75 +87,20 @@ def _code_matrix(col: pa.Array, m: int) -> np.ndarray:
 def train_pq_codebook(vectors: DataFrame, m: int, k_sub: int = 256,
                       n_iter: int = 8, vec_col: str = "embedding",
                       id_col: str = "vec_id") -> np.ndarray:
-    """Train the (m, k_sub, d/m) PQ codebook distributively.
-
-    Deterministic init (the ``k_sub`` lowest-id vectors' subvectors,
-    like the IVF coarse quantizer); every Lloyd round is ONE scan
-    emitting per-partition (m, k_sub) counts + (m, k_sub, sub_dim)
-    sums, merged driver-side — KB-scale partials, no per-vector
-    shuffle. At warehouse scale train on a sample (a few hundred
-    vectors per code word suffice) and persist the codebook."""
+    """Train the (m, k_sub, d/m) PQ codebook distributively: L2
+    ``similarity._lloyd`` over ``m`` subspaces. Deterministic init (the
+    ``k_sub`` lowest-id non-NULL vectors' subvectors, like the IVF
+    coarse quantizer); every Lloyd round is ONE scan emitting
+    per-partition (m, k_sub) counts + (m, k_sub, sub_dim) sums, merged
+    driver-side — KB-scale partials, no per-vector shuffle. At
+    warehouse scale train on a sample (a few hundred vectors per code
+    word suffice) and persist the codebook."""
     if m < 1 or k_sub < 1:
         raise ValueError(f"m={m} and k_sub={k_sub} must be >= 1")
     if k_sub > 256:
         raise ValueError(f"k_sub={k_sub} > 256 does not fit uint8 codes")
-    with Scope("pq_train") as scope:
-        train = scope.persist(vectors.select(id_col, vec_col)
-                              .filter(F.col(vec_col).isNotNull()))
-        init = (train.orderBy(id_col).limit(k_sub)
-                .select(vec_col).collect())
-        if not init:
-            raise ValueError("train_pq_codebook: empty vector table")
-        sample = np.vstack([np.asarray(r[0], dtype=np.float64)
-                            for r in init])
-        d = sample.shape[1]
-        if d % m:
-            raise ValueError(f"vector dim {d} not divisible by m={m}")
-        sub_dim = d // m
-        k_eff = sample.shape[0]  # fewer vectors than words: exact fit
-        cb = np.ascontiguousarray(
-            sample.reshape(k_eff, m, sub_dim).transpose(1, 0, 2))
-
-        def partials(batches):
-            _drop_spark_finders()
-            counts = np.zeros((m, k_eff), dtype=np.int64)
-            sums = np.zeros((m, k_eff, sub_dim), dtype=np.float64)
-            c_sq = (cb * cb).sum(axis=2)
-            for batch in batches:
-                mat, _ = _matrix(batch.column(vec_col))
-                if len(mat) == 0:
-                    continue
-                subs = _subspace_views(mat, m, sub_dim)
-                for j in range(m):
-                    scores = subs[j] @ cb[j].T * 2.0 - c_sq[j]
-                    assign = scores.argmax(axis=1)
-                    order = np.argsort(assign, kind="stable")
-                    sa = assign[order]
-                    starts = np.flatnonzero(np.r_[True, sa[1:] != sa[:-1]])
-                    sums[j, sa[starts]] += np.add.reduceat(
-                        subs[j][order], starts, axis=0)
-                    counts[j] += np.bincount(assign, minlength=k_eff)
-            yield pa.RecordBatch.from_pydict({
-                "counts": _list_array(counts.reshape(1, -1), None,
-                                      pa.list_(pa.int64())),
-                "sums": _list_array(sums.reshape(1, -1), None,
-                                    pa.list_(pa.float64()))})
-
-        for _ in range(n_iter):
-            counts = np.zeros((m, k_eff), dtype=np.int64)
-            sums = np.zeros((m, k_eff, sub_dim), dtype=np.float64)
-            for row in train.select(vec_col).mapInArrow(
-                    partials, "counts array<long>, sums array<double>") \
-                    .collect():
-                counts += np.asarray(row["counts"],
-                                     dtype=np.int64).reshape(m, k_eff)
-                sums += np.asarray(row["sums"],
-                                   dtype=np.float64).reshape(m, k_eff,
-                                                             sub_dim)
-            cb = np.where(counts[:, :, None] > 0,
-                          sums / np.maximum(counts[:, :, None], 1),
-                          cb)  # empty words keep their previous centroid
-        return cb
+    return _lloyd(vectors, k_sub, m, n_iter, False, vec_col, id_col,
+                  "train_pq_codebook")
 
 
 def encode_pq(vectors: DataFrame, codebook: np.ndarray,
@@ -298,8 +236,9 @@ def ivf_pq_topk(encoded: DataFrame, queries: DataFrame, k: int,
     lists and ADC-scores ONLY rows in those lists, with per-(query,
     list) residual distance tables — expected work
     O(N * nprobe / n_lists) table lookups per query on an m-byte
-    code table. ``rerank`` as in :func:`pq_topk` (exact re-score of
-    the broadcast-sized candidate set). Returns
+    code table; ``encoded`` is read filtered to the probed lists.
+    ``rerank`` as in :func:`pq_topk` (exact re-score of the
+    broadcast-sized candidate set). Returns
     ``q_id, vec_id, dist, rank`` (squared L2)."""
     cn = np.asarray(coarse, dtype=np.float64)
     cb = np.asarray(codebook, dtype=np.float64)
@@ -310,15 +249,14 @@ def ivf_pq_topk(encoded: DataFrame, queries: DataFrame, k: int,
         raise ValueError(f"rerank={rerank} must be >= k={k}")
     if rerank and vectors is None:
         raise ValueError("rerank needs the original `vectors` table")
-    q_rows = queries.select(q_id_col, q_vec_col).collect()
-    if not q_rows:
+    q_ids, q_mat = _query_matrix(queries, q_id_col, q_vec_col, m * sub_dim)
+    if not len(q_ids):
         raise ValueError("ivf_pq_topk: empty query set")
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = np.vstack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
     nq = len(q_ids)
     np_eff = min(nprobe, cn.shape[0])
     d2c = ((q_mat[:, None, :] - cn[None, :, :]) ** 2).sum(axis=2)
     probed = np.argpartition(d2c, np_eff - 1, axis=1)[:, :np_eff]  # (nq, p)
+    union = sorted(set(probed.ravel().tolist()))
     # tables[(qi, list)] = (m, k_sub) residual subspace distances
     tables: dict[tuple[int, int], np.ndarray] = {}
     for qi in range(nq):
@@ -350,8 +288,11 @@ def ivf_pq_topk(encoded: DataFrame, queries: DataFrame, k: int,
             if best:
                 yield _candidates(best, q_id_col, id_col)
 
-    cand = encoded.select(id_col, "__list", "pq_code").mapInArrow(
-        scan, f"{q_id_col} long, {id_col} long, dist double")
+    # only probed lists can score; over a __list-partitioned index this
+    # static predicate prunes every unprobed partition directory
+    cand = encoded.filter(F.col("__list").isin(union)) \
+        .select(id_col, "__list", "pq_code").mapInArrow(
+            scan, f"{q_id_col} long, {id_col} long, dist double")
     return _top_k(cand, k, keep, rerank, vectors, q_ids, q_mat,
                   id_col, vec_col, q_id_col)
 
@@ -379,24 +320,14 @@ def ivf_pq_topk_indexed(spark, index_path: str, queries: DataFrame,
                         q_id_col: str = "q_id",
                         q_vec_col: str = "q_vec") -> DataFrame:
     """:func:`ivf_pq_topk` over a materialized ``__list``-partitioned
-    code index: the probed-list union becomes a STATIC ``isin``
+    code index: the operator's probed-list union is a STATIC ``isin``
     predicate, so Catalyst prunes unprobed partition directories at
     planning time and the scan reads only nprobe/n_lists of the
     (already PQ-compressed) bytes. Results are identical to the
     in-memory operator over the same encode (verified in tests)."""
-    cn = np.asarray(coarse, dtype=np.float64)
-    q_rows = queries.select(q_id_col, q_vec_col).collect()
-    if not q_rows:
-        raise ValueError("ivf_pq_topk_indexed: empty query set")
-    q_mat = np.vstack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    np_eff = min(nprobe, cn.shape[0])
-    d2c = ((q_mat[:, None, :] - cn[None, :, :]) ** 2).sum(axis=2)
-    probed = np.argpartition(d2c, np_eff - 1, axis=1)[:, :np_eff]
-    union = sorted({int(li) for row in probed for li in row})
-    idx = spark.read.parquet(index_path).filter(F.col("__list").isin(union))
-    return ivf_pq_topk(idx, queries, k, coarse, codebook, nprobe,
-                       rerank=rerank, vectors=vectors, id_col=id_col,
-                       vec_col=vec_col, q_id_col=q_id_col,
+    return ivf_pq_topk(spark.read.parquet(index_path), queries, k, coarse,
+                       codebook, nprobe, rerank=rerank, vectors=vectors,
+                       id_col=id_col, vec_col=vec_col, q_id_col=q_id_col,
                        q_vec_col=q_vec_col)
 
 
@@ -436,11 +367,9 @@ def pq_topk(encoded: DataFrame, queries: DataFrame, k: int,
         raise ValueError(f"rerank={rerank} must be >= k={k}")
     if rerank and vectors is None:
         raise ValueError("rerank needs the original `vectors` table")
-    q_rows = queries.select(q_id_col, q_vec_col).collect()
-    if not q_rows:
+    q_ids, q_mat = _query_matrix(queries, q_id_col, q_vec_col, m * sub_dim)
+    if not len(q_ids):
         raise ValueError("pq_topk: empty query set")
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = np.vstack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
     q_subs = _subspace_views(q_mat, m, sub_dim)       # (m, nq, sub)
     # tables[j][q][c] = ||q_sub_j - cb[j][c]||^2  -> (nq, m, k_sub)
     tables = np.stack([

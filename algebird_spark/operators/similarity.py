@@ -3,13 +3,23 @@
 * ``cosine_topk`` — brute-force exact cosine top-k: the baseline and
   small-scale oracle. Dot products are built-in higher-order functions
   (``zip_with`` + ``aggregate``), fully JVM-side; the query set is
-  broadcast so the scan side never shuffles.
-* ``lsh_bucketed_topk`` — the scale path: random-hyperplane LSH
-  (SimHash for vectors) assigns each vector to buckets; candidates are
-  only compared within matching buckets. Recall < 1 by design; at
-  100 TB this turns an O(N*Q) scan into O(N) bucketing + a skew-free
-  bucket join.
+  broadcast so the scan side never shuffles. ``cosine_topk_kernel``
+  scores the same top-k with one BLAS matmul per Arrow batch.
+* ``lsh_multitable_topk`` — the LSH scale path: random-hyperplane LSH
+  (SimHash for vectors) assigns each vector one bucket per table;
+  candidates are only compared within matching buckets. Recall < 1 by
+  design; at 100 TB this turns an O(N*Q) scan into O(N) bucketing + a
+  skew-free bucket join. ``n_tables=1, multiprobe=False`` is the
+  single-table search.
 * ``embedding_cosine_dups`` — near-duplicate pairs by cosine >= t.
+* ``train_ivf_centroids`` + ``ivf_topk`` (or ``write_ivf_index`` +
+  ``ivf_topk_indexed``) — IVF-Flat, the coarse-quantizer scale path.
+
+The ANN core that ``operators.pq`` shares: one Lloyd trainer
+(``_lloyd``, spherical for IVF-Flat, L2 for the PQ codebooks and the
+IVF-PQ coarse quantizer), one hyperplane bucketer
+(``_multitable_buckets_udf``) and one query-set reader
+(``_query_matrix``).
 """
 
 from __future__ import annotations
@@ -61,6 +71,54 @@ def _with_norm(df: DataFrame, vec_col: str, alias: str) -> DataFrame:
               .filter(F.col(alias) > 0))
 
 
+def _query_matrix(queries: DataFrame, q_id_col: str, q_vec_col: str,
+                  dim: int | None = None) -> tuple[np.ndarray, np.ndarray]:
+    """A (small, broadcast) query set on the driver as (int64 ids,
+    float64 ``(n, dim)`` vector matrix): one ``toArrow()``, converted
+    by ``agg._matrix``. A row whose vector is NULL is skipped."""
+    t = queries.select(q_id_col, q_vec_col).toArrow()
+    mat, valid = _matrix(t.column(q_vec_col).combine_chunks(), dim)
+    ids = t.column(q_id_col).combine_chunks().cast(pa.int64()) \
+        .to_numpy(zero_copy_only=False)
+    return (ids if valid is None else ids[valid]), mat
+
+
+def _unit(c) -> np.ndarray:
+    """``c`` in float64 (at least 2-D), each last-axis row scaled to
+    unit L2 norm."""
+    c = np.atleast_2d(np.asarray(c, dtype=np.float64))
+    return c / np.linalg.norm(c, axis=-1, keepdims=True)
+
+
+def _subspace_views(mat: np.ndarray, m: int, sub_dim: int) -> np.ndarray:
+    """(n, d) -> (m, n, sub_dim) without copying rows per subspace."""
+    n, d = mat.shape
+    if d != m * sub_dim:
+        raise ValueError(f"vector dim {d} != m*sub_dim = {m * sub_dim}")
+    return np.ascontiguousarray(mat.reshape(n, m, sub_dim).transpose(1, 0, 2))
+
+
+def _cos_scored(joined: DataFrame, id_col: str, vec_col: str,
+                q_id_col: str, q_vec_col: str) -> DataFrame:
+    """``(q_id, id, cos)`` of every joined (vector, query) pair but a
+    vector's own id, divided by the precomputed norms ``__vn`` and
+    ``__qn`` (:func:`_with_norm`)."""
+    return (joined.filter(F.col(id_col) != F.col(q_id_col))
+            .select(q_id_col, id_col,
+                    (_dot(F.col(vec_col), F.col(q_vec_col))
+                     / (F.col("__vn") * F.col("__qn"))).alias("cos")))
+
+
+def _ranked(scored: DataFrame, k: int, id_col: str,
+            q_id_col: str) -> DataFrame:
+    """Each query's top ``k`` ``(q_id, id, cos)`` rows by (cos desc,
+    id asc), numbered in ``rank``."""
+    w = Window.partitionBy(q_id_col).orderBy(F.col("cos").desc(),
+                                             F.col(id_col))
+    return (scored.withColumn("rank", F.row_number().over(w))
+                  .filter(F.col("rank") <= k))
+
+
 def cosine_topk(vectors: DataFrame, queries: DataFrame, k: int,
                 id_col: str = "vec_id", vec_col: str = "embedding",
                 q_id_col: str = "q_id", q_vec_col: str = "q_vec") -> DataFrame:
@@ -68,17 +126,10 @@ def cosine_topk(vectors: DataFrame, queries: DataFrame, k: int,
     one pass over the vector table, per-query window top-k.
     Zero-norm rows are excluded by definition (norm prefilter).
     Returns (q_id, vec_id, cos, rank)."""
-    v = _with_norm(vectors, vec_col, "__vn")
-    q = _with_norm(queries, q_vec_col, "__qn")
-    joined = v.crossJoin(F.broadcast(q))
-    scored = joined.select(
-        F.col(q_id_col), F.col(id_col),
-        (_dot(F.col(vec_col), F.col(q_vec_col))
-         / (F.col("__vn") * F.col("__qn"))).alias("cos"))
-    scored = scored.filter(F.col(id_col) != F.col(q_id_col))
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cos").desc(), F.col(id_col))
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k))
+    joined = _with_norm(vectors, vec_col, "__vn").crossJoin(
+        F.broadcast(_with_norm(queries, q_vec_col, "__qn")))
+    return _ranked(_cos_scored(joined, id_col, vec_col, q_id_col,
+                               q_vec_col), k, id_col, q_id_col)
 
 
 def cosine_topk_kernel(vectors: DataFrame, queries: DataFrame, k: int,
@@ -96,12 +147,10 @@ def cosine_topk_kernel(vectors: DataFrame, queries: DataFrame, k: int,
     rounding of near-tied scores (ADVICE r3). The expression path
     remains the oracle (both sides of every gated comparison use ONE
     scorer). Returns (q_id, vec_id, cos, rank)."""
-    q_rows = queries.select(q_id_col, q_vec_col).collect()
-    if not q_rows:
+    q_ids, qm = _query_matrix(queries, q_id_col, q_vec_col)
+    if not len(q_ids):
         return cosine_topk(vectors, queries, k, id_col, vec_col,
                            q_id_col, q_vec_col)
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    qm = np.vstack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
     qm = qm / np.linalg.norm(qm, axis=1, keepdims=True)
 
     def score(batches):
@@ -140,10 +189,7 @@ def cosine_topk_kernel(vectors: DataFrame, queries: DataFrame, k: int,
 
     cands = vectors.select(id_col, vec_col).mapInArrow(
         score, f"{q_id_col} long, {id_col} long, cos double")
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cos").desc(),
-                                             F.col(id_col))
-    return (cands.withColumn("rank", F.row_number().over(w))
-                 .filter(F.col("rank") <= k))
+    return _ranked(cands, k, id_col, q_id_col)
 
 
 def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
@@ -151,49 +197,14 @@ def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     return rng.standard_normal((n_planes, dim)).astype(np.float32)
 
 
-def hyperplane_bucket(vec: Column, planes: np.ndarray) -> Column:
-    """Sign-pattern bucket id from n_planes random hyperplanes —
-    built-in expressions only (per-plane dot via zip_with over a
-    literal array)."""
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(float(x)) for x in plane])
-        bit = F.when(_dot(vec, lit_plane) >= 0,
-                     F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
-                         F.lit(0).cast("long"))
-        bucket = bucket.bitwiseOR(bit)
-    return bucket
-
-
-def lsh_bucketed_topk(vectors: DataFrame, queries: DataFrame, k: int,
-                      dim: int, n_planes: int = 8, seed: int = 42,
-                      id_col: str = "vec_id", vec_col: str = "embedding",
-                      q_id_col: str = "q_id", q_vec_col: str = "q_vec") -> DataFrame:
-    """Approximate top-k: compare only vectors sharing the query's
-    hyperplane bucket. Recall grows with fewer planes (bigger buckets).
-    Returns (q_id, vec_id, cos, rank)."""
-    planes = random_hyperplanes(dim, n_planes, seed)
-    v = _with_norm(vectors, vec_col, "__vn") \
-        .withColumn("__bucket", hyperplane_bucket(F.col(vec_col), planes))
-    q = _with_norm(queries, q_vec_col, "__qn") \
-        .withColumn("__bucket", hyperplane_bucket(F.col(q_vec_col), planes))
-    joined = v.join(F.broadcast(q), on="__bucket")
-    scored = joined.select(
-        F.col(q_id_col), F.col(id_col),
-        (_dot(F.col(vec_col), F.col(q_vec_col))
-         / (F.col("__vn") * F.col("__qn"))).alias("cos"))
-    scored = scored.filter(F.col(id_col) != F.col(q_id_col))
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cos").desc(), F.col(id_col))
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k))
-
-
 def _multitable_buckets_udf(planes_per_table: list[np.ndarray]):
-    """Arrow UDF: array<long> of one bucket id per table, computed as
-    ONE BLAS matmul per Arrow batch — (batch, dim) @ (dim, tables*planes)
-    — then sign-bit packing. The expression-tree formulation
-    (hyperplane_bucket) evaluates interpreted higher-order lambdas per
-    plane per element; at tables*planes=32 that is ~100x slower."""
+    """Arrow UDF: array<long> of one sign-pattern bucket id per table
+    (bit i set where the vector's dot with plane i is >= 0), computed
+    as ONE BLAS matmul per Arrow batch — (batch, dim) @ (dim,
+    tables*planes) — then sign-bit packing; a NULL vector gets NULL.
+    The one hyperplane bucketer: an expression tree of per-plane
+    ``zip_with`` dots evaluates interpreted higher-order lambdas per
+    plane per element, ~100x slower at tables*planes=32."""
     all_planes = np.vstack(planes_per_table).astype(np.float64)  # (T*P, d)
     n_planes = planes_per_table[0].shape[0]
     n_tables = len(planes_per_table)
@@ -228,7 +239,9 @@ def lsh_multitable_topk(vectors: DataFrame, queries: DataFrame, k: int,
     past 0.9 while candidates stay O(N * tables / 2^planes) per query.
     Vectors emit ONE row per table (the scan side never multiplies by
     probes — probing happens on the tiny broadcast query side).
-    Returns (q_id, vec_id, cos, rank)."""
+    ``n_tables=1, multiprobe=False`` is the single-table search: each
+    (query, vector) pair meets at most once there, so it skips the
+    dedup and its Exchange. Returns (q_id, vec_id, cos, rank)."""
     planes_per_table = [random_hyperplanes(dim, n_planes, seed + 1000 * t)
                         for t in range(n_tables)]
     bucket_udf = _multitable_buckets_udf(planes_per_table)
@@ -262,14 +275,11 @@ def lsh_multitable_topk(vectors: DataFrame, queries: DataFrame, k: int,
     # then carries one double per candidate instead of two dim-length
     # arrays (VERDICT r3 weak #3). max() is exact — duplicates of the
     # same (q, v) pair score identically.
-    scored = (joined.filter(F.col(id_col) != F.col(q_id_col))
-              .select(q_id_col, id_col,
-                      (_dot(F.col(vec_col), F.col(q_vec_col))
-                       / (F.col("__vn") * F.col("__qn"))).alias("cos")))
-    scored = scored.groupBy(q_id_col, id_col).agg(F.max("cos").alias("cos"))
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cos").desc(), F.col(id_col))
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k))
+    scored = _cos_scored(joined, id_col, vec_col, q_id_col, q_vec_col)
+    if n_tables > 1 or multiprobe:
+        scored = scored.groupBy(q_id_col, id_col).agg(
+            F.max("cos").alias("cos"))
+    return _ranked(scored, k, id_col, q_id_col)
 
 
 def embedding_cosine_dups(vectors: DataFrame, threshold: float,
@@ -281,9 +291,10 @@ def embedding_cosine_dups(vectors: DataFrame, threshold: float,
     by the norm prefilter (Spark orders NaN above every double, so an
     unguarded ``NaN >= threshold`` would report degenerate pairs as
     duplicates). Returns (id_a, id_b, cos)."""
-    planes = random_hyperplanes(dim, n_planes, seed)
+    bucket = _multitable_buckets_udf([random_hyperplanes(dim, n_planes,
+                                                         seed)])
     b = _with_norm(vectors, vec_col, "__n") \
-        .withColumn("__bucket", hyperplane_bucket(F.col(vec_col), planes))
+        .withColumn("__bucket", bucket(F.col(vec_col))[0])
     l, r = b.alias("l"), b.alias("r")
     pairs = (l.join(r, (F.col("l.__bucket") == F.col("r.__bucket"))
                     & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")))
@@ -322,11 +333,10 @@ def _probe_udf(centroids: np.ndarray, nprobe: int,
     ``spill_margin`` on :func:`ivf_topk`. With nprobe == n_lists the
     probed SET is all lists either way, so the exhaustive ==
     brute-force oracle identity is unaffected."""
-    cn = np.atleast_2d(np.asarray(centroids, dtype=np.float64))
-    if cn.size == 0:
+    if np.size(centroids) == 0:
         raise ValueError("empty centroid set")
+    cn = _unit(centroids)
     nprobe = min(nprobe, cn.shape[0])
-    cn = cn / np.linalg.norm(cn, axis=1, keepdims=True)
 
     @F.arrow_udf("array<int>")
     def probes(vecs: Iterator[pa.Array]) -> Iterator[pa.Array]:
@@ -361,37 +371,50 @@ def _probe_udf(centroids: np.ndarray, nprobe: int,
     return probes
 
 
-def _lloyd_partials_df(vectors: DataFrame, centroids: np.ndarray,
-                       vec_col: str = "embedding") -> DataFrame:
-    """One Lloyd round's sufficient statistics as a DataFrame: each
-    partition emits ONE row carrying its (n_lists,) assignment counts
-    and flattened (n_lists, dim) vector sums — assignment (batched
-    matmul argmax) and partial aggregation happen in the SAME
-    mapInArrow pass, so nothing per-vector ever shuffles (the round-3
-    posexplode formulation moved N x dim rows per iteration; this
-    moves n_lists x (dim + 1) doubles per partition)."""
-    cn = np.atleast_2d(np.asarray(centroids, dtype=np.float64))
-    cn = cn / np.linalg.norm(cn, axis=1, keepdims=True)
-    n_lists, dim = cn.shape
+def _lloyd_partials(vectors: DataFrame, codebook: np.ndarray,
+                    spherical: bool, vec_col: str = "embedding"
+                    ) -> DataFrame:
+    """One Lloyd round's sufficient statistics as a DataFrame.
+    ``codebook`` is (m, k, sub_dim): k centroids in each of m
+    subspaces. Subvector j of a vector goes to a centroid of subspace
+    j: spherical, the argmax of its dot with the unit centroid; L2,
+    the argmax of ``2 x.c - |c|^2`` (squared-L2 argmin, the constant
+    ``|x|^2`` dropped). Each partition emits ONE row carrying its
+    (m, k) assignment counts and flattened (m, k, sub_dim) sums —
+    assignment (batched matmul argmax) and partial aggregation happen
+    in the SAME mapInArrow pass, so nothing per-vector ever shuffles
+    (the round-3 posexplode formulation moved N x dim rows per
+    iteration; this moves m x k x (sub_dim + 1) numbers per
+    partition)."""
+    cb = _unit(codebook) if spherical else np.asarray(codebook,
+                                                      dtype=np.float64)
+    m, k, sub_dim = cb.shape
+    c_sq = (cb * cb).sum(axis=2)
 
     def partials(batches):
         _drop_spark_finders()
-        sums = np.zeros((n_lists, dim), dtype=np.float64)
-        counts = np.zeros(n_lists, dtype=np.int64)
+        sums = np.zeros((m, k, sub_dim), dtype=np.float64)
+        counts = np.zeros((m, k), dtype=np.int64)
         for batch in batches:
-            m, _ = _matrix(batch.column(vec_col), dim)
-            if len(m) == 0:
+            mat, _ = _matrix(batch.column(vec_col), m * sub_dim)
+            if len(mat) == 0:
                 continue
-            assign = (m @ cn.T).argmax(axis=1)
-            # segment-sum via stable sort + reduceat (np.add.at is a
-            # scalar scatter loop; this is one vectorized pass)
-            order = np.argsort(assign, kind="stable")
-            sa = assign[order]
-            starts = np.flatnonzero(np.r_[True, sa[1:] != sa[:-1]])
-            sums[sa[starts]] += np.add.reduceat(m[order], starts, axis=0)
-            counts += np.bincount(assign, minlength=n_lists)
+            subs = _subspace_views(mat, m, sub_dim)
+            for j in range(m):
+                scores = (subs[j] @ cb[j].T if spherical
+                          else subs[j] @ cb[j].T * 2.0 - c_sq[j])
+                assign = scores.argmax(axis=1)
+                # segment-sum via stable sort + reduceat (np.add.at is a
+                # scalar scatter loop; this is one vectorized pass)
+                order = np.argsort(assign, kind="stable")
+                sa = assign[order]
+                starts = np.flatnonzero(np.r_[True, sa[1:] != sa[:-1]])
+                sums[j, sa[starts]] += np.add.reduceat(subs[j][order],
+                                                       starts, axis=0)
+                counts[j] += np.bincount(assign, minlength=k)
         yield pa.RecordBatch.from_pydict({
-            "counts": _list_array(counts[None], None, pa.list_(pa.int64())),
+            "counts": _list_array(counts.reshape(1, -1), None,
+                                  pa.list_(pa.int64())),
             "sums": _list_array(sums.reshape(1, -1), None,
                                 pa.list_(pa.float64()))})
 
@@ -399,47 +422,69 @@ def _lloyd_partials_df(vectors: DataFrame, centroids: np.ndarray,
         partials, "counts array<long>, sums array<double>")
 
 
+def _lloyd(vectors: DataFrame, k: int, m: int, n_iter: int,
+           spherical: bool, vec_col: str, id_col: str,
+           op: str) -> np.ndarray:
+    """The one k-means trainer, distributed: the IVF coarse quantizers
+    and the PQ codebooks are the same Lloyd iteration (Jégou et al.
+    2011), over ``m`` subspaces of the vectors. Returns the
+    (m, k', d/m) codebook, k' = min(k, non-NULL vectors) (k-means
+    with k = N is exact assignment anyway).
+
+    Init is deterministic: the ``k`` lowest-id non-NULL vectors. Each
+    round is ONE scan (:func:`_lloyd_partials`) whose per-partition
+    partials are merged on the driver, like sketch states; an empty
+    cluster keeps its previous centroid. ``spherical`` (cosine
+    IVF-Flat) keeps every centroid at unit norm; otherwise a centroid
+    is its cluster's mean (L2). Training makes n_iter + 1 passes, so
+    the input is persisted: a sampled or derived input computes once
+    instead of re-scanning (and re-sampling) per round."""
+    with Scope(op) as scope:
+        train = scope.persist(vectors.select(id_col, vec_col)
+                              .filter(F.col(vec_col).isNotNull()))
+        _, init = _query_matrix(train.orderBy(id_col).limit(k),
+                                id_col, vec_col)
+        if not len(init):
+            raise ValueError(f"{op}: empty vector table")
+        d = init.shape[1]
+        if d % m:
+            raise ValueError(f"vector dim {d} not divisible by m={m}")
+        cb = _subspace_views(init, m, d // m)
+        if spherical:
+            cb = _unit(cb)
+        for _ in range(n_iter):
+            counts = np.zeros(cb.shape[:2], dtype=np.int64)
+            sums = np.zeros(cb.shape, dtype=np.float64)
+            for row in _lloyd_partials(train, cb, spherical,
+                                       vec_col).collect():
+                counts += np.asarray(row["counts"],
+                                     dtype=np.int64).reshape(counts.shape)
+                sums += np.asarray(row["sums"],
+                                   dtype=np.float64).reshape(sums.shape)
+            cb = np.where(counts[:, :, None] > 0,
+                          sums / np.maximum(counts[:, :, None], 1),
+                          cb)  # empty clusters keep their centroid
+            if spherical:
+                norms = np.linalg.norm(cb, axis=2, keepdims=True)
+                cb = cb / np.where(norms == 0, 1.0, norms)
+        return cb
+
+
 def train_ivf_centroids(vectors: DataFrame, n_lists: int, n_iter: int = 5,
                         vec_col: str = "embedding",
                         id_col: str = "vec_id") -> np.ndarray:
-    """Spherical k-means coarse quantizer, trained distributively.
-
-    Init is deterministic (the ``n_lists`` lowest-id vectors); each
-    Lloyd round is ONE scan that assigns and partial-sums per
-    partition (:func:`_lloyd_partials_df`), merged like sketch states
-    — only ``partitions x n_lists x (dim + 1)`` doubles ever leave
-    the executors, with no per-vector shuffle (VERDICT r3 weak #2).
-    At warehouse scale train on ``vectors.sample(...)`` (a few hundred
-    points per list suffice; k-means quality is sample-stable) and
-    persist the centroids."""
-    # training makes n_iter + 1 passes; persist so a sampled/derived
-    # input computes once instead of re-scanning (and re-sampling)
-    # per Lloyd round
-    with Scope("ivf_train") as scope:
-        train = scope.persist(vectors.select(id_col, vec_col))
-        init = (train.orderBy(id_col).limit(n_lists)
-                .select(vec_col).collect())
-        if not init:
-            raise ValueError("train_ivf_centroids: empty vector table")
-        # fewer vectors than lists: train with what exists (k-means with
-        # k = N is exact assignment anyway)
-        c = np.vstack([np.asarray(r[0], dtype=np.float64) for r in init])
-        c = c / np.linalg.norm(c, axis=1, keepdims=True)
-        n_lists_eff, dim = c.shape
-        for _ in range(n_iter):
-            sums = np.zeros((n_lists_eff, dim), dtype=np.float64)
-            counts = np.zeros(n_lists_eff, dtype=np.int64)
-            for row in _lloyd_partials_df(train, c, vec_col).collect():
-                counts += np.asarray(row["counts"], dtype=np.int64)
-                sums += np.asarray(row["sums"],
-                                   dtype=np.float64).reshape(n_lists_eff,
-                                                             dim)
-            nxt = np.where(counts[:, None] > 0,
-                           sums / np.maximum(counts[:, None], 1),
-                           c)  # empty lists keep their previous centroid
-            norms = np.linalg.norm(nxt, axis=1, keepdims=True)
-            c = nxt / np.where(norms == 0, 1.0, norms)
-        return c
+    """Spherical k-means coarse quantizer, trained distributively by
+    :func:`_lloyd` (one subspace): deterministic init from the
+    ``n_lists`` lowest-id non-NULL vectors, and each Lloyd round ONE
+    scan that assigns and partial-sums per partition — only
+    ``partitions x n_lists x (dim + 1)`` numbers ever leave the
+    executors, with no per-vector shuffle (VERDICT r3 weak #2).
+    Returns (n_lists', dim) unit centroids, n_lists' = min(n_lists,
+    non-NULL vectors). At warehouse scale train on
+    ``vectors.sample(...)`` (a few hundred points per list suffice;
+    k-means quality is sample-stable) and persist the centroids."""
+    return _lloyd(vectors, n_lists, 1, n_iter, True, vec_col, id_col,
+                  "train_ivf_centroids")[0]
 
 
 def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int,
@@ -469,33 +514,36 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, k: int,
     those boundary vectors (index grows by the spilled fraction only —
     ~12% at margin 0.05 on the fixture) while query cost is unchanged.
     Returns (q_id, vec_id, cos, rank)."""
-    vn = _with_norm(vectors, vec_col, "__vn")
-    if spill_margin > 0:
-        assigned = _spill_assign_udf(centroids, spill_margin)
-        v = vn.select(id_col, vec_col, "__vn",
-                      F.explode(assigned(F.col(vec_col)))
-                       .alias("__list"))
-    else:
-        v = vn.withColumn(
-            "__list",
-            F.element_at(_probe_udf(centroids, 1)(F.col(vec_col)), 1))
+    v = _assign_lists(vectors, centroids, spill_margin, id_col, vec_col)
     q = _with_norm(queries, q_vec_col, "__qn").select(
         q_id_col, q_vec_col, "__qn",
         F.explode(_probe_udf(centroids, nprobe,
                              residual_order=residual_probes)
                   (F.col(q_vec_col))).alias("__list"))
-    joined = v.join(F.broadcast(q), on="__list")
-    scored = (joined.filter(F.col(id_col) != F.col(q_id_col))
-              .select(q_id_col, id_col,
-                      (_dot(F.col(vec_col), F.col(q_vec_col))
-                       / (F.col("__vn") * F.col("__qn"))).alias("cos")))
+    scored = _cos_scored(v.join(F.broadcast(q), on="__list"), id_col,
+                         vec_col, q_id_col, q_vec_col)
     if spill_margin > 0:
         # a spilled vector can meet the same query through both its
         # lists — dedup (cos is identical, distinct is exact)
         scored = scored.distinct()
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cos").desc(), F.col(id_col))
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k))
+    return _ranked(scored, k, id_col, q_id_col)
+
+
+def _assign_lists(vectors: DataFrame, centroids: np.ndarray,
+                  spill_margin: float, id_col: str,
+                  vec_col: str) -> DataFrame:
+    """The nonzero-norm vectors with their norm ``__vn`` and inverted
+    list ``__list``: the nearest centroid's, or with ``spill_margin``
+    > 0 one row per list of :func:`_spill_assign_udf` (``id_col``,
+    ``vec_col``, ``__vn`` and ``__list`` only)."""
+    vn = _with_norm(vectors, vec_col, "__vn")
+    if spill_margin > 0:
+        assigned = _spill_assign_udf(centroids, spill_margin)
+        return vn.select(id_col, vec_col, "__vn",
+                         F.explode(assigned(F.col(vec_col)))
+                          .alias("__list"))
+    return vn.withColumn(
+        "__list", F.element_at(_probe_udf(centroids, 1)(F.col(vec_col)), 1))
 
 
 def _spill_assign_udf(centroids: np.ndarray, spill_margin: float):
@@ -503,8 +551,7 @@ def _spill_assign_udf(centroids: np.ndarray, spill_margin: float):
     centroid always, plus the second-nearest when the score gap is
     below ``spill_margin * ||v||`` (a boundary vector); a NULL vector
     gets NULL."""
-    cn = np.atleast_2d(np.asarray(centroids, dtype=np.float64))
-    cn = cn / np.linalg.norm(cn, axis=1, keepdims=True)
+    cn = _unit(centroids)
 
     @F.arrow_udf("array<int>")
     def assign(cols: Iterator[pa.Array]) -> Iterator[pa.Array]:
@@ -545,29 +592,19 @@ def write_ivf_index(vectors: DataFrame, centroids: np.ndarray, path: str,
     measured bytes-read ratio in SCALE.md). Norms are precomputed at
     write time — queries never touch the vector bytes of unprobed
     lists nor recompute norms."""
-    vn = _with_norm(vectors, vec_col, "__vn")
-    if spill_margin > 0:
-        assigned = _spill_assign_udf(centroids, spill_margin)
-        v = vn.select(id_col, vec_col, "__vn",
-                      F.explode(assigned(F.col(vec_col))).alias("__list"))
-    else:
-        v = vn.withColumn(
-            "__list",
-            F.element_at(_probe_udf(centroids, 1)(F.col(vec_col)), 1))
-    v.write.partitionBy("__list").mode("overwrite").parquet(path)
+    _assign_lists(vectors, centroids, spill_margin, id_col, vec_col) \
+        .write.partitionBy("__list").mode("overwrite").parquet(path)
 
 
-def probe_lists(queries_pdf, centroids: np.ndarray, nprobe: int,
-                q_vec_col: str = "q_vec"):
+def probe_lists(q_mat: np.ndarray, centroids: np.ndarray, nprobe: int):
     """Driver-side probe assignment for a (tiny, broadcastable) query
-    set: returns (per-row list of probed list ids, sorted union of all
-    probed ids). The union feeds a STATIC ``isin`` predicate, which is
-    what lets Catalyst prune index partitions at planning time."""
-    cn = np.atleast_2d(np.asarray(centroids, dtype=np.float64))
-    cn = cn / np.linalg.norm(cn, axis=1, keepdims=True)
-    m = np.vstack(queries_pdf[q_vec_col].to_numpy()).astype(np.float64)
+    set's ``(n, dim)`` vector matrix (``_query_matrix``): returns
+    (per-row list of probed list ids, sorted union of all probed ids).
+    The union feeds a STATIC ``isin`` predicate, which is what lets
+    Catalyst prune index partitions at planning time."""
+    cn = _unit(centroids)
     nprobe = min(nprobe, cn.shape[0])
-    scores = m @ cn.T
+    scores = q_mat @ cn.T
     top = np.argpartition(-scores, nprobe - 1, axis=1)[:, :nprobe]
     per_row = [row.astype(np.int64).tolist() for row in top]
     union = sorted({int(x) for row in per_row for x in row})
@@ -587,27 +624,18 @@ def ivf_topk_indexed(spark, index_path: str, queries: DataFrame, k: int,
     ``__list``. Same semantics as :func:`ivf_topk` over the same
     assignment (set ``deduplicate=True`` for a spill-written index).
     Returns (q_id, vec_id, cos, rank)."""
-    qpdf = queries.select(q_id_col, q_vec_col).toPandas()
-    per_row, union = probe_lists(qpdf, centroids, nprobe, q_vec_col)
-    qn = np.sqrt([float(np.dot(v, v)) for v in
-                  (np.asarray(x, dtype=np.float64)
-                   for x in qpdf[q_vec_col])])
-    probe_rows = [(int(qid), list(map(float, vec)), float(n), int(l))
-                  for qid, vec, n, probes in zip(
-                      qpdf[q_id_col], qpdf[q_vec_col], qn, per_row)
+    q_ids, qm = _query_matrix(queries, q_id_col, q_vec_col,
+                              np.shape(centroids)[-1])
+    per_row, union = probe_lists(qm, centroids, nprobe)
+    probe_rows = [(int(qid), vec.tolist(), float(np.sqrt(np.dot(vec, vec))),
+                   int(l))
+                  for qid, vec, probes in zip(q_ids, qm, per_row)
                   for l in probes]
     q = spark.createDataFrame(
         probe_rows, f"{q_id_col} long, {q_vec_col} array<double>, "
                     f"__qn double, __list int")
     idx = spark.read.parquet(index_path).filter(F.col("__list").isin(union))
-    joined = idx.join(F.broadcast(q), on="__list")
-    scored = (joined.filter(F.col(id_col) != F.col(q_id_col))
-              .select(q_id_col, id_col,
-                      (_dot(F.col(vec_col), F.col(q_vec_col))
-                       / (F.col("__vn") * F.col("__qn"))).alias("cos")))
-    if deduplicate:
-        scored = scored.distinct()
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cos").desc(),
-                                             F.col(id_col))
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k))
+    scored = _cos_scored(idx.join(F.broadcast(q), on="__list"), id_col,
+                         vec_col, q_id_col, q_vec_col)
+    return _ranked(scored.distinct() if deduplicate else scored, k,
+                   id_col, q_id_col)

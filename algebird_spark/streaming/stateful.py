@@ -83,14 +83,15 @@ def _keyed_stream(sdf: DataFrame, keys: Sequence[str],
     """The one per-key stream update: a key's sketch and value count
     live in its ``GroupState``, each micro-batch's values fold in, and
     one row ``keys..., *emit(sketch, n_values)`` of ``out_fields`` is
-    emitted. Values are read as the batch build reads them: one column
-    (scalar or array) through ``_flatten_values``, each element a
-    value; a list of columns positionally through ``_update_columns``,
-    each row without a NULL a value."""
+    emitted. Values are read as the batch build (``agg._combine``)
+    reads them: one column (scalar or array, named or a one-element
+    list) through ``_flatten_values``, each element a value; several
+    columns positionally through ``_update_columns``, each row without
+    a NULL a value."""
     from pyspark.sql.pandas.types import to_arrow_type
     keys = list(keys)
-    flat = isinstance(value_cols, str)
-    cols = [value_cols] if flat else list(value_cols)
+    cols = [value_cols] if isinstance(value_cols, str) else list(value_cols)
+    flat = len(cols) == 1
     types = [to_arrow_type(sdf.schema[c].dataType) for c in cols]
     out_schema = StructType([sdf.schema[k] for k in keys] + out_fields)
     names = [f.name for f in out_schema.fields]
@@ -185,9 +186,11 @@ def sketch_state_stream_by_key(sdf: DataFrame, keys: Sequence[str],
     states combinable makes stream and batch states combinable.
 
     The update columns are read as the batch build reads them
-    (``_stream_array``, then ``agg._update_columns``): a row with a
-    NULL in any of them is skipped and not counted, and an integer
-    column stays an integer.
+    (``_stream_array``, then ``agg._combine``'s conversion): one column
+    (scalar or array) is flattened, each non-NULL element a value, as
+    ``sketch_by_key(df, keys, [col], factory)`` counts them; with
+    several, a row with a NULL in any of them is skipped and not
+    counted. An integer column stays an integer.
 
     Output per micro-batch: keys..., state binary, n_values long."""
     return _keyed_stream(

@@ -171,7 +171,8 @@ def main():
         mem = {(r["q_id"], r["vec_id"]) for r in
                S.ivf_topk(vec, queries, k=10, centroids=cents,
                           nprobe=8).collect()}
-        _, union100 = S.probe_lists(queries.toPandas(), cents, 8)
+        _, union100 = S.probe_lists(
+            S._query_matrix(queries, "q_id", "q_vec")[1], cents, 8)
 
         # pruning shows at small query batches: 100 queries x nprobe 8
         # saturate the 64-list union (each batch shares one scan), so
@@ -180,7 +181,8 @@ def main():
         q5 = (vec.orderBy("vec_id").limit(5)
               .select(F.col("vec_id").alias("q_id"),
                       F.col("embedding").alias("q_vec")))
-        _, union5 = S.probe_lists(q5.toPandas(), cents, 8)
+        _, union5 = S.probe_lists(
+            S._query_matrix(q5, "q_id", "q_vec")[1], cents, 8)
         b0 = local_bytes_read()
         S.ivf_topk_indexed(spark, idx_path, q5, k=10, centroids=cents,
                            nprobe=8).collect()

@@ -16,8 +16,16 @@ counts)``); and a two-column ``sketch_global`` for SketchMap. All at
 A ``global`` case digests its one state as the row a keyless
 ``sketch_by_key`` of the same columns returns, so the two agree.
 
+With ``--embeddings PATH`` (a parquet table of ``vec_id`` and an
+``embedding`` array), ``train`` cases add the sha256 of the float64
+bytes of each trained ANN model at both batch sizes:
+``train_ivf_centroids`` (16 lists), ``train_coarse_centroids`` (16
+lists), ``train_pq_codebook`` (m=8, k_sub=64) and the same codebook
+trained on the coarse quantizer's residuals.
+
 Usage:
-  python scripts/state_digests.py [--checkout DIR] > digests.txt
+  python scripts/state_digests.py [--checkout DIR] [--embeddings PATH] \
+      > digests.txt
   python scripts/state_digests.py --diff old.txt new.txt
 
 ``--checkout`` (default: this script's checkout) is put first on
@@ -31,6 +39,8 @@ import argparse
 import hashlib
 import os
 import sys
+
+import numpy as np
 
 BATCHES = (10_000, 64)
 
@@ -158,7 +168,27 @@ def cases(spark, df):
         df, ["v", "t"], multi_factories()["sketchmap"])
 
 
-def measure(checkout: str) -> None:
+def ann_cases(spark, path):
+    from algebird_spark.operators import pq, similarity
+    emb = spark.read.parquet(path).select("vec_id", "embedding")
+    coarse = pq.train_coarse_centroids(emb, n_lists=16, n_iter=4)
+    models = {
+        "ivf_centroids": lambda: similarity.train_ivf_centroids(
+            emb, n_lists=16, n_iter=3),
+        "coarse_centroids": lambda: coarse,
+        "pq_codebook": lambda: pq.train_pq_codebook(
+            emb, m=8, k_sub=64, n_iter=4),
+        "residual_codebook": lambda: pq.train_pq_codebook(
+            pq.residual_vectors(emb, coarse), m=8, k_sub=64, n_iter=4),
+    }
+    for name, train in models.items():
+        model = np.ascontiguousarray(train(), dtype=np.float64)
+        digest = hashlib.sha256(repr(model.shape).encode()
+                                + model.tobytes()).hexdigest()
+        yield "train", name, (digest, len(model))
+
+
+def measure(checkout: str, embeddings: str | None) -> None:
     checkout = os.path.abspath(checkout)
     sys.path.insert(0, checkout)
     os.environ["PYTHONPATH"] = os.pathsep.join(
@@ -178,7 +208,8 @@ def measure(checkout: str) -> None:
         df.count()
         for batch in BATCHES:
             spark.conf.set(conf, str(batch))
-            for build, name, (digest, n) in cases(spark, df):
+            ann = ann_cases(spark, embeddings) if embeddings else []
+            for build, name, (digest, n) in (*cases(spark, df), *ann):
                 print(f"{batch} {build} {name} {digest} {n}", flush=True)
     finally:
         spark.stop()
@@ -202,11 +233,13 @@ def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--checkout", default=os.path.join(
         os.path.dirname(os.path.abspath(__file__)), os.pardir))
+    ap.add_argument("--embeddings", metavar="PATH",
+                    help="embeddings parquet for the ANN training cases")
     ap.add_argument("--diff", nargs=2, metavar=("OLD", "NEW"))
     args = ap.parse_args()
     if args.diff:
         return diff(*args.diff)
-    measure(args.checkout)
+    measure(args.checkout, args.embeddings)
     return 0
 
 

@@ -284,13 +284,14 @@ def test_text_profile_block(spark):
     assert r2["n_tokens"] == 0 and r2["lang_guess"] == "und"
 
 
-def test_single_table_lsh_bucketed_topk(spark):
-    """lsh_bucketed_topk: identical vectors always collide into one
-    bucket (same hyperplane signs) and rank first; results carry the
-    standard (q_id, vec_id, cos, rank) shape."""
+def test_single_table_lsh_topk(spark):
+    """lsh_multitable_topk with one table and no multi-probe: identical
+    vectors always collide into one bucket (same hyperplane signs) and
+    rank first; results carry the standard (q_id, vec_id, cos, rank)
+    shape, and the plan has no dedup aggregate (a pair meets once)."""
     import numpy as np
 
-    from algebird_spark.operators.similarity import lsh_bucketed_topk
+    from algebird_spark.operators.similarity import lsh_multitable_topk
     rng = np.random.default_rng(8)
     base = rng.standard_normal((30, 8))
     rows = [(i, [float(x) for x in base[i]]) for i in range(30)]
@@ -298,10 +299,13 @@ def test_single_table_lsh_bucketed_topk(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     q = spark.createDataFrame(rows[:5],
                               "q_id long, q_vec array<float>")
-    got = {(r["q_id"], r["rank"]): r["vec_id"] for r in
-           lsh_bucketed_topk(df, q, k=3, dim=8, n_planes=4).collect()}
+    out = lsh_multitable_topk(df, q, k=3, dim=8, n_planes=4, n_tables=1,
+                              multiprobe=False)
+    got = {(r["q_id"], r["rank"]): r["vec_id"] for r in out.collect()}
     for i in range(5):
         assert got[(i, 1)] == 100 + i  # the scaled twin ranks first
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "HashAggregate" not in plan, plan
 
 
 def test_distinct_count_per_key_api(spark):

@@ -208,11 +208,80 @@ def test_lloyd_partials_match_numpy_reference(vec_df):
 def test_lloyd_round_plan_has_no_explode(vec_df):
     """VERDICT r3 weak #2: the training round must not posexplode
     per-vector rows — sufficient statistics only."""
-    from algebird_spark.operators.similarity import _lloyd_partials_df
-    c = np.eye(8, 16)
-    plan = _lloyd_partials_df(vec_df, c)._sc._jvm and \
-        _lloyd_partials_df(vec_df, c)._jdf.queryExecution().executedPlan().toString()
+    from algebird_spark.operators.similarity import _lloyd_partials
+    plan = _lloyd_partials(vec_df, np.eye(8, 16)[None], True) \
+        ._jdf.queryExecution().executedPlan().toString()
     assert "Generate" not in plan and "posexplode" not in plan
+
+
+def test_null_embedding_at_lowest_id_is_skipped(spark, vec_df):
+    """Init takes the lowest-id non-NULL vectors: a NULL embedding
+    below every id trains the same centroids as the table without it."""
+    null = spark.createDataFrame([(-1, None)], vec_df.schema)
+    got = train_ivf_centroids(vec_df.unionByName(null), n_lists=8, n_iter=3)
+    assert np.array_equal(got, train_ivf_centroids(vec_df, n_lists=8,
+                                                   n_iter=3))
+
+
+@pytest.fixture(scope="module")
+def ann(spark, vec_df, tmp_path_factory):
+    """Every trained model and index the query-set searches read."""
+    from algebird_spark.operators import pq
+    from algebird_spark.operators.similarity import write_ivf_index
+    emb = vec_df
+    root = tmp_path_factory.mktemp("ann")
+    cents = train_ivf_centroids(emb, n_lists=4, n_iter=1)
+    write_ivf_index(emb, cents, str(root / "ivf"))
+    coarse = pq.train_coarse_centroids(emb, n_lists=4, n_iter=1)
+    cb = pq.train_pq_codebook(pq.residual_vectors(emb, coarse), m=4,
+                              k_sub=16, n_iter=1)
+    pq.write_ivf_pq_index(emb, coarse, cb, str(root / "ivf_pq"))
+    return dict(spark=spark, emb=emb, root=root, cents=cents, coarse=coarse,
+                cb=cb, enc=pq.encode_pq(emb, cb),
+                ivf_enc=pq.encode_ivf_pq(emb, coarse, cb))
+
+
+def _search(name):
+    from algebird_spark.operators import pq
+    from algebird_spark.operators.similarity import (cosine_topk_kernel,
+                                                     ivf_topk_indexed)
+    return {
+        "cosine_topk_kernel": lambda a, q: cosine_topk_kernel(
+            a["emb"], q, k=3),
+        "ivf_topk_indexed": lambda a, q: ivf_topk_indexed(
+            a["spark"], str(a["root"] / "ivf"), q, k=3,
+            centroids=a["cents"], nprobe=2),
+        "pq_topk": lambda a, q: pq.pq_topk(a["enc"], q, k=3,
+                                           codebook=a["cb"]),
+        "ivf_pq_topk": lambda a, q: pq.ivf_pq_topk(
+            a["ivf_enc"], q, k=3, coarse=a["coarse"], codebook=a["cb"],
+            nprobe=2),
+        "ivf_pq_topk_indexed": lambda a, q: pq.ivf_pq_topk_indexed(
+            a["spark"], str(a["root"] / "ivf_pq"), q, k=3,
+            coarse=a["coarse"], codebook=a["cb"], nprobe=2),
+    }[name]
+
+
+@pytest.mark.parametrize("name", ["cosine_topk_kernel", "ivf_topk_indexed",
+                                  "pq_topk", "ivf_pq_topk",
+                                  "ivf_pq_topk_indexed"])
+def test_null_query_vector_is_skipped(ann, name):
+    """A query row whose vector is NULL is skipped, as cosine_topk and
+    ivf_topk skip it: the set with one (read first) returns exactly the
+    rows of the set without it, and a set of NULLs only is an empty
+    query set."""
+    search = _search(name)
+    q = _queries(ann["emb"], 3)
+    null = ann["spark"].createDataFrame([(10 ** 6, None)], q.schema)
+    rows = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
+    want = rows(search(ann, q))
+    assert len(want) == 9
+    assert rows(search(ann, null.unionByName(q))) == want
+    if name in ("cosine_topk_kernel", "ivf_topk_indexed"):
+        assert search(ann, null).count() == 0
+    else:
+        with pytest.raises(ValueError, match="empty query set"):
+            search(ann, null)
 
 
 def test_embedding_cosine_dups_planted_and_threshold(spark):

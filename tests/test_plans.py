@@ -595,12 +595,14 @@ def test_lloyd_partials_no_pervector_shuffle(spark):
     mapInArrow, with no Exchange at all (sufficient statistics leave
     via collect, not shuffle)."""
     import numpy as np
-    from algebird_spark.operators.similarity import _lloyd_partials_df
+    from algebird_spark.operators.similarity import _lloyd_partials
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = np.eye(4, 64)
-    plan = plan_of(_lloyd_partials_df(emb, cents))
-    assert "Exchange" not in plan
-    assert "Generate" not in plan  # no posexplode
+    # spherical with one subspace (IVF-Flat), L2 with 8 (a PQ codebook)
+    for codebook, spherical in ((np.eye(4, 64)[None], True),
+                                (np.ones((8, 4, 8)), False)):
+        plan = plan_of(_lloyd_partials(emb, codebook, spherical))
+        assert "Exchange" not in plan
+        assert "Generate" not in plan  # no posexplode
 
 
 def test_ivf_index_partition_pruning(spark, tmp_path):
@@ -614,8 +616,8 @@ def test_ivf_index_partition_pruning(spark, tmp_path):
     import os
 
     from algebird_spark.operators.similarity import (
-        ivf_topk, ivf_topk_indexed, probe_lists, train_ivf_centroids,
-        write_ivf_index)
+        _query_matrix, ivf_topk, ivf_topk_indexed, probe_lists,
+        train_ivf_centroids, write_ivf_index)
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cents = train_ivf_centroids(emb, n_lists=8, n_iter=2)
@@ -628,7 +630,8 @@ def test_ivf_index_partition_pruning(spark, tmp_path):
                .select(F.col("vec_id").alias("q_id"),
                        F.col("embedding").alias("q_vec")))
     nprobe = 2
-    _, union = probe_lists(queries.toPandas(), cents, nprobe)
+    _, union = probe_lists(_query_matrix(queries, "q_id", "q_vec")[1],
+                           cents, nprobe)
     assert 0 < len(union) < len(cents)  # pruning is non-trivial
 
     def local_bytes_read():

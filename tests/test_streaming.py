@@ -489,10 +489,12 @@ def test_streaming_frequent_directions_matches_batch(spark, tmp_path):
     """Protocol-surface proof for the r7 matrix sketch: a conforming
     Sketch streams unchanged through sketch_state_stream_by_key. The
     streamed FD state must satisfy both FD invariants against the
-    exact Gram of the same rows, count every vector, and carry the
-    exact ||A||_F^2 (float-sum tolerance only)."""
+    exact Gram of the same rows, hold every vector, count every
+    element as the batch build does, and carry the exact ||A||_F^2
+    (float-sum tolerance only)."""
     import shutil
 
+    from algebird_spark.agg import sketch_by_key
     from algebird_spark.sketches import FrequentDirections, from_bytes
     from algebird_spark.streaming.stateful import sketch_state_stream_by_key
 
@@ -518,11 +520,17 @@ def test_streaming_frequent_directions_matches_batch(spark, tmp_path):
     rows = spark.sql("SELECT * FROM fd_stream").toPandas() \
         .groupby("grp").last()
     pb = prep(batch).toPandas()
+    # the stream counts what the batch build over the same one column
+    # counts: the vectors' elements
+    built = {r["grp"]: r["n_values"] for r in sketch_by_key(
+        prep(batch), ["grp"], ["embedding"],
+        lambda: FrequentDirections(dim, ell)).collect()}
     for grp, r in rows.iterrows():
         sk = from_bytes(bytes(r["state"]))
         sub = np.vstack(pb[pb["grp"] == grp]["embedding"].to_numpy()) \
             .astype(np.float64)
-        assert sk.n == len(sub) == r["n_values"]
+        assert sk.n == len(sub)
+        assert r["n_values"] == built[grp] == sub.size
         assert sk.sq_frob == pytest.approx(float((sub * sub).sum()),
                                            rel=1e-9)
         diff = np.linalg.eigvalsh(sub.T @ sub - sk.gram())
